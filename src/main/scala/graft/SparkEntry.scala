@@ -1546,20 +1546,19 @@ object SparkEntry {
         .withColumn("price", col("price").cast("double"))
     }),
 
-    // P7 accumulator metrics, value-checked: run extractWithMetrics over the
-    // documents table as plain turns and emit the accumulator totals as one
-    // row; the oracle recomputes them relationally. Deterministic here: local
-    // mode has no task retries (accumulators in transformations are
-    // at-least-once under retries — documented in ExtractJob).
+    // P7 extraction-rate metrics, value-checked: extract the documents table
+    // as plain turns and total rows, errors and chars in one aggregate (the
+    // runWithManifests per-shard form without the shard key); the oracle
+    // recomputes them relationally.
     "q_extract_metrics" -> ((s, dir) => {
       import s.implicits._
       val turns = t(s, dir, "documents").select($"doc_id", $"text").as[(Long, String)]
         .map { case (id, text) => Turn(id.toString, 0, "user", text, "plain",
           new java.sql.Timestamp(0L)) }
-      val m = ExtractJob.ExtractMetrics.register(s)
-      ExtractJob.extractWithMetrics(turns, partitions = 8, m).toDF().count()
-      Seq((m.rows.value: Long, m.errors.value: Long, m.chars.value: Long))
-        .toDF("n_rows", "n_errors", "n_chars")
+      ExtractJob.extract(turns, partitions = 8)
+        .agg(count(lit(1)).as("n_rows"),
+          coalesce(sum(col("error").isNotNull.cast("long")), lit(0L)).as("n_errors"),
+          coalesce(sum(length(col("extracted_text"))), lit(0L)).as("n_chars"))
     }),
 
     // ---- structured streaming (file source -> extract -> memory sink) ----------------
@@ -1575,7 +1574,7 @@ object SparkEntry {
         .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
         .parquet(tmp).as[Turn]
       val name = s"stream_out_${System.nanoTime()}"
-      val q = graft.streaming.StreamingExtract.extractStream(turns)
+      val q = ExtractJob.extractNarrow(turns)
         .writeStream.format("memory").queryName(name)
         .option("checkpointLocation", cp)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()

@@ -367,13 +367,13 @@ object Dedup {
     // plan re-ran the byte-level winnowing kernel once per branch (5
     // MapPartitions nodes in the r8 plan). Materialize it once, lazily
     // (r9; guide §8 "decide with small rows" — (id, fp) IS the small proxy).
-    // An fp-clustered AQE-off checkpoint ([[Ckpt.clusteredBy]]) was tried
-    // here in r9 and reverted: it does drop the dfc/rare exchanges (12 -> 8
-    // in the plan) but pins the session's full shuffle width on a table AQE
-    // otherwise coalesces — same-session A/B (WinnowAbProbe): 9 stages/43
-    // tasks/1.85 s plain vs 12 stages/232 tasks/1.87 s clustered. A wash on
-    // wall clock with more scheduling; the plain checkpoint keeps AQE in
-    // charge of the width.
+    // An fp-clustered checkpoint (repartition by fp, AQE off) was tried here
+    // in r9 and reverted: it does drop the dfc/rare exchanges (12 -> 8 in
+    // the plan) but pins the session's full shuffle width on a table AQE
+    // otherwise coalesces — same-session A/B: 9 stages/43 tasks/1.85 s plain
+    // vs 12 stages/232 tasks/1.87 s clustered (commit 701c968, which also
+    // holds the A/B probe's source). A wash on wall clock with more
+    // scheduling; the plain checkpoint keeps AQE in charge of the width.
     val fps = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
       .flatMap { case (id, t) => TextFunctions.winnowFingerprints(t, k, w).map((id, _)) }
@@ -554,13 +554,13 @@ object Dedup {
     // computes them, so each round costs ONE action and the same single
     // computation of its labels.
     // Partitioning-aware (AQE-off) checkpoints were tried here in r9 and
-    // REVERTED on measurement: the loop's label/edge tables are small
-    // relative to the corpus, and AQE's runtime coalescing (1-2-task stages,
-    // 55 tasks per full run) beats exchange elimination at fixed session
-    // width (465 tasks, 1.72 s -> 2.77 s min in a same-session A/B —
-    // ClusterCostProbe). The plain lazy checkpoint keeps AQE in charge;
-    // [[Ckpt.clusteredBy]] remains the right tool where the checkpointed
-    // table is corpus-sized (winnowNearDups' fingerprints).
+    // REVERTED on measurement: checkpoints do not preserve partitioning
+    // under AQE, the loop's label/edge tables are small relative to the
+    // corpus, and AQE's runtime coalescing (1-2-task stages, 55 tasks per
+    // full run) beats exchange elimination at fixed session width (465
+    // tasks, 1.72 s -> 2.77 s min in a same-session A/B — commit 701c968,
+    // which also holds the A/B probes' source). The plain lazy checkpoint
+    // keeps AQE in charge.
     def ckpt(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)

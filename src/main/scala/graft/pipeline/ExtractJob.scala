@@ -25,44 +25,37 @@ object ExtractJob {
   /** Per-row extraction. The reference panics on malformed input; here every parse
     * failure lands in the `error` column so one poison payload cannot kill a
     * 10^12-row job (the golden gate separately asserts zero errors on fixture rows).
+    *
+    * One route table for every tool label. `auto` (unlabeled corpora) first
+    * sniffs a route from the payload (PDF magic, base64-of-PDF magic, HTML tag
+    * presence) and then takes the same branch as the labelled tool; only the
+    * raw "%PDF-" route is auto-specific. A labelled `tool = "pdf"` stays plain
+    * passthrough, and error rows keep `payload_kind = t.tool`.
     */
   def extractTurn(t: Turn): ExtractedTurn = {
     try {
-      val (res, kind) = t.tool match {
+      val auto = t.tool == "auto"
+      val route = if (auto) graft.functions.TextFunctions.sniffKind(t.text) else t.tool
+      val (res, kind) = route match {
         case "pdf-b64" =>
-          val bytes = java.util.Base64.getDecoder.decode(t.text)
-          (Pdf(bytes).extractResult(ExtractText), "pdf")
+          (Pdf(b64(t.text)).extractResult(ExtractText), "pdf")
         case "pdf-b64-lenient" =>
           // engine extension: lenient xref layer for 1.5+ documents (xref
           // streams / object streams / predictors) the reference cannot open;
           // strict "pdf-b64" stays the byte-exact default
-          val bytes = java.util.Base64.getDecoder.decode(t.text)
-          (Pdf.lenient(bytes).extractResult(ExtractText), "pdf-lenient")
+          (Pdf.lenient(b64(t.text)).extractResult(ExtractText), "pdf-lenient")
         case "pdf-b64-lenient-text" =>
           // widest lenient surface: lenient xref + the Tw/Tz/TL/Ts/'/" text
           // operators (its own flag — forks text assembly, so it never rides
           // the plain lenient route silently)
-          val bytes = java.util.Base64.getDecoder.decode(t.text)
-          (Pdf.lenientText(bytes).extractResult(ExtractText), "pdf-lenient-text")
+          (Pdf.lenientText(b64(t.text)).extractResult(ExtractText), "pdf-lenient-text")
         case "html" =>
           (HtmlBoilerplate.extract(t.text), "html")
-        case "auto" =>
-          // unlabeled corpora: sniff the payload kind from the bytes (PDF magic,
-          // base64-of-PDF magic, HTML tag presence) and route accordingly; a raw
-          // "%PDF-" payload in a string column is decoded best-effort as
+        case "pdf" if auto =>
+          // a raw "%PDF-" payload in a string column is decoded best-effort as
           // ISO-8859-1 (binary PDFs normally arrive base64-encoded)
-          graft.functions.TextFunctions.sniffKind(t.text) match {
-            case "pdf-b64" =>
-              val bytes = java.util.Base64.getDecoder.decode(t.text)
-              (Pdf(bytes).extractResult(ExtractText), "pdf")
-            case "pdf" =>
-              val bytes = t.text.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-              (Pdf(bytes).extractResult(ExtractText), "pdf")
-            case "html" =>
-              (HtmlBoilerplate.extract(t.text), "html")
-            case _ =>
-              (ExtractResult(t.text, Vector(Span("plain", 0, t.text.length))), "plain")
-          }
+          val bytes = t.text.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+          (Pdf(bytes).extractResult(ExtractText), "pdf")
         case _ =>
           (ExtractResult(t.text, Vector(Span("plain", 0, t.text.length))), "plain")
       }
@@ -85,54 +78,32 @@ object ExtractJob {
     }
   }
 
+  private def b64(text: String): Array[Byte] = java.util.Base64.getDecoder.decode(text)
+
   /** P3: explicit salted repartition keyed (conv_id, salt). */
   def saltedRepartition(input: Dataset[Turn], partitions: Int): Dataset[Turn] =
     input.repartition(partitions, col("conv_id"),
       pmod(hash(col("conv_id"), col("turn_idx")), lit(SALT)))
 
-  /** P3+P4: the extraction transform. mapPartitions (not a per-row udf) keeps
-    * per-partition setup amortized and object churn off Catalyst's serializer path.
+  /** P3+P4: the batch extraction transform — the salted repartition, then the
+    * one extraction map.
     */
-  def extract(input: Dataset[Turn], partitions: Int): Dataset[ExtractedTurn] = {
-    import input.sparkSession.implicits._
-    saltedRepartition(input, partitions).mapPartitions(_.map(extractTurn))
-  }
+  def extract(input: Dataset[Turn], partitions: Int): Dataset[ExtractedTurn] =
+    extractNarrow(saltedRepartition(input, partitions))
 
-  /** P7: extraction-rate metrics as Spark accumulators (cluster-wide counters
-    * that survive task retries' final accounting; complement the per-shard
-    * manifest metrics).
-    */
-  final case class ExtractMetrics(
-      rows: org.apache.spark.util.LongAccumulator,
-      errors: org.apache.spark.util.LongAccumulator,
-      chars: org.apache.spark.util.LongAccumulator)
-
-  object ExtractMetrics {
-    def register(spark: SparkSession): ExtractMetrics = ExtractMetrics(
-      spark.sparkContext.longAccumulator("graft.extract.rows"),
-      spark.sparkContext.longAccumulator("graft.extract.errors"),
-      spark.sparkContext.longAccumulator("graft.extract.chars"))
-  }
-
-  /** extract() with live accumulator metrics. */
-  def extractWithMetrics(input: Dataset[Turn], partitions: Int,
-                         m: ExtractMetrics): Dataset[ExtractedTurn] = {
-    import input.sparkSession.implicits._
-    saltedRepartition(input, partitions).mapPartitions(_.map { t =>
-      val e = extractTurn(t)
-      m.rows.add(1)
-      if (e.error != null) m.errors.add(1)
-      else if (e.extracted_text != null) m.chars.add(e.extracted_text.length)
-      e
-    })
-  }
-
-  /** Narrow variant: extraction on the scan partitions, NO shuffle. Correct
-    * whenever the source layout is already splittable-uniform (parquet row groups
-    * split a long conversation across tasks by construction). At 100TB the salted
-    * repartition (P3) is for sources whose layout clusters heavy conversations
-    * (e.g. Iceberg bucketed by conv); when it isn't needed, skipping the exchange
-    * removes the full-payload shuffle — the pipeline's only wide stage.
+  /** P4: the extraction map, the only per-partition `extractTurn` pass over a
+    * `Dataset[Turn]` — batch ([[extract]]), shuffle-free and streaming callers
+    * all run it, so their per-turn semantics agree by construction.
+    * mapPartitions (not a per-row udf) keeps per-partition setup amortized and
+    * object churn off Catalyst's serializer path.
+    *
+    * Called directly it runs on the scan partitions with NO shuffle. That is
+    * correct whenever the source layout is already splittable-uniform (parquet
+    * row groups split a long conversation across tasks by construction). At
+    * 100TB the salted repartition (P3) is for sources whose layout clusters
+    * heavy conversations (e.g. Iceberg bucketed by conv); when it isn't needed,
+    * skipping the exchange removes the full-payload shuffle — the pipeline's
+    * only wide stage.
     */
   def extractNarrow(input: Dataset[Turn]): Dataset[ExtractedTurn] = {
     import input.sparkSession.implicits._
@@ -228,7 +199,8 @@ object ExtractJob {
         .sortWithinPartitions("conv_id", "turn_idx") // P5 (prod-scale ordering)
       io.writeShards(out, outDir)
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      // per-shard stats: one partition-pruned scan of the wave's output. An
+      // P7 per-shard stats (exact rows and bytes; error rows count as rows
+      // with 0 bytes): one partition-pruned scan of the wave's output. An
       // all-empty TABLE writes no partition directories (only _SUCCESS), which
       // legitimately means 0 rows for every wave shard — detected EXPLICITLY
       // from the partition listing, never by matching exception text (a read

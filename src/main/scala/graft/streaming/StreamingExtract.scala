@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.pipeline.{ExtractJob, ExtractedTurn, Turn}
+import graft.pipeline.{ExtractJob, Turn}
 import graft.operators.Dedup
 
 /** Custom per-conversation state for the stateful sessionizer. */
@@ -17,8 +17,9 @@ final case class ConvSession(
     n_turns: Int)
 
 /** Structured Streaming face of the extraction pipeline: incremental transcript
-  * ingest with exactly the same per-turn semantics as the batch job (the
-  * extraction function is shared, so batch/stream parity is by construction).
+  * ingest with exactly the same per-turn semantics as the batch job (streams run
+  * the batch job's own map, [[ExtractJob.extractNarrow]], so batch/stream parity
+  * is by construction).
   *
   * The reference is a batch CLI and the north rule specifies a batch backfill
   * (SURVEY §2.11), so this is an engine addition for continuous ingest: new turns
@@ -26,14 +27,6 @@ final case class ConvSession(
   * windowed metric stream (late turns beyond the watermark are dropped).
   */
 object StreamingExtract {
-
-  /** Per-turn extraction over any streaming Dataset[Turn] — a stateless map, so
-    * it composes with every sink/trigger and never needs state-store tuning.
-    */
-  def extractStream(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
-    import turns.sparkSession.implicits._
-    turns.mapPartitions(_.map(ExtractJob.extractTurn))
-  }
 
   /** Watermarked tumbling-window extraction-rate metrics per payload kind:
     * (window, payload_kind) -> turns, chars, errors. The watermark bounds the
@@ -140,7 +133,7 @@ object StreamingExtract {
     * pass whatever the event rate. LEFT semantics: events with no dimension
     * row keep nulls (they are data, not errors). Works identically on a
     * batch DataFrame (same function — batch/stream parity by construction,
-    * like extractStream).
+    * like ExtractJob.extractNarrow).
     *
     * `maxDimRows` bounds the broadcast BY CONTRACT (same discipline as
     * decontaminate's benchmark cap): an explicit broadcast() hint bypasses
@@ -236,7 +229,7 @@ object StreamingExtract {
       .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
       .parquet(inDir)
       .as[Turn]
-    extractStream(turns).writeStream
+    ExtractJob.extractNarrow(turns).writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)

@@ -20,13 +20,9 @@ class IntegrationSpec extends AnyFunSuite {
 
   private def snapshotCheck(name: String, kind: String, value: String): Unit = {
     val p = goldenDir.resolve(s"$name.$kind.txt")
-    if (Files.exists(p)) {
-      val expected = new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-      assert(value == expected, s"snapshot mismatch for $name.$kind")
-    } else {
-      Files.createDirectories(goldenDir)
-      Files.write(p, value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    assert(Files.exists(p), s"missing snapshot $p")
+    val expected = new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+    assert(value == expected, s"snapshot mismatch for $name.$kind")
   }
 
   test("helloworld golden Text + RawContent (integration.rs:1-10)") {

@@ -1130,11 +1130,22 @@ class OperatorsSpec extends AnyFunSuite {
     val rowKinds = payloads.map(TextFunctions.sniffKind)
     assert(colKinds == rowKinds, "column/row sniffers must agree")
     assert(rowKinds.take(4) == Seq("plain", "html", "pdf-b64", "pdf"))
+    def run(p: String, tool: String) =
+      graft.pipeline.ExtractJob.extractTurn(graft.pipeline.Turn("c", 0, "user", p, tool, null))
     // auto-routing extracts the same text for all three labeled-equivalent kinds
     Seq(payloads(0), payloads(1), payloads(2), payloads(3)).foreach { p =>
-      val e = graft.pipeline.ExtractJob.extractTurn(
-        graft.pipeline.Turn("c", 0, "user", p, "auto", null))
+      val e = run(p, "auto")
       assert(e.error == null && e.extracted_text == text, s"auto route failed for ${e.payload_kind}")
+    }
+    // the raw-PDF route is auto-only: a labelled "pdf" row is plain passthrough
+    val labelled = run(payloads(3), "pdf")
+    assert(labelled.error == null && labelled.payload_kind == "plain" &&
+      labelled.extracted_text == payloads(3))
+    // corrupt base64-of-PDF and truncated raw PDF: error rows keep the "auto" label
+    Seq(payloads(5), payloads(3).take(40)).foreach { p =>
+      val e = run(p, "auto")
+      assert(e.error != null && e.extracted_text == null && e.payload_kind == "auto",
+        s"corrupt auto payload must land in error: $e")
     }
   }
 

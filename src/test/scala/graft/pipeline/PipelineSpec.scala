@@ -176,17 +176,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(parts.max <= 100, s"skew not defeated: ${parts.mkString(",")}")
   }
 
-  test("accumulator metrics count rows, errors and chars") {
+  test("manifests count rows and bytes; error rows count as rows with 0 bytes") {
     import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-counts").toString
     val rows = Seq(
       Turn("c1", 0, "user", "plain text here", "plain", new java.sql.Timestamp(0)),
       Turn("c1", 1, "user", "!!!bad", "pdf-b64", new java.sql.Timestamp(0))
     ).toDS()
-    val m = ExtractJob.ExtractMetrics.register(spark)
-    ExtractJob.extractWithMetrics(rows, 2, m).count()
-    assert(m.rows.value == 2)
-    assert(m.errors.value == 1)
-    assert(m.chars.value == "plain text here".length)
+    ExtractJob.runWithManifests(spark, rows, dir, shards = 4, partitions = 2)
+    val ms = ExtractJob.manifests(spark, dir).collect()
+    assert(ms.map(_.rows).sum == 2)
+    assert(ms.map(_.bytes).sum == "plain text here".length)
+    assert(ExtractJob.readOutput(spark, dir).where($"error".isNotNull).count() == 1)
   }
 
   test("manifests: shards with no input commit 0-row done manifests (empty-wave path)") {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.{MiniPdf, SparkTestSession, SynthGen, Turn}
+import graft.pipeline.{ExtractJob, MiniPdf, SparkTestSession, SynthGen, Turn}
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -22,7 +22,7 @@ class StreamingSpec extends AnyFunSuite {
       turn("c2", 0, SynthGen.wrapHtml(body), "html", 200),
       turn("c2", 1, "!!!bad base64", "pdf-b64", 260)
     )
-    val q = StreamingExtract.extractStream(input.toDS()).writeStream
+    val q = ExtractJob.extractNarrow(input.toDS()).writeStream
       .format("memory").queryName("stream_out").outputMode(OutputMode.Append).start()
     input.addData(rows: _*)
     q.processAllAvailable()
@@ -30,7 +30,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = spark.table("stream_out")
       .orderBy("conv_id", "turn_idx")
       .select("conv_id", "turn_idx", "extracted_text", "payload_kind", "error").collect()
-    val batch = graft.pipeline.ExtractJob.extract(rows.toDS(), 2)
+    val batch = ExtractJob.extract(rows.toDS(), 2)
       .orderBy("conv_id", "turn_idx")
       .select("conv_id", "turn_idx", "extracted_text", "payload_kind", "error").collect()
     assert(streamed.toSeq == batch.toSeq)
