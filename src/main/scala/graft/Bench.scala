@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{ExtractJob, SynthGen}
+import graft.pipeline.{ExtractJob, ParquetTableIO, SynthGen}
 
 /** Driver-run benchmark: times every SparkEntry query on SPARK_GRAFT_SF_DIR and the
   * transcript-extraction pipeline on a seeded synthetic corpus, printing ONE JSON
@@ -55,8 +55,7 @@ object Bench {
   /** Timed: the full extraction plan at the given parallelism. Returns seconds. */
   def timeExtraction(spark: SparkSession, dir: String, partitions: Int): Double = {
     import spark.implicits._
-    val turns = spark.read.parquet(s"$dir/transcripts")
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[graft.pipeline.Turn]
+    val turns = ParquetTableIO.readTurns(spark, s"$dir/transcripts")
     val t0 = System.nanoTime()
     ExtractJob.extract(turns, partitions).where($"error".isNull).count()
     (System.nanoTime() - t0) / 1e9
@@ -65,8 +64,7 @@ object Bench {
   /** Timed: narrow (shuffle-free) extraction — the uniform-layout fast path. */
   def timeExtractionNarrow(spark: SparkSession, dir: String): Double = {
     import spark.implicits._
-    val turns = spark.read.parquet(s"$dir/transcripts")
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[graft.pipeline.Turn]
+    val turns = ParquetTableIO.readTurns(spark, s"$dir/transcripts")
     val t0 = System.nanoTime()
     ExtractJob.extractNarrow(turns).where($"error".isNull).count()
     (System.nanoTime() - t0) / 1e9
@@ -195,20 +193,11 @@ object Bench {
 
     val all = results :+ ("x_extract_pipeline_sf" -> extractSec)
     val qs = all.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    // full JSON string escape incl. control chars (Spark exception messages are
-    // multi-line; a raw \n would corrupt the single machine-readable line)
-    def jstr(s: String): String = s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
-    val errJson = errors.map { case (k, v) => "\"" + jstr(k) + "\":\"" + jstr(v) + "\"" }
+    // Verify.q is a full JSON string escape incl. control chars (Spark exception
+    // messages are multi-line; a raw \n would corrupt the single machine-readable line)
+    val errJson = errors.map { case (k, v) => Verify.q(k) + ":" + Verify.q(v) }
       .mkString("{", ",", "}")
-    val resampJson = queryResamples.map { case (k, v) => "\"" + jstr(k) + "\":" + v }
+    val resampJson = queryResamples.map { case (k, v) => Verify.q(k) + ":" + v }
       .mkString("{", ",", "}")
     val total = all.map(_._2).sum
     // EMISSION ORDER (VERDICT r7 #2): the driver keeps only the last ~2000

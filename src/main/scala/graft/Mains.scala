@@ -55,8 +55,7 @@ object ExtractMain {
     val spark = SparkEnv.session("graft-extract")
     import spark.implicits._
     val t0 = System.nanoTime()
-    val turns = spark.read.parquet(in)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
+    val turns = ParquetTableIO.readTurns(spark, in)
     // crash injection (failAt >= 0) forces shard-granular waves inside
     // runWithManifests; the production path is the default single wave = ONE
     // input scan

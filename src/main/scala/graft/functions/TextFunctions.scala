@@ -16,13 +16,12 @@ object TextFunctions {
       .otherwise(size(split(trim(text), "\\s+")))
 
   /** Quality-score raw counts (integers only: exactly reproducible in any engine).
-    * alpha / digit / punct / whitespace character classes + stopword hits.
+    * alpha / digit / punct character classes + stopword hits.
     */
   def nAlpha(text: Column): Column = length(text) - length(regexp_replace(text, "[A-Za-z]", ""))
   def nDigit(text: Column): Column = length(text) - length(regexp_replace(text, "[0-9]", ""))
   def nPunct(text: Column): Column =
     length(text) - length(regexp_replace(text, "[!-/:-@\\[-`{-~]", ""))
-  def nSpace(text: Column): Column = length(text) - length(regexp_replace(text, " ", ""))
 
   val stopwordsEn: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that", "this",
@@ -32,21 +31,6 @@ object TextFunctions {
   def nStopwords(text: Column): Column = {
     val words = split(lower(trim(text)), "\\s+")
     size(filter(words, w => w.isin(stopwordsEn: _*)))
-  }
-
-  /** Composite quality score in [0,1] — our own fixed formula (documented):
-    * favors texts with healthy word length, some stopwords, low punctuation.
-    */
-  def qualityScore(text: Column): Column = {
-    val len = length(text).cast("double")
-    val toks = tokenCount(text).cast("double")
-    val stopRatio = nStopwords(text).cast("double") / greatest(toks, lit(1.0))
-    val punctRatio = nPunct(text).cast("double") / greatest(len, lit(1.0))
-    val avgWord = len / greatest(toks, lit(1.0))
-    val wordScore = when(avgWord.between(3.0, 10.0), 1.0).otherwise(0.5)
-    val stopScore = when(stopRatio.between(0.05, 0.6), 1.0).otherwise(0.5)
-    val punctScore = when(punctRatio <= 0.2, 1.0).otherwise(0.3)
-    (wordScore + stopScore + punctScore) / 3.0
   }
 
   /** BPE-ish token estimate: whitespace words plus a sub-word penalty for long

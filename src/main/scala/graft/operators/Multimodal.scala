@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque `binary`
   * columns plus a typed metadata struct, with decode / feature-extract / resize /
@@ -177,13 +176,10 @@ object Multimodal {
       tr <- mp4Child(b, "trak", moovS, moovE)
     } yield tr
 
-  /** MP4/ISO-BMFF video dims via a real box walk: moov -> trak -> tkhd, whose
+  /** MP4/ISO-BMFF video dims via a real box walk: trak -> tkhd, whose
     * v0/v1 payload ends in 16.16 fixed-point track width/height
     * (ISO 14496-12 §8.3.2).
     */
-  private def mp4Dims(b: Array[Byte]): Option[(Int, Int)] =
-    mp4Trak(b).flatMap { case (s, e) => mp4DimsIn(b, s, e) }
-
   private def mp4DimsIn(b: Array[Byte], trakS: Int, trakE: Int): Option[(Int, Int)] = {
     for {
       (tkhdS, tkhdE) <- mp4Child(b, "tkhd", trakS, trakE)
@@ -721,12 +717,5 @@ object Multimodal {
           featuresStub(row.payload))
       }
     }
-  }
-
-  /** Convenience: treat a string column as the binary payload (docs-as-media). */
-  def fromTextTable(df: DataFrame, idCol: String, textCol: String): Dataset[MediaRow] = {
-    import df.sparkSession.implicits._
-    df.select(col(idCol).cast("long").as("doc_id"),
-      encode(col(textCol), "UTF-8").as("payload")).as[MediaRow]
   }
 }

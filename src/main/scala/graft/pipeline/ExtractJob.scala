@@ -135,24 +135,19 @@ object ExtractJob {
 
   // ----- P8: checkpoint manifests + resume ---------------------------------------
 
-  /** Output layout: `outDir/data/shard=<k>/...parquet` + `outDir/_manifests`.
-    * A shard is the resume unit: an idempotent overwrite of one directory followed
-    * by a manifest append. A failed run leaves completed shards' manifests in place;
-    * `runWithManifests` anti-joins them away on rerun, so the final table equals an
-    * uninterrupted run and per-shard extraction-rate metrics survive.
+  /** Output layout: `outDir/data/shard=<k>/...parquet` + `outDir/_manifests`,
+    * stored through [[ParquetTableIO]] (SURVEY §1.2; Iceberg on clusters that
+    * ship the runtime jar). A shard is the resume unit: an idempotent
+    * overwrite of one directory followed by a manifest append. A failed run
+    * leaves completed shards' manifests in place; `runWithManifests` skips
+    * them on rerun, so the final table equals an uninterrupted run and
+    * per-shard extraction-rate metrics survive.
     */
-  def shardCol: org.apache.spark.sql.Column = pmod(hash(col("conv_id")), lit(SALT))
-
-  /** Storage backend (SURVEY §1.2): Parquet+manifests here; Iceberg on clusters
-    * that ship the runtime jar (see TableIO).
-    */
-  val io: TableIO = ParquetTableIO
-
   def completedShards(spark: SparkSession, outDir: String): Set[Int] = {
-    if (!io.manifestsExist(outDir)) Set.empty
+    if (!ParquetTableIO.manifestsExist(spark, outDir)) Set.empty
     else {
       import spark.implicits._
-      io.readManifests(spark, outDir)
+      ParquetTableIO.readManifests(spark, outDir)
         .filter(_.status == "done").map(_.part_id).collect().toSet
     }
   }
@@ -197,7 +192,7 @@ object ExtractJob {
       val out = extract(waveInput, partitions)
         .withColumn("shard", shardOf)
         .sortWithinPartitions("conv_id", "turn_idx") // P5 (prod-scale ordering)
-      io.writeShards(out, outDir)
+      ParquetTableIO.writeShards(out, outDir)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       // P7 per-shard stats (exact rows and bytes; error rows count as rows
       // with 0 bytes): one partition-pruned scan of the wave's output. An
@@ -207,8 +202,8 @@ object ExtractJob {
       // failure on a table with data is real corruption and must propagate,
       // not be committed as 0-row done manifests).
       val stats: Map[Int, (Long, Long)] =
-        if (io.shardsPresent(spark, outDir).isEmpty) Map.empty
-        else io.readOutputRaw(spark, outDir)
+        if (ParquetTableIO.shardsPresent(spark, outDir).isEmpty) Map.empty
+        else ParquetTableIO.readOutputRaw(spark, outDir)
           .where(col("shard").isin(wave: _*))
           .groupBy(col("shard"))
           .agg(count(lit(1)).as("rows"),
@@ -239,7 +234,7 @@ object ExtractJob {
       val totBig = java.math.BigInteger.valueOf(totW)
       def alloc(c: Long): Long =
         wallBig.multiply(java.math.BigInteger.valueOf(c)).divide(totBig).longValueExact()
-      io.appendManifests(spark, outDir, wave.zipWithIndex.map { case (k, i) =>
+      ParquetTableIO.appendManifests(spark, outDir, wave.zipWithIndex.map { case (k, i) =>
         val (rows, bytes) = stats.getOrElse(k, (0L, 0L))
         val share = alloc(cumW(i + 1)) - alloc(cumW(i))
         PartManifest(k, SALT, rows, bytes, share, waveId, "done")
@@ -249,8 +244,8 @@ object ExtractJob {
   }
 
   def readOutput(spark: SparkSession, outDir: String): Dataset[ExtractedTurn] =
-    io.readOutput(spark, outDir)
+    ParquetTableIO.readOutput(spark, outDir)
 
   def manifests(spark: SparkSession, outDir: String): Dataset[PartManifest] =
-    io.readManifests(spark, outDir)
+    ParquetTableIO.readManifests(spark, outDir)
 }

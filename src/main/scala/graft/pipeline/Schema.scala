@@ -16,6 +16,11 @@ final case class Turn(
     ts: Timestamp
 )
 
+object Turn {
+  /** [[Turn]] as a DDL schema string, for streaming file sources. */
+  val ddl = "conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP"
+}
+
 final case class SpanRow(op: String, start: Int, end: Int)
 
 /** Output row: per-turn extracted text + character-offset spans. `error` carries

@@ -2,20 +2,23 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
-/** Storage abstraction for the north rule's Iceberg tables (SURVEY §1.2).
+/** Storage for the north rule's Iceberg tables (SURVEY §1.2).
   *
-  * The sandbox ships no iceberg-spark-runtime jar (zero egress), so the default
-  * implementation is an Iceberg-shaped layout on Parquet: hive-partitioned shard
-  * directories plus self-written per-shard manifests — which the checkpoint /
-  * resume feature needs as first-class data anyway. An Iceberg-backed
-  * implementation is the same trait wired to `spark.read.format("iceberg")` /
-  * `df.writeTo(table).append()` with snapshot commits replacing directory
-  * overwrites; every ExtractJob behavior (partitioning, manifests, resume,
-  * lineage metrics) is expressed against this trait so swapping the backend is
-  * a constructor argument, not a rewrite.
+  * The build ships no iceberg-spark-runtime jar, so this is an Iceberg-shaped
+  * layout on Parquet: hive-partitioned shard directories plus self-written
+  * per-shard manifests — which the checkpoint / resume feature needs as
+  * first-class data anyway. An Iceberg backend keeps these signatures, wired
+  * to `spark.read.format("iceberg")` / `df.writeTo(table).append()` with
+  * snapshot commits replacing directory overwrites; every ExtractJob behavior
+  * (partitioning, manifests, resume, lineage metrics) goes through this
+  * object, so swapping the backend touches only it.
   */
-trait TableIO {
-  def readTurns(spark: SparkSession, path: String): Dataset[Turn]
+object ParquetTableIO {
+  def readTurns(spark: SparkSession, path: String): Dataset[Turn] = {
+    import spark.implicits._
+    spark.read.parquet(path)
+      .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
+  }
 
   /** Write extracted rows carrying a `shard` column in ONE pass: hive-style
     * `data/shard=k/` layout via partitionBy + DYNAMIC partition overwrite, so
@@ -23,39 +26,13 @@ trait TableIO {
     * crashed run is cleanly overwritten on resume; committed shards are never
     * touched). Iceberg backend: `overwritePartitions()` — same contract.
     */
-  def writeShards(out: DataFrame, outDir: String): Unit
-
-  /** The raw output table including the `shard` partition column. */
-  def readOutputRaw(spark: SparkSession, outDir: String): DataFrame
-
-  def readOutput(spark: SparkSession, outDir: String): Dataset[ExtractedTurn]
-  def appendManifests(spark: SparkSession, outDir: String, rows: Seq[PartManifest]): Unit
-  def readManifests(spark: SparkSession, outDir: String): Dataset[PartManifest]
-  def manifestsExist(outDir: String): Boolean
-
-  /** Shard partitions physically present in the output table (Iceberg backend:
-    * the `.partitions` metadata table). Lets the wave-stats pass distinguish an
-    * all-empty table (nothing written yet — 0-row manifests are legitimate)
-    * from a corrupted/unreadable one (which must fail loudly, not be committed
-    * as done). Must work on ANY Hadoop filesystem the table lives on (HDFS/S3/
-    * local), not just java.io paths.
-    */
-  def shardsPresent(spark: SparkSession, outDir: String): Set[Int]
-}
-
-object ParquetTableIO extends TableIO {
-  def readTurns(spark: SparkSession, path: String): Dataset[Turn] = {
-    import spark.implicits._
-    spark.read.parquet(path)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
-  }
-
   def writeShards(out: DataFrame, outDir: String): Unit =
     out.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard")
       .parquet(s"$outDir/data")
 
+  /** The raw output table including the `shard` partition column. */
   def readOutputRaw(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/data")
 
@@ -84,9 +61,22 @@ object ParquetTableIO extends TableIO {
     withWave.as[PartManifest]
   }
 
-  def manifestsExist(outDir: String): Boolean =
-    new java.io.File(s"$outDir/_manifests").exists()
+  /** Whether any manifest was written — checked on the table's own Hadoop
+    * filesystem, so resume works for `file:`/`hdfs:`/`s3a:` URIs, not just
+    * local paths.
+    */
+  def manifestsExist(spark: SparkSession, outDir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(s"$outDir/_manifests")
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+  }
 
+  /** Shard partitions physically present in the output table (Iceberg backend:
+    * the `.partitions` metadata table). Lets the wave-stats pass distinguish an
+    * all-empty table (nothing written yet — 0-row manifests are legitimate)
+    * from a corrupted/unreadable one (which must fail loudly, not be committed
+    * as done). Must work on ANY Hadoop filesystem the table lives on (HDFS/S3/
+    * local), not just java.io paths.
+    */
   def shardsPresent(spark: SparkSession, outDir: String): Set[Int] = {
     val path = new org.apache.hadoop.fs.Path(s"$outDir/data")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -225,10 +225,7 @@ object StreamingExtract {
   def run(spark: SparkSession, inDir: String, outDir: String,
           checkpoint: String): StreamingQuery = {
     import spark.implicits._
-    val turns = spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
-      .parquet(inDir)
-      .as[Turn]
+    val turns = spark.readStream.schema(Turn.ddl).parquet(inDir).as[Turn]
     ExtractJob.extractNarrow(turns).writeStream
       .format("parquet")
       .option("path", outDir)

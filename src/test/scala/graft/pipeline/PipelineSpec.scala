@@ -232,33 +232,39 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checkpoint manifests: resume after injected failure completes identically") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft-resume").toString
     val gen = SynthGen.generate(spark, 40, 5, 0, 0, includeFixturePdfs = false).cache()
     val turns = SynthGen.turns(gen).cache()
-
-    // crash run at waveSize=1 (shard-granular commits) so exactly 3 shards land
-    val failed = intercept[RuntimeException] {
-      ExtractJob.runWithManifests(spark, turns, dir, shards = 6, partitions = 4,
-        failAtShard = 3, waveSize = 1)
-    }
-    assert(failed.getMessage.contains("injected failure"))
-    val doneBefore = ExtractJob.completedShards(spark, dir)
-    assert(doneBefore.size == 3)
-
-    // resume with the default single-wave (one input scan) path
-    ExtractJob.runWithManifests(spark, turns, dir, shards = 6, partitions = 4)
-    assert(ExtractJob.completedShards(spark, dir).size == 6)
-
-    val out = ExtractJob.readOutput(spark, dir)
-      .orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "extracted_text").collect()
     val direct = ExtractJob.extract(turns, 4)
       .orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "extracted_text").collect()
-    assert(out.toSeq == direct.toSeq)
 
-    // extraction-rate metrics intact: every shard has rows + wall time
-    val ms = ExtractJob.manifests(spark, dir).collect()
-    assert(ms.length == 6 && ms.forall(m => m.rows > 0 && m.wall_ms >= 0 && m.status == "done"))
-    assert(ms.map(_.rows).sum == turns.count())
+    // a plain path and a URI outDir (file:/...) must both resume: a java.io
+    // probe of a URI never finds the manifests, so a rerun re-extracts every
+    // shard and appends a second manifest per shard
+    for (dir <- Seq(s"$tmp/path", new java.io.File(s"$tmp/uri").toURI.toString)) {
+      // crash run at waveSize=1 (shard-granular commits) so exactly 3 shards land
+      val failed = intercept[RuntimeException] {
+        ExtractJob.runWithManifests(spark, turns, dir, shards = 6, partitions = 4,
+          failAtShard = 3, waveSize = 1)
+      }
+      assert(failed.getMessage.contains("injected failure"), dir)
+      val doneBefore = ExtractJob.completedShards(spark, dir)
+      assert(doneBefore.size == 3, dir)
+
+      // resume with the default single-wave (one input scan) path
+      ExtractJob.runWithManifests(spark, turns, dir, shards = 6, partitions = 4)
+      assert(ExtractJob.completedShards(spark, dir).size == 6, dir)
+
+      val out = ExtractJob.readOutput(spark, dir)
+        .orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "extracted_text").collect()
+      assert(out.toSeq == direct.toSeq, dir)
+
+      // extraction-rate metrics intact: every shard has rows + wall time
+      val ms = ExtractJob.manifests(spark, dir).collect()
+      assert(ms.groupBy(_.part_id).values.forall(_.length == 1), s"one manifest per part_id: $dir")
+      assert(ms.length == 6 && ms.forall(m => m.rows > 0 && m.wall_ms >= 0 && m.status == "done"), dir)
+      assert(ms.map(_.rows).sum == turns.count(), dir)
+    }
     gen.unpersist(); turns.unpersist()
   }
 

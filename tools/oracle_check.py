@@ -4,9 +4,9 @@
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir> [queryName...]
 
 Reads <verifyOutDir>/oracle_sql.json + each <verifyOutDir>/<name>/ parquet
-dump (produced by graft.Verify or graft.tools.VerifyOne), runs the oracle SQL
-in DuckDB over the sfDir parquet tables, sorts columns BY NAME, and
-hash-compares values the way the driver does.
+dump (produced by `graft.Verify <sfDir> <verifyOutDir> [queryName...]`),
+runs the oracle SQL in DuckDB over the sfDir parquet tables, sorts columns
+BY NAME, and hash-compares values the way the driver does.
 """
 import sys, json, glob, hashlib
 import duckdb
