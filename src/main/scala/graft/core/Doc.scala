@@ -217,21 +217,6 @@ final case class PdfFont(
     t
   }
 
-  /** body.rs:163-171 — dead code in the reference (call site commented out);
-    * kept for API completeness.
-    */
-  def estimateSpaceWidth: Num = getWidth(' ') match {
-    case Right(w) => w
-    case Left(_) =>
-      widths match {
-        case Some(ws) if ws.nonEmpty =>
-          var sum: Num = NReal(0.0f)
-          ws.foreach(n => sum = sum + n)
-          sum / NInt(ws.length) / NReal(1000.0f)
-        case _ => NInt(200)
-      }
-  }
-
   /** Rust `Display for Font` — body.rs:206-213 (diagnostic `--font` mode only;
     * nondeterministic in the reference via HashMap iteration, so never gated).
     */

@@ -2,15 +2,86 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
 
-/** Deterministic single-page PDF writer used by the synthetic transcript generator.
-  * Emits the classic-xref document shape of the reference's helloworld fixture
-  * (/root/reference/data/helloworld.pdf: catalog -> pages -> page -> contents with a
-  * single `BT .. Tj .. ET`), so a synthesized PDF round-trips byte-exactly through
-  * the extraction engine: extractText(synthesize(text)) == text for printable-ASCII
-  * text not starting with '\n' or ' ' (leading '\n'/' ' are trimmed per page —
-  * content.rs:950 semantics).
+/** Deterministic PDF writer behind every synthetic document in the repo: the
+  * transcript generator's corpus, the benchmark corpora, the PDF queries,
+  * the fuzz bases and the round-trip gates.
+  *
+  * Every shape builds a list of [[Obj]]s and hands it to ONE byte writer:
+  * [[classic]] for the header / `N 0 obj … endobj` / one-subsection xref /
+  * trailer layout, or the same object writer followed by the shape's own
+  * cross-reference section (xref stream, object streams, incremental
+  * updates). Text is encoded ISO-8859-1 (a char outside Latin-1 becomes one
+  * `?` byte), and every xref offset, `/Prev` and `startxref` is the byte
+  * count of the output written so far — never a char count, which a
+  * supplementary-plane char (two UTF-16 chars, one byte) would throw off.
+  *
+  * The standard page is the classic shape of the reference's helloworld
+  * fixture: catalog -> pages -> page -> contents with a single
+  * `BT .. Tj .. ET`, so a synthesized PDF round-trips byte-exactly through
+  * the extraction engine.
   */
 object MiniPdf {
+
+  /** One indirect object: a dictionary, followed by `stream` bytes when set.
+    * A stream is framed as `dict \n stream \n bytes \n endstream`.
+    */
+  private[graft] final case class Obj(dict: String, stream: Array[Byte] = null)
+
+  /** Stream object whose dictionary is `<< /Length n$extra >>`. */
+  private[graft] def stream(data: Array[Byte], extra: String = ""): Obj =
+    Obj(s"<< /Length ${data.length}$extra >>", data)
+
+  private def latin1(s: String): Array[Byte] = s.getBytes(ISO_8859_1)
+
+  /** Append-only byte sink: offsets are `size`, i.e. bytes written so far. */
+  private final class Out {
+    private val out = new java.io.ByteArrayOutputStream()
+    def size: Int = out.size()
+    def write(b: Array[Byte]): Unit = out.write(b, 0, b.length)
+    def write(s: String): Unit = write(latin1(s))
+
+    /** Write object `num` at the current offset and return that offset. */
+    def obj(num: Int, o: Obj, gen: Int = 0): Int = {
+      val off = size
+      write(s"$num $gen obj\n"); write(o.dict)
+      if (o.stream != null) { write("\nstream\n"); write(o.stream); write("\nendstream") }
+      write("\nendobj\n")
+      off
+    }
+    def bytes: Array[Byte] = out.toByteArray
+  }
+
+  /** Classic single-revision document: header, objects 1..n in order, one
+    * xref subsection `0 n+1`, and the trailer
+    * `<< /Size n+1 /Root 1 0 R$trailerExtra >>`.
+    */
+  private[graft] def classic(objects: Seq[Obj], trailerExtra: String,
+                             version: String = "1.4"): Array[Byte] = {
+    val out = new Out
+    out.write(s"%PDF-$version\n")
+    val offsets = objects.zipWithIndex.map { case (o, i) => out.obj(i + 1, o) }
+    val xrefOff = out.size
+    out.write(s"xref\n0 ${objects.length + 1}\n0000000000 65535 f \n")
+    offsets.foreach(off => out.write(f"$off%010d 00000 n \n"))
+    out.write(s"trailer\n<< /Size ${objects.length + 1} /Root 1 0 R$trailerExtra >>\n")
+    out.write(s"startxref\n$xrefOff\n%%EOF")
+    out.bytes
+  }
+
+  /** zlib (level 6) of `data`, drained until the deflater finishes: a single
+    * `deflate` call into a fixed buffer silently truncates incompressible
+    * input. Deterministic: JDK Deflater with a fixed level on fixed input.
+    */
+  private[graft] def deflate(data: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater(6)
+    try {
+      d.setInput(data); d.finish()
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](data.length + 64)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
+  }
 
   /** Escape a literal string payload: backslash and parens (PDF 1.7 table 3.2). */
   def escapeLiteral(s: String): String = {
@@ -24,11 +95,43 @@ object MiniPdf {
     sb.toString
   }
 
-  /** Build a complete PDF whose Extract::Text equals `text` (modulo the per-page
-    * leading '\n'/' ' trim). Newlines in `text` pass through Tj byte-as-char.
-    */
   /** The document Info title is the first 24 chars of the text (escaped). */
   def titleOf(text: String): String = text.take(24)
+
+  /** The standard text block around `shows` (Tj lines ending in '\n'). */
+  private def textBlock(shows: String): String = s"BT\n70 50 TD\n/F1 12 Tf\n${shows}ET\n"
+
+  /** The standard content string: `text` as one Tj. */
+  private def showText(text: String): String = textBlock(s"(${escapeLiteral(text)}) Tj\n")
+
+  private def info(title: String, author: String = "graft", creator: String = "minipdf"): String =
+    s"<< /Title ($title) /Author ($author) /Creator ($creator) >>"
+
+  private def infoOf(text: String): String = info(escapeLiteral(titleOf(text)))
+
+  private def pageDict(fontObj: Int, contentsObj: Int, xobject: String = ""): String =
+    s"<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 $fontObj 0 R >> $xobject>> " +
+      s"/Contents $contentsObj 0 R >>"
+
+  private def helvetica(extra: String = ""): String =
+    s"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica$extra >>"
+
+  /** The standard six-object page: 1 catalog, 2 pages, 3 page, 4 `content`,
+    * 5 font, 6 info. `fontExtra` and `xobject` splice into the font and the
+    * page resources; objects from 7 on are the caller's.
+    */
+  private def pageObjects(content: Obj, info: String, fontExtra: String = "",
+                          xobject: String = ""): Seq[Obj] = Seq(
+    Obj("<< /Type /Catalog /Pages 2 0 R >>"),
+    Obj("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+    Obj(pageDict(5, 4, xobject)),
+    content,
+    Obj(helvetica(fontExtra)),
+    Obj(info))
+
+  /** [[classic]] over the standard page, Info at object 6. */
+  private def onePage(content: Obj, text: String): Array[Byte] =
+    classic(pageObjects(content, infoOf(text)), " /Info 6 0 R")
 
   /** Single-page document around an ARBITRARY raw content stream (round 6 —
     * the quirk-differential harness crafts operator-level constructs: octal
@@ -37,19 +140,13 @@ object MiniPdf {
     * (ISO-8859-1), so NUL and high bytes survive.
     */
   def synthesizeRawContent(content: String): Array[Byte] =
-    scaffold(content, "raw content probe")
+    onePage(stream(latin1(content)), "raw content probe")
 
-  def synthesize(text: String): Array[Byte] =
-    scaffold(s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n", text)
-
-  private def scaffold(content: String, text: String): Array[Byte] = assemble(Seq(
-    "<< /Type /Catalog /Pages 2 0 R >>",
-    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-    "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    s"<< /Length ${content.getBytes(ISO_8859_1).length} >>\nstream\n$content\nendstream",
-    "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-    s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>"
-  ))
+  /** Build a complete PDF whose Extract::Text equals `text` (modulo the per-page
+    * leading '\n'/' ' trim — content.rs:950 semantics) for printable-ASCII
+    * text. Newlines in `text` pass through Tj byte-as-char.
+    */
+  def synthesize(text: String): Array[Byte] = onePage(stream(latin1(showText(text))), text)
 
   /** Single-page document whose font carries an UNCOMPRESSED /ToUnicode CMap
     * stream (round 7 — cmap-edge differential probes). `bf` is spliced
@@ -63,38 +160,8 @@ object MiniPdf {
     val range = if (twoByte) "<0000> <FFFF>" else "<00> <FF>"
     val cmap = "/CIDInit /ProcSet findresource begin\n12 dict begin\nbegincmap\n" +
       s"1 begincodespacerange\n$range\nendcodespacerange\n$bf\nendcmap\nend\nend"
-    assemble(Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      s"<< /Length ${content.getBytes(ISO_8859_1).length} >>\nstream\n$content\nendstream",
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 7 0 R >>",
-      "<< /Title (cmap probe) /Author (graft) /Creator (minipdf) >>",
-      s"<< /Length ${cmap.getBytes(ISO_8859_1).length} >>\nstream\n$cmap\nendstream"
-    ))
-  }
-
-  /** Classic single-table assembly shared by every single-revision shape:
-    * header, N sequential objects, one-subsection xref, trailer pointing
-    * Root at object 1 and Info at object 6.
-    */
-  private def assemble(objects: Seq[String]): Array[Byte] = {
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = sb.length
-      sb.append(s"${i + 1} 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xrefOff = sb.length
-    sb.append("xref\n")
-    sb.append(s"0 ${objects.length + 1}\n")
-    sb.append("0000000000 65535 f \n")
-    offsets.foreach(off => sb.append(f"$off%010d 00000 n \n"))
-    sb.append("trailer\n")
-    sb.append(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R >>\n")
-    sb.append(s"startxref\n$xrefOff\n%%EOF")
-    sb.toString.getBytes(ISO_8859_1)
+    classic(pageObjects(stream(latin1(content)), info("cmap probe"), fontExtra = " /ToUnicode 7 0 R")
+      :+ stream(latin1(cmap)), " /Info 6 0 R")
   }
 
   def synthesizeBase64(text: String): String =
@@ -131,32 +198,27 @@ object MiniPdf {
       freeObj5Gen: Int = -1
   ): Array[Byte] = {
     require(texts.nonEmpty, "need at least the base revision")
-    val sb = new StringBuilder
-    sb.append(new String(synthesize(texts.head), ISO_8859_1))
+    val base = synthesize(texts.head)
+    val out = new Out
+    out.write(base)
     // byte offset of the newest xref table (the base scaffold writes it right
     // before "trailer"); tracked across updates for the /Prev chain
-    var prevXref = sb.lastIndexOf("xref\n0 7\n")
+    var prevXref = new String(base, ISO_8859_1).lastIndexOf("xref\n0 7\n")
     require(prevXref > 0, "base xref table not found")
     texts.drop(1).zipWithIndex.foreach { case (text, i) =>
       val isLast = i == texts.length - 2
-      val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n"
-      sb.append("\n")
-      val objOff = sb.length
-      sb.append(s"4 $overrideGen obj\n")
-        .append(s"<< /Length ${content.getBytes(ISO_8859_1).length} >>\nstream\n$content\nendstream")
-        .append("\nendobj\n")
-      val xrefOff = sb.length
+      out.write("\n")
+      val objOff = out.obj(4, stream(latin1(showText(text))), overrideGen)
+      val xrefOff = out.size
       val freeHere = isLast && freeObj5Gen >= 0
-      sb.append("xref\n")
-      sb.append(if (freeHere) "4 2\n" else "4 1\n")
-      sb.append(f"$objOff%010d $overrideGen%05d n \n")
-      if (freeHere) sb.append(f"${0}%010d $freeObj5Gen%05d f \n")
-      sb.append("trailer\n")
-      sb.append(s"<< /Size 7 /Root 1 0 R /Info 6 0 R /Prev $prevXref >>\n")
-      sb.append(s"startxref\n$xrefOff\n%%EOF")
+      out.write(if (freeHere) "xref\n4 2\n" else "xref\n4 1\n")
+      out.write(f"$objOff%010d $overrideGen%05d n \n")
+      if (freeHere) out.write(f"${0}%010d $freeObj5Gen%05d f \n")
+      out.write(s"trailer\n<< /Size 7 /Root 1 0 R /Info 6 0 R /Prev $prevXref >>\n")
+      out.write(s"startxref\n$xrefOff\n%%EOF")
       prevXref = xrefOff
     }
-    sb.toString.getBytes(ISO_8859_1)
+    out.bytes
   }
 
   /** Variant whose content stream shows the text as MULTIPLE consecutive Tj
@@ -169,31 +231,7 @@ object MiniPdf {
     */
   def synthesizeMultiTj(text: String, chunk: Int): Array[Byte] = {
     val tjs = text.grouped(chunk).map(c => s"(${escapeLiteral(c)}) Tj\n").mkString
-    val content = s"BT\n70 50 TD\n/F1 12 Tf\n${tjs}ET\n"
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      s"<< /Length ${content.getBytes(ISO_8859_1).length} >>\nstream\n$content\nendstream",
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>"
-    )
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = sb.length
-      sb.append(s"${i + 1} 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xrefOff = sb.length
-    sb.append("xref\n")
-    sb.append(s"0 ${objects.length + 1}\n")
-    sb.append("0000000000 65535 f \n")
-    offsets.foreach(off => sb.append(f"$off%010d 00000 n \n"))
-    sb.append("trailer\n")
-    sb.append(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R >>\n")
-    sb.append(s"startxref\n$xrefOff\n%%EOF")
-    sb.toString.getBytes(ISO_8859_1)
+    onePage(stream(latin1(textBlock(tjs))), text)
   }
 
   /** MULTI-PAGE variant: the text is split into `chunk`-char slices, one PAGE
@@ -211,35 +249,13 @@ object MiniPdf {
     val fontObj = 3 + 2 * n
     val infoObj = 4 + 2 * n
     val kids = (0 until n).map(i => s"${3 + i} 0 R").mkString(" ")
-    val pageObjs = (0 until n).map { i =>
-      s"<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 $fontObj 0 R >> >> /Contents ${3 + n + i} 0 R >>"
-    }
-    val contentObjs = chunks.map { c =>
-      val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(c)}) Tj\nET\n"
-      s"<< /Length ${content.getBytes(ISO_8859_1).length} >>\nstream\n$content\nendstream"
-    }
     val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      s"<< /Type /Pages /Kids [$kids] /Count $n >>") ++
-      pageObjs ++ contentObjs ++ Seq(
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>")
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = sb.length
-      sb.append(s"${i + 1} 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xrefOff = sb.length
-    sb.append("xref\n")
-    sb.append(s"0 ${objects.length + 1}\n")
-    sb.append("0000000000 65535 f \n")
-    offsets.foreach(off => sb.append(f"$off%010d 00000 n \n"))
-    sb.append("trailer\n")
-    sb.append(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info $infoObj 0 R >>\n")
-    sb.append(s"startxref\n$xrefOff\n%%EOF")
-    sb.toString.getBytes(ISO_8859_1)
+      Obj("<< /Type /Catalog /Pages 2 0 R >>"),
+      Obj(s"<< /Type /Pages /Kids [$kids] /Count $n >>")) ++
+      (0 until n).map(i => Obj(pageDict(fontObj, 3 + n + i))) ++
+      chunks.map(c => stream(latin1(showText(c)))) ++
+      Seq(Obj(helvetica()), Obj(infoOf(text)))
+    classic(objects, s" /Info $infoObj 0 R")
   }
 
   /** PDF 1.5-shaped variant: same document, but the cross-reference is a
@@ -251,35 +267,17 @@ object MiniPdf {
     * replicates the reference panic. Deterministic.
     */
   def synthesizeXrefStream(text: String): Array[Byte] = {
-    val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n"
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      s"<< /Length ${content.getBytes(ISO_8859_1).length} >>\nstream\n$content\nendstream",
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>"
-    )
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.5\n")
-    val offsets = new Array[Int](objects.length + 1)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = out.size()
-      w(s"${i + 1} 0 obj\n"); w(body); w("\nendobj\n")
-    }
-    val xrefOff = out.size()
-    offsets(objects.length) = xrefOff // the xref stream object itself (obj 7)
+    val out = new Out
+    out.write("%PDF-1.5\n")
+    val objects = pageObjects(stream(latin1(showText(text))), infoOf(text))
+    val offsets = objects.zipWithIndex.map { case (o, i) => out.obj(i + 1, o) }
+    val xrefOff = out.size // the xref stream object itself (obj 7)
     require(xrefOff <= 0xffffff, "W [1 3 1] caps offsets at ~16MB; payload too large")
     // rows (W [1 3 1] -> 5 bytes; 3-byte offsets carry payloads up to 16MB):
     // obj0 free, objs 1..7 type-1 at their offsets
-    val rows = Array.tabulate(8) { i =>
-      if (i == 0) Array[Byte](0, 0, 0, 0, -1)
-      else {
-        val off = offsets(i - 1)
-        Array[Byte](1, ((off >> 16) & 0xff).toByte, ((off >> 8) & 0xff).toByte,
-          (off & 0xff).toByte, 0)
-      }
+    val rows = Array[Byte](0, 0, 0, 0, -1) +: (offsets :+ xrefOff).map { off =>
+      Array[Byte](1, ((off >> 16) & 0xff).toByte, ((off >> 8) & 0xff).toByte,
+        (off & 0xff).toByte, 0)
     }
     // PNG Up filter per 5-byte row (filter byte 2; row[i] - prevRow[i])
     val encoded = new java.io.ByteArrayOutputStream()
@@ -290,19 +288,12 @@ object MiniPdf {
       while (i < 5) { encoded.write((row(i) - prev(i)) & 0xff); i += 1 }
       prev = row
     }
-    val deflater = new java.util.zip.Deflater(6)
-    val enc = encoded.toByteArray
-    deflater.setInput(enc); deflater.finish()
-    val buf = new Array[Byte](enc.length + 64)
-    val n = deflater.deflate(buf); deflater.end()
-    val compressed = java.util.Arrays.copyOf(buf, n)
-    w(s"7 0 obj\n<< /Type /XRef /Size 8 /Index [0 8] /W [1 3 1] /Root 1 0 R /Info 6 0 R " +
-      s"/Filter /FlateDecode /DecodeParms << /Predictor 12 /Columns 5 >> " +
-      s"/Length ${compressed.length} >>\nstream\n")
-    out.write(compressed, 0, compressed.length)
-    w("\nendstream\nendobj\n")
-    w(s"startxref\n$xrefOff\n%%EOF")
-    out.toByteArray
+    val compressed = deflate(encoded.toByteArray)
+    out.obj(7, Obj("<< /Type /XRef /Size 8 /Index [0 8] /W [1 3 1] /Root 1 0 R /Info 6 0 R " +
+      "/Filter /FlateDecode /DecodeParms << /Predictor 12 /Columns 5 >> " +
+      s"/Length ${compressed.length} >>", compressed))
+    out.write(s"startxref\n$xrefOff\n%%EOF")
+    out.bytes
   }
 
   def synthesizeXrefStreamBase64(text: String): String =
@@ -341,12 +332,9 @@ object MiniPdf {
     // w2 must hold the byte offsets, w3 the pair indexes
     require(wWidths._1 >= 1 && wWidths._1 <= 4 && wWidths._2 >= 2 && wWidths._2 <= 4
       && wWidths._3 >= 1 && wWidths._3 <= 4, s"unsupported /W $wWidths")
-    val baseMembers = Seq(
-      1 -> "<< /Type /Catalog /Pages 2 0 R >>",
-      2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      3 -> "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      5 -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      6 -> s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>")
+    // the standard page's objects; all but the content stream (4) are members
+    val page = pageObjects(stream(latin1(showText(text))), infoOf(text))
+    val baseMembers = Seq(1, 2, 3, 5, 6).map(num => num -> page(num - 1).dict)
     val members = memberOrder.map(baseMembers)
     // round-robin the (already permuted) members across N containers — real
     // producers split type-2 objects over several /Type /ObjStm streams
@@ -360,37 +348,20 @@ object MiniPdf {
       val header = ms.zip(rel).map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
       val data = header.getBytes(ISO_8859_1) ++ (" " * firstPad).getBytes(ISO_8859_1) ++
         bodies.flatMap(b => b ++ sep.getBytes(ISO_8859_1))
-      val stm =
-        if (compress) {
-          val d = new java.util.zip.Deflater(6)
-          d.setInput(data); d.finish()
-          val buf = new Array[Byte](data.length + 64)
-          val m = d.deflate(buf); d.end()
-          java.util.Arrays.copyOf(buf, m)
-        } else data
-      (stm, header.length)
+      (if (compress) deflate(data) else data, header.length)
     }
-    val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n"
-      .getBytes(ISO_8859_1)
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.5\n")
-    val off4 = out.size()
-    w(s"4 0 obj\n<< /Length ${content.length} >>\nstream\n")
-    out.write(content); w("\nendstream\nendobj\n")
+    val out = new Out
+    out.write("%PDF-1.5\n")
+    val off4 = out.obj(4, page(3))
     // containers are objects 7 .. 6+N; the xref stream is 7+N
     val containerObjs = (0 until containers).map(7 + _)
     val containerOffs = byContainer.zip(containerObjs).map { case (ms, objNum) =>
-      val off = out.size()
       val (stm, first) = buildStm(ms)
-      w(s"$objNum 0 obj\n<< /Type /ObjStm /N ${ms.length} /First $first " +
-        (if (compress) "/Filter /FlateDecode " else "") +
-        s"/Length ${stm.length} >>\nstream\n")
-      out.write(stm); w("\nendstream\nendobj\n")
-      off
+      out.obj(objNum, Obj(s"<< /Type /ObjStm /N ${ms.length} /First $first " +
+        (if (compress) "/Filter /FlateDecode " else "") + s"/Length ${stm.length} >>", stm))
     }
     val xrefObj = 7 + containers
-    val offXref = out.size()
+    val offXref = out.size
     // (container, pair index) of each member object under the chosen layout
     val where: Map[Int, (Int, Int)] = byContainer.zipWithIndex.flatMap {
       case (ms, c) => ms.map(_._1).zipWithIndex.map { case (num, i) => num -> ((containerObjs(c), i)) }
@@ -411,12 +382,11 @@ object MiniPdf {
     containerOffs.foreach(off => row(1, off, 0)) // 7 .. 6+N
     row(1, offXref, 0) // the xref stream itself
     val rb = rows.toByteArray
-    w(s"$xrefObj 0 obj\n<< /Type /XRef /Size ${xrefObj + 1} /Index [1 $xrefObj] " +
+    out.obj(xrefObj, Obj(s"<< /Type /XRef /Size ${xrefObj + 1} /Index [1 $xrefObj] " +
       s"/W [${wWidths._1} ${wWidths._2} ${wWidths._3}] " +
-      s"/Root 1 0 R /Info 6 0 R /Length ${rb.length} >>\nstream\n")
-    out.write(rb); w("\nendstream\nendobj\n")
-    w(s"startxref\n$offXref\n%%EOF")
-    out.toByteArray
+      s"/Root 1 0 R /Info 6 0 R /Length ${rb.length} >>", rb))
+    out.write(s"startxref\n$offXref\n%%EOF")
+    out.bytes
   }
 
   /** Variant whose content stream is ASCIIHexDecode- or LZWDecode-encoded —
@@ -428,8 +398,7 @@ object MiniPdf {
     */
   def synthesizeFiltered(text: String, filterName: String,
                          lzwEarlyChange: Int = 1): Array[Byte] = {
-    val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n"
-      .getBytes(ISO_8859_1)
+    val content = latin1(showText(text))
     val encoded = filterName match {
       case "ASCIIHexDecode" => graft.core.LenientFilters.asciiHexEncode(content)
       case "LZWDecode"      => graft.core.LenientFilters.lzwEncode(content, lzwEarlyChange)
@@ -438,37 +407,7 @@ object MiniPdf {
     // /DecodeParms /EarlyChange 0 declares the non-default width timing
     val parms = if (filterName == "LZWDecode" && lzwEarlyChange == 0)
       " /DecodeParms << /EarlyChange 0 >>" else ""
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      null, // stream object assembled below (binary body)
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>"
-    )
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = out.size()
-      w(s"${i + 1} 0 obj\n")
-      if (body == null) {
-        w(s"<< /Length ${encoded.length} /Filter /$filterName$parms >>\nstream\n")
-        out.write(encoded)
-        w("\nendstream")
-      } else w(body)
-      w("\nendobj\n")
-    }
-    val xrefOff = out.size()
-    w("xref\n")
-    w(s"0 ${objects.length + 1}\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w("trailer\n")
-    w(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R >>\n")
-    w(s"startxref\n$xrefOff\n%%EOF")
-    out.toByteArray
+    onePage(stream(encoded, s" /Filter /$filterName$parms"), text)
   }
 
   def synthesizeFilteredBase64(text: String, filterName: String): String =
@@ -494,58 +433,18 @@ object MiniPdf {
   def synthesizeFlateImagePdf(text: String, gray: Array[Byte], width: Int,
                               height: Int): Array[Byte] = {
     require(gray.length == width * height, "gray bitmap must be w*h bytes")
-    val deflater = new java.util.zip.Deflater(6)
-    deflater.setInput(gray); deflater.finish()
-    val buf = new Array[Byte](gray.length + 64)
-    val m = deflater.deflate(buf); deflater.end()
-    synthesizeImagePdfFiltered(text, java.util.Arrays.copyOf(buf, m), width, height,
-      "FlateDecode")
+    synthesizeImagePdfFiltered(text, deflate(gray), width, height, "FlateDecode")
   }
 
   private def synthesizeImagePdfFiltered(text: String, imgBytes: Array[Byte],
                                          width: Int, height: Int,
                                          filterName: String): Array[Byte] = {
-    val content = (s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n" +
-      s"q\n$width 0 0 $height 10 10 cm\n/Im1 Do\nQ\n").getBytes(ISO_8859_1)
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> " +
-        "/XObject << /Im1 7 0 R >> >> /Contents 4 0 R >>",
-      null, // text content stream (binary-safe writer below)
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>",
-      null // image stream
-    )
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = out.size()
-      w(s"${i + 1} 0 obj\n")
-      if (i == 3) {
-        w(s"<< /Length ${content.length} >>\nstream\n")
-        out.write(content)
-        w("\nendstream")
-      } else if (i == 6) {
-        w(s"<< /Type /XObject /Subtype /Image /Width $width /Height $height " +
-          s"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /$filterName " +
-          s"/Length ${imgBytes.length} >>\nstream\n")
-        out.write(imgBytes)
-        w("\nendstream")
-      } else w(body)
-      w("\nendobj\n")
-    }
-    val xrefOff = out.size()
-    w("xref\n")
-    w(s"0 ${objects.length + 1}\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w("trailer\n")
-    w(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R >>\n")
-    w(s"startxref\n$xrefOff\n%%EOF")
-    out.toByteArray
+    val content = showText(text) + s"q\n$width 0 0 $height 10 10 cm\n/Im1 Do\nQ\n"
+    val image = Obj(s"<< /Type /XObject /Subtype /Image /Width $width /Height $height " +
+      s"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /$filterName " +
+      s"/Length ${imgBytes.length} >>", imgBytes)
+    classic(pageObjects(stream(latin1(content)), infoOf(text), xobject = "/XObject << /Im1 7 0 R >> ")
+      :+ image, " /Info 6 0 R")
   }
 
   /** Variant whose content stream uses the LENIENT-TEXT operators: the text is
@@ -566,34 +465,28 @@ object MiniPdf {
       else s"0.7 0.1 (${escapeLiteral(c)}) \"\n"
     }.mkString
     val content = s"BT\n70 700 TD\n/F1 12 Tf\n14 TL\n0.5 Tw\n110 Tz\n3 Ts\n${shows}ET\n"
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      s"<< /Length ${content.getBytes(ISO_8859_1).length} >>\nstream\n$content\nendstream",
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>"
-    )
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = sb.length
-      sb.append(s"${i + 1} 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xrefOff = sb.length
-    sb.append("xref\n")
-    sb.append(s"0 ${objects.length + 1}\n")
-    sb.append("0000000000 65535 f \n")
-    offsets.foreach(off => sb.append(f"$off%010d 00000 n \n"))
-    sb.append("trailer\n")
-    sb.append(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R >>\n")
-    sb.append(s"startxref\n$xrefOff\n%%EOF")
-    sb.toString.getBytes(ISO_8859_1)
+    onePage(stream(latin1(content)), text)
   }
 
   def synthesizeTextOpsBase64(text: String, chunk: Int): String =
     java.util.Base64.getEncoder.encodeToString(synthesizeTextOps(text, chunk))
+
+  /** The tokenizer's nextN skips LEADING WHITESPACE (replicated reference
+    * quirk, tokenizer.rs:173-185), so raw encrypted stream bytes must not
+    * start with a whitespace-class byte.
+    */
+  private def isWs(b: Byte): Boolean =
+    b == 0x00 || b == 0x09 || b == 0x0a || b == 0x0c || b == 0x0d || b == 0x20
+
+  private def hx(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
+
+  /** The standard page with an encrypted content stream, `encDict` as object
+    * 7, and `/Encrypt 7 0 R` plus a doubled `/ID` in the trailer.
+    */
+  private def encryptedDoc(encBytes: Array[Byte], useFlate: Boolean, info: String,
+                           encDict: String, id0: Array[Byte], version: String): Array[Byte] =
+    classic(pageObjects(stream(encBytes, if (useFlate) " /Filter /FlateDecode" else ""), info)
+      :+ Obj(encDict), s" /Info 6 0 R /Encrypt 7 0 R /ID [<${hx(id0)}> <${hx(id0)}>]", version)
 
   /** ENCRYPTED variant (standard security handler; empty OR supplied
     * user/owner passwords, r=2 -> V1/RC4-40, r=3 -> V2/RC4-128, r=4 -> V4
@@ -614,33 +507,23 @@ object MiniPdf {
                           ownerPwd: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
     import graft.core.Crypt
     require((r >= 2 && r <= 4) || r == 6, "standard handler revisions 2-4 and 6 only")
-    if (r == 6) return synthesizeEncryptedV5(text, useFlate, userPwd, ownerPwd)
-    val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n"
-      .getBytes(ISO_8859_1)
-    val filtered = if (useFlate) {
-      val deflater = new java.util.zip.Deflater(6)
-      deflater.setInput(content); deflater.finish()
-      val buf = new Array[Byte](content.length + 64)
-      val m = deflater.deflate(buf); deflater.end()
-      java.util.Arrays.copyOf(buf, m)
-    } else content
+    val content = latin1(showText(text))
+    val filtered = if (useFlate) deflate(content) else content
+    if (r == 6) return synthesizeEncryptedV5(text, filtered, useFlate, userPwd, ownerPwd)
     val n = if (r == 2) 5 else 16
     val o =
       if (userPwd.isEmpty && ownerPwd.isEmpty) Crypt.ownerEntryCached(n, r)
       else Crypt.ownerEntryFor(n, r, ownerPwd, userPwd)
     val p = -1
-    // the tokenizer's nextN skips LEADING WHITESPACE (replicated reference
-    // quirk, tokenizer.rs:173-185), so raw stream bytes must not start with a
-    // whitespace-class byte — RC4 ciphertext / the AES IV are pseudorandom
-    // (~2.3% chance), so salt-search the deterministic /ID until the first
-    // stream byte is safe (same workaround the raw xref-stream fixtures use).
+    // RC4 ciphertext / the AES IV are pseudorandom, so ~2.3% of them start
+    // with a whitespace byte ([[isWs]]): salt-search the deterministic /ID
+    // until the first stream byte is safe (same workaround the raw
+    // xref-stream fixtures use).
     // V1/V2 additionally encrypt the Info STRINGS (no /StrF escape hatch
     // exists there — an external conforming reader decrypts every string, so
     // plaintext Info would read as garbage): same salt search keeps the
     // string ciphertexts free of CR/LF/NUL so they survive the literal-string
     // lexer byte-exactly under escapeLiteral's \\ \( \) escapes.
-    def isWs(b: Byte): Boolean =
-      b == 0x00 || b == 0x09 || b == 0x0a || b == 0x0c || b == 0x0d || b == 0x20
     def strSafe(b: Array[Byte]): Boolean = {
       if (b.exists(x => x == 0x00 || x == 0x0a || x == 0x0d)) false
       else if (b.forall(_ >= 0)) true // pure ASCII round-trips under any decode
@@ -650,8 +533,7 @@ object MiniPdf {
         try { graft.core.Utf8.strict(b); false }
         catch { case _: graft.core.PdfParseException => true }
     }
-    val infoPlain = Seq(titleOf(text), "graft", "minipdf")
-      .map(_.getBytes(ISO_8859_1))
+    val infoPlain = Seq(titleOf(text), "graft", "minipdf").map(latin1)
     val encStrings = r <= 3
     var salt = 0
     var id0: Array[Byte] = null
@@ -674,7 +556,6 @@ object MiniPdf {
       salt += 1
     }
     val u = Crypt.userEntry(key, id0, r)
-    def hx(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02X").mkString
     val encDict =
       if (r == 4)
         // /StrF /Identity: the fixture's Info strings ARE plaintext, so the
@@ -689,39 +570,8 @@ object MiniPdf {
           (if (r == 3) "/Length 128 " else "") +
           s"/O <${hx(o)}> /U <${hx(u)}> /P $p >>"
     def lit(b: Array[Byte]) = escapeLiteral(new String(b, ISO_8859_1))
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      null, // encrypted stream assembled below (binary body)
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${lit(infoEnc(0))}) /Author (${lit(infoEnc(1))}) /Creator (${lit(infoEnc(2))}) >>",
-      encDict
-    )
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = out.size()
-      w(s"${i + 1} 0 obj\n")
-      if (body == null) {
-        w(s"<< /Length ${encBytes.length}${if (useFlate) " /Filter /FlateDecode" else ""} >>\nstream\n")
-        out.write(encBytes)
-        w("\nendstream")
-      } else w(body)
-      w("\nendobj\n")
-    }
-    val xrefOff = out.size()
-    w("xref\n")
-    w(s"0 ${objects.length + 1}\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w("trailer\n")
-    w(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R /Encrypt 7 0 R " +
-      s"/ID [<${hx(id0)}> <${hx(id0)}>] >>\n")
-    w(s"startxref\n$xrefOff\n%%EOF")
-    out.toByteArray
+    encryptedDoc(encBytes, useFlate, info(lit(infoEnc(0)), lit(infoEnc(1)), lit(infoEnc(2))),
+      encDict, id0, "1.4")
   }
 
   /** V5/R6 (PDF 2.0, AES-256/AESV3) variant: SHA-2-derived /U verification
@@ -729,19 +579,9 @@ object MiniPdf {
     * AES-256-CBC with IV prefix and NO per-object key derivation. All key
     * material derives deterministically from the text.
     */
-  private def synthesizeEncryptedV5(text: String, useFlate: Boolean,
-                                    userPwd: Array[Byte] = Array.emptyByteArray,
-                                    ownerPwd: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
+  private def synthesizeEncryptedV5(text: String, filtered: Array[Byte], useFlate: Boolean,
+                                    userPwd: Array[Byte], ownerPwd: Array[Byte]): Array[Byte] = {
     import graft.core.Crypt
-    val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n"
-      .getBytes(ISO_8859_1)
-    val filtered = if (useFlate) {
-      val deflater = new java.util.zip.Deflater(6)
-      deflater.setInput(content); deflater.finish()
-      val buf = new Array[Byte](content.length + 64)
-      val m = deflater.deflate(buf); deflater.end()
-      java.util.Arrays.copyOf(buf, m)
-    } else content
     val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val fileKey = Crypt.md5(tb, "fk1".getBytes) ++ Crypt.md5(tb, "fk2".getBytes) // 32 bytes
     val valSalt = Crypt.md5(tb, "vs".getBytes).take(8)
@@ -750,8 +590,6 @@ object MiniPdf {
     val (o, oe) = Crypt.v5OwnerEntries(fileKey, u,
       Crypt.md5(tb, "ovs".getBytes).take(8), Crypt.md5(tb, "oks".getBytes).take(8),
       if (ownerPwd.isEmpty) userPwd else ownerPwd)
-    def isWs(b: Byte): Boolean =
-      b == 0x00 || b == 0x09 || b == 0x0a || b == 0x0c || b == 0x0d || b == 0x20
     // ws-guard on the stream's first byte (= the IV's first byte)
     var salt = 0
     var encBytes: Array[Byte] = null
@@ -760,93 +598,19 @@ object MiniPdf {
       encBytes = Crypt.aesEncrypt(fileKey, iv, filtered)
       salt += 1
     }
-    val id0 = Crypt.md5(tb, "id".getBytes)
-    def hx(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02X").mkString
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      null,
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>",
-      "<< /Filter /Standard /V 5 /R 6 /Length 256 " +
-        "/CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen /Length 32 >> >> " +
-        s"/StmF /StdCF /StrF /Identity /O <${hx(o)}> /U <${hx(u)}> " +
-        s"/OE <${hx(oe)}> /UE <${hx(ue)}> /P -1 >>"
-    )
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    w("%PDF-2.0\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = out.size()
-      w(s"${i + 1} 0 obj\n")
-      if (body == null) {
-        w(s"<< /Length ${encBytes.length}${if (useFlate) " /Filter /FlateDecode" else ""} >>\nstream\n")
-        out.write(encBytes)
-        w("\nendstream")
-      } else w(body)
-      w("\nendobj\n")
-    }
-    val xrefOff = out.size()
-    w("xref\n")
-    w(s"0 ${objects.length + 1}\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w("trailer\n")
-    w(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R /Encrypt 7 0 R " +
-      s"/ID [<${hx(id0)}> <${hx(id0)}>] >>\n")
-    w(s"startxref\n$xrefOff\n%%EOF")
-    out.toByteArray
+    val encDict = "<< /Filter /Standard /V 5 /R 6 /Length 256 " +
+      "/CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen /Length 32 >> >> " +
+      s"/StmF /StdCF /StrF /Identity /O <${hx(o)}> /U <${hx(u)}> " +
+      s"/OE <${hx(oe)}> /UE <${hx(ue)}> /P -1 >>"
+    encryptedDoc(encBytes, useFlate, infoOf(text), encDict, Crypt.md5(tb, "id".getBytes), "2.0")
   }
 
   def synthesizeEncryptedBase64(text: String, r: Int = 2): String =
     java.util.Base64.getEncoder.encodeToString(synthesizeEncrypted(text, r))
 
   /** Variant with a FlateDecode-compressed content stream — exercises the filter
-    * path (body.rs:103-109 + filters.rs semantics) end-to-end. Deterministic:
-    * JDK Deflater with a fixed level on fixed input.
+    * path (body.rs:103-109 + filters.rs semantics) end-to-end.
     */
-  def synthesizeFlate(text: String): Array[Byte] = {
-    val content = s"BT\n70 50 TD\n/F1 12 Tf\n(${escapeLiteral(text)}) Tj\nET\n"
-      .getBytes(ISO_8859_1)
-    val deflater = new java.util.zip.Deflater(6)
-    deflater.setInput(content)
-    deflater.finish()
-    val buf = new Array[Byte](content.length + 64)
-    val n = deflater.deflate(buf)
-    deflater.end()
-    val compressed = java.util.Arrays.copyOf(buf, n)
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      null, // stream object assembled below (binary body)
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      s"<< /Title (${escapeLiteral(titleOf(text))}) /Author (graft) /Creator (minipdf) >>"
-    )
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = out.size()
-      w(s"${i + 1} 0 obj\n")
-      if (body == null) {
-        w(s"<< /Length ${compressed.length} /Filter /FlateDecode >>\nstream\n")
-        out.write(compressed)
-        w("\nendstream")
-      } else w(body)
-      w("\nendobj\n")
-    }
-    val xrefOff = out.size()
-    w("xref\n")
-    w(s"0 ${objects.length + 1}\n")
-    w("0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w("trailer\n")
-    w(s"<< /Size ${objects.length + 1} /Root 1 0 R /Info 6 0 R >>\n")
-    w(s"startxref\n$xrefOff\n%%EOF")
-    out.toByteArray
-  }
+  def synthesizeFlate(text: String): Array[Byte] =
+    onePage(stream(deflate(latin1(showText(text))), " /Filter /FlateDecode"), text)
 }

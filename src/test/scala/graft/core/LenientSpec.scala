@@ -339,23 +339,9 @@ class LenientSpec extends AnyFunSuite {
     // a Pages node whose Kids points back at itself — the image walk must hit
     // the shared MaxTreeDepth guard (poison-payload discipline), not recurse
     // to a StackOverflowError that escapes the per-row NonFatal catch
-    val objects = Seq(
+    val pdf = graft.pipeline.MiniPdf.classic(Seq(
       "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [2 0 R] /Count 1 >>")
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = sb.length
-      sb.append(s"${i + 1} 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xrefOff = sb.length
-    sb.append("xref\n").append(s"0 ${objects.length + 1}\n")
-    sb.append("0000000000 65535 f \n")
-    offsets.foreach(off => sb.append(f"$off%010d 00000 n \n"))
-    sb.append("trailer\n").append(s"<< /Size ${objects.length + 1} /Root 1 0 R >>\n")
-    sb.append(s"startxref\n$xrefOff\n%%EOF")
-    val pdf = sb.toString.getBytes(ISO_8859_1)
+      "<< /Type /Pages /Kids [2 0 R] /Count 1 >>").map(graft.pipeline.MiniPdf.Obj(_)), "")
     val e = intercept[PdfParseException](Pdf.lenient(pdf).listImages)
     assert(e.getMessage.contains("deeper than"), e.getMessage)
   }
@@ -363,12 +349,18 @@ class LenientSpec extends AnyFunSuite {
   test("Flate image XObjects: raw bitmap dims validated by decoded length, exact pixel sum") {
     val w = 9; val ht = 6
     val gray = Array.tabulate[Byte](w * ht)(i => ((i * 13) % 256).toByte)
-    val pdf = graft.pipeline.MiniPdf.synthesizeFlateImagePdf("Bitmap text", gray, w, ht)
-    assert(Pdf.lenient(pdf).extract(ExtractText) == "Bitmap text")
-    val im = Pdf.lenient(pdf).listImages.head
-    // dims confirmed (decoded length == w*h), samples byte-exact (lossless)
-    assert((im.filter, im.pxWidth, im.pxHeight, im.pxBands) == (("FlateDecode", w, ht, 1)), im)
-    assert(im.pxSum == gray.map(_ & 0xff).map(_.toLong).sum, im.pxSum)
+    // seeded noise is incompressible: its deflate output is larger than the
+    // input, so a writer that does not drain the deflater truncates it
+    val noise = new Array[Byte](512 * 512)
+    new scala.util.Random(512).nextBytes(noise)
+    for ((bitmap, bw, bh) <- Seq((gray, w, ht), (noise, 512, 512))) {
+      val pdf = graft.pipeline.MiniPdf.synthesizeFlateImagePdf("Bitmap text", bitmap, bw, bh)
+      assert(Pdf.lenient(pdf).extract(ExtractText) == "Bitmap text")
+      val im = Pdf.lenient(pdf).listImages.head
+      // dims confirmed (decoded length == w*h), samples byte-exact (lossless)
+      assert((im.filter, im.pxWidth, im.pxHeight, im.pxBands) == (("FlateDecode", bw, bh, 1)), im)
+      assert(im.pxSum == bitmap.map(_ & 0xff).map(_.toLong).sum, im.pxSum)
+    }
     // a LYING dictionary (declared dims don't match the payload) is NOT
     // confirmed: px* stay -1 instead of trusting the declaration (same-length
     // byte patch, so xref offsets stay valid)
@@ -419,15 +411,9 @@ class LenientSpec extends AnyFunSuite {
     */
   private def synthesizeEncryptedModern(text: String): Array[Byte] = {
     import graft.core.Crypt
+    import graft.pipeline.MiniPdf.deflate
     val o = Crypt.ownerEntryCached(5, 2)
     val p = -1
-    def deflate(b: Array[Byte]): Array[Byte] = {
-      val d = new java.util.zip.Deflater(6)
-      d.setInput(b); d.finish()
-      val buf = new Array[Byte](b.length + 64)
-      val m = d.deflate(buf); d.end()
-      java.util.Arrays.copyOf(buf, m)
-    }
     // ObjStm members (objects 1,2,3,5,6); contents = classic object 4
     val members = Seq(
       1 -> "<< /Type /Catalog /Pages 2 0 R >>",

@@ -48,6 +48,63 @@ class PropertySpec extends AnyFunSuite {
     }, n = 100)
   }
 
+  /** Offsets of every object a classic xref table marks in use, across the
+    * whole /Prev chain of the ISO-8859-1-decoded document `s`:
+    * (object number, generation, byte offset).
+    */
+  private def xrefEntries(s: String): Seq[(Int, Int, Int)] = {
+    def tableAt(at: Int): Seq[(Int, Int, Int)] = {
+      assert(s.startsWith("xref\n", at), s"startxref/Prev $at does not point at a table")
+      val trailer = s.indexOf("trailer", at)
+      val lines = s.substring(at + 5, trailer).split("\n")
+      val here = Seq.newBuilder[(Int, Int, Int)]
+      var i = 0
+      while (i < lines.length) { // one subsection: "first count", then count entries
+        val Array(first, count) = lines(i).split(" ").map(_.toInt)
+        for (k <- 0 until count) lines(i + 1 + k).split(" ") match {
+          case Array(off, gen, "n") => here += ((first + k, gen.toInt, off.toInt))
+          case _                    =>
+        }
+        i += 1 + count
+      }
+      val prev = "/Prev (\\d+)".r.findFirstMatchIn(s.substring(trailer, s.indexOf(">>", trailer)))
+      here.result() ++ prev.toSeq.flatMap(m => tableAt(m.group(1).toInt))
+    }
+    val sx = s.lastIndexOf("startxref\n")
+    tableAt(s.substring(sx + 10, s.indexOf('\n', sx + 10)).toInt)
+  }
+
+  test("classic xref offsets are byte offsets for text with supplementary-plane chars") {
+    // a supplementary char is two UTF-16 chars but one ISO-8859-1 byte ('?'),
+    // so offsets counted in chars point past their objects
+    val char = Gen.frequency(
+      4 -> Gen.choose(32.toChar, 126.toChar).map(_.toString),
+      1 -> Gen.choose(0xa0, 0xd7ff).map(c => new String(Character.toChars(c))),
+      2 -> Gen.choose(0x10000, 0x10ffff).map(c => new String(Character.toChars(c))))
+    val text = for {
+      head <- Gen.choose(33.toChar, 126.toChar)
+      astral <- Gen.choose(0x10000, 0x10ffff)
+      rest <- Gen.listOf(char)
+    } yield head.toString + new String(Character.toChars(astral)) + rest.mkString
+    def wellFormed(pdf: Array[Byte], lenientText: Boolean): Boolean = {
+      (if (lenientText) Pdf.lenientText(pdf) else Pdf(pdf)).extract(ExtractText)
+      val s = new String(pdf, "ISO-8859-1")
+      xrefEntries(s).forall { case (num, gen, off) => s.startsWith(s"$num $gen obj\n", off) }
+    }
+    check("astral-offsets", Prop.forAll(text) { s =>
+      val shapes = Seq(
+        ("synthesize", MiniPdf.synthesize(s), false),
+        ("multiTj", MiniPdf.synthesizeMultiTj(s, 3), false),
+        ("multiPage", MiniPdf.synthesizeMultiPage(s, 4), false),
+        ("incremental", MiniPdf.synthesizeIncremental(Seq(s, s.reverse, "x" + s)), false),
+        ("textOps", MiniPdf.synthesizeTextOps(s, 3), true))
+      val bad = shapes.filterNot { case (_, pdf, lenientText) =>
+        try wellFormed(pdf, lenientText) catch { case _: PdfParseException => false }
+      }
+      bad.isEmpty :| s"malformed: ${bad.map(_._1).mkString(", ")}"
+    }, n = 100)
+  }
+
   test("hex strings round-trip") {
     check("hex-roundtrip", Prop.forAll(
       Gen.nonEmptyContainerOf[Array, Byte](Gen.choose(Byte.MinValue, Byte.MaxValue))) { bytes =>

@@ -174,7 +174,7 @@ class QuirkSpec extends AnyFunSuite {
     */
   private def refPaddedExtract(content: String): Either[String, String] = {
     val raw = content.getBytes("ISO-8859-1")
-    val compressedLen = deflate(raw).length
+    val compressedLen = MiniPdf.deflate(raw).length
     val padded = java.util.Arrays.copyOf(raw, math.max(raw.length, compressedLen * 10))
     runExtract(rebuildWithContent(new String(padded, "ISO-8859-1")))
   }
@@ -183,67 +183,17 @@ class QuirkSpec extends AnyFunSuite {
     try Right(Pdf(pdf).extract(ExtractText))
     catch { case e: PdfParseException => Left(e.getMessage) }
 
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(6)
-    d.setInput(raw); d.finish()
-    val buf = new Array[Byte](raw.length + 64)
-    val n = d.deflate(buf)
-    d.end()
-    java.util.Arrays.copyOf(buf, n)
-  }
+  private def rebuildWithFlateContent(content: String): Array[Byte] =
+    rebuildWith(MiniPdf.stream(MiniPdf.deflate(content.getBytes("ISO-8859-1")), " /Filter /FlateDecode"))
 
-  private def rebuildWithFlateContent(content: String): Array[Byte] = {
-    val compressed = deflate(content.getBytes("ISO-8859-1"))
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      null,
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    )
-    w("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = out.size()
-      w(s"${i + 1} 0 obj\n")
-      if (body == null) {
-        w(s"<< /Length ${compressed.length} /Filter /FlateDecode >>\nstream\n")
-        out.write(compressed, 0, compressed.length)
-        w("\nendstream")
-      } else w(body)
-      w("\nendobj\n")
-    }
-    val xrefOff = out.size()
-    w("xref\n"); w(s"0 ${objects.length + 1}\n"); w("0000000000 65535 f \n")
-    offsets.foreach(off => w(f"$off%010d 00000 n \n"))
-    w("trailer\n"); w(s"<< /Size ${objects.length + 1} /Root 1 0 R >>\n")
-    w(s"startxref\n$xrefOff\n%%EOF")
-    out.toByteArray
-  }
+  private def rebuildWithContent(content: String): Array[Byte] =
+    rebuildWith(MiniPdf.stream(content.getBytes("ISO-8859-1")))
 
-  private def rebuildWithContent(content: String): Array[Byte] = {
-    val bytes = content.getBytes("ISO-8859-1")
-    val objects = Seq(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-      s"<< /Length ${bytes.length} >>\nstream\n$content\nendstream",
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    )
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = sb.length
-      sb.append(s"${i + 1} 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xrefOff = sb.length
-    sb.append("xref\n").append(s"0 ${objects.length + 1}\n").append("0000000000 65535 f \n")
-    offsets.foreach(off => sb.append(f"$off%010d 00000 n \n"))
-    sb.append("trailer\n").append(s"<< /Size ${objects.length + 1} /Root 1 0 R >>\n")
-    sb.append(s"startxref\n$xrefOff\n%%EOF")
-    sb.toString.getBytes("ISO-8859-1")
-  }
+  /** Five-object page (no Info) around `contents` as object 4. */
+  private def rebuildWith(contents: MiniPdf.Obj): Array[Byte] = MiniPdf.classic(Seq(
+    MiniPdf.Obj("<< /Type /Catalog /Pages 2 0 R >>"),
+    MiniPdf.Obj("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+    MiniPdf.Obj("<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>"),
+    contents,
+    MiniPdf.Obj("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")), "")
 }

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.core.{ExtractText, Pdf}
 import graft.html.HtmlBoilerplate
 
 object SparkTestSession {
@@ -15,75 +14,6 @@ object SparkTestSession {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   spark.sparkContext.setLogLevel("WARN")
-}
-
-class MiniPdfSpec extends AnyFunSuite {
-  test("synthesized PDF round-trips byte-exactly through the extractor") {
-    for (text <- Seq(
-        "Hello, world!",
-        "parens (nested (deep)) and \\ backslash",
-        "multi\nline\ntext",
-        SynthGen.prose(7L, 8, 40))) {
-      val pdf = Pdf(MiniPdf.synthesize(text))
-      assert(pdf.extract(ExtractText) == text)
-    }
-  }
-
-  test("multi-Tj synthesis: same text, one span per chunk, substring invariant") {
-    for ((text, chunk) <- Seq(("Hello, world!", 5), ("", 40),
-        ("parens (nested (deep)) and \\ backslash", 7),
-        (SynthGen.prose(11L, 10, 60), 40))) {
-      val r = Pdf(MiniPdf.synthesizeMultiTj(text, chunk)).extractResult(ExtractText)
-      assert(r.text == text, "multi-Tj must not change the extracted text")
-      val expected = text.grouped(chunk).filter(_.nonEmpty).size
-      assert(r.spans.length == expected, s"one span per non-empty $chunk-char chunk")
-      r.spans.zipWithIndex.foreach { case (sp, i) =>
-        assert(sp.op == "Tj")
-        assert(sp.start == i * chunk && sp.end == math.min((i + 1) * chunk, text.length))
-        assert(r.text.substring(sp.start, sp.end) == text.substring(sp.start, sp.end))
-      }
-    }
-  }
-
-  test("multi-page synthesis: pages join with newline, each page trims leading ' '/'\\n'") {
-    def expected(text: String, chunk: Int): String = {
-      val chunks = if (text.isEmpty) Seq("") else text.grouped(chunk).toSeq
-      chunks.map(_.dropWhile(c => c == ' ' || c == '\n')).mkString("\n")
-    }
-    for ((text, chunk) <- Seq(("Hello, world!", 5), ("", 40),
-        ("space boundary x yz", 6), // a chunk starting with ' ' gets page-trimmed
-        ("line\nbreaks\ninside pages", 7),
-        (SynthGen.prose(13L, 12, 50), 100))) {
-      val got = Pdf(MiniPdf.synthesizeMultiPage(text, chunk)).extract(graft.core.ExtractText)
-      assert(got == expected(text, chunk), s"chunk=$chunk text=$text")
-    }
-  }
-
-  test("synthesized PDF raw content matches the content stream shape") {
-    val raw = Pdf(MiniPdf.synthesize("Hi")).extract(graft.core.ExtractRawContent)
-    assert(raw == "BT\n70 50 TD\n/F1 12 Tf\n(Hi) Tj\nET\n")
-  }
-
-  test("synthesized PDF info dictionary round-trips") {
-    val info = Pdf(MiniPdf.synthesize("parens (x) and more text beyond the title cut")).readInfo
-    assert(info.isDefined)
-    assert(info.get.title == Some("parens (x) and more text"))
-    assert(info.get.author == Some("graft"))
-    assert(info.get.creator == Some("minipdf"))
-  }
-
-  test("chars mode emits per-glyph diagnostic lines (non-gated format)") {
-    val out = Pdf(MiniPdf.synthesize("Hi")).extract(graft.core.ExtractChars)
-    assert(out ==
-      "'H', \"Type1\", \"Helvetica\", (1, 0, 0, 1, 70, 50)\n" +
-      "'i', \"Type1\", \"Helvetica\", (1, 0, 0, 1, 70, 50)\n")
-  }
-
-  test("font mode lists the page fonts") {
-    val out = Pdf(MiniPdf.synthesize("Hi")).extract(graft.core.ExtractFont)
-    assert(out.contains("Subtype: \"Type1\""))
-    assert(out.contains("BaseFont: \"Helvetica\""))
-  }
 }
 
 class HtmlSpec extends AnyFunSuite {

@@ -13,23 +13,8 @@ import graft.core.{PdfParseException, XrefStream}
 class PoisonSpec extends AnyFunSuite {
 
   /** Minimal classic-xref PDF around caller-supplied object bodies (object i+1). */
-  private def pdf(objects: Seq[String], trailerExtra: String = ""): Array[Byte] = {
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    val offsets = new Array[Int](objects.length)
-    objects.zipWithIndex.foreach { case (body, i) =>
-      offsets(i) = sb.length
-      sb.append(s"${i + 1} 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xrefOff = sb.length
-    sb.append("xref\n").append(s"0 ${objects.length + 1}\n")
-    sb.append("0000000000 65535 f \n")
-    offsets.foreach(off => sb.append(f"$off%010d 00000 n \n"))
-    sb.append("trailer\n")
-    sb.append(s"<< /Size ${objects.length + 1} /Root 1 0 R$trailerExtra >>\n")
-    sb.append(s"startxref\n$xrefOff\n%%EOF")
-    sb.toString.getBytes(ISO_8859_1)
-  }
+  private def pdf(objects: Seq[String], trailerExtra: String = ""): Array[Byte] =
+    MiniPdf.classic(objects.map(MiniPdf.Obj(_)), trailerExtra)
 
   private def turnOf(bytes: Array[Byte]): Turn =
     Turn("poison", 0, "user",
