@@ -39,9 +39,12 @@ object GenMain {
   }
 }
 
-/** The production extraction job (north-rule shape): scan transcripts -> salted
-  * repartition -> mapPartitions extraction -> write + per-shard checkpoint
-  * manifests. Rerunning after a failure resumes from the manifests.
+/** The production extraction job (north-rule shape): scan transcripts ->
+  * shard-aligned salted repartition -> mapPartitions extraction -> sort
+  * (shard, conv_id, turn_idx) -> write + per-shard checkpoint manifests. Each
+  * task holds one shard, so a wave of W shards runs W * ceil(partitions / W)
+  * tasks and writes that many files, each in (conv_id, turn_idx) order.
+  * Rerunning after a failure resumes from the manifests.
   * Usage: ExtractMain <transcriptsParquet> <outDir> [shards] [partitions]
   */
 object ExtractMain {

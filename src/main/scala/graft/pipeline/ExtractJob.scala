@@ -1,21 +1,28 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.html.HtmlBoilerplate
 
 /** The extraction pipeline — SURVEY §2.10 stages P1-P9.
   *
-  * Plan shape (one wide transformation, one narrow map, one write):
-  *   scan -> filter -> Exchange hashpartitioning(conv_id, salt) ->
-  *   MapPartitions(extractTurn) -> sortWithinPartitions -> write(+manifest)
+  * Plan shape of [[runWithManifests]] (one wide transformation, one narrow
+  * map, one write):
+  *   scan -> filter(shard in wave) ->
+  *   Exchange partition-id pass-through(slot(shard) * per + salted hash) ->
+  *   MapPartitions(extractTurn) -> Sort(shard, conv_id, turn_idx) ->
+  *   write(partitionBy shard) -> manifests
   *
-  * The salted repartition bounds any single conversation's share of a partition at
-  * 1/SALT (north rule: "explicit salted repartitioning on conv_id to defeat
-  * long-conversation skew"); per-turn extraction is row-independent so splitting a
-  * conversation never affects correctness. Throughput then scales with cores because
-  * post-shuffle partitions are uniform and extraction is CPU-bound.
+  * Each post-shuffle partition holds exactly one shard of the wave, so each
+  * task writes one file, and the writer's required `[shard]` ordering is a
+  * prefix of the P5 sort, so Spark keeps that sort. Within a shard the salt
+  * bounds any single conversation's share of a partition at 1/SALT (north
+  * rule: "explicit salted repartitioning on conv_id to defeat long-conversation
+  * skew"); per-turn extraction is row-independent so splitting a conversation
+  * never affects correctness. Throughput then scales with cores because
+  * post-shuffle partitions are as uniform as the shards and extraction is
+  * CPU-bound.
   */
 object ExtractJob {
 
@@ -80,10 +87,43 @@ object ExtractJob {
 
   private def b64(text: String): Array[Byte] = java.util.Base64.getDecoder.decode(text)
 
-  /** P3: explicit salted repartition keyed (conv_id, salt). */
-  def saltedRepartition(input: Dataset[Turn], partitions: Int): Dataset[Turn] =
-    input.repartition(partitions, col("conv_id"),
-      pmod(hash(col("conv_id"), col("turn_idx")), lit(SALT)))
+  /** The resume unit of a row: its conversation's hash bucket. */
+  def shardOf(shards: Int): Column = pmod(hash(col("conv_id")), lit(shards))
+
+  /** P3: the salted exchange, shard-aligned. `wave` holds the shards (of
+    * `shards`) that the input carries. Each shard gets
+    * `per = ceil(partitions / wave.size)` partitions of its own:
+    *
+    *   pid = slot(shard) * per + pmod(hash(conv_id, salt), per)
+    *
+    * where `slot` is the shard's position in the wave (`shard - wave.head`
+    * for a contiguous wave, a lookup for the non-contiguous wave a resume
+    * leaves). So the exchange runs `wave.size * per` tasks — more than
+    * `partitions` when `partitions` is not a multiple of `wave.size`, and
+    * `wave.size` when `partitions < wave.size` — and every task holds one
+    * shard. The salt `pmod(hash(conv_id, turn_idx), SALT)` spreads a long
+    * conversation over the `per` partitions of its shard.
+    *
+    * With one shard (the default) the id is `pmod(hash(conv_id, salt),
+    * partitions)`: the same assignment as `repartition(partitions, conv_id,
+    * salt)`, since both hash with Murmur3, seed 42.
+    */
+  def saltedRepartition(input: Dataset[Turn], partitions: Int,
+      shards: Int = 1, wave: Seq[Int] = Seq(0)): Dataset[Turn] = {
+    require(partitions > 0 && wave.nonEmpty, s"partitions=$partitions wave=$wave")
+    val per = (partitions + wave.size - 1) / wave.size
+    val salt = pmod(hash(col("conv_id"), col("turn_idx")), lit(SALT))
+    val salted = pmod(hash(col("conv_id"), salt), lit(per))
+    val pid =
+      if (wave.size == 1) salted
+      else {
+        val slot =
+          if (wave == (wave.head to wave.last)) shardOf(shards) - lit(wave.head)
+          else (array_position(typedLit(wave), shardOf(shards)) - 1).cast("int")
+        slot * per + salted
+      }
+    input.repartitionById(wave.size * per, pid)
+  }
 
   /** P3+P4: the batch extraction transform — the salted repartition, then the
     * one extraction map.
@@ -157,9 +197,12 @@ object ExtractJob {
     * after N committed shards (resume tests).
     *
     * ONE input scan per wave (default: all remaining shards in a single wave):
-    * filter to the remaining shards -> extract -> partitionBy(shard) write with
+    * filter to the wave's shards -> shard-aligned salted exchange -> extract
+    * -> sort (shard, conv_id, turn_idx) -> partitionBy(shard) write with
     * DYNAMIC partition overwrite -> manifest rows for the wave from one
-    * partition-pruned scan of the just-written output. At 100TB this is 1 input
+    * partition-pruned scan of the just-written output. A task holds one shard,
+    * so a wave writes at most `ceil(partitions / wave.size)` files per shard,
+    * each in (conv_id, turn_idx) order (P5). At 100TB this is 1 input
     * pass + 1 (much smaller) output pass — never O(shards) input rescans.
     * `waveSize` trades scan count for resume granularity: a crashed wave
     * recommits only its own shards on rerun (its partial directories are
@@ -176,7 +219,7 @@ object ExtractJob {
   ): Unit = {
     val done = completedShards(spark, outDir)
     val remaining = (0 until shards).filterNot(done)
-    val shardOf = pmod(hash(col("conv_id")), lit(shards))
+    val shard = shardOf(shards)
     var committed = done.size
     // crash injection promises "fail after N COMMITTED SHARDS" — meaningless at
     // a multi-shard wave granularity, so it forces shard-granular waves
@@ -188,10 +231,13 @@ object ExtractJob {
       if (failAtShard >= 0 && committed >= failAtShard)
         throw new RuntimeException(s"injected failure after $committed shards")
       val t0 = System.nanoTime()
-      val waveInput = input.where(shardOf.isin(wave: _*))
-      val out = extract(waveInput, partitions)
-        .withColumn("shard", shardOf)
-        .sortWithinPartitions("conv_id", "turn_idx") // P5 (prod-scale ordering)
+      val waveInput = input.where(shard.isin(wave: _*))
+      // one shard per task, so the shard prefix costs nothing and satisfies
+      // the writer's required [shard] ordering: without it Spark replaces
+      // this sort with its own Sort [shard] and P5 is lost
+      val out = extractNarrow(saltedRepartition(waveInput, partitions, shards, wave))
+        .withColumn("shard", shard)
+        .sortWithinPartitions("shard", "conv_id", "turn_idx") // P5
       ParquetTableIO.writeShards(out, outDir)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       // P7 per-shard stats (exact rows and bytes; error rows count as rows

@@ -43,7 +43,11 @@ final case class Golden(
     gate: String // "exact" | "smoke"
 )
 
-/** Per-partition checkpoint manifest (SURVEY §1.2 / P8). `wall_ms` is this
+/** Per-partition checkpoint manifest (SURVEY §1.2 / P8). `rows` counts the
+  * shard's output rows, error rows included. `bytes` is
+  * `sum(length(extracted_text))`, and Spark's `length` counts characters
+  * (code points), not encoded bytes: "a😀é" counts 3, though it is 4 UTF-16
+  * units and 7 UTF-8 bytes. An error row counts 0. `wall_ms` is this
   * shard's byte-proportional share of its wave's wall time (waves write
   * several shards in one pass, so exact per-shard wall does not exist; the
   * shares of one wave sum EXACTLY to the wave wall). `wave_id` groups the

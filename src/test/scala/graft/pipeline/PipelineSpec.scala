@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{hash, input_file_name, lit, pmod, spark_partition_id, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.html.HtmlBoilerplate
@@ -61,6 +62,34 @@ class HtmlSpec extends AnyFunSuite {
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
 
+  /** Parquet data files in each `shard=k` directory of an output table. */
+  private def filesPerShard(dir: String): Map[Int, Int] = {
+    val root = new org.apache.hadoop.fs.Path(s"$dir/data")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ParquetTableIO.shardsPresent(spark, dir).map { k =>
+      k -> fs.listStatus(new org.apache.hadoop.fs.Path(root, s"shard=$k"))
+        .count(_.getPath.getName.endsWith(".parquet"))
+    }.toMap
+  }
+
+  /** The output files whose rows, read back in file order, are not in
+    * (conv_id, turn_idx) order.
+    */
+  private def unorderedFiles(dir: String): Seq[String] = {
+    import spark.implicits._
+    ParquetTableIO.readOutputRaw(spark, dir)
+      .select(input_file_name(), $"conv_id", $"turn_idx").as[(String, String, Int)]
+      .collect().toSeq.groupMap(_._1)(r => (r._2, r._3))
+      .collect { case (f, keys) if keys != keys.sorted => f }
+      .toSeq
+  }
+
+  /** An input in scrambled order: any order in the output comes from the job. */
+  private def scrambled(turns: Dataset[Turn]): Dataset[Turn] = {
+    import spark.implicits._
+    turns.orderBy(xxhash64($"conv_id", $"turn_idx"))
+  }
+
   test("golden gate: extraction matches expectations on the synthetic corpus") {
     import spark.implicits._
     val gen = SynthGen.generate(spark, nConvs = 60, turnsPerConv = 6, longConvs = 2, longTurns = 150).cache()
@@ -106,6 +135,57 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(parts.max <= 100, s"skew not defeated: ${parts.mkString(",")}")
   }
 
+  test("one-shard salted exchange keeps the layout of repartition(n, conv_id, salt)") {
+    import spark.implicits._
+    val turns = SynthGen.turns(SynthGen.generate(spark, 30, 4, 1, 200, includeFixturePdfs = false)).cache()
+    def layout(ds: Dataset[Turn]): Set[(Int, String, Int)] =
+      ds.select(spark_partition_id(), $"conv_id", $"turn_idx").as[(Int, String, Int)].collect().toSet
+    for (n <- Seq(7, 16)) {
+      val salted = ExtractJob.saltedRepartition(turns, n)
+      val hashed = turns.repartition(n, $"conv_id", pmod(hash($"conv_id", $"turn_idx"), lit(ExtractJob.SALT)))
+      assert(salted.rdd.getNumPartitions == n)
+      val l = layout(salted)
+      assert(l.map(_._1).size > 1, s"degenerate layout at $n")
+      assert(l == layout(hashed), s"partitions differ at $n")
+    }
+    turns.unpersist()
+  }
+
+  test("shard-aligned salted exchange: wave.size * ceil(partitions / wave.size) partitions, one shard each") {
+    import spark.implicits._
+    val turns = SynthGen.turns(SynthGen.generate(spark, 40, 4, 1, 200, includeFixturePdfs = false)).cache()
+    // a full wave, an offset contiguous wave and a non-contiguous (lookup) wave
+    for ((shards, wave, partitions) <- Seq((8, 0 until 8, 12), (6, 3 until 6, 4), (6, Seq(0, 2, 5), 7))) {
+      val shard = ExtractJob.shardOf(shards)
+      val parts = ExtractJob.saltedRepartition(turns.where(shard.isin(wave: _*)), partitions, shards, wave)
+        .select(spark_partition_id(), shard).as[(Int, Int)].collect()
+      val per = (partitions + wave.size - 1) / wave.size
+      val byPid = parts.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      assert(byPid.values.forall(_.size == 1), s"$wave: a partition holds several shards: $byPid")
+      // partition ids are shard-major: slot(shard) * per until (slot + 1) * per
+      byPid.foreach { case (pid, ks) => assert(wave.indexOf(ks.head) == pid / per, s"$wave: pid $pid") }
+      assert(byPid.keySet.max < wave.size * per)
+    }
+    turns.unpersist()
+  }
+
+  test("runWithManifests: every file in (conv_id, turn_idx) order (P5), at most ceil(partitions / shards) files per shard") {
+    val turns = scrambled(SynthGen.turns(
+      SynthGen.generate(spark, 40, 5, 1, 120, includeFixturePdfs = false))).cache()
+    val n = turns.count()
+    for ((shards, partitions) <- Seq((4, 2), (8, 12), (3, 7))) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-p5-$shards-$partitions").toString
+      ExtractJob.runWithManifests(spark, turns, dir, shards, partitions)
+      assert(ExtractJob.readOutput(spark, dir).count() == n)
+      val bad = unorderedFiles(dir)
+      assert(bad.size == 0, s"($shards, $partitions): out of (conv_id, turn_idx) order: ${bad.take(3)}")
+      val files = filesPerShard(dir)
+      assert(files.size == shards && files.values.forall(_ <= (partitions + shards - 1) / shards),
+        s"($shards, $partitions): files per shard $files")
+    }
+    turns.unpersist()
+  }
+
   test("manifests count rows and bytes; error rows count as rows with 0 bytes") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-manifest-counts").toString
@@ -118,6 +198,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ms.map(_.rows).sum == 2)
     assert(ms.map(_.bytes).sum == "plain text here".length)
     assert(ExtractJob.readOutput(spark, dir).where($"error".isNotNull).count() == 1)
+  }
+
+  test("manifest bytes counts characters (code points), not UTF-16 units or UTF-8 bytes") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-chars").toString
+    val text = "a\uD83D\uDE00\u00E9" // a, U+1F600, e-acute
+    ExtractJob.runWithManifests(spark,
+      Seq(Turn("c1", 0, "user", text, "plain", new java.sql.Timestamp(0))).toDS(), dir, shards = 1, partitions = 1)
+    assert((text.length, text.getBytes("UTF-8").length) == (4, 7))
+    assert(ExtractJob.manifests(spark, dir).collect().map(_.bytes).toSeq == Seq(3L))
   }
 
   test("manifests: shards with no input commit 0-row done manifests (empty-wave path)") {
@@ -184,6 +274,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // resume with the default single-wave (one input scan) path
       ExtractJob.runWithManifests(spark, turns, dir, shards = 6, partitions = 4)
       assert(ExtractJob.completedShards(spark, dir).size == 6, dir)
+      // the resumed wave (shards 3-5) puts one shard in each task, so each
+      // resumed shard holds at most ceil(4 / 3) = 2 files
+      val resumed = filesPerShard(dir).filter { case (k, _) => !doneBefore(k) }
+      assert(resumed.size == 3 && resumed.values.forall(_ <= 2), s"$dir: $resumed")
 
       val out = ExtractJob.readOutput(spark, dir)
         .orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "extracted_text").collect()
@@ -196,6 +290,28 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ms.map(_.rows).sum == turns.count(), dir)
     }
     gen.unpersist(); turns.unpersist()
+  }
+
+  test("resume over non-contiguous committed shards writes one shard per task") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-resume-gaps").toString
+    val turns = SynthGen.turns(SynthGen.generate(spark, 40, 5, 0, 0, includeFixturePdfs = false)).cache()
+    val full = s"$tmp/full"
+    ExtractJob.runWithManifests(spark, turns, full, shards = 6, partitions = 4)
+    // commit shards 1 and 4 only, so the resumed wave is (0, 2, 3, 5)
+    val dir = s"$tmp/gaps"
+    ParquetTableIO.writeShards(ParquetTableIO.readOutputRaw(spark, full).where($"shard".isin(1, 4)), dir)
+    ParquetTableIO.appendManifests(spark, dir,
+      ExtractJob.manifests(spark, full).collect().filter(m => m.part_id == 1 || m.part_id == 4).toSeq)
+    ExtractJob.runWithManifests(spark, scrambled(turns), dir, shards = 6, partitions = 4)
+    assert(ExtractJob.completedShards(spark, dir) == (0 until 6).toSet)
+    def rows(d: String) = ExtractJob.readOutput(spark, d)
+      .orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "extracted_text").collect().toSeq
+    assert(rows(dir) == rows(full))
+    val resumed = filesPerShard(dir).filter { case (k, _) => k != 1 && k != 4 }
+    assert(resumed.size == 4 && resumed.values.forall(_ == 1), s"ceil(4 / 4) = 1 file per shard: $resumed")
+    assert(unorderedFiles(dir).size == 0)
+    turns.unpersist()
   }
 
   test("compaction: fewer files, identical data, manifests and resume state untouched") {
