@@ -46,6 +46,10 @@ object GenMain {
   * tasks and writes that many files, each in (conv_id, turn_idx) order.
   * Rerunning after a failure resumes from the manifests.
   * Usage: ExtractMain <transcriptsParquet> <outDir> [shards] [partitions]
+  *   partitions is rounded up to a multiple of the wave size (at least one
+  *   task per shard). A long conversation spreads over the
+  *   ceil(partitions / W) tasks of its shard only, so at partitions <= shards
+  *   (the defaults: 8 and 8) the salt does not split it.
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {

@@ -16,13 +16,16 @@ import graft.html.HtmlBoilerplate
   *
   * Each post-shuffle partition holds exactly one shard of the wave, so each
   * task writes one file, and the writer's required `[shard]` ordering is a
-  * prefix of the P5 sort, so Spark keeps that sort. Within a shard the salt
-  * bounds any single conversation's share of a partition at 1/SALT (north
-  * rule: "explicit salted repartitioning on conv_id to defeat long-conversation
-  * skew"); per-turn extraction is row-independent so splitting a conversation
-  * never affects correctness. Throughput then scales with cores because
-  * post-shuffle partitions are as uniform as the shards and extraction is
-  * CPU-bound.
+  * prefix of the P5 sort, so Spark keeps that sort. The salt spreads a long
+  * conversation over the `per` partitions of its shard (north rule: "explicit
+  * salted repartitioning on conv_id to defeat long-conversation skew"), so a
+  * task holds about 1/min(SALT, per) of any one conversation; per-turn
+  * extraction is row-independent so splitting a conversation never affects
+  * correctness. The spread a conversation gets and the files its shard gets
+  * are the same number, `per`: a caller that needs more spread raises
+  * `partitions`. Throughput scales with cores while no conversation is a
+  * large part of its shard, because post-shuffle partitions are then as
+  * uniform as the shards and extraction is CPU-bound.
   */
 object ExtractJob {
 
@@ -96,13 +99,13 @@ object ExtractJob {
     *
     *   pid = slot(shard) * per + pmod(hash(conv_id, salt), per)
     *
-    * where `slot` is the shard's position in the wave (`shard - wave.head`
-    * for a contiguous wave, a lookup for the non-contiguous wave a resume
-    * leaves). So the exchange runs `wave.size * per` tasks — more than
-    * `partitions` when `partitions` is not a multiple of `wave.size`, and
-    * `wave.size` when `partitions < wave.size` — and every task holds one
+    * where `slot` is the shard's position in the wave. So the exchange runs
+    * `wave.size * per` tasks — `partitions` rounded up to a multiple of
+    * `wave.size`, at least one task per shard — and every task holds one
     * shard. The salt `pmod(hash(conv_id, turn_idx), SALT)` spreads a long
-    * conversation over the `per` partitions of its shard.
+    * conversation over the `per` partitions of its shard only, so a task
+    * holds about 1/min(SALT, per) of a conversation: with `partitions <=
+    * wave.size` (`per` = 1) the salt does nothing.
     *
     * With one shard (the default) the id is `pmod(hash(conv_id, salt),
     * partitions)`: the same assignment as `repartition(partitions, conv_id,
@@ -113,16 +116,8 @@ object ExtractJob {
     require(partitions > 0 && wave.nonEmpty, s"partitions=$partitions wave=$wave")
     val per = (partitions + wave.size - 1) / wave.size
     val salt = pmod(hash(col("conv_id"), col("turn_idx")), lit(SALT))
-    val salted = pmod(hash(col("conv_id"), salt), lit(per))
-    val pid =
-      if (wave.size == 1) salted
-      else {
-        val slot =
-          if (wave == (wave.head to wave.last)) shardOf(shards) - lit(wave.head)
-          else (array_position(typedLit(wave), shardOf(shards)) - 1).cast("int")
-        slot * per + salted
-      }
-    input.repartitionById(wave.size * per, pid)
+    val slot = (array_position(typedLit(wave), shardOf(shards)) - 1).cast("int")
+    input.repartitionById(wave.size * per, slot * per + pmod(hash(col("conv_id"), salt), lit(per)))
   }
 
   /** P3+P4: the batch extraction transform — the salted repartition, then the
@@ -193,8 +188,10 @@ object ExtractJob {
   }
 
   /** Run extraction with per-shard checkpoint manifests. `shards` counts resume
-    * units; `partitions` is the shuffle width. `failAtShard` injects a crash
-    * after N committed shards (resume tests).
+    * units. `partitions` sets the shuffle width: a wave runs `partitions`
+    * rounded up to a multiple of its size, at least one task per shard (see
+    * [[saltedRepartition]]). `failAtShard` injects a crash after N committed
+    * shards (resume tests).
     *
     * ONE input scan per wave (default: all remaining shards in a single wave):
     * filter to the wave's shards -> shard-aligned salted exchange -> extract

@@ -133,6 +133,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // without salting one partition would hold all 400; with SALT=64 over 16
     // partitions expect a roughly uniform spread
     assert(parts.max <= 100, s"skew not defeated: ${parts.mkString(",")}")
+    // shard-aligned (the runWithManifests path): the conversation spreads over
+    // the per = ceil(partitions / 8) partitions of its shard only, so a task
+    // holds about 1/per of it; 64 partitions (per = 8) meet the bound above
+    for ((partitions, bound) <- Seq(16 -> 250, 64 -> 100)) {
+      val per = partitions / 8
+      val aligned = ExtractJob.saltedRepartition(turns, partitions, 8, 0 until 8)
+        .mapPartitions(it => Iterator.single(it.count(_.conv_id == "conv-000010")))
+        .collect()
+      assert(aligned.sum == 400 && aligned.count(_ > 0) == per, s"$partitions: ${aligned.mkString(",")}")
+      assert(aligned.max <= bound, s"$partitions: skew not defeated: ${aligned.mkString(",")}")
+    }
   }
 
   test("one-shard salted exchange keeps the layout of repartition(n, conv_id, salt)") {
@@ -154,7 +165,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("shard-aligned salted exchange: wave.size * ceil(partitions / wave.size) partitions, one shard each") {
     import spark.implicits._
     val turns = SynthGen.turns(SynthGen.generate(spark, 40, 4, 1, 200, includeFixturePdfs = false)).cache()
-    // a full wave, an offset contiguous wave and a non-contiguous (lookup) wave
+    // a full wave, an offset contiguous wave and a non-contiguous wave (as a resume leaves)
     for ((shards, wave, partitions) <- Seq((8, 0 until 8, 12), (6, 3 until 6, 4), (6, Seq(0, 2, 5), 7))) {
       val shard = ExtractJob.shardOf(shards)
       val parts = ExtractJob.saltedRepartition(turns.where(shard.isin(wave: _*)), partitions, shards, wave)
@@ -189,25 +200,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("manifests count rows and bytes; error rows count as rows with 0 bytes") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-manifest-counts").toString
+    // bytes counts characters (code points): "a\uD83D\uDE00\u00E9" (a, U+1F600,
+    // e-acute) is 4 UTF-16 units and 7 UTF-8 bytes, and counts 3
+    val chars = "a\uD83D\uDE00\u00E9"
     val rows = Seq(
       Turn("c1", 0, "user", "plain text here", "plain", new java.sql.Timestamp(0)),
-      Turn("c1", 1, "user", "!!!bad", "pdf-b64", new java.sql.Timestamp(0))
+      Turn("c1", 1, "user", "!!!bad", "pdf-b64", new java.sql.Timestamp(0)),
+      Turn("c2", 0, "user", chars, "plain", new java.sql.Timestamp(0))
     ).toDS()
     ExtractJob.runWithManifests(spark, rows, dir, shards = 4, partitions = 2)
     val ms = ExtractJob.manifests(spark, dir).collect()
-    assert(ms.map(_.rows).sum == 2)
-    assert(ms.map(_.bytes).sum == "plain text here".length)
+    assert(ms.map(_.rows).sum == 3)
+    assert((chars.length, chars.getBytes("UTF-8").length) == (4, 7))
+    assert(ms.map(_.bytes).sum == "plain text here".length + 3)
     assert(ExtractJob.readOutput(spark, dir).where($"error".isNotNull).count() == 1)
-  }
-
-  test("manifest bytes counts characters (code points), not UTF-16 units or UTF-8 bytes") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-chars").toString
-    val text = "a\uD83D\uDE00\u00E9" // a, U+1F600, e-acute
-    ExtractJob.runWithManifests(spark,
-      Seq(Turn("c1", 0, "user", text, "plain", new java.sql.Timestamp(0))).toDS(), dir, shards = 1, partitions = 1)
-    assert((text.length, text.getBytes("UTF-8").length) == (4, 7))
-    assert(ExtractJob.manifests(spark, dir).collect().map(_.bytes).toSeq == Seq(3L))
   }
 
   test("manifests: shards with no input commit 0-row done manifests (empty-wave path)") {
