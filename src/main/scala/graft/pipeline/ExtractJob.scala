@@ -1,18 +1,21 @@
 package graft.pipeline
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
 import graft.core._
 import graft.html.HtmlBoilerplate
+import scala.jdk.CollectionConverters._
 
 /** The extraction pipeline — SURVEY §2.10 stages P1-P9.
   *
   * Plan shape of [[runWithManifests]] (one wide transformation, one narrow
-  * map, one write):
+  * map, one write, and no read-back):
   *   scan -> filter(shard in wave) ->
   *   Exchange partition-id pass-through(slot(shard) * per + salted hash) ->
-  *   MapPartitions(extractTurn) -> Sort(shard, conv_id, turn_idx) ->
-  *   write(partitionBy shard) -> manifests
+  *   MapPartitions(extractTurn, counting P7 stats per task) ->
+  *   Sort(shard, conv_id, turn_idx) -> write(partitionBy shard) -> manifests
   *
   * Each post-shuffle partition holds exactly one shard of the wave, so each
   * task writes one file, and the writer's required `[shard]` ordering is a
@@ -31,6 +34,11 @@ object ExtractJob {
 
   /** Salt fan-out: a 10^6-turn conversation spreads over SALT buckets. */
   val SALT = 64
+
+  /** The name of the per-wave P7 stats accumulator of [[runWithManifests]].
+    * Spark reports only named accumulators to listeners.
+    */
+  val StatsSinkName = "graft.extract.p7_stats"
 
   /** Per-row extraction. The reference panics on malformed input; here every parse
     * failure lands in the `error` column so one poison payload cannot kill a
@@ -114,11 +122,23 @@ object ExtractJob {
   def saltedRepartition(input: Dataset[Turn], partitions: Int,
       shards: Int = 1, wave: Seq[Int] = Seq(0)): Dataset[Turn] = {
     require(partitions > 0 && wave.nonEmpty, s"partitions=$partitions wave=$wave")
-    val per = (partitions + wave.size - 1) / wave.size
+    val per = partitionsPerShard(partitions, wave)
     val salt = pmod(hash(col("conv_id"), col("turn_idx")), lit(SALT))
     val slot = (array_position(typedLit(wave), shardOf(shards)) - 1).cast("int")
     input.repartitionById(wave.size * per, slot * per + pmod(hash(col("conv_id"), salt), lit(per)))
   }
+
+  /** `per` of [[saltedRepartition]]: shard `wave(s)` owns the partition ids
+    * `s * per until (s + 1) * per`.
+    */
+  private def partitionsPerShard(partitions: Int, wave: Seq[Int]): Int =
+    (partitions + wave.size - 1) / wave.size
+
+  /** The shard that partition `pid` of [[saltedRepartition]]`(_, partitions,
+    * _, wave)` holds: `wave(pid / per)`.
+    */
+  def shardOfPartition(pid: Int, partitions: Int, wave: Seq[Int]): Int =
+    wave(pid / partitionsPerShard(partitions, wave))
 
   /** P3+P4: the batch extraction transform — the salted repartition, then the
     * one extraction map.
@@ -132,6 +152,14 @@ object ExtractJob {
     * mapPartitions (not a per-row udf) keeps per-partition setup amortized and
     * object churn off Catalyst's serializer path.
     *
+    * With a `stats` sink each task also counts its rows and the code points
+    * of every non-null `extracted_text` (Spark's `length`; an error row adds
+    * 0) on the `String` the map has just built, and adds one
+    * `(partition id, rows, bytes)` to the sink when the task completes.
+    * `String.codePointCount` is O(1) on a Latin-1 string. The counts are
+    * exact only where the map runs in a ResultStage (see
+    * [[runWithManifests]]).
+    *
     * Called directly it runs on the scan partitions with NO shuffle. That is
     * correct whenever the source layout is already splittable-uniform (parquet
     * row groups split a long conversation across tasks by construction). At
@@ -140,9 +168,26 @@ object ExtractJob {
     * skipping the exchange removes the full-payload shuffle — the pipeline's
     * only wide stage.
     */
-  def extractNarrow(input: Dataset[Turn]): Dataset[ExtractedTurn] = {
+  def extractNarrow(input: Dataset[Turn],
+      stats: Option[CollectionAccumulator[(Int, Long, Long)]] = None): Dataset[ExtractedTurn] = {
     import input.sparkSession.implicits._
-    input.mapPartitions(_.map(extractTurn))
+    input.mapPartitions { it =>
+      stats match {
+        case None => it.map(extractTurn)
+        case Some(sink) =>
+          var rows = 0L
+          var bytes = 0L
+          val ctx = TaskContext.get()
+          ctx.addTaskCompletionListener[Unit](_ => sink.add((ctx.partitionId(), rows, bytes)))
+          it.map { t =>
+            val e = extractTurn(t)
+            rows += 1
+            if (e.extracted_text != null)
+              bytes += e.extracted_text.codePointCount(0, e.extracted_text.length)
+            e
+          }
+      }
+    }
   }
 
   /** P6: golden gate — byte-exact per-turn text equality. Returns diff rows
@@ -196,11 +241,21 @@ object ExtractJob {
     * ONE input scan per wave (default: all remaining shards in a single wave):
     * filter to the wave's shards -> shard-aligned salted exchange -> extract
     * -> sort (shard, conv_id, turn_idx) -> partitionBy(shard) write with
-    * DYNAMIC partition overwrite -> manifest rows for the wave from one
-    * partition-pruned scan of the just-written output. A task holds one shard,
-    * so a wave writes at most `ceil(partitions / wave.size)` files per shard,
-    * each in (conv_id, turn_idx) order (P5). At 100TB this is 1 input
-    * pass + 1 (much smaller) output pass — never O(shards) input rescans.
+    * DYNAMIC partition overwrite -> manifest rows for the wave. A task holds
+    * one shard, so a wave writes at most `ceil(partitions / wave.size)` files
+    * per shard, each in (conv_id, turn_idx) order (P5). At 100TB this is one
+    * pass over the data — never O(shards) input rescans, and no read-back.
+    *
+    * The manifests' P7 `rows` and `bytes` are counted by the extraction map
+    * itself, into a per-wave accumulator of per-partition counts. The map
+    * runs after the only exchange, so it runs in the write job's ResultStage,
+    * and the DAGScheduler applies a ResultTask's accumulator updates only for
+    * the first successful completion of each output partition: updates from
+    * failed attempts are dropped (`countFailedValues` is false) and so are
+    * those of a speculative or retried duplicate. The counts are exact. An
+    * exchange added after the map would move it into a ShuffleMapStage,
+    * whose re-runs count again; PipelineSpec pins the stage.
+    *
     * `waveSize` trades scan count for resume granularity: a crashed wave
     * recommits only its own shards on rerun (its partial directories are
     * dynamically overwritten, committed shards untouched).
@@ -229,30 +284,23 @@ object ExtractJob {
         throw new RuntimeException(s"injected failure after $committed shards")
       val t0 = System.nanoTime()
       val waveInput = input.where(shard.isin(wave: _*))
+      // a fresh P7 sink per wave, filled by the write job's own tasks
+      val sink = spark.sparkContext.collectionAccumulator[(Int, Long, Long)](StatsSinkName)
       // one shard per task, so the shard prefix costs nothing and satisfies
       // the writer's required [shard] ordering: without it Spark replaces
       // this sort with its own Sort [shard] and P5 is lost
-      val out = extractNarrow(saltedRepartition(waveInput, partitions, shards, wave))
+      val out = extractNarrow(saltedRepartition(waveInput, partitions, shards, wave), Some(sink))
         .withColumn("shard", shard)
         .sortWithinPartitions("shard", "conv_id", "turn_idx") // P5
       ParquetTableIO.writeShards(out, outDir)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       // P7 per-shard stats (exact rows and bytes; error rows count as rows
-      // with 0 bytes): one partition-pruned scan of the wave's output. An
-      // all-empty TABLE writes no partition directories (only _SUCCESS), which
-      // legitimately means 0 rows for every wave shard — detected EXPLICITLY
-      // from the partition listing, never by matching exception text (a read
-      // failure on a table with data is real corruption and must propagate,
-      // not be committed as 0-row done manifests).
-      val stats: Map[Int, (Long, Long)] =
-        if (ParquetTableIO.shardsPresent(spark, outDir).isEmpty) Map.empty
-        else ParquetTableIO.readOutputRaw(spark, outDir)
-          .where(col("shard").isin(wave: _*))
-          .groupBy(col("shard"))
-          .agg(count(lit(1)).as("rows"),
-            coalesce(sum(length(col("extracted_text"))), lit(0L)).as("bytes"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      // with 0 bytes): each partition held one shard, and a shard with no
+      // rows keeps (0, 0)
+      val stats: Map[Int, (Long, Long)] = sink.value.asScala.toSeq
+        .groupMapReduce(c => shardOfPartition(c._1, partitions, wave))(c => (c._2, c._3)) {
+          case ((r1, b1), (r2, b2)) => (r1 + r2, b1 + b2)
+        }
       // per-shard wall_ms = the wave's wall split PROPORTIONALLY by bytes (the
       // extraction-cost driver), falling back to rows, then to an equal split
       // for all-empty waves. Cumulative allocation makes each wave's shard

@@ -32,10 +32,6 @@ object ParquetTableIO {
       .partitionBy("shard")
       .parquet(s"$outDir/data")
 
-  /** The raw output table including the `shard` partition column. */
-  def readOutputRaw(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/data")
-
   def readOutput(spark: SparkSession, outDir: String): Dataset[ExtractedTurn] = {
     import spark.implicits._
     spark.read.parquet(s"$outDir/data")
@@ -68,21 +64,5 @@ object ParquetTableIO {
   def manifestsExist(spark: SparkSession, outDir: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(s"$outDir/_manifests")
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-  }
-
-  /** Shard partitions physically present in the output table (Iceberg backend:
-    * the `.partitions` metadata table). Lets the wave-stats pass distinguish an
-    * all-empty table (nothing written yet — 0-row manifests are legitimate)
-    * from a corrupted/unreadable one (which must fail loudly, not be committed
-    * as done). Must work on ANY Hadoop filesystem the table lives on (HDFS/S3/
-    * local), not just java.io paths.
-    */
-  def shardsPresent(spark: SparkSession, outDir: String): Set[Int] = {
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/data")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Set.empty
-    else fs.listStatus(path).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
-      .map(_.getPath.getName.stripPrefix("shard=").toInt).toSet
   }
 }

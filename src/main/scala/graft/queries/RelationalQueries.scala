@@ -230,8 +230,8 @@ object RelationalQueries {
       "SELECT l_orderkey, l_linenumber, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price FROM lineitem ORDER BY CAST(l_extendedprice AS DECIMAL(18,2)) DESC, l_orderkey, l_linenumber LIMIT 25"),
     // P7 extraction-rate metrics, value-checked: extract the documents table
     // as plain turns and total rows, errors and chars in one aggregate (the
-    // runWithManifests per-shard form without the shard key); the oracle
-    // recomputes them relationally.
+    // totals of the per-shard rows and bytes runWithManifests counts in its
+    // extraction map); the oracle recomputes them relationally.
     Query("q_extract_metrics", (s, dir) => {
       import s.implicits._
       val turns = t(s, dir, "documents").select($"doc_id", $"text").as[(Long, String)]

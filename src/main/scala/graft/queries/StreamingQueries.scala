@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.pipeline._
 import Query._
 
@@ -37,10 +37,8 @@ object StreamingQueries {
 
   /** Run `f` with `spark.sql.shuffle.partitions` = n — the ONLY way Spark
     * exposes the state-store partition count (see [[statePartitions]]) —
-    * restoring the session's configured value afterwards. The conf is read
-    * once at streaming-query start, so only the stream started inside `f`
-    * sees it; the lazily-consumed batch DataFrames callers return plan under
-    * the restored session width.
+    * restoring the session's configured value afterwards. The conf is
+    * session-global, so callers hold the session's [[startLock]].
     */
   private def withShufflePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
@@ -49,22 +47,35 @@ object StreamingQueries {
     try f finally s.conf.set(key, prev)
   }
 
+  private val startLocks =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, AnyRef]())
+
+  /** Serializes [[runStream]] starts per session, so no start reads the
+    * width another start has set for its own stream.
+    */
+  private def startLock(s: SparkSession): AnyRef = startLocks.computeIfAbsent(s, _ => new AnyRef)
+
   /** Run a test stream to completion — AvailableNow into a memory sink under
     * a fresh [[Scratch]] checkpoint — and return the sink table. `stateRows`
     * sizes the state stores of a STATEFUL stream (see [[statePartitions]]);
-    * stateless streams run at the session width.
+    * stateless streams run at the session width. A query copies the session
+    * conf when it starts, so only the start holds the session's lock and the
+    * width; concurrent streams still run side by side.
     */
   private[queries] def runStream(stream: Dataset[_], prefix: String,
       stateRows: Option[Long] = None): DataFrame = {
     val s = stream.sparkSession
     val name = s"${prefix}_out_${System.nanoTime()}"
-    def run(): Unit = stream.writeStream.format("memory").queryName(name)
+    def start(): StreamingQuery = stream.writeStream.format("memory").queryName(name)
       .option("checkpointLocation", Scratch.dir(s"graft-$prefix-cp"))
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    stateRows match {
-      case Some(n) => withShufflePartitions(s, statePartitions(s, n))(run())
-      case None    => run()
+      .trigger(Trigger.AvailableNow()).start()
+    val query = startLock(s).synchronized {
+      stateRows match {
+        case Some(n) => withShufflePartitions(s, statePartitions(s, n))(start())
+        case None    => start()
+      }
     }
+    query.awaitTermination()
     s.table(name)
   }
 

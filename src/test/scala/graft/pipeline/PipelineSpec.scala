@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{hash, input_file_name, lit, pmod, spark_partition_id, xxhash64}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, hash, input_file_name, length, lit, pmod, spark_partition_id, sum, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.html.HtmlBoilerplate
@@ -62,11 +63,48 @@ class HtmlSpec extends AnyFunSuite {
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
 
+  /** The raw output table, its `shard` partition column included. */
+  private def readOutputRaw(dir: String): DataFrame = spark.read.parquet(s"$dir/data")
+
+  /** Shard partitions physically present in an output table. An all-empty
+    * table has none: its writer leaves only `_SUCCESS`.
+    */
+  private def shardsPresent(dir: String): Set[Int] = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/data")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Set.empty
+    else fs.listStatus(path).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
+      .map(_.getPath.getName.stripPrefix("shard=").toInt).toSet
+  }
+
+  /** The P7 oracle, the read-back the manifests used to be computed by:
+    * per shard, `count` and `sum(length(extracted_text))` over the written
+    * output.
+    */
+  private def readBackStats(dir: String): Map[Int, (Long, Long)] =
+    if (shardsPresent(dir).isEmpty) Map.empty
+    else readOutputRaw(dir).groupBy("shard")
+      .agg(count(lit(1)), coalesce(sum(length(col("extracted_text"))), lit(0L)))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  /** Every manifest's `rows` and `bytes` equal the read-back, (0, 0) for a
+    * shard with no output, and every shard with output has a manifest.
+    */
+  private def assertManifestsExact(dir: String): Unit = {
+    val oracle = readBackStats(dir)
+    val ms = ExtractJob.manifests(spark, dir).collect()
+    ms.foreach { m =>
+      assert((m.rows, m.bytes) == oracle.getOrElse(m.part_id, (0L, 0L)), s"$dir: shard ${m.part_id}")
+    }
+    assert(oracle.keySet.subsetOf(ms.map(_.part_id).toSet), s"$dir: shards without a manifest")
+  }
+
   /** Parquet data files in each `shard=k` directory of an output table. */
   private def filesPerShard(dir: String): Map[Int, Int] = {
     val root = new org.apache.hadoop.fs.Path(s"$dir/data")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ParquetTableIO.shardsPresent(spark, dir).map { k =>
+    shardsPresent(dir).map { k =>
       k -> fs.listStatus(new org.apache.hadoop.fs.Path(root, s"shard=$k"))
         .count(_.getPath.getName.endsWith(".parquet"))
     }.toMap
@@ -77,7 +115,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   private def unorderedFiles(dir: String): Seq[String] = {
     import spark.implicits._
-    ParquetTableIO.readOutputRaw(spark, dir)
+    readOutputRaw(dir)
       .select(input_file_name(), $"conv_id", $"turn_idx").as[(String, String, Int)]
       .collect().toSeq.groupMap(_._1)(r => (r._2, r._3))
       .collect { case (f, keys) if keys != keys.sorted => f }
@@ -173,8 +211,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val per = (partitions + wave.size - 1) / wave.size
       val byPid = parts.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       assert(byPid.values.forall(_.size == 1), s"$wave: a partition holds several shards: $byPid")
-      // partition ids are shard-major: slot(shard) * per until (slot + 1) * per
-      byPid.foreach { case (pid, ks) => assert(wave.indexOf(ks.head) == pid / per, s"$wave: pid $pid") }
+      // partition ids are shard-major: slot(shard) * per until (slot + 1) * per,
+      // the layout the P7 stats map back to shards through
+      byPid.foreach { case (pid, ks) =>
+        assert(wave.indexOf(ks.head) == pid / per, s"$wave: pid $pid")
+        assert(ExtractJob.shardOfPartition(pid, partitions, wave) == ks.head, s"$wave: pid $pid")
+      }
       assert(byPid.keySet.max < wave.size * per)
     }
     turns.unpersist()
@@ -214,6 +256,91 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((chars.length, chars.getBytes("UTF-8").length) == (4, 7))
     assert(ms.map(_.bytes).sum == "plain text here".length + 3)
     assert(ExtractJob.readOutput(spark, dir).where($"error".isNotNull).count() == 1)
+  }
+
+  test("P7: manifest rows and bytes equal the read-back of the written output") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(0)
+    // an error row (0 bytes), a surrogate pair and a lone surrogate: Java's
+    // codePointCount counts "a\uD83D\uDE00\u00E9" (a, U+1F600, e-acute) as 3
+    // and "x\uD800y" as 3, and Spark's length must agree (the writer stores
+    // the lone surrogate as '?')
+    val special = Seq(
+      Turn("p7-err", 0, "user", "!!!bad", "pdf-b64", ts),
+      Turn("p7-pair", 0, "user", "a\uD83D\uDE00\u00E9", "plain", ts),
+      Turn("p7-lone", 0, "user", "x\uD800y", "plain", ts)
+    ).toDS()
+    val turns = SynthGen.turns(SynthGen.generate(spark, 40, 5, 1, 120, includeFixturePdfs = false))
+      .union(special).cache()
+    val n = turns.count()
+    for ((shards, partitions, waveSize) <- Seq((4, 2, Int.MaxValue), (8, 12, Int.MaxValue), (6, 4, 1))) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-p7-$shards-$partitions").toString
+      ExtractJob.runWithManifests(spark, turns, dir, shards, partitions, waveSize = waveSize)
+      assertManifestsExact(dir)
+      val ms = ExtractJob.manifests(spark, dir).collect()
+      assert(ms.length == shards && ms.map(_.rows).sum == n, s"($shards, $partitions, $waveSize)")
+    }
+    // all-empty waves: 16 shards over 3 conversations at waveSize 1
+    val sparse = java.nio.file.Files.createTempDirectory("graft-p7-sparse").toString
+    ExtractJob.runWithManifests(spark, special, sparse, shards = 16, partitions = 2, waveSize = 1)
+    assertManifestsExact(sparse)
+    assert(ExtractJob.manifests(spark, sparse).collect().count(_.rows == 0) >= 13)
+    // an all-empty table: no shard directory is written, every manifest is (0, 0)
+    val empty = java.nio.file.Files.createTempDirectory("graft-p7-empty").toString
+    ExtractJob.runWithManifests(spark, special.limit(0), empty, shards = 3, partitions = 2)
+    assert(shardsPresent(empty).isEmpty)
+    assert(ExtractJob.manifests(spark, empty).collect().map(m => (m.part_id, m.rows, m.bytes)).sorted
+      .toSeq == Seq((0, 0L, 0L), (1, 0L, 0L), (2, 0L, 0L)))
+    turns.unpersist()
+  }
+
+  test("P7: stats sink updates come only from the write job's final stage") {
+    // The sink is exact because the DAGScheduler applies a ResultTask's
+    // accumulator updates once per output partition. local[4] allows no task
+    // retries (Spark fixes local-mode maxFailures at 1), so that rule is not
+    // exercised here; it is pinned structurally: every update must come from
+    // a ResultTask of its job's final stage. An exchange after the extraction
+    // map would move the updates into a ShuffleMapStage and fail this test.
+    val marker = s"p7-guard-${System.nanoTime()}"
+    val finalStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val reports = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    @volatile var markerDone = false
+    val listener = new SparkListener {
+      @volatile var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val parents = e.stageInfos.flatMap(_.parentIds).toSet
+        e.stageInfos.map(_.stageId).filterNot(parents).foreach(finalStages.add(_))
+        if (e.properties != null && e.properties.getProperty("spark.job.description") == marker)
+          markerJob = e.jobId
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerDone = true
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskInfo.accumulables.exists(_.name.contains(ExtractJob.StatsSinkName)))
+          reports.add((e.stageId, e.taskType))
+    }
+    val turns = SynthGen.turns(SynthGen.generate(spark, 40, 5, 0, 0, includeFixturePdfs = false))
+    val dir = java.nio.file.Files.createTempDirectory("graft-p7-stage").toString
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // two waves of 3 shards, each 3 * ceil(4 / 3) = 6 tasks
+      ExtractJob.runWithManifests(spark, turns, dir, shards = 6, partitions = 4, waveSize = 3)
+      // the listener bus is FIFO: once the marker job's end arrives, every
+      // event of the call before it has been delivered
+      spark.sparkContext.setJobDescription(marker)
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!markerDone && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerDone, "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val rs = reports.asScala.toSeq
+    assert(rs.map(_._2).toSet == Set("ResultTask"), s"stats updates from $rs")
+    val stages = rs.map(_._1).toSet
+    assert(stages.size == 2 && stages.forall(finalStages.contains), s"stages $stages, final $finalStages")
+    assert(rs.size == 12, s"one update per write task: $rs")
+    assertManifestsExact(dir)
   }
 
   test("manifests: shards with no input commit 0-row done manifests (empty-wave path)") {
@@ -306,7 +433,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     ExtractJob.runWithManifests(spark, turns, full, shards = 6, partitions = 4)
     // commit shards 1 and 4 only, so the resumed wave is (0, 2, 3, 5)
     val dir = s"$tmp/gaps"
-    ParquetTableIO.writeShards(ParquetTableIO.readOutputRaw(spark, full).where($"shard".isin(1, 4)), dir)
+    ParquetTableIO.writeShards(readOutputRaw(full).where($"shard".isin(1, 4)), dir)
     ParquetTableIO.appendManifests(spark, dir,
       ExtractJob.manifests(spark, full).collect().filter(m => m.part_id == 1 || m.part_id == 4).toSeq)
     ExtractJob.runWithManifests(spark, scrambled(turns), dir, shards = 6, partitions = 4)
@@ -317,6 +444,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val resumed = filesPerShard(dir).filter { case (k, _) => k != 1 && k != 4 }
     assert(resumed.size == 4 && resumed.values.forall(_ == 1), s"ceil(4 / 4) = 1 file per shard: $resumed")
     assert(unorderedFiles(dir).size == 0)
+    // the resumed wave's manifests count its own shards exactly
+    assertManifestsExact(dir)
     turns.unpersist()
   }
 
