@@ -1,17 +1,17 @@
 package graft
 
-/** Dev-only per-query bench/plan harness for the optimization rounds
+/** Dev-only per-query bench harness for the optimization rounds
   * (guide §1.1/§1.4): times SELECTED SparkEntry queries in isolation with the
   * exact session Bench builds (same master, shuffle partitions, AQE, split
   * size, tmpfs shuffle dirs) and the same noop-sink methodology, printing one
-  * JSON line per query with every sample. `--explain` additionally writes the
-  * `.explain("formatted")` physical plan to a file (plans/r09 evidence).
+  * JSON line per query with every sample. Plans come from
+  * [[graft.tools.ExplainAudit]].
   *
   * This is NOT the driver's bench: Bench.scala stays the frozen harness of
   * record; BenchExtra exists so an A/B of one operator does not cost a full
   * 95-query suite run.
   *
-  * Usage: runMain graft.BenchExtra [--reps N] [--explain outDir] q_a q_b ...
+  * Usage: runMain graft.BenchExtra [--reps N] q_a q_b ...
   *        runMain graft.BenchExtra --all
   */
 object BenchExtra {
@@ -19,13 +19,11 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     var reps = 3
-    var explainDir: Option[String] = None
     val names = scala.collection.mutable.ArrayBuffer[String]()
     var i = 0
     while (i < args.length) {
       args(i) match {
         case "--reps"    => reps = args(i + 1).toInt; i += 2
-        case "--explain" => explainDir = Some(args(i + 1)); i += 2
         case "--all"     => names ++= SparkEntry.queries.keys.toSeq.sorted; i += 1
         case q           => names += q; i += 1
       }
@@ -34,15 +32,6 @@ object BenchExtra {
     val qs = SparkEntry.queries
     names.distinct.foreach { name =>
       val fn = qs.getOrElse(name, sys.error(s"unknown query $name"))
-      explainDir.foreach { d =>
-        val f = new java.io.File(d)
-        f.mkdirs()
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(d, s"$name.txt"),
-          plan.getBytes("UTF-8"))
-      }
       spark.sparkContext.setJobDescription(name)
       def once(): Double = {
         val t0 = System.nanoTime()

@@ -72,12 +72,9 @@ object ExtractMain {
     val rows = m.map(_.rows).sum
     val errs = ExtractJob.readOutput(spark, outDir).where($"error".isNotNull).count()
     println(f"extracted rows=$rows errors=$errs shards=${m.length} wall=$wall%.2fs rate=${rows / wall}%.0f turns/s")
-    // wall_ms is the shard's byte-proportional share of its wave's wall; the
-    // wave wall (and honest wave rate) reconstructs as the per-wave sum
-    val waveRows = m.groupBy(_.wave_id).view.mapValues(_.map(_.rows).sum).toMap
-    val waveWall = m.groupBy(_.wave_id).view.mapValues(_.map(_.wall_ms).sum).toMap
+    // a shard's rate comes from its own wall_ms, its summed write-task time
     m.sortBy(_.part_id).foreach(pm =>
-      println(f"  shard=${pm.part_id}%-3d wave=${pm.wave_id}%-3d rows=${pm.rows}%-8d bytes=${pm.bytes}%-10d wall_ms=${pm.wall_ms}%-6d wave_rate=${if (waveWall(pm.wave_id) > 0) waveRows(pm.wave_id) * 1000 / waveWall(pm.wave_id) else 0}%d turns/s"))
+      println(f"  shard=${pm.part_id}%-3d wave=${pm.wave_id}%-3d rows=${pm.rows}%-8d bytes=${pm.bytes}%-10d wall_ms=${pm.wall_ms}%-6d rate=${if (pm.wall_ms > 0) pm.rows * 1000 / pm.wall_ms else 0}%d turns/s"))
     spark.stop()
   }
 }

@@ -16,7 +16,7 @@ package graft
   * checkpoints (see StreamingExtract.run, which takes the caller's path).
   */
 object Scratch {
-  private lazy val base: java.io.File = {
+  private[graft] lazy val base: java.io.File = {
     val b = sys.env.get("SPARK_GRAFT_SCRATCH").map(new java.io.File(_)).getOrElse {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft-scratch")

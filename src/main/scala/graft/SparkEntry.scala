@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.pipeline._
 import graft.queries._
 
 /** Driver contract — see SURVEY.md §7.
@@ -21,20 +19,6 @@ import graft.queries._
   * rendering alone). Float similarity queries emit ranks, not raw floats.
   */
 object SparkEntry {
-
-  /** Flagship: the full transcript-extraction pipeline on a seeded synthetic
-    * corpus (north-rule shape) — returns per-payload-kind counts.
-    */
-  def entry(spark: SparkSession): DataFrame = {
-    val gen = SynthGen.generate(spark, nConvs = 120, turnsPerConv = 5, longConvs = 2, longTurns = 300)
-    val turns = SynthGen.turns(gen)
-    val extracted = ExtractJob.extract(turns, partitions = 8)
-    extracted.groupBy(col("payload_kind"))
-      .agg(count(lit(1)).as("n_turns"),
-        sum(length(col("extracted_text"))).as("n_chars"),
-        sum(size(col("spans"))).as("n_spans"))
-      .orderBy("payload_kind")
-  }
 
   /** Oracle side-dumps (IVF candidate universe, k-means centroids, payload
     * and expectation tables) are dev/verification artifacts: the ivfProbe

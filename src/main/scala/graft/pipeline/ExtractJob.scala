@@ -155,10 +155,17 @@ object ExtractJob {
     * With a `stats` sink each task also counts its rows and the code points
     * of every non-null `extracted_text` (Spark's `length`; an error row adds
     * 0) on the `String` the map has just built, and adds one
-    * `(partition id, rows, bytes)` to the sink when the task completes.
+    * `(partition id, rows, bytes, ms)` to the sink when the task completes:
+    * `ms` is the task's elapsed time from the start of the map to its
+    * completion (everything the task does downstream of the map, the sort
+    * and the file write included), floored to whole milliseconds.
     * `String.codePointCount` is O(1) on a Latin-1 string. The counts are
     * exact only where the map runs in a ResultStage (see
     * [[runWithManifests]]).
+    *
+    * Streams run this map too ([[graft.streaming.StreamingExtract.run]]);
+    * the windowed metric stream calls [[extractTurn]] per row instead, since
+    * its metric rows carry each turn's `ts`.
     *
     * Called directly it runs on the scan partitions with NO shuffle. That is
     * correct whenever the source layout is already splittable-uniform (parquet
@@ -169,16 +176,18 @@ object ExtractJob {
     * only wide stage.
     */
   def extractNarrow(input: Dataset[Turn],
-      stats: Option[CollectionAccumulator[(Int, Long, Long)]] = None): Dataset[ExtractedTurn] = {
+      stats: Option[CollectionAccumulator[(Int, Long, Long, Long)]] = None): Dataset[ExtractedTurn] = {
     import input.sparkSession.implicits._
     input.mapPartitions { it =>
       stats match {
         case None => it.map(extractTurn)
         case Some(sink) =>
+          val t0 = System.nanoTime()
           var rows = 0L
           var bytes = 0L
           val ctx = TaskContext.get()
-          ctx.addTaskCompletionListener[Unit](_ => sink.add((ctx.partitionId(), rows, bytes)))
+          ctx.addTaskCompletionListener[Unit](_ =>
+            sink.add((ctx.partitionId(), rows, bytes, (System.nanoTime() - t0) / 1000000L)))
           it.map { t =>
             val e = extractTurn(t)
             rows += 1
@@ -256,6 +265,11 @@ object ExtractJob {
     * exchange added after the map would move it into a ShuffleMapStage,
     * whose re-runs count again; PipelineSpec pins the stage.
     *
+    * A manifest's `wall_ms` is measured the same way: the sum of the
+    * shard's write tasks' own elapsed times (see [[extractNarrow]]), so it
+    * leaves out the scan and exchange stage and the job commit. A retried
+    * task's earlier attempts are not counted.
+    *
     * `waveSize` trades scan count for resume granularity: a crashed wave
     * recommits only its own shards on rerun (its partial directories are
     * dynamically overwritten, committed shards untouched).
@@ -282,10 +296,9 @@ object ExtractJob {
       val waveId = wave.head
       if (failAtShard >= 0 && committed >= failAtShard)
         throw new RuntimeException(s"injected failure after $committed shards")
-      val t0 = System.nanoTime()
       val waveInput = input.where(shard.isin(wave: _*))
       // a fresh P7 sink per wave, filled by the write job's own tasks
-      val sink = spark.sparkContext.collectionAccumulator[(Int, Long, Long)](StatsSinkName)
+      val sink = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long)](StatsSinkName)
       // one shard per task, so the shard prefix costs nothing and satisfies
       // the writer's required [shard] ordering: without it Spark replaces
       // this sort with its own Sort [shard] and P5 is lost
@@ -293,42 +306,16 @@ object ExtractJob {
         .withColumn("shard", shard)
         .sortWithinPartitions("shard", "conv_id", "turn_idx") // P5
       ParquetTableIO.writeShards(out, outDir)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
       // P7 per-shard stats (exact rows and bytes; error rows count as rows
-      // with 0 bytes): each partition held one shard, and a shard with no
-      // rows keeps (0, 0)
-      val stats: Map[Int, (Long, Long)] = sink.value.asScala.toSeq
-        .groupMapReduce(c => shardOfPartition(c._1, partitions, wave))(c => (c._2, c._3)) {
-          case ((r1, b1), (r2, b2)) => (r1 + r2, b1 + b2)
+      // with 0 bytes) and wall_ms, summed over the shard's tasks: each
+      // partition held one shard
+      val stats: Map[Int, (Long, Long, Long)] = sink.value.asScala.toSeq
+        .groupMapReduce(c => shardOfPartition(c._1, partitions, wave))(c => (c._2, c._3, c._4)) {
+          case ((r1, b1, t1), (r2, b2, t2)) => (r1 + r2, b1 + b2, t1 + t2)
         }
-      // per-shard wall_ms = the wave's wall split PROPORTIONALLY by bytes (the
-      // extraction-cost driver), falling back to rows, then to an equal split
-      // for all-empty waves. Cumulative allocation makes each wave's shard
-      // sum EXACTLY the wave wall, so per-shard rates are honest at any
-      // waveSize (a 4-shard wave no longer reports 4x the wall) and wave-level
-      // wall is reconstructable as sum(wall_ms) group by wave_id.
-      val weights: Seq[Long] = {
-        val bytes = wave.map(k => stats.getOrElse(k, (0L, 0L))._2)
-        if (bytes.sum > 0) bytes
-        else {
-          val rows = wave.map(k => stats.getOrElse(k, (0L, 0L))._1)
-          if (rows.sum > 0) rows else wave.map(_ => 1L)
-        }
-      }
-      val totW = weights.sum
-      val cumW = weights.scanLeft(0L)(_ + _)
-      // wallMs * cumW must not overflow Long: a 17-minute wave over ~10 TB
-      // puts the product past 2^63 (ADVICE round 5) — BigInteger keeps the
-      // cumulative allocation exact at any scale (once per shard, off the hot
-      // path)
-      val wallBig = java.math.BigInteger.valueOf(wallMs)
-      val totBig = java.math.BigInteger.valueOf(totW)
-      def alloc(c: Long): Long =
-        wallBig.multiply(java.math.BigInteger.valueOf(c)).divide(totBig).longValueExact()
-      ParquetTableIO.appendManifests(spark, outDir, wave.zipWithIndex.map { case (k, i) =>
-        val (rows, bytes) = stats.getOrElse(k, (0L, 0L))
-        val share = alloc(cumW(i + 1)) - alloc(cumW(i))
-        PartManifest(k, SALT, rows, bytes, share, waveId, "done")
+      ParquetTableIO.appendManifests(spark, outDir, wave.map { k =>
+        val (rows, bytes, ms) = stats.getOrElse(k, (0L, 0L, 0L))
+        PartManifest(k, SALT, rows, bytes, ms, waveId, "done")
       })
       committed += wave.size
     }

@@ -47,11 +47,11 @@ final case class Golden(
   * shard's output rows, error rows included. `bytes` is
   * `sum(length(extracted_text))`, and Spark's `length` counts characters
   * (code points), not encoded bytes: "a😀é" counts 3, though it is 4 UTF-16
-  * units and 7 UTF-8 bytes. An error row counts 0. `wall_ms` is this
-  * shard's byte-proportional share of its wave's wall time (waves write
-  * several shards in one pass, so exact per-shard wall does not exist; the
-  * shares of one wave sum EXACTLY to the wave wall). `wave_id` groups the
-  * shards of one wave, so the wave wall is sum(wall_ms) group by wave_id.
+  * units and 7 UTF-8 bytes. An error row counts 0. `wall_ms` is the
+  * summed elapsed time of the write tasks that held this shard, each
+  * floored to whole milliseconds: it covers extraction, sort and file
+  * write, but not the scan and exchange stage or the job commit.
+  * `wave_id` groups the shards that one wave wrote in one pass.
   */
 final case class PartManifest(
     part_id: Int,

@@ -17,9 +17,10 @@ final case class ConvSession(
     n_turns: Int)
 
 /** Structured Streaming face of the extraction pipeline: incremental transcript
-  * ingest with exactly the same per-turn semantics as the batch job (streams run
-  * the batch job's own map, [[ExtractJob.extractNarrow]], so batch/stream parity
-  * is by construction).
+  * ingest with exactly the same per-turn semantics as the batch job, since every
+  * stream extracts through the batch job's own code: [[run]] runs its map,
+  * [[ExtractJob.extractNarrow]], and [[windowedMetrics]] calls its per-row
+  * [[ExtractJob.extractTurn]].
   *
   * The reference is a batch CLI and the north rule specifies a batch backfill
   * (SURVEY §2.11), so this is an engine addition for continuous ingest: new turns
@@ -29,9 +30,11 @@ final case class ConvSession(
 object StreamingExtract {
 
   /** Watermarked tumbling-window extraction-rate metrics per payload kind:
-    * (window, payload_kind) -> turns, chars, errors. The watermark bounds the
-    * aggregation state; late turns beyond it are dropped (documented lateness
-    * policy). Extraction runs inline so ts flows with the metric row.
+    * (window, payload_kind) -> turns, chars, errors. `n_chars` counts code
+    * points (Spark's and DuckDB's `length`, and the manifests' `bytes`), not
+    * UTF-16 units. The watermark bounds the aggregation state; late turns
+    * beyond it are dropped (documented lateness policy). Extraction runs
+    * inline so ts flows with the metric row.
     */
   def windowedMetrics(turns: Dataset[Turn], windowLen: String = "1 minute",
                       watermark: String = "10 minutes"): DataFrame = {
@@ -39,7 +42,8 @@ object StreamingExtract {
     val enriched = turns.map { t =>
       val e = ExtractJob.extractTurn(t)
       (t.ts, e.payload_kind,
-        if (e.extracted_text == null) 0 else e.extracted_text.length,
+        if (e.extracted_text == null) 0
+        else e.extracted_text.codePointCount(0, e.extracted_text.length),
         if (e.error == null) 0 else 1)
     }.toDF("ts", "payload_kind", "n_chars", "is_err")
     enriched

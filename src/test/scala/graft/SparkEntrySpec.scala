@@ -23,4 +23,14 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(Query.oraclePath("/data/sf 0.1", "bpe_merges") == "/tmp/graft-oracle/sf_0.1/bpe_merges")
     assert(Query.oraclePath("", "bpe_merges") == "/tmp/graft-oracle/default/bpe_merges")
   }
+
+  test("ExplainAudit masks the run-specific tokens of a plan") {
+    val scratch = Scratch.base.getPath
+    val plan = "Arguments: graft.operators.Similarity$$$Lambda$3661/0x00007f5a67131f58@46199519, " +
+      "obj#69: scala.Tuple3, lambda x_20#2221L, [plan_id=311], MapPartitionsRDD[750], " +
+      s"UnsafeArrayData@782494cd, [file:$scratch/graft-ivf3917812305044139026/data], x_20, id_2"
+    assert(tools.ExplainAudit.stable(plan) ==
+      "Arguments: graft.operators.Similarity$$$Lambda@H, obj#N: scala.Tuple3, lambda x_N#NL, " +
+      "[plan_id=N], MapPartitionsRDD[N], UnsafeArrayData@H, [file:<scratch>/graft-ivfN/data], x_20, id_2")
+  }
 }

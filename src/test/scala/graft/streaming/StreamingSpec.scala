@@ -262,16 +262,21 @@ class StreamingSpec extends AnyFunSuite {
     val q = StreamingExtract.windowedMetrics(input.toDS(), "1 minute", "10 minutes")
       .writeStream.format("memory").queryName("metrics_out")
       .outputMode(OutputMode.Append).start()
+    // n_chars counts code points, like its DuckDB twin and the manifests:
+    // "a\uD83D\uDE00\u00E9" (a, U+1F600, e-acute) is 4 UTF-16 units and counts 3
+    val astral = "a\uD83D\uDE00\u00E9"
     // two windows of plain turns, then advance the watermark past them
-    input.addData(turn("c1", 0, body, "plain", 0), turn("c1", 1, body, "plain", 30))
+    input.addData(turn("c1", 0, body, "plain", 0), turn("c1", 1, body, "plain", 30),
+      turn("c2", 0, astral, "plain", 45))
     q.processAllAvailable()
     input.addData(turn("c1", 2, body, "plain", 90))
     q.processAllAvailable()
     input.addData(turn("c1", 3, body, "plain", 5000)) // advances watermark, closes windows
     q.processAllAvailable()
     q.stop()
-    val out = spark.table("metrics_out").select("payload_kind", "n_turns").collect()
+    val out = spark.table("metrics_out").select("payload_kind", "n_turns", "n_chars").collect()
     assert(out.nonEmpty)
-    assert(out.map(_.getAs[Long]("n_turns")).sum == 3) // first two windows emitted
+    assert(out.map(_.getAs[Long]("n_turns")).sum == 4) // first two windows emitted
+    assert(out.map(_.getAs[Long]("n_chars")).sum == 3 * body.length + 3)
   }
 }
