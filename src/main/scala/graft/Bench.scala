@@ -9,38 +9,6 @@ import graft.pipeline.{ExtractJob, ParquetTableIO, SynthGen}
   */
 object Bench {
 
-  def buildSession(cpus: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // split inputs fine enough that the scan+shuffle-write stage can use every
-      // core (default 128MB packs this corpus into ~12 splits -> caps local[32])
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-    // shuffle on tmpfs when available: removes disk-cache noise from scaling
-    // measurements (models a cluster's NVMe-local shuffle dirs); overridable
-    // (SPARK_GRAFT_LOCAL_DIR) to A/B the shuffle medium when the host's
-    // memory pressure turns tmpfs writes into the bottleneck
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR") match {
-      case Some(dir) => b.config("spark.local.dir", dir)
-      case None =>
-        if (new java.io.File("/dev/shm").isDirectory)
-          b.config("spark.local.dir", "/dev/shm/graft-spark")
-    }
-    // local-mode "shuffle" is a same-box memcpy, so compression is pure CPU
-    // overhead here — off by default for the bench session (a real cluster's
-    // network shuffle keeps Spark's default on); override with env if needed
-    if (!sys.env.get("SPARK_GRAFT_SHUFFLE_COMPRESS").contains("true")) {
-      b.config("spark.shuffle.compress", "false")
-      b.config("spark.shuffle.spill.compress", "false")
-    }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Prepare the bench transcript corpus once (untimed) as parquet; extraction
     * benches then measure scan -> salted repartition -> extract -> count only.
     */
@@ -72,8 +40,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = buildSession(cpus)
+    val cpus = SparkEnv.cpus
+    val spark = SparkEnv.session("graft-bench")
 
     // warm pass (JIT, parquet footers, codegen caches) — steady-state latency is
     // the honest per-query number for a resident service; reported as such.
@@ -102,7 +70,7 @@ object Bench {
     val benchDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/tmp/graft-bench")
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONVS", "3000").toInt
     val nTurns = prepareCorpus(spark, benchDir, nConvs)
-    timeExtraction(spark, benchDir, cpus.toInt) // warm run (JIT the extractor)
+    timeExtraction(spark, benchDir, cpus) // warm run (JIT the extractor)
 
     // min of >= 2 INTERLEAVED timed passes: the shared host's CPU variance
     // reaches 3x (CLAUDE.md), and a single-sample bench recorded a phantom
@@ -122,8 +90,8 @@ object Bench {
     // the emitted JSON so cross-round comparisons skip the sample.
     val passes = scala.collection.mutable.ArrayBuffer(takePass(), takePass())
     val exRuns = scala.collection.mutable.ArrayBuffer(
-      timeExtraction(spark, benchDir, cpus.toInt),
-      timeExtraction(spark, benchDir, cpus.toInt))
+      timeExtraction(spark, benchDir, cpus),
+      timeExtraction(spark, benchDir, cpus))
     def signature(): (Double, Double, Boolean) = {
       val spreads = ordered.indices.flatMap { i =>
         val ts = passes.map(_(i)._2).sorted
@@ -139,7 +107,7 @@ object Bench {
     while (contended && resamples < 2) {
       resamples += 1
       passes += takePass()
-      exRuns += timeExtraction(spark, benchDir, cpus.toInt)
+      exRuns += timeExtraction(spark, benchDir, cpus)
       val s = signature()
       medianSpread = s._1; extractSpread = s._2; contended = s._3
     }

@@ -1,10 +1,9 @@
 package graft
 
 /** Dev-only per-query bench harness for the optimization rounds
-  * (guide §1.1/§1.4): times SELECTED SparkEntry queries in isolation with the
-  * exact session Bench builds (same master, shuffle partitions, AQE, split
-  * size, tmpfs shuffle dirs) and the same noop-sink methodology, printing one
-  * JSON line per query with every sample. Plans come from
+  * (guide §1.1/§1.4): times SELECTED SparkEntry queries in isolation with
+  * Bench's session ([[SparkEnv.session]]) and the same noop-sink
+  * methodology, printing one JSON line per query with every sample. Plans come from
   * [[graft.tools.ExplainAudit]].
   *
   * This is NOT the driver's bench: Bench.scala stays the frozen harness of
@@ -17,7 +16,6 @@ package graft
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     var reps = 3
     val names = scala.collection.mutable.ArrayBuffer[String]()
     var i = 0
@@ -28,7 +26,7 @@ object BenchExtra {
         case q           => names += q; i += 1
       }
     }
-    val spark = Bench.buildSession(cpus)
+    val spark = SparkEnv.session("graft-bench-extra")
     val qs = SparkEntry.queries
     names.distinct.foreach { name =>
       val fn = qs.getOrElse(name, sys.error(s"unknown query $name"))

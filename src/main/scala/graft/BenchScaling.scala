@@ -11,17 +11,17 @@ package graft
   */
 object BenchScaling {
   def main(args: Array[String]): Unit = {
-    val cpus = if (args.nonEmpty) args(0) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = if (args.nonEmpty) args(0).toInt else SparkEnv.cpus
     val benchDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "/tmp/graft-scaling")
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONVS", "60000").toInt
-    val spark = Bench.buildSession(cpus)
+    val spark = SparkEnv.session("graft-scaling", cpus)
     val nTurns =
       if (new java.io.File(s"$benchDir/transcripts").exists())
         spark.read.parquet(s"$benchDir/transcripts").count()
       else Bench.prepareCorpus(spark, benchDir, nConvs)
     // 3x tasks per core smooths stragglers; the corpus must be large enough that
     // compute (not job setup) dominates, or the 4x-core run can't show its speedup
-    val partitions = cpus.toInt * 3
+    val partitions = cpus * 3
     // task-metric listener: attribute wall time to cpu / gc / shuffle
     val run = new java.util.concurrent.atomic.AtomicLong(0)
     val gc = new java.util.concurrent.atomic.AtomicLong(0)

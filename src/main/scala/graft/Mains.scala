@@ -3,17 +3,39 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.pipeline._
 
+/** The one SparkSession recipe. Every main, Bench, Verify and the test
+  * suites build their session here, so the correctness run, the timed run
+  * and the plans PLANS.md records share one config.
+  */
 object SparkEnv {
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+
+  /** Local parallelism: `SPARK_GRAFT_CPUS` if set, else this machine's cores. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `local[cpus]`, or the deployment address in `SPARK_GRAFT_MASTER`. */
+  def session(appName: String, cpus: Int = SparkEnv.cpus): SparkSession = {
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val b = SparkSession.builder()
+      .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      // split inputs fine enough that the scan stage can use every core (the
+      // default 128 MB packs the bench corpus into ~12 splits)
+      .config("spark.sql.files.maxPartitionBytes", 16L * 1024 * 1024)
+    if (master.startsWith("local")) {
+      // a local "shuffle" is a same-box copy, so compression is pure CPU; its
+      // files go on the scratch medium (tmpfs when present), as a cluster's
+      // NVMe-local shuffle dirs would. SPARK_LOCAL_DIRS still overrides
+      // spark.local.dir. A cluster keeps Spark's defaults.
+      b.config("spark.shuffle.compress", "false")
+        .config("spark.shuffle.spill.compress", "false")
+        .config("spark.local.dir", Scratch.base.getPath)
+    }
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -46,18 +68,17 @@ object GenMain {
   * tasks and writes that many files, each in (conv_id, turn_idx) order.
   * Rerunning after a failure resumes from the manifests.
   * Usage: ExtractMain <transcriptsParquet> <outDir> [shards] [partitions]
-  *   partitions is rounded up to a multiple of the wave size (at least one
-  *   task per shard). A long conversation spreads over the
-  *   ceil(partitions / W) tasks of its shard only, so at partitions <= shards
-  *   (the defaults: 8 and 8) the salt does not split it.
+  *   shards defaults to 8 and partitions to [[SparkEnv.cpus]]. partitions
+  *   is rounded up to a multiple of the wave size (at least one task per
+  *   shard). A long conversation spreads over the ceil(partitions / W) tasks
+  *   of its shard only, so at partitions <= shards the salt does not split it.
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
     val in = args(0)
     val outDir = args(1)
     val shards = if (args.length > 2) args(2).toInt else 8
-    val partitions = if (args.length > 3) args(3).toInt else
-      sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).toInt
+    val partitions = if (args.length > 3) args(3).toInt else SparkEnv.cpus
     val failAt = sys.env.get("SPARK_GRAFT_FAIL_AT_SHARD").map(_.toInt).getOrElse(-1)
     val spark = SparkEnv.session("graft-extract")
     import spark.implicits._

@@ -1,16 +1,17 @@
 package graft
 
 /** Scratch-directory policy for ephemeral per-query artifacts (streaming
-  * file-source inputs, streaming checkpoints, throwaway index dirs).
+  * file-source inputs, streaming checkpoints, throwaway index dirs) and, under
+  * a local master, the shuffle dirs ([[SparkEnv.session]] sets
+  * `spark.local.dir` to [[base]]).
   *
-  * Same medium policy as Bench's `spark.local.dir` choice: prefer tmpfs
-  * (`/dev/shm`) when present — it models a cluster's NVMe-local scratch,
-  * while the sandbox's `/tmp` sits on a virtio disk whose per-file fsync
-  * dominates micro-batch latency (a stateful AvailableNow query commits
+  * Prefer tmpfs (`/dev/shm`) when present — it models a cluster's NVMe-local
+  * scratch, while the sandbox's `/tmp` sits on a virtio disk whose per-file
+  * fsync dominates micro-batch latency (a stateful AvailableNow query commits
   * offset/commit logs plus one state-store delta per shuffle partition per
-  * batch — hundreds of small synced files). Overridable via
-  * `SPARK_GRAFT_SCRATCH` to A/B the medium, exactly like
-  * `SPARK_GRAFT_LOCAL_DIR` for the shuffle dirs. On a real cluster the
+  * batch — hundreds of small synced files). `SPARK_GRAFT_SCRATCH` moves both
+  * scratch and shuffle dirs to A/B the medium; Spark's own
+  * `SPARK_LOCAL_DIRS` moves the shuffle dirs alone. On a real cluster the
   * checkpoint location must be durable shared storage — this helper is for
   * the engine's ephemeral dev/bench artifacts only, never for production
   * checkpoints (see StreamingExtract.run, which takes the caller's path).

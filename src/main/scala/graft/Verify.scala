@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry query result → parquet, plus
   * oracle_sql.json (its DuckDB twin, rendered for `sfDir`), for the driver's
@@ -18,14 +17,7 @@ object Verify {
     require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val selected =
       if (names.isEmpty) SparkEntry.all else SparkEntry.all.filter(query => names(query.name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEnv.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // oracle side-dumps (IVF candidates, k-means centroids, pipeline
     // expectations) exist for THIS entrypoint's DuckDB compare; production

@@ -235,6 +235,7 @@ object TextFunctions {
   def normalize(s: String): String =
     wsRun.matcher(s.toLowerCase).replaceAll(" ").trim // cached pattern: replaceAll(String) recompiles per call
 
+  /** splitmix64 — public-domain mixing function. */
   def mix(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L

@@ -35,10 +35,7 @@ object Dedup {
     val truncExprs = Seq(
       sum(when(col("truncated"), 1L).otherwise(0L)).as("truncated_buckets"),
       count(lit(1)).as("buckets"))
-    val capped = obs match {
-      case Some(o) => capped0.observe(o, truncExprs.head, truncExprs.tail: _*)
-      case None    => capped0.observe(metricName, truncExprs.head, truncExprs.tail: _*)
-    }
+    val capped = observed(capped0, obs, metricName, truncExprs)
     capped.select(explode(pairArray(col("ids"))).as("p"))
       .select(col("p._1").as("a"), col("p._2").as("b"))
       .distinct()
@@ -245,10 +242,7 @@ object Dedup {
         val truncExprs = Seq(
           sum(when(col("truncated"), 1L).otherwise(0L)).as("truncated_buckets"),
           count(lit(1)).as("buckets"))
-        val buckets = obs match {
-          case Some(o) => buckets0.observe(o, truncExprs.head, truncExprs.tail: _*)
-          case None    => buckets0.observe("graft.dedup.minhash_index", truncExprs.head, truncExprs.tail: _*)
-        }
+        val buckets = observed(buckets0, obs, "graft.dedup.minhash_index", truncExprs)
         buckets.select(explode(col("ids")).as("id"), col("band"), col("bkey"))
     }
   }
@@ -295,10 +289,7 @@ object Dedup {
     val truncExprs = Seq(
       sum(when(col("truncated"), 1L).otherwise(0L)).as("truncated_buckets"),
       count(lit(1)).as("buckets"))
-    val buckets = obs match {
-      case Some(o) => buckets0.observe(o, truncExprs.head, truncExprs.tail: _*)
-      case None    => buckets0.observe("graft.dedup.minhash_probe", truncExprs.head, truncExprs.tail: _*)
-    }
+    val buckets = observed(buckets0, obs, "graft.dedup.minhash_probe", truncExprs)
     val cands = newSig.join(buckets, Seq("band", "bkey"))
       .select(col("id_new"), explode(col("ids")).as("id_corpus"))
       .distinct()
@@ -383,10 +374,7 @@ object Dedup {
     val stopExprs = Seq(
       sum(when(col("dfreq") > maxDf, 1L).otherwise(0L)).as("stop_fps"),
       count(lit(1)).as("fps"))
-    val dfc = (obs match {
-      case Some(o) => dfc0.observe(o, stopExprs.head, stopExprs.tail: _*)
-      case None    => dfc0.observe("graft.dedup.winnow", stopExprs.head, stopExprs.tail: _*)
-    }).where(col("dfreq") <= maxDf)
+    val dfc = observed(dfc0, obs, "graft.dedup.winnow", stopExprs).where(col("dfreq") <= maxDf)
     // NOT checkpointed: rare sits DOWNSTREAM of the observed stop-fp
     // aggregation, and a localCheckpoint there hides the CollectMetrics node
     // behind a LogicalRDD — the stop_fps/fps observation silently stops
@@ -483,10 +471,8 @@ object Dedup {
     val stopExprs = Seq(
       sum(when(col("dfreq") > maxDf, 1L).otherwise(0L)).as("stop_fps"),
       count(lit(1)).as("fps"))
-    val stop = (obs match {
-      case Some(o) => dfc0.observe(o, stopExprs.head, stopExprs.tail: _*)
-      case None    => dfc0.observe("graft.dedup.winnow_probe", stopExprs.head, stopExprs.tail: _*)
-    }).where(col("dfreq") > maxDf).select("fp")
+    val stop = observed(dfc0, obs, "graft.dedup.winnow_probe", stopExprs)
+      .where(col("dfreq") > maxDf).select("fp")
     // rare on both sides = NOT a corpus stop fp (anti join; unseen fps pass —
     // df 0 is rare by definition). The stop set is bounded by the contract
     // guard above, so it broadcasts explicitly. The SLICE's keys below are

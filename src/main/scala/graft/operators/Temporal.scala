@@ -380,10 +380,7 @@ object Temporal {
     val truncExprs = Seq(
       sum(when(col("__trunc"), 1L).otherwise(0L)).as("truncated_intervals"),
       count(lit(1)).as("intervals"))
-    val clamped = obs match {
-      case Some(o) => clamped0.observe(o, truncExprs.head, truncExprs.tail: _*)
-      case None    => clamped0.observe("graft.temporal.range", truncExprs.head, truncExprs.tail: _*)
-    }
+    val clamped = observed(clamped0, obs, "graft.temporal.range", truncExprs)
     val i = clamped
       .withColumn("__ibucket", explode(sequence(
         floor(startSec / bucketSec), floor(col("__cend") / bucketSec))))

@@ -31,10 +31,10 @@ import org.apache.spark.sql.functions._
   * second rename only `.data_old` cleanup remains. At every instant at
   * least one full copy exists on disk.
   *
-  * Verification reads METADATA only: the pre-swap row-parity check sums the
-  * compacted files' parquet FOOTER row counts (block metadata written by the
-  * committed tasks — exact by the format's contract) in a distributed
-  * footer-per-task pass, so the table's data pages are scanned once for the
+  * Verification reads METADATA only: the pre-swap row-parity check is
+  * Spark's `count()` of the compacted table, which needs no column and so
+  * reads only the parquet footers' row-group row counts (exact by the
+  * format's contract). The table's data pages are scanned once for the
   * rewrite and never again.
   */
 object Compaction {
@@ -134,45 +134,8 @@ object Compaction {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", rowsPerFile)
       .partitionBy("shard").parquet(tmpPath.toString)
-    // row-parity check from PARQUET FOOTERS ONLY (round 6 — replaces a third
-    // full data scan): each footer's block metadata carries exact row counts,
-    // so the verification reads a few KB per compacted file instead of the
-    // table. Distributed (one task per footer) so even a million-file table
-    // verifies at cluster width; the conf travels as a plain key-value list
-    // (hadoop Configuration is not serializable).
-    val nRows = {
-      val paths = {
-        val it = fs.listFiles(tmpPath, true)
-        val b = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val st = it.next()
-          val p = st.getPath
-          if (p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
-              !p.getName.startsWith(".") && !p.toString.contains("/_temporary/"))
-            b += p.toString
-        }
-        b.result()
-      }
-      val confEntries = {
-        val c = spark.sparkContext.hadoopConfiguration
-        val b = Seq.newBuilder[(String, String)]
-        val e = c.iterator()
-        while (e.hasNext) { val kv = e.next(); b += (kv.getKey -> kv.getValue) }
-        b.result()
-      }
-      spark.sparkContext
-        .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
-        .mapPartitions { ps =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          ps.map { p =>
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf))
-            try rd.getRecordCount finally rd.close()
-          }
-        }
-        .fold(0L)(_ + _)
-    }
+    // row-parity check from the footers alone: a count reads no column
+    val nRows = spark.read.parquet(tmpPath.toString).count()
     if (nRows != nRowsBefore) {
       fs.delete(tmpPath, true)
       throw new IllegalStateException(

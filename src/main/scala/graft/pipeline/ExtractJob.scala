@@ -77,8 +77,7 @@ object ExtractJob {
         case _ =>
           (ExtractResult(t.text, Vector(Span("plain", 0, t.text.length))), "plain")
       }
-      ExtractedTurn(t.conv_id, t.turn_idx, res.text,
-        res.spans.map(s => SpanRow(s.op, s.start, s.end)), kind, null)
+      ExtractedTurn(t.conv_id, t.turn_idx, res.text, res.spans, kind, null)
     } catch {
       case e: PdfParseException =>
         ExtractedTurn(t.conv_id, t.turn_idx, null, Seq.empty, t.tool, e.getMessage)

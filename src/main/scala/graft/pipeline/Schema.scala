@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import graft.core.Span
 
 /** North-rule table shapes — BASELINE.json input_hint + SURVEY §1.2. */
 
@@ -21,8 +22,6 @@ object Turn {
   val ddl = "conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP"
 }
 
-final case class SpanRow(op: String, start: Int, end: Int)
-
 /** Output row: per-turn extracted text + character-offset spans. `error` carries
   * the reference's panic message for poison payloads instead of failing the stage.
   */
@@ -30,7 +29,7 @@ final case class ExtractedTurn(
     conv_id: String,
     turn_idx: Int,
     extracted_text: String,
-    spans: Seq[SpanRow],
+    spans: Seq[Span],
     payload_kind: String,
     error: String
 )

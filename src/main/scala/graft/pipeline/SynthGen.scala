@@ -24,13 +24,10 @@ final case class GenRow(
   */
 object SynthGen {
 
-  /** splitmix64 — public-domain mixing function; the determinism backbone. */
-  def mix(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
+  /** splitmix64 ([[graft.functions.TextFunctions.mix]]), the determinism
+    * backbone; perfbench's corpus calls it here.
+    */
+  def mix(z0: Long): Long = graft.functions.TextFunctions.mix(z0)
 
   private val vocab: Array[String] = Array(
     "spark", "table", "row", "column", "scan", "filter", "join", "agg", "group",

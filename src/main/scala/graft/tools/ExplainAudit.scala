@@ -32,7 +32,7 @@ object ExplainAudit {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
     val names = args.drop(2).toSeq
-    val spark = graft.Bench.buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = graft.SparkEnv.session("graft-explain")
     val queries = graft.SparkEntry.queries
     val unknown = names.filterNot(queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")

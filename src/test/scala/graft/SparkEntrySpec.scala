@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Query
 
 /** The query registry: every plan has exactly one DuckDB twin under the same
-  * name, and oracle side-dump paths come from the query's own input dir.
+  * name, and oracle side-dump paths come from the query's own input dir. And
+  * the session recipe Verify shares with Bench, as the specs run it.
   */
 class SparkEntrySpec extends AnyFunSuite {
 
@@ -32,5 +33,12 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(tools.ExplainAudit.stable(plan) ==
       "Arguments: graft.operators.Similarity$$$Lambda@H, obj#N: scala.Tuple3, lambda x_N#NL, " +
       "[plan_id=N], MapPartitionsRDD[N], UnsafeArrayData@H, [file:<scratch>/graft-ivfN/data], x_20, id_2")
+  }
+
+  test("the specs run on SparkEnv's recipe: Bench's partitions, split size and uncompressed local shuffle") {
+    val spark = graft.pipeline.SparkTestSession.spark
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == (16L * 1024 * 1024).toString)
+    assert(spark.sparkContext.getConf.getOption("spark.shuffle.compress").contains("false"))
   }
 }

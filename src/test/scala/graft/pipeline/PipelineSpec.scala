@@ -8,14 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import graft.html.HtmlBoilerplate
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  spark.sparkContext.setLogLevel("WARN")
+  lazy val spark: SparkSession = graft.SparkEnv.session("graft-test", 4)
 }
 
 class HtmlSpec extends AnyFunSuite {
