@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 /** Scratch-directory policy for ephemeral per-query artifacts (streaming
   * file-source inputs, streaming checkpoints, throwaway index dirs) and, under
   * a local master, the shuffle dirs ([[SparkEnv.session]] sets
@@ -15,6 +17,8 @@ package graft
   * checkpoint location must be durable shared storage — this helper is for
   * the engine's ephemeral dev/bench artifacts only, never for production
   * checkpoints (see StreamingExtract.run, which takes the caller's path).
+  * Every [[dir]] is deleted at JVM exit, so tmpfs (RAM) does not fill up
+  * over repeated runs.
   */
 object Scratch {
   private[graft] lazy val base: java.io.File = {
@@ -27,7 +31,32 @@ object Scratch {
     b
   }
 
-  /** A fresh scratch directory with the given name prefix. */
-  def dir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(base.toPath, prefix).toString
+  private val created = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  /** Registered with the first [[dir]], so a JVM that makes none adds no hook. */
+  private lazy val cleanupHook = sys.addShutdownHook(deleteCreated())
+
+  /** A fresh scratch directory with the given name prefix, deleted at JVM exit. */
+  def dir(prefix: String): String = {
+    val d = Files.createTempDirectory(base.toPath, prefix)
+    created.add(d)
+    cleanupHook
+    d.toString
+  }
+
+  /** The shutdown hook's cleanup: recursively deletes every directory [[dir]]
+    * has made and not yet deleted. Never [[base]] itself, which holds Spark's
+    * `spark.local.dir`. Best effort per directory: one that cannot be walked
+    * or emptied is left and the rest are still deleted.
+    */
+  private[graft] def deleteCreated(): Unit = created.forEach { d =>
+    created.remove(d)
+    try {
+      val paths = Files.walk(d)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
+  }
 }

@@ -58,19 +58,13 @@ object StreamDict {
       if (!lenient) 1 // strict never reads /DecodeParms (reference parity)
       else {
         val isLzw = dict.get("Filter").contains(PName("LZWDecode"))
-        def earlyOf(dp: Map[String, PdfObj]): Int = dp.get("EarlyChange") match {
-          case Some(PNum(NInt(0))) => 0
-          case _                   => 1
-        }
-        dict.get("DecodeParms") match {
-          case Some(PDict(dp)) => earlyOf(dp)
-          // the legal single-filter array form
-          case Some(PArr(Vector(PDict(dp)))) => earlyOf(dp)
+        val parms = dict.get("DecodeParms")
+        parms.flatMap(directEarlyChange).getOrElse(parms match {
           // indirect DecodeParms: resolve through the ref's own context
           case Some(PRef(obj, gen, rctx)) =>
             rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
               case Some(at) => ObjParser.parseAt(rctx, at) match {
-                case PDict(dp) => earlyOf(dp)
+                case PDict(p) => earlyChangeIn(p)
                 case o if isLzw =>
                   Err.fail(s"LZW /DecodeParms should resolve to a dictionary, found $o")
                 case _ => 1
@@ -78,67 +72,86 @@ object StreamDict {
               case None if isLzw => Err.fail("LZW /DecodeParms ref not found in xref")
               case None          => 1
             }
-          case None => 1
           // an unreadable DecodeParms SHAPE on an LZW stream must fail loudly
           // (decoding with the wrong width timing garbles); other filters
           // ignore DecodeParms here (predictors are the xref resolver's)
           case Some(o) if isLzw =>
             Err.fail(s"LZW /DecodeParms not supported in this form: $o")
-          case Some(_) => 1
-        }
+          case _ => 1
+        })
       }
   )
+
+  /** /EarlyChange of a /DecodeParms value in a direct form — a dictionary or
+    * the legal single-filter one-element array — for body streams and the
+    * lenient xref/ObjStm resolver alike; None for any other shape.
+    */
+  private[core] def directEarlyChange(parms: PdfObj): Option[Int] = parms match {
+    case PDict(p)               => Some(earlyChangeIn(p))
+    case PArr(Vector(PDict(p))) => Some(earlyChangeIn(p))
+    case _                      => None
+  }
+
+  private def earlyChangeIn(parms: Map[String, PdfObj]): Int = parms.get("EarlyChange") match {
+    case Some(PNum(NInt(0))) => 0
+    case _                   => 1
+  }
 }
 
-/** Typed stream — body.rs:87-116. */
+/** Typed stream — body.rs:87-116. One filter decode ([[BodyStream.decode]])
+  * yields the exact bytes; the three views differ only in whether a
+  * FlateDecode stream carries the reference's 10x zero padding.
+  */
 final case class BodyStream(dict: StreamDict, content: Array[Byte]) {
-  /** body.rs:103-109 — FlateDecode (with 10x zero-pad semantics) or raw; the
-    * lenient-only filters decode exactly (no pad quirk — that quirk is a
-    * FlateDecode implementation artifact of the reference).
+  /** body.rs:103-109 — the reference's bytes: FlateDecode zero-padded to
+    * exactly 10x the compressed size (filters.rs:4-14); the lenient-only
+    * filters decode exactly (no pad quirk — that quirk is a FlateDecode
+    * implementation artifact of the reference). RawContent reads this.
     */
-  def getData: Array[Byte] = dict.filter match {
-    case Some(FlateDecodeFilter) => Flate.flateDecode(content)
-    case Some(AsciiHexFilter)    => LenientFilters.asciiHexDecode(content)
-    case Some(LzwFilter)         => LenientFilters.lzwDecode(content, dict.lzwEarlyChange)
-    case Some(DctFilter)         => LenientFilters.dctDecode(content)
-    case None                    => content
-  }
+  def getData: Array[Byte] = padded(getDataExact)
 
-  /** Exact-size variant for consumers that re-lex the bytes (Text/Chars
-    * interpretation, ToUnicode CMaps): NUL padding is whitespace to the
-    * tokenizer, so dropping it is output-identical (golden-gated) while cutting
-    * the dominant per-stream allocation ~3x. RawContent keeps `getData`.
+  /** The decoded bytes with no padding (a FlateDecode stream still stops at
+    * its 10x cap). Image XObjects read this: their decoded length is checked
+    * against the declared dimensions.
     */
-  def getDataExact: Array[Byte] = dict.filter match {
-    case Some(FlateDecodeFilter) => Flate.flateDecodeExact(content)
-    case Some(AsciiHexFilter)    => LenientFilters.asciiHexDecode(content)
-    case Some(LzwFilter)         => LenientFilters.lzwDecode(content, dict.lzwEarlyChange)
-    case Some(DctFilter)         => LenientFilters.dctDecode(content)
-    case None                    => content
-  }
+  def getDataExact: Array[Byte] = BodyStream.decode(dict.filter, content, dict.lzwEarlyChange)
 
-  /** The production decode for re-lexed consumers: exact-size on well-formed
-    * streams, falling back to the reference's full padded buffer when the
-    * decoded bytes end in a pad-sensitive lexer state (unterminated literal /
-    * escape / comment, trailing '<' or lone '>') — there the padding NULs are
-    * visible through the error channel (which panic fires and its wording, or
-    * panic-vs-success for a trailing '>'), so byte-exact reference parity
-    * requires the padded bytes. The sensitivity scan is one linear pass; the
-    * double decode happens only on crafted/malformed payloads
+  /** The production decode for re-lexed consumers (Text/Chars interpretation,
+    * ToUnicode CMaps): the exact bytes — NUL padding is whitespace to the
+    * tokenizer, so dropping it is output-identical (golden-gated) — unless a
+    * FlateDecode stream's bytes end in a pad-sensitive lexer state
+    * (unterminated literal / escape / comment, trailing '<' or lone '>').
+    * There the padding NULs are visible through the error channel (which
+    * panic fires and its wording, or panic-vs-success for a trailing '>'),
+    * so it gets the padded buffer, a copy of the same decode
     * (PdfTokenizer.padSensitiveAtEof; differential-gated in QuirkSpec).
     */
-  def getDataForLexing: Array[Byte] = dict.filter match {
-    case Some(FlateDecodeFilter) =>
-      val exact = Flate.flateDecodeExact(content)
-      if (PdfTokenizer.padSensitiveAtEof(exact)) Flate.flateDecode(content) else exact
-    case Some(AsciiHexFilter) => LenientFilters.asciiHexDecode(content)
-    case Some(LzwFilter)      => LenientFilters.lzwDecode(content, dict.lzwEarlyChange)
-    case Some(DctFilter)      => LenientFilters.dctDecode(content)
-    case None                 => content
+  def getDataForLexing: Array[Byte] = {
+    val exact = getDataExact
+    if (isFlate && PdfTokenizer.padSensitiveAtEof(exact)) padded(exact) else exact
   }
+
+  private def isFlate: Boolean = dict.filter.contains(FlateDecodeFilter)
+
+  private def padded(exact: Array[Byte]): Array[Byte] =
+    if (isFlate) java.util.Arrays.copyOf(exact, content.length * 10) else exact
 }
 
 object BodyStream {
+  /** The one per-filter decode, shared with the lenient xref-stream and
+    * ObjStm resolvers (which check the filter name first): the exact decoded
+    * bytes, a FlateDecode stream truncated at the reference's 10x cap and
+    * not padded ([[Flate.flateDecodeExact]]).
+    */
+  def decode(filter: Option[BodyFilter], bytes: Array[Byte], lzwEarlyChange: Int): Array[Byte] =
+    filter match {
+      case Some(FlateDecodeFilter) => Flate.flateDecodeExact(bytes)
+      case Some(AsciiHexFilter)    => LenientFilters.asciiHexDecode(bytes)
+      case Some(LzwFilter)         => LenientFilters.lzwDecode(bytes, lzwEarlyChange)
+      case Some(DctFilter)         => LenientFilters.dctDecode(bytes)
+      case None                    => bytes
+    }
+
   def parseAt(ctx: Ctx, at: Int): BodyStream = ObjParser.parseAt(ctx, at) match {
     case PStream(header, bytes) => BodyStream(StreamDict.from(header, ctx.lenient), bytes)
     case _                      => Err.fail("Stream should be a dictionary")

@@ -7,21 +7,24 @@ import java.util.zip.{DataFormatException, Inflater}
   * returned: decoded data followed by zero padding (or silently truncated at 10x).
   * The padding is benign for lexing (NUL is whitespace, tokenizer.rs:23) but visible
   * in RawContent output, so it must be preserved for fixture parity.
+  *
+  * One inflate loop ([[flateDecodeExact]]) serves both forms: the padded buffer
+  * is the exact decode zero-extended to 10x (SURVEY's FlateDecode row).
   */
 object Flate {
 
-  /** Exact-size decode, still TRUNCATED at the reference's 10x-compressed cap
-    * (filters.rs:7-9 semantics) but without the trailing zero padding. Safe ONLY
-    * where the padding is semantically invisible: content streams for Text/Chars
-    * interpretation and ToUnicode CMaps re-lex the bytes and NUL is whitespace to
-    * the tokenizer (tokenizer.rs:23). RawContent output and xref-stream bodies
-    * keep the padded `flateDecode` — the padding is golden-visible there.
-    * Motivation: the 10x zero-filled allocation per stream is the dominant GC
-    * pressure at high core counts (BENCH.md: G1 pause storms at local[32]).
+  /** The decoded bytes up to the reference's 10x-compressed cap (filters.rs:7-9
+    * truncation), without the trailing zero padding: never longer than
+    * `10 * input.length`. Safe where the padding is semantically invisible:
+    * content streams for Text/Chars interpretation and ToUnicode CMaps re-lex
+    * the bytes and NUL is whitespace to the tokenizer (tokenizer.rs:23).
+    * The buffer starts at `min(cap, max(64, 4n))` and doubles up to the cap,
+    * so a stream costs about its decoded size, not the 10x zero-filled
+    * allocation (the dominant GC pressure at high core counts, BENCH.md).
     */
   def flateDecodeExact(input: Array[Byte]): Array[Byte] = {
     val cap = input.length * 10
-    var buf = new Array[Byte](math.max(64, math.min(cap, input.length * 4)))
+    var buf = new Array[Byte](math.min(cap, math.max(64, input.length * 4)))
     val inf = new Inflater()
     inf.setInput(input)
     try {
@@ -41,23 +44,11 @@ object Flate {
     }
   }
 
-  def flateDecode(input: Array[Byte]): Array[Byte] = {
-    val buf = new Array[Byte](input.length * 10)
-    val inf = new Inflater()
-    inf.setInput(input)
-    try {
-      var off = 0
-      var stalled = false
-      while (!inf.finished() && off < buf.length && !stalled) {
-        val n = inf.inflate(buf, off, buf.length - off)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) stalled = true
-        else off += n
-      }
-      buf
-    } catch {
-      case e: DataFormatException => Err.fail(s"Error: ${e.getMessage}")
-    } finally {
-      inf.end()
-    }
-  }
+  /** The reference's whole buffer: [[flateDecodeExact]] zero-padded to
+    * exactly `10 * input.length` bytes. Output-visible in RawContent and
+    * strict xref-stream bodies, and the fallback of pad-sensitive content
+    * streams (BodyStream.getDataForLexing).
+    */
+  def flateDecode(input: Array[Byte]): Array[Byte] =
+    java.util.Arrays.copyOf(flateDecodeExact(input), input.length * 10)
 }

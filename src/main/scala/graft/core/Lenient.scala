@@ -239,14 +239,7 @@ object Lenient {
       case None => Seq((0, size))
       case _    => Err.fail("/Index must be an array")
     }
-    val inflated = s.header.get("Filter") match {
-      case Some(PName("FlateDecode"))    => Flate.flateDecodeExact(s.bytes)
-      case Some(PName("ASCIIHexDecode")) => LenientFilters.asciiHexDecode(s.bytes)
-      case Some(PName("LZWDecode")) =>
-        LenientFilters.lzwDecode(s.bytes, lzwEarlyChangeOf(s.header))
-      case None                          => s.bytes
-      case Some(o)                       => Err.fail(s"xref stream filter not supported: $o")
-    }
+    val inflated = decodeStream(s.header, s.bytes, "xref stream")
     val data = s.header.get("DecodeParms") match {
       case Some(PDict(p)) =>
         val predictor = p.get("Predictor").map { case PNum(NInt(n)) => n; case _ => 1 }.getOrElse(1)
@@ -316,14 +309,7 @@ object Lenient {
     }
     if (n < 0 || n > MaxMaterialized) Err.fail(s"object stream /N $n out of range")
     val bytes = decryptor.map(_.decrypt(containerObj, 0, stm.bytes)).getOrElse(stm.bytes)
-    val data = stm.header.get("Filter") match {
-      case Some(PName("FlateDecode"))    => Flate.flateDecodeExact(bytes)
-      case Some(PName("ASCIIHexDecode")) => LenientFilters.asciiHexDecode(bytes)
-      case Some(PName("LZWDecode")) =>
-        LenientFilters.lzwDecode(bytes, lzwEarlyChangeOf(stm.header))
-      case None                          => bytes
-      case Some(o)                       => Err.fail(s"object stream filter not supported: $o")
-    }
+    val data = decodeStream(stm.header, bytes, "object stream")
     val tok = new PdfTokenizer(data, 0)
     val pairs = Array.tabulate(n) { _ =>
       val num = tok.next() match {
@@ -352,26 +338,28 @@ object Lenient {
     }
   }
 
-  // ---- predictors ---------------------------------------------------------------
+  // ---- stream filters -----------------------------------------------------------
 
-  /** /DecodeParms /EarlyChange for an LZW stream in THIS resolver (direct
-    * dict or the single-element array form; xref/ObjStm DecodeParms are
-    * always direct in practice — anything else already fails loudly at the
-    * predictor site). Shares the LZW width-timing support with body streams
-    * (StreamDict.from).
+  /** The xref-stream and ObjStm filter decode: this resolver admits
+    * FlateDecode, ASCIIHexDecode and LZWDecode (no DCTDecode) and names
+    * `what` in its error, then decodes with the body streams' one per-filter
+    * decode (BodyStream.decode). /EarlyChange is read from the direct
+    * /DecodeParms forms only: xref/ObjStm DecodeParms are always direct in
+    * practice, and anything else already fails loudly at the predictor site.
     */
-  private def lzwEarlyChangeOf(header: Map[String, PdfObj]): Int =
-    header.get("DecodeParms") match {
-      case Some(PDict(p)) => p.get("EarlyChange") match {
-        case Some(PNum(NInt(0))) => 0
-        case _                   => 1
-      }
-      case Some(PArr(Vector(PDict(p)))) => p.get("EarlyChange") match {
-        case Some(PNum(NInt(0))) => 0
-        case _                   => 1
-      }
-      case _ => 1
+  private def decodeStream(header: Map[String, PdfObj], bytes: Array[Byte], what: String): Array[Byte] = {
+    val filter = header.get("Filter") match {
+      case Some(PName("FlateDecode"))    => Some(FlateDecodeFilter)
+      case Some(PName("ASCIIHexDecode")) => Some(AsciiHexFilter)
+      case Some(PName("LZWDecode"))      => Some(LzwFilter)
+      case None                          => None
+      case Some(o)                       => Err.fail(s"$what filter not supported: $o")
     }
+    val earlyChange = header.get("DecodeParms").flatMap(StreamDict.directEarlyChange).getOrElse(1)
+    BodyStream.decode(filter, bytes, earlyChange)
+  }
+
+  // ---- predictors ---------------------------------------------------------------
 
   /** Undo /DecodeParms predictors: 1 = none, 2 = TIFF horizontal differencing,
     * 10-15 = PNG per-row filters (None/Sub/Up/Average/Paeth; the row's filter

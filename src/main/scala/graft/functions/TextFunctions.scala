@@ -80,22 +80,14 @@ object TextFunctions {
 
   // --- payload-format sniffing (auto-routing for unlabeled corpora) --------------
 
-  /** Column-expression payload sniffer: PDF magic, base64-of-PDF magic
-    * ("JVBERi0" == base64("%PDF-")), HTML tag presence, else plain. Must stay
-    * in lockstep with `sniffKind` (spec-gated agreement).
-    */
-  def sniffPayloadKind(text: Column): Column =
-    when(text.startsWith("%PDF-"), "pdf")
-      .when(text.startsWith("JVBERi0"), "pdf-b64")
-      .when(lower(text).rlike("<(html|head|body|div|p|a|span|table)[ >]"), "html")
-      .otherwise("plain")
-
   private val htmlTagRe = java.util.regex.Pattern.compile(
     "<(html|head|body|div|p|a|span|table)[ >]", java.util.regex.Pattern.CASE_INSENSITIVE)
 
-  /** Row-side twin of `sniffPayloadKind` for the per-row extraction path.
-    * Case-insensitivity lives in the compiled pattern, NOT a text.toLowerCase
-    * copy — this runs per row on the extraction hot path.
+  /** Payload sniffer for the per-row extraction path (`auto` routing) and
+    * q_sniff_route: PDF magic, base64-of-PDF magic ("JVBERi0" ==
+    * base64("%PDF-")), HTML tag presence, else plain. Case-insensitivity
+    * lives in the compiled pattern, NOT a text.toLowerCase copy — this runs
+    * per row on the extraction hot path.
     */
   def sniffKind(text: String): String = {
     if (text == null) "plain"

@@ -16,7 +16,9 @@ object ExplainAudit {
     * expression ids (`conv_id#2741`), plan and RDD ids, the counter in
     * lambda variable names (`lambda x_20`), lambda class names
     * (`Foo$$$Lambda$5872/0x00007f5a676ac538`), identity hash codes
-    * (`@285836c9`) and the random suffix of [[graft.Scratch]] dir names.
+    * (`@285836c9`), the random suffix of [[graft.Scratch]] dir names and
+    * call-site line numbers (`localCheckpoint at Dedup.scala:552`), which move
+    * with any edit above the call.
     */
   def stable(plan: String): String = Seq(
     "(lambda \\w+?)_\\d+(?=#)" -> "$1_N",
@@ -25,7 +27,8 @@ object ExplainAudit {
     "(?<=RDD)\\[\\d+\\]" -> "[N]",
     "\\$\\$Lambda[$/\\w]*" -> "\\$\\$Lambda",
     "(?<=[\\w$])@[0-9a-f]+\\b" -> "@H",
-    Pattern.quote(graft.Scratch.base.getPath) + "/([^/\\]\\s,]*?)\\d+(?=[/\\]\\s,])" -> "<scratch>/$1N"
+    Pattern.quote(graft.Scratch.base.getPath) + "/([^/\\]\\s,]*?)\\d+(?=[/\\]\\s,])" -> "<scratch>/$1N",
+    "(?<=\\.scala:)\\d+" -> "N"
   ).foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
 
   def main(args: Array[String]): Unit = {

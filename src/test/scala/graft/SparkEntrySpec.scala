@@ -29,10 +29,12 @@ class SparkEntrySpec extends AnyFunSuite {
     val scratch = Scratch.base.getPath
     val plan = "Arguments: graft.operators.Similarity$$$Lambda$3661/0x00007f5a67131f58@46199519, " +
       "obj#69: scala.Tuple3, lambda x_20#2221L, [plan_id=311], MapPartitionsRDD[750], " +
-      s"UnsafeArrayData@782494cd, [file:$scratch/graft-ivf3917812305044139026/data], x_20, id_2"
+      s"UnsafeArrayData@782494cd, [file:$scratch/graft-ivf3917812305044139026/data], x_20, id_2, " +
+      "MapPartitionsRDD[4021] at localCheckpoint at Dedup.scala:552"
     assert(tools.ExplainAudit.stable(plan) ==
       "Arguments: graft.operators.Similarity$$$Lambda@H, obj#N: scala.Tuple3, lambda x_N#NL, " +
-      "[plan_id=N], MapPartitionsRDD[N], UnsafeArrayData@H, [file:<scratch>/graft-ivfN/data], x_20, id_2")
+      "[plan_id=N], MapPartitionsRDD[N], UnsafeArrayData@H, [file:<scratch>/graft-ivfN/data], x_20, id_2, " +
+      "MapPartitionsRDD[N] at localCheckpoint at Dedup.scala:N")
   }
 
   test("the specs run on SparkEnv's recipe: Bench's partitions, split size and uncompressed local shuffle") {

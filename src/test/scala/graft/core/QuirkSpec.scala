@@ -145,8 +145,10 @@ class QuirkSpec extends AnyFunSuite {
       "BT /F1 12 Tf (ab\\51",  // truncated octal: which panic fires differs
       "BT /F1 12 Tf (x) Tj %oops", // comment panic message carries the bytes
       "BT /F1 12 Tf (x) Tj <", // '<' panic message names the next byte
-      "BT /F1 12 Tf (x) Tj >"  // panic (exact) vs silent-skip SUCCESS (padded)
+      "BT /F1 12 Tf (x) Tj >", // panic (exact) vs silent-skip SUCCESS (padded)
+      longRun                  // compresses past 10x: both truncate at the cap
     )
+    assert(MiniPdf.deflate(longRun.getBytes("ISO-8859-1")).length * 10 < longRun.length)
     crafted.foreach { c => assert(prodExtract(c) == refPaddedExtract(c), s"payload: $c") }
     // the trailing-'>' case is the error-vs-success divergence the fallback exists for
     assert(refPaddedExtract("BT /F1 12 Tf (x) Tj >") == Right("x"))
@@ -168,14 +170,20 @@ class QuirkSpec extends AnyFunSuite {
   private def prodExtract(content: String): Either[String, String] =
     runExtract(rebuildWithFlateContent(content))
 
-  /** Reference semantics: filters.rs always returns the whole 10x padded
-    * buffer, so the reference lexes content ++ NUL*(10*compressed - len).
+  /** A long run inside a `Tj` literal: its compressed stream is far less
+    * than a tenth of it, so the reference keeps only the first 10x bytes.
+    */
+  private val longRun = "BT /F1 12 Tf (" + "a" * 3000 + ") Tj ET"
+
+  /** Reference semantics: filters.rs always returns the whole buffer of
+    * exactly 10x the compressed size, so the reference lexes content ++
+    * NUL*(10*compressed - len), or content cut at 10*compressed bytes.
     * Re-created here as a RAW (uncompressed) stream of exactly those bytes.
     */
   private def refPaddedExtract(content: String): Either[String, String] = {
     val raw = content.getBytes("ISO-8859-1")
     val compressedLen = MiniPdf.deflate(raw).length
-    val padded = java.util.Arrays.copyOf(raw, math.max(raw.length, compressedLen * 10))
+    val padded = java.util.Arrays.copyOf(raw, compressedLen * 10)
     runExtract(rebuildWithContent(new String(padded, "ISO-8859-1")))
   }
 
