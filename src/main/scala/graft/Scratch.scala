@@ -34,7 +34,7 @@ object Scratch {
   private val created = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
   /** Registered with the first [[dir]], so a JVM that makes none adds no hook. */
-  private lazy val cleanupHook = sys.addShutdownHook(deleteCreated())
+  private lazy val cleanupHook = sys.addShutdownHook(deleteCreated(_ => true))
 
   /** A fresh scratch directory with the given name prefix, deleted at JVM exit. */
   def dir(prefix: String): String = {
@@ -44,14 +44,14 @@ object Scratch {
     d.toString
   }
 
-  /** The shutdown hook's cleanup: recursively deletes every directory [[dir]]
-    * has made and not yet deleted. Never [[base]] itself, which holds Spark's
-    * `spark.local.dir`. Best effort per directory: one that cannot be walked
-    * or emptied is left and the rest are still deleted.
+  /** The shutdown hook's cleanup (which selects them all): recursively
+    * deletes each directory [[dir]] has made, not yet deleted, and `only`
+    * selects. Never [[base]] itself, which holds Spark's `spark.local.dir`.
+    * Best effort per directory: one that cannot be walked or emptied is left
+    * and the rest are still deleted.
     */
-  private[graft] def deleteCreated(): Unit = created.forEach { d =>
-    created.remove(d)
-    try {
+  private[graft] def deleteCreated(only: Path => Boolean): Unit = created.forEach { d =>
+    if (only(d) && created.remove(d)) try {
       val paths = Files.walk(d)
       try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
       finally paths.close()

@@ -108,7 +108,7 @@ final case class BodyStream(dict: StreamDict, content: Array[Byte]) {
     * filters decode exactly (no pad quirk — that quirk is a FlateDecode
     * implementation artifact of the reference). RawContent reads this.
     */
-  def getData: Array[Byte] = padded(getDataExact)
+  def getData: Array[Byte] = if (isFlate) Flate.flateDecode(content) else getDataExact
 
   /** The decoded bytes with no padding (a FlateDecode stream still stops at
     * its 10x cap). Image XObjects read this: their decoded length is checked
@@ -116,25 +116,20 @@ final case class BodyStream(dict: StreamDict, content: Array[Byte]) {
     */
   def getDataExact: Array[Byte] = BodyStream.decode(dict.filter, content, dict.lzwEarlyChange)
 
-  /** The production decode for re-lexed consumers (Text/Chars interpretation,
-    * ToUnicode CMaps): the exact bytes — NUL padding is whitespace to the
-    * tokenizer, so dropping it is output-identical (golden-gated) — unless a
-    * FlateDecode stream's bytes end in a pad-sensitive lexer state
-    * (unterminated literal / escape / comment, trailing '<' or lone '>').
-    * There the padding NULs are visible through the error channel (which
-    * panic fires and its wording, or panic-vs-success for a trailing '>'),
-    * so it gets the padded buffer, a copy of the same decode
-    * (PdfTokenizer.padSensitiveAtEof; differential-gated in QuirkSpec).
+  /** The production decode for re-lexed consumers (Text/Chars, ToUnicode
+    * CMaps): the exact bytes, as NUL padding is whitespace to the tokenizer
+    * (golden-gated), unless a FlateDecode stream ends in a pad-sensitive lexer
+    * state (unterminated literal / escape / comment, trailing '<' or lone '>'),
+    * where the padding NULs reach the error channel (which panic fires and its
+    * wording), so the same decode is padded (PdfTokenizer.padSensitiveAtEof;
+    * differential-gated in QuirkSpec).
     */
   def getDataForLexing: Array[Byte] = {
     val exact = getDataExact
-    if (isFlate && PdfTokenizer.padSensitiveAtEof(exact)) padded(exact) else exact
+    if (isFlate && PdfTokenizer.padSensitiveAtEof(exact)) Flate.pad(exact, content.length) else exact
   }
 
   private def isFlate: Boolean = dict.filter.contains(FlateDecodeFilter)
-
-  private def padded(exact: Array[Byte]): Array[Byte] =
-    if (isFlate) java.util.Arrays.copyOf(exact, content.length * 10) else exact
 }
 
 object BodyStream {

@@ -517,11 +517,12 @@ object Similarity {
   }
 
   /** Convenience: build-then-probe in one call (tests/queries only). LOCAL
-    * MASTER ONLY (asserted): the throwaway index lives in java.io.tmpdir, which
-    * executors on a multi-node cluster cannot read — production builds the
-    * index ONCE at a shared durable path via ivfBuildIndex and probes many
-    * times with ivfProbe. The scratch directory is removed on JVM exit (the
-    * returned DataFrame reads from it lazily, so it cannot be deleted eagerly).
+    * MASTER ONLY (asserted): the throwaway index lives in a driver-local
+    * [[graft.Scratch.dir]], which executors on a multi-node cluster cannot
+    * read — production builds the index ONCE at a shared durable path via
+    * ivfBuildIndex and probes many times with ivfProbe. Scratch removes the
+    * directory on JVM exit (the returned DataFrame reads from it lazily, so it
+    * cannot be deleted eagerly).
     */
   def ivfTopK(
       embeddings: DataFrame,
@@ -537,15 +538,9 @@ object Similarity {
     val spark = embeddings.sparkSession
     require(spark.sparkContext.isLocal,
       "ivfTopK uses driver-local scratch; on a cluster use ivfBuildIndex + ivfProbe with a shared path")
-    val dir = java.nio.file.Paths.get(graft.Scratch.dir("graft-ivf"))
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }))
-    ivfBuildIndex(embeddings, dir.toString, nCells, spill, idCol, vecCol)
-    ivfProbe(spark, dir.toString, queryIds, k, nprobe, maxSpill = spill,
+    val dir = graft.Scratch.dir("graft-ivf")
+    ivfBuildIndex(embeddings, dir, nCells, spill, idCol, vecCol)
+    ivfProbe(spark, dir, queryIds, k, nprobe, maxSpill = spill,
       candidatesOut = candidatesOut)
   }
 
