@@ -1,6 +1,7 @@
 package graft.core
 
 import java.util.Arrays
+import scala.annotation.switch
 import scala.collection.mutable.ArrayBuffer
 
 /** Extraction modes — lib.rs:16-21. */
@@ -54,6 +55,25 @@ final class AText(val bytes: Array[Byte]) extends ArrayVal {
 object AText { def apply(b: Array[Byte]) = new AText(b) }
 final case class APos(n: Num) extends ArrayVal
 
+/** The elements of a decoded TJ array held as its operand tokens (literal
+  * and hex strings, numbers) and read as ArrayVals: text assembly walks the
+  * tokens, so a shown array allocates no element.
+  */
+final class TJItems private[core] (private[core] val operands: Array[Tok])
+    extends scala.collection.immutable.AbstractSeq[ArrayVal] with IndexedSeq[ArrayVal] {
+  def length: Int = operands.length
+  def apply(i: Int): ArrayVal = TJItems.element(operands(i))
+}
+
+object TJItems {
+  private def element(t: Tok): ArrayVal = t match {
+    case l: TLit => AText(l.bytes)
+    case h: THex => AText(h.bytes)
+    case TNum(n) => APos(n)
+    case x       => throw new IllegalArgumentException(s"not a TJ element: $x")
+  }
+}
+
 /** Content-stream instructions — content.rs:46-98. */
 sealed trait GInstr
 case object ILowerQ extends GInstr
@@ -100,7 +120,7 @@ final class ITjOp(val bytes: Array[Byte]) extends GInstr {
   override def toString: String = s"ITjOp(${bytes.mkString(",")})"
 }
 object ITjOp { def apply(b: Array[Byte]) = new ITjOp(b) }
-final case class ITJOp(items: Vector[ArrayVal]) extends GInstr
+final case class ITJOp(items: IndexedSeq[ArrayVal]) extends GInstr
 case object IBeginText extends GInstr
 case object IEndText extends GInstr
 final case class IDo(name: String) extends GInstr
@@ -167,6 +187,10 @@ final class GraphicsState {
   *  - inline dictionaries are skipped wholesale (content.rs:234-241);
   *  - comments inside content panic (content.rs:630) — the raw tokenizer (not the
   *    Lemmatizer) feeds this decoder, so Token::Comment reaches the catch-all.
+  *
+  * One operand buffer serves every call (each call starts it empty, as the
+  * reference's per-call `buf` does), and operators dispatch on the
+  * tokenizer's [[Op]] code.
   */
 final class ContentDecoder(bytes: Array[Byte], lenientText: Boolean = false) {
   val tok = new PdfTokenizer(bytes, 0)
@@ -175,197 +199,216 @@ final class ContentDecoder(bytes: Array[Byte], lenientText: Boolean = false) {
   var tm: Mat = Mat.identity
   var tlm: Mat = Mat.identity
 
+  private var buf = new Array[Tok](16)
+  private var size = 0
+
   private def processTd(tx: Num, ty: Num): Unit = {
     tlm = Mat(1.0f, 0.0f, 0.0f, 1.0f, tx.toF, ty.toF) * tlm
     tm = tlm
   }
 
+  // the reference indexes buf[i] directly and PANICS when an operator
+  // arrives with too few operands (Rust index-out-of-bounds); map that
+  // panic to PdfParseException like every other panic site — a raw
+  // IndexOutOfBoundsException here would escape the per-row error
+  // discipline (found by the round-6 byte-mutation differential fuzz)
+  private def tokAt(i: Int, op: String): Tok =
+    if (i < size) buf(i)
+    else Err.fail(s"Operator $op expects operand ${i + 1}, buffer holds $size")
+
+  private def num(i: Int, op: String): Num = tokAt(i, op) match {
+    case TNum(n) => n
+    case t       => Err.fail(s"Operand $t is not allowed with operator $op")
+  }
+
+  private def name(i: Int, op: String): String = tokAt(i, op) match {
+    case TName(n) => n
+    case t        => Err.fail(s"Operand $t is not allowed with operator $op")
+  }
+
+  private def lit(i: Int, op: String): Array[Byte] = tokAt(i, op) match {
+    case l: TLit => l.bytes
+    case x       => Err.fail(s"Operand $x is not allowed with operator $op")
+  }
+
   def next(): GInstr = {
-    val buf = ArrayBuffer.empty[Tok]
-
-    // the reference indexes buf[i] directly and PANICS when an operator
-    // arrives with too few operands (Rust index-out-of-bounds); map that
-    // panic to PdfParseException like every other panic site — a raw
-    // IndexOutOfBoundsException here would escape the per-row error
-    // discipline (found by the round-6 byte-mutation differential fuzz)
-    def tokAt(i: Int, op: String): Tok =
-      if (i < buf.length) buf(i)
-      else Err.fail(s"Operator $op expects operand ${i + 1}, buffer holds ${buf.length}")
-    def num(i: Int, op: String): Num = tokAt(i, op) match {
-      case TNum(n) => n
-      case t       => Err.fail(s"Operand $t is not allowed with operator $op")
-    }
-    def name(i: Int, op: String): String = tokAt(i, op) match {
-      case TName(n) => n
-      case t        => Err.fail(s"Operand $t is not allowed with operator $op")
-    }
-
+    size = 0
     var t = tok.next()
     while (t != null) {
       t match {
-        case _: TLit | _: TName | TArrayBegin | TArrayEnd | _: THex | TNum(_) =>
-          buf += t
+        case _: TLit | _: TName | TArrayBegin | TArrayEnd | _: THex | _: TNum =>
+          if (size == buf.length) buf = Arrays.copyOf(buf, size * 2)
+          buf(size) = t
+          size += 1
         case TDictBegin =>
           var d = tok.next()
           while (d != null && d != TDictEnd) d = tok.next()
         case bare: TBare =>
-          val op = new String(bare.bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
-          op match {
-            case "q" =>
-              stack += graphicState.copyOf
-              return ILowerQ
-            case "Q" =>
-              if (stack.isEmpty) Err.fail("Unable to restore graphic state from empty stack")
-              graphicState = stack.remove(stack.length - 1)
-              return IUpperQ
-            case "cm" =>
-              val (a, b, c, d, e, f) =
-                (num(0, "re"), num(1, "re"), num(2, "re"), num(3, "re"), num(4, "re"), num(5, "re"))
-              graphicState.ctm = Mat.of(Array(a, b, c, d, e, f))
-              return ICm(a, b, c, d, e, f)
-            case "w" =>
-              val lw = num(0, "J"); graphicState.lineWidth = lw; return ILowerW(lw)
-            case "J" =>
-              val lc = num(0, "J"); graphicState.lineCap = lc; return IUpperJ(lc)
-            case "d" =>
-              val it = buf.iterator
-              if (!it.hasNext) Err.fail("End of stream too early")
-              it.next() match {
-                case TArrayBegin => ()
-                case x           => Err.fail(s"First operand $x is not allowed for operator d")
-              }
-              val arr = Vector.newBuilder[Num]
-              var inArr = true
-              while (inArr) {
-                if (!it.hasNext) inArr = false
-                else it.next() match {
-                  case TNum(n)   => arr += n
-                  case TArrayEnd => inArr = false
-                  case x         => Err.fail(s"Unexpected token $x in dash array")
-                }
-              }
-              val phase = if (it.hasNext) it.next() match {
-                case TNum(n) => n
-                case x       => Err.fail(s"First operand $x is not allowed for operator d")
-              } else Err.fail("End of stream too early")
-              return ILowerD(arr.result(), phase)
-            case "i" =>
-              val fl = num(0, "re"); graphicState.flatness = fl; return ILowerI(fl)
-            case "gs" =>
-              name(0, "gs"); return IGs
-            case "m" => return ILowerM(num(0, "re"), num(1, "re"))
-            case "l" => return ILowerL(num(0, "re"), num(1, "re"))
-            case "c" =>
-              return ILowerC(num(0, "Tm"), num(1, "Tm"), num(2, "Tm"), num(3, "Tm"), num(4, "Tm"), num(5, "Tm"))
-            case "h"  => return ILowerH
-            case "re" => return IRe(num(0, "re"), num(1, "re"), num(2, "re"), num(3, "re"))
-            case "W"  => return IW
-            case "W*" => return IWStar
-            case "S"  => return IS
-            case "f"  => return ILowerF
-            case "f*" => return ILowerFStar
-            case "n"  => return IN
-            case "cs" => return ICs(name(0, "cs"))
-            case "sc" => return ISc(num(0, "cs"))
-            case "G"  => return IUpperG(num(0, "G"))
-            case "g"  => return ILowerG(num(0, "G"))
-            case "RG" => return IRGOp(num(0, "rg"), num(1, "rg"), num(2, "rg"))
-            case "rg" => return IRgOp(num(0, "rg"), num(1, "rg"), num(2, "rg"))
-            case "BT" =>
-              tm = Mat.identity; tlm = Mat.identity
-              return IBeginText
-            case "ET" => return IEndText
-            case "TD" =>
-              val (tx, ty) = (num(0, "TD"), num(1, "TD"))
-              graphicState.textState.tl = -ty
-              processTd(tx, ty)
-              return ITDOp(tx, ty)
-            case "Td" =>
-              if (buf.length != 2) return next() // arity guard — content.rs:507-509
-              val (tx, ty) = (num(0, "TD"), num(1, "TD"))
-              processTd(tx, ty)
-              return ITdOp(tx, ty)
-            case "Tc" =>
-              val cs = num(0, "TD"); graphicState.textState.tc = cs; return ITc(cs)
-            case "Tf" =>
-              val font = name(0, "TD")
-              val size = num(1, "TD")
-              graphicState.textState.tf = Some(font)
-              graphicState.textState.tfs = Some(size)
-              return ITf(font, size)
-            case "Tr" =>
-              val r = num(0, "Tr"); graphicState.textState.tmode = r; return ITr(r)
-            case "Tm" =>
-              val (a, b, c, d, e, f) =
-                (num(0, "Tm"), num(1, "Tm"), num(2, "Tm"), num(3, "Tm"), num(4, "Tm"), num(5, "Tm"))
-              tm = Mat.of(Array(a, b, c, d, e, f))
-              tlm = Mat.of(Array(a, b, c, d, e, f))
-              return ITm(a, b, c, d, e, f)
-            case "T*" =>
-              processTd(NInt(0), graphicState.textState.tl)
-              return ITStar
-            case "Tj" =>
-              tokAt(0, "Tj") match {
-                case l: TLit => return ITjOp(l.bytes)
-                case x       => Err.fail(s"Operand $x is not allowed with operator Tj")
-              }
-            case "TJ" =>
-              return ITJOp(buf.iterator.collect {
-                case l: TLit => AText(l.bytes)
-                case h: THex => AText(h.bytes)
-                case TNum(n) => APos(n)
-              }.toVector)
-            case "Do" =>
-              tokAt(0, "Do") match {
-                case TName(n) => return IDo(n)
-                case x        => Err.fail(s"Operand $x is not allowed with operator Do")
-              }
-            case "BDC" => return IBDC
-            case "BMC" => return IBMC
-            case "EMC" => return IEMC
-            // ---- lenient-TEXT extension (flag-gated; strict falls through to
-            // the reference's unknown-op path below). `'`/`"` reuse the
-            // engine's existing T* convention (processTd(0, tl)) — the ty
-            // SIGN follows T*'s replicated quirk, which is output-identical
-            // because newline inference keys on ty inequality, not direction.
-            case "Tw" if lenientText =>
-              val w = num(0, "Tw"); graphicState.textState.tw = w; return ITw(w)
-            case "Tz" if lenientText =>
-              val z = num(0, "Tz")
-              graphicState.textState.th = NReal(z.toF / 100.0f)
-              return ITz(z)
-            case "TL" if lenientText =>
-              val l = num(0, "TL"); graphicState.textState.tl = l; return ITL(l)
-            case "Ts" if lenientText =>
-              val r = num(0, "Ts"); graphicState.textState.trise = r; return ITs(r)
-            case "'" if lenientText =>
-              val b = tokAt(0, "'") match {
-                case l: TLit => l.bytes
-                case x       => Err.fail(s"Operand $x is not allowed with operator '")
-              }
-              processTd(NInt(0), graphicState.textState.tl)
-              return new IQuoteOp(b)
-            case "\"" if lenientText =>
-              val (aw, ac) = (num(0, "\""), num(1, "\""))
-              val b = tokAt(2, "\"") match {
-                case l: TLit => l.bytes
-                case x       => Err.fail(s"Operand $x is not allowed with operator \"")
-              }
-              graphicState.textState.tw = aw
-              graphicState.textState.tc = ac
-              processTd(NInt(0), graphicState.textState.tl)
-              return new IDblQuoteOp(aw, ac, b)
-            case _ =>
-              // unknown operator: diagnostic only, operand buffer retained —
-              // content.rs:624-628
-              ()
-          }
+          val instr = operator(bare.op)
+          if (instr != null) return instr
         case other =>
           Err.fail(s"Pdf token $other has no mapping implemented to ContentStream")
       }
       t = tok.next()
     }
     null
+  }
+
+  /** The instruction of operator `op` over the buffered operands, or null
+    * for an operator the decoder does not know: a diagnostic only in the
+    * reference, which keeps the operands — content.rs:624-628.
+    */
+  private def operator(op: Int): GInstr = (op: @switch) match {
+    case Op.q =>
+      stack += graphicState.copyOf
+      ILowerQ
+    case Op.Q =>
+      if (stack.isEmpty) Err.fail("Unable to restore graphic state from empty stack")
+      graphicState = stack.remove(stack.length - 1)
+      IUpperQ
+    case Op.cm =>
+      val a = num(0, "re"); val b = num(1, "re"); val c = num(2, "re")
+      val d = num(3, "re"); val e = num(4, "re"); val f = num(5, "re")
+      graphicState.ctm = Mat(a.toF, b.toF, c.toF, d.toF, e.toF, f.toF)
+      ICm(a, b, c, d, e, f)
+    case Op.w =>
+      val lw = num(0, "J"); graphicState.lineWidth = lw; ILowerW(lw)
+    case Op.J =>
+      val lc = num(0, "J"); graphicState.lineCap = lc; IUpperJ(lc)
+    case Op.d =>
+      if (size == 0) Err.fail("End of stream too early")
+      buf(0) match {
+        case TArrayBegin => ()
+        case x           => Err.fail(s"First operand $x is not allowed for operator d")
+      }
+      val arr = Vector.newBuilder[Num]
+      var i = 1
+      var inArr = true
+      while (inArr) {
+        if (i >= size) inArr = false
+        else {
+          buf(i) match {
+            case TNum(n)   => arr += n
+            case TArrayEnd => inArr = false
+            case x         => Err.fail(s"Unexpected token $x in dash array")
+          }
+          i += 1
+        }
+      }
+      val phase = if (i < size) buf(i) match {
+        case TNum(n) => n
+        case x       => Err.fail(s"First operand $x is not allowed for operator d")
+      } else Err.fail("End of stream too early")
+      ILowerD(arr.result(), phase)
+    case Op.i =>
+      val fl = num(0, "re"); graphicState.flatness = fl; ILowerI(fl)
+    case Op.gs =>
+      name(0, "gs"); IGs
+    case Op.m => ILowerM(num(0, "re"), num(1, "re"))
+    case Op.l => ILowerL(num(0, "re"), num(1, "re"))
+    case Op.c =>
+      ILowerC(num(0, "Tm"), num(1, "Tm"), num(2, "Tm"), num(3, "Tm"), num(4, "Tm"), num(5, "Tm"))
+    case Op.h     => ILowerH
+    case Op.re    => IRe(num(0, "re"), num(1, "re"), num(2, "re"), num(3, "re"))
+    case Op.W     => IW
+    case Op.WStar => IWStar
+    case Op.S     => IS
+    case Op.f     => ILowerF
+    case Op.fStar => ILowerFStar
+    case Op.n     => IN
+    case Op.cs    => ICs(name(0, "cs"))
+    case Op.sc    => ISc(num(0, "cs"))
+    case Op.G     => IUpperG(num(0, "G"))
+    case Op.g     => ILowerG(num(0, "G"))
+    case Op.RG    => IRGOp(num(0, "rg"), num(1, "rg"), num(2, "rg"))
+    case Op.rg    => IRgOp(num(0, "rg"), num(1, "rg"), num(2, "rg"))
+    case Op.BT =>
+      tm = Mat.identity; tlm = Mat.identity
+      IBeginText
+    case Op.ET => IEndText
+    case Op.TD =>
+      val tx = num(0, "TD"); val ty = num(1, "TD")
+      graphicState.textState.tl = -ty
+      processTd(tx, ty)
+      ITDOp(tx, ty)
+    case Op.Td =>
+      if (size != 2) next() // arity guard — content.rs:507-509
+      else {
+        val tx = num(0, "TD"); val ty = num(1, "TD")
+        processTd(tx, ty)
+        ITdOp(tx, ty)
+      }
+    case Op.Tc =>
+      val cs = num(0, "TD"); graphicState.textState.tc = cs; ITc(cs)
+    case Op.Tf =>
+      val font = name(0, "TD")
+      val fontSize = num(1, "TD")
+      graphicState.textState.tf = Some(font)
+      graphicState.textState.tfs = Some(fontSize)
+      ITf(font, fontSize)
+    case Op.Tr =>
+      val r = num(0, "Tr"); graphicState.textState.tmode = r; ITr(r)
+    case Op.Tm =>
+      val a = num(0, "Tm"); val b = num(1, "Tm"); val c = num(2, "Tm")
+      val d = num(3, "Tm"); val e = num(4, "Tm"); val f = num(5, "Tm")
+      tm = Mat(a.toF, b.toF, c.toF, d.toF, e.toF, f.toF)
+      tlm = tm
+      ITm(a, b, c, d, e, f)
+    case Op.TStar =>
+      processTd(NInt(0), graphicState.textState.tl)
+      ITStar
+    case Op.Tj => ITjOp(lit(0, "Tj"))
+    case Op.TJ =>
+      val items = new Array[Tok](size)
+      var n = 0
+      var i = 0
+      while (i < size) {
+        buf(i) match {
+          case t @ (_: TLit | _: THex | _: TNum) => items(n) = t; n += 1
+          case _ => ()
+        }
+        i += 1
+      }
+      ITJOp(new TJItems(if (n == size) items else Arrays.copyOf(items, n)))
+    case Op.Do =>
+      tokAt(0, "Do") match {
+        case TName(n) => IDo(n)
+        case x        => Err.fail(s"Operand $x is not allowed with operator Do")
+      }
+    case Op.BDC => IBDC
+    case Op.BMC => IBMC
+    case Op.EMC => IEMC
+    // ---- lenient-TEXT extension (flag-gated; strict falls through to
+    // the reference's unknown-op path). `'`/`"` reuse the engine's existing
+    // T* convention (processTd(0, tl)) — the ty SIGN follows T*'s
+    // replicated quirk, which is output-identical because newline
+    // inference keys on ty inequality, not direction.
+    case Op.Tw | Op.Tz | Op.TL | Op.Ts | Op.Quote | Op.DblQuote if lenientText => lenientOperator(op)
+    case _ => null
+  }
+
+  private def lenientOperator(op: Int): GInstr = (op: @switch) match {
+    case Op.Tw =>
+      val w = num(0, "Tw"); graphicState.textState.tw = w; ITw(w)
+    case Op.Tz =>
+      val z = num(0, "Tz")
+      graphicState.textState.th = NReal(z.toF / 100.0f)
+      ITz(z)
+    case Op.TL =>
+      val l = num(0, "TL"); graphicState.textState.tl = l; ITL(l)
+    case Op.Ts =>
+      val r = num(0, "Ts"); graphicState.textState.trise = r; ITs(r)
+    case Op.Quote =>
+      val b = lit(0, "'")
+      processTd(NInt(0), graphicState.textState.tl)
+      new IQuoteOp(b)
+    case Op.DblQuote =>
+      val aw = num(0, "\""); val ac = num(1, "\"")
+      val b = lit(2, "\"")
+      graphicState.textState.tw = aw
+      graphicState.textState.tc = ac
+      processTd(NInt(0), graphicState.textState.tl)
+      new IDblQuoteOp(aw, ac, b)
   }
 }
 
@@ -376,12 +419,69 @@ final class ContentDecoder(bytes: Array[Byte], lenientText: Boolean = false) {
   */
 object TextAssembly {
 
+  /** The text matrix of one TJ show in registers. `shift(tx)` is
+    * `Mat(1, 0, 0, 1, tx, 0) * m` with the same f32 operations in the same
+    * order as `Mat.*` (the zero and unit terms included: they decide -0 and
+    * NaN), so a glyph advance or kern allocates nothing.
+    */
+  private final class TextMatrix(m: Mat) {
+    var a: Float = m.a; var b: Float = m.b; var c: Float = m.c
+    var d: Float = m.d; var e: Float = m.e; var f: Float = m.f
+
+    def shift(tx: Float): Unit = {
+      val na = 1.0f * a + 0.0f * c
+      val nb = 1.0f * b + 0.0f * d
+      val nc = 0.0f * a + 1.0f * c
+      val nd = 0.0f * b + 1.0f * d
+      val ne = tx * a + 0.0f * c + e
+      val nf = tx * b + 0.0f * d + f
+      a = na; b = nb; c = nc; d = nd; e = ne; f = nf
+    }
+
+    def mat: Mat = Mat(a, b, c, d, e, f)
+  }
+
+  /** The page's output chars: an append is a store, and a Tj's bytes are
+    * widened in one loop.
+    */
+  private final class TextBuf(capacity: Int) {
+    private var chars = new Array[Char](math.max(16, capacity))
+    private var len = 0
+
+    def length: Int = len
+
+    private def room(n: Int): Unit =
+      if (len + n > chars.length) chars = Arrays.copyOf(chars, math.max(chars.length * 2, len + n))
+
+    def append(c: Char): Unit = { room(1); chars(len) = c; len += 1 }
+
+    def append(s: String): Unit = { room(s.length); s.getChars(0, s.length, chars, len); len += s.length }
+
+    /** Each byte as the char of the same value (ISO-8859-1). */
+    def appendBytes(b: Array[Byte]): Unit = {
+      room(b.length)
+      var i = 0
+      while (i < b.length) { chars(len + i) = (b(i) & 0xff).toChar; i += 1 }
+      len += b.length
+    }
+
+    def charAt(i: Int): Char = chars(i)
+    def substring(from: Int): String = new String(chars, from, len - from)
+  }
+
   def getText(contentBytes: Array[Byte], resources: PdfResources, displayChar: Boolean,
               lenientText: Boolean = false): ExtractResult = {
     val content = new ContentDecoder(contentBytes, lenientText)
-    val out = new StringBuilder
-    val spans = Vector.newBuilder[Span]
-    var tmPrev = content.tm
+    // Text output never has more chars than the content has bytes
+    val out = new TextBuf(math.min(contentBytes.length, 1 << 16))
+    var spans = new Array[Span](16)
+    var spanCount = 0
+    def addSpan(op: String, start: Int): Unit = {
+      if (spanCount == spans.length) spans = Arrays.copyOf(spans, spanCount * 2)
+      spans(spanCount) = Span(op, start, out.length)
+      spanCount += 1
+    }
+    var tyPrev = content.tm.ty
 
     def lookupFont(): PdfFont = content.graphicState.textState.tf match {
       case Some(s) => resources.font match {
@@ -391,127 +491,136 @@ object TextAssembly {
       case None => Err.fail("Text state should have a font set")
     }
 
-    def charsFormat(c: Char, font: PdfFont): String =
-      s"${rustCharDebug(c)}, ${rustStrDebug(font.subtype)}, ${rustStrDebug(font.baseFont)}, ${content.tm.display}\n"
+    /** The Chars-mode line of a glyph, after its char: `, subtype, base font, tm`. */
+    def fontPart(font: PdfFont): String =
+      s", ${rustStrDebug(font.subtype)}, ${rustStrDebug(font.baseFont)}, "
 
-    def tfsOrFail(): Num = content.graphicState.textState.tfs match {
-      case Some(n) => n
-      case None    => Err.fail("Font size should be set before painting a glyph")
-    }
-
-    /** Glyph advance — content.rs:836-855 / 874-911. Specialized to primitive
-      * f32 with the IDENTICAL operation order as the Num-algebra path: w0 is
-      * always Real (width division / 0.0 fallback), so every add and multiply
-      * takes the Real branch = plain f32 ops on .toF operands. Verified byte-exact by
-      * the fixture goldens; saves ~6 allocations per shown glyph.
-      */
-    def advance(font: PdfFont, c: Int): Unit = {
-      val w0f = font.widthTableF(c & 0xff)
-      val tfs = tfsOrFail()
-      val ts = content.graphicState.textState
-      var tx = w0f * tfs.toF
-      tx = tx + ts.tc.toF
-      if (c == ' '.toInt) tx = tx + ts.tw.toF
-      tx = tx * ts.th.toF
-      content.tm = Mat(1.0f, 0.0f, 0.0f, 1.0f, tx, 0.0f) * content.tm
+    /** Starts a show: the inferred newline, then the show's span start. */
+    def startShow(): Int = {
+      if (content.tm.ty != tyPrev) out.append('\n')
+      tyPrev = content.tm.ty
+      out.length
     }
 
     // Tj-style show: byte-as-char, CMap IGNORED — content.rs:752-765. Shared by
     // Tj and the lenient-text `'`/`"` shows (whose line move already happened
     // inside the decoder, so the ty-change newline check below fires for them).
+    // Tj never moves tm, so Chars mode formats it once per show.
     def showRaw(bytes: Array[Byte], opName: String): Unit = {
       val font = lookupFont()
-      if (content.tm.ty != tmPrev.ty) out.append('\n')
-      tmPrev = content.tm
-      val spanStart = out.length
+      val spanStart = startShow()
       var i = 0
-      while (i < bytes.length) {
-        val c = (bytes(i) & 0xff).toChar
-        if (displayChar) out.append(charsFormat(c, font))
-        else out.append(c)
-        i += 1
+      if (displayChar) {
+        val tail = if (bytes.length == 0) "" else fontPart(font) + content.tm.display + "\n"
+        while (i < bytes.length) { out.append(rustCharDebug((bytes(i) & 0xff).toChar)); out.append(tail); i += 1 }
+      } else {
+        out.appendBytes(bytes)
+        addSpan(opName, spanStart)
       }
-      if (!displayChar) spans += Span(opName, spanStart, out.length)
+    }
+
+    // TJ show — content.rs:767-930. The font, its CMap and the text state
+    // are fixed for the whole show; the width table and the font size are
+    // read at the first glyph advance, where the reference first needs them
+    // (and fails when they are missing).
+    def showArray(ops: Array[Tok]): Unit = {
+      val font = lookupFont()
+      val spanStart = startShow()
+      val cm = font.toUnicode.orNull
+      val ts = content.graphicState.textState
+      val tfs = ts.tfs.orNull
+      val tfsF = if (tfs == null) 0.0f else tfs.toF
+      val tcF = ts.tc.toF
+      val twF = ts.tw.toF
+      val thF = ts.th.toF
+      var fontTail: String = null // Chars mode, formatted at the first glyph
+      var widths: Array[Float] = null
+      val m = new TextMatrix(content.tm)
+      var k = 0
+      while (k < ops.length) {
+        ops(k) match {
+          case TNum(tj0) =>
+            // kern adjustment — content.rs:916-928; no space inference (commented
+            // out in the reference). Negate in the operand's own domain (i32 wrap
+            // for NInt, matching unary_-), then f32 division and multiplies.
+            if (tfs == null) Err.fail("Font size should be set before painting a glyph")
+            val negF = tj0 match {
+              case NInt(v)  => (-v).toFloat
+              case NReal(v) => -v
+            }
+            m.shift(negF / 1000.0f * tfsF * thF)
+          case str =>
+            val b = str match {
+              case l: TLit => l.bytes
+              case h: THex => h.bytes
+              case x       => throw new IllegalArgumentException(s"not a TJ element: $x")
+            }
+            var i = 0
+            while (i < b.length) {
+              val c = b(i) & 0xff
+              val ch =
+                if (cm == null) c.toChar // raw path — content.rs:859-912
+                else { // CMap'd path — content.rs:789-856
+                  val charIdx =
+                    if (cm.isTwoBytes) {
+                      if (i + 1 >= b.length) Err.fail("two-byte cmap index missing second byte")
+                      i += 1
+                      c * 256 + (b(i) & 0xff)
+                    } else c
+                  val v = cm.lookup(charIdx)
+                  if (v < 0) Err.fail(s"CMap does not contain a char with idx $charIdx")
+                  v.toChar
+                }
+              if (displayChar) {
+                out.append(rustCharDebug(ch))
+                if (fontTail == null) fontTail = fontPart(font)
+                out.append(fontTail); out.append(m.mat.display); out.append('\n')
+              } else out.append(ch)
+              // glyph advance — content.rs:836-855 / 874-911, f32 in the
+              // reference's order; the width uses the FIRST byte
+              // (content.rs:818), 0 when the font has none
+              if (widths == null) widths = font.widthTableF
+              if (tfs == null) Err.fail("Font size should be set before painting a glyph")
+              var tx = widths(c) * tfsF
+              tx = tx + tcF
+              if (c == ' '.toInt) tx = tx + twF
+              tx = tx * thF
+              m.shift(tx)
+              i += 1
+            }
+        }
+        k += 1
+      }
+      content.tm = m.mat
+      if (!displayChar) addSpan("TJ", spanStart)
     }
 
     var instr = content.next()
     while (instr != null) {
       instr match {
-        case tj: ITjOp => showRaw(tj.bytes, "Tj")
-
-        case q: IQuoteOp     => showRaw(q.bytes, "'")
-        case dq: IDblQuoteOp => showRaw(dq.bytes, "\"")
-
-        case ITJOp(items) =>
-          val font = lookupFont()
-          if (content.tm.ty != tmPrev.ty) out.append('\n')
-          tmPrev = content.tm
-          val spanStart = out.length
-          items.foreach {
-            case at: AText =>
-              font.toUnicode match {
-                case Some(cm) =>
-                  // CMap'd path — content.rs:789-856
-                  var i = 0
-                  while (i < at.bytes.length) {
-                    val c = at.bytes(i) & 0xff
-                    val charIdx =
-                      if (cm.isTwoBytes) {
-                        if (i + 1 >= at.bytes.length) Err.fail("two-byte cmap index missing second byte")
-                        val second = at.bytes(i + 1) & 0xff
-                        i += 1
-                        c * 256 + second
-                      } else c
-                    val ch = cm.cmap.getOrElse(charIdx,
-                      Err.fail(s"CMap does not contain a char with idx $charIdx"))
-                    if (displayChar) out.append(charsFormat(ch, font))
-                    else out.append(ch)
-                    advance(font, c) // width lookup uses the FIRST byte — content.rs:818
-                    i += 1
-                  }
-                case None =>
-                  // raw path — content.rs:859-912
-                  var i = 0
-                  while (i < at.bytes.length) {
-                    val c = at.bytes(i) & 0xff
-                    if (displayChar) out.append(charsFormat(c.toChar, font))
-                    else out.append(c.toChar)
-                    advance(font, c)
-                    i += 1
-                  }
-              }
-            case APos(tj0) =>
-              // kern adjustment — content.rs:916-928; no space inference (commented
-              // out in the reference). f32-specialized with the identical op order
-              // as the Num path: negate in the operand's own domain (i32 wrap for
-              // NInt, matching unary_-), then Real division/multiplies.
-              val tfs = tfsOrFail()
-              val th = content.graphicState.textState.th
-              val negF = tj0 match {
-                case NInt(i)  => (-i).toFloat
-                case NReal(v) => -v
-              }
-              val tx = negF / 1000.0f * tfs.toF * th.toF
-              content.tm = Mat(1.0f, 0.0f, 0.0f, 1.0f, tx, 0.0f) * content.tm
-          }
-          if (!displayChar) spans += Span("TJ", spanStart, out.length)
-
-        case _ => () // every other instruction emits nothing — content.rs:947
+        case tj: ITjOp             => showRaw(tj.bytes, "Tj")
+        case q: IQuoteOp           => showRaw(q.bytes, "'")
+        case dq: IDblQuoteOp       => showRaw(dq.bytes, "\"")
+        case ITJOp(items: TJItems) => showArray(items.operands)
+        case _                     => () // every other instruction emits nothing — content.rs:947
       }
       instr = content.next()
     }
 
     // per-page leading '\n'/' ' trim — content.rs:950
-    val full = out.toString
     var k = 0
-    while (k < full.length && (full.charAt(k) == '\n' || full.charAt(k) == ' ')) k += 1
-    val text = full.substring(k)
-    val shifted = spans.result().flatMap { s =>
+    while (k < out.length && (out.charAt(k) == '\n' || out.charAt(k) == ' ')) k += 1
+    val text = out.substring(k)
+    val shifted = Vector.newBuilder[Span]
+    var i = 0
+    while (i < spanCount) {
+      val s = spans(i)
       val ns = math.max(0, s.start - k)
       val ne = s.end - k
-      if (ne > ns) Some(Span(s.op, ns, ne)) else None
+      if (ne > ns) shifted += (if (k == 0) s else Span(s.op, ns, ne))
+      i += 1
     }
-    ExtractResult(text, shifted)
+    ExtractResult(text, shifted.result())
   }
 
   /** Escape bitmap for Rust char `{:?}` over the full BMP, generated from the

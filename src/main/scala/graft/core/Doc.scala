@@ -38,7 +38,7 @@ object StreamDict {
     length = dict.get("Length") match {
       case Some(PNum(n)) => n
       case Some(PRef(obj, gen, ctx)) =>
-        ctx.xref.getAndFix((obj, gen), ctx.bytes) match {
+        ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
           case Some(address) =>
             ObjParser.parseAt(ctx, address) match {
               case PNum(n) => n
@@ -62,7 +62,7 @@ object StreamDict {
         parms.flatMap(directEarlyChange).getOrElse(parms match {
           // indirect DecodeParms: resolve through the ref's own context
           case Some(PRef(obj, gen, rctx)) =>
-            rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
+            rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
               case Some(at) => ObjParser.parseAt(rctx, at) match {
                 case PDict(p) => earlyChangeIn(p)
                 case o if isLzw =>
@@ -210,9 +210,10 @@ final case class PdfFont(
     * `getWidth(c).map(_.toF)` with Left -> 0.0f (the advance fallback,
     * content.rs:818-821), computed once per font instead of one Either +
     * NReal division allocation per shown glyph. Two-byte CMap mode looks up
-    * the FIRST byte (reference quirk), so 256 entries always suffice.
+    * the FIRST byte (reference quirk), so 256 entries always suffice. A font
+    * without /Widths has every width Left, so it shares one zero table.
     */
-  lazy val widthTableF: Array[Float] = {
+  lazy val widthTableF: Array[Float] = if (widths.isEmpty) PdfFont.NoWidths else {
     val t = new Array[Float](256)
     var c = 0
     while (c < 256) {
@@ -249,7 +250,7 @@ final case class PdfFont(
     val tu = toUnicode.map { cm =>
       val br = cm.beginCodeSpaceRange.map(b => (b & 0xff).toString).mkString(", ")
       val er = cm.endCodeSpaceRange.map(b => (b & 0xff).toString).mkString(", ")
-      val entries = cm.cmap.toSeq.sortBy(_._1)
+      val entries = cm.entries
         .map { case (k, v) => s"$k: ${TextAssembly.rustCharDebug(v)}" }.mkString(", ")
       s"Some(ToUnicodeCMap { begin_code_space_range: [$br], end_code_space_range: [$er], " +
         s"is_two_bytes: ${cm.isTwoBytes}, cmap: {$entries} })"
@@ -261,6 +262,9 @@ final case class PdfFont(
 }
 
 object PdfFont {
+  /** The width table of a font without /Widths: every getWidth is a Left. */
+  private val NoWidths = new Array[Float](256)
+
   /** `Font::from(Dictionary)` — body.rs:215-299. */
   def from(dict: Map[String, PdfObj]): PdfFont = {
     dict.get("Type") match {
@@ -299,7 +303,7 @@ object PdfFont {
       },
       widths = dict.get("Widths") match {
         case Some(PRef(obj, gen, ctx)) =>
-          ctx.xref.getAndFix((obj, gen), ctx.bytes) match {
+          ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
             case Some(address) =>
               ObjParser.parseAt(ctx, address) match {
                 case PArr(a) => Some(numsOf(a))
@@ -313,11 +317,11 @@ object PdfFont {
       },
       toUnicode = dict.get("ToUnicode") match {
         case Some(PRef(obj, gen, ctx)) =>
-          ctx.xref.getAndFix((obj, gen), ctx.bytes) match {
+          ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
             case Some(address) =>
               ObjParser.parseAt(ctx, address) match {
                 case s: PStream =>
-                  Some(ToUnicodeCMap.parse(Utf8.lossy(BodyStream.of(s, ctx, obj, gen).getDataForLexing)))
+                  Some(ToUnicodeCMap.parse(Utf8.lossyBytes(BodyStream.of(s, ctx, obj, gen).getDataForLexing)))
                 case o => Err.fail(s"ToUnicode should be a stream object, found $o")
               }
             case None => Err.fail("ToUnicode stream object not found in xref table")
@@ -348,7 +352,7 @@ object FontMap {
   def from(dict: Map[String, PdfObj]): FontMap = FontMap(
     dict.map {
       case (key, PRef(obj, gen, ctx)) =>
-        ctx.xref.getAndFix((obj, gen), ctx.bytes) match {
+        ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
           case Some(address) =>
             ObjParser.parseAt(ctx, address) match {
               case PDict(d) => key -> PdfFont.from(d)
@@ -374,7 +378,7 @@ object PdfResources {
   def from(dict: Map[String, PdfObj]): PdfResources = PdfResources(
     font = dict.get("Font") match {
       case Some(PRef(obj, gen, ctx)) =>
-        ctx.xref.getAndFix((obj, gen), ctx.bytes).map { address =>
+        ctx.xref.getAndFix(obj, gen, ctx.bytes).map { address =>
           ObjParser.parseAt(ctx, address) match {
             case PDict(d) => FontMap.from(d)
             case _        => Err.fail("Font should be a dictionary")
@@ -444,14 +448,14 @@ final class PdfPage(
     * Uses the exact-size decode (the flate zero padding is whitespace to the
     * tokenizer: byte-identical Text output at ~1/3 the alloc) with an automatic
     * padded fallback when the decoded bytes end in a pad-sensitive lexer state —
-    * see BodyStream.getDataForLexing.
+    * see BodyStream.getDataForLexing. Pure-ASCII content skips the round trip,
+    * which leaves it unchanged.
     */
   private def extractText(displayChar: Boolean): ExtractResult = {
-    val contentString = contents match {
-      case Some(stream) => Utf8.lossy(stream.getDataForLexing)
+    val contentBytes = contents match {
+      case Some(stream) => Utf8.lossyBytes(stream.getDataForLexing)
       case None         => Err.fail("Contents should not be empty")
     }
-    val contentBytes = contentString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     TextAssembly.getText(contentBytes, getResources, displayChar, lenientText)
   }
 
@@ -492,7 +496,7 @@ object PageTree {
         case Some(PArr(arr)) =>
           arr.map {
             case PRef(obj, gen, rctx) =>
-              rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
+              rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
                 case Some(address) => kid(rctx, address, depth + 1)
                 case None          => Err.fail("Kid not found in xref table")
               }
@@ -503,7 +507,7 @@ object PageTree {
       }
       val resources = dict.get("Resources") match {
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
+          rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
             case Some(address) => Some(PdfResources.parseAt(rctx, address))
             case None          => Err.fail("Kid not found in xref table")
           }
@@ -527,7 +531,7 @@ object PageTree {
       val resources = dict.get("Resources") match {
         case Some(PDict(d)) => Some(PdfResources.from(d))
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
+          rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
             case Some(address) => Some(PdfResources.parseAt(rctx, address))
             case None          => Err.fail("Resource dictionnary address not found in xref keys")
           }
@@ -536,7 +540,7 @@ object PageTree {
       }
       val contents = dict.get("Contents") match {
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
+          rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
             case Some(address) => Some(BodyStream.parseAt(rctx, address, obj, gen))
             case None          => Err.fail("Resource dictionnary address not found in xref keys")
           }
@@ -561,7 +565,7 @@ object PdfCatalog {
     case PDict(dict) =>
       PdfCatalog(pages = dict.get("Pages") match {
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix((obj, gen), rctx.bytes).map(addr => PageTree.node(rctx, addr))
+          rctx.xref.getAndFix(obj, gen, rctx.bytes).map(addr => PageTree.node(rctx, addr))
         case None => Err.fail("catalog has no Pages key")
         case _    => Err.fail("Pages should be an indirect object")
       })

@@ -35,7 +35,7 @@ object PdfImages {
   def list(ctx: Ctx, catalogOffset: Int): Vector[ImageXObject] = {
     def resolve(o: PdfObj): PdfObj = o match {
       case PRef(obj, gen, rctx) =>
-        rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
+        rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
           case Some(at) => ObjParser.parseAt(rctx, at)
           case None     => Err.fail("image xobject ref not found in xref table")
         }
@@ -54,7 +54,7 @@ object PdfImages {
             case Some(xobjs) =>
               xobjs.toVector.sortBy(_._1).flatMap {
                 case (name, PRef(obj, gen, rctx)) =>
-                  val at = rctx.xref.getAndFix((obj, gen), rctx.bytes)
+                  val at = rctx.xref.getAndFix(obj, gen, rctx.bytes)
                     .getOrElse(Err.fail("image xobject ref not found in xref table"))
                   ObjParser.parseAt(rctx, at) match {
                     case ps: PStream => imageOf(name, ps, rctx, obj, gen)

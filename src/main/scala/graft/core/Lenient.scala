@@ -1,6 +1,5 @@
 package graft.core
 
-import scala.collection.immutable.HashMap
 import scala.collection.mutable
 
 /** LENIENT mode — an engine extension BEYOND the reference, flag-gated OFF by
@@ -83,8 +82,8 @@ object Lenient {
       depth += 1
     }
 
-    var table = HashMap.empty[(Int, Int), (Int, Boolean)]
-    typ1.foreach { case (key, off) => table = table.updated(key, (off, true)) }
+    val table = new XrefIndex
+    typ1.foreach { case ((num, gen), off) => table.put(num, gen, off, inUse = true) }
 
     // materialize object-stream members, grouped so each container is
     // decompressed and header-parsed exactly once
@@ -92,7 +91,7 @@ object Lenient {
       if (typ2.size > MaxMaterialized) Err.fail(s"more than $MaxMaterialized object-stream members")
       val out = new java.io.ByteArrayOutputStream(raw.length + 1024)
       out.write(raw, 0, raw.length)
-      val facade = XrefTable(NInt(size), None, root, None, info, table)
+      val facade = XrefTable(NInt(size), None, root, None, info, table.copy)
       val baseCtx = new Ctx(raw, facade, lenient = true)
       // encrypted documents: container bytes are ciphertext (encryption wraps
       // OUTSIDE the filters), and a modern encrypted PDF keeps its catalog
@@ -104,7 +103,7 @@ object Lenient {
       // inside an ObjStm — it is needed to decrypt them) and xref streams are
       // never encrypted, so it is readable at this point.
       val decryptor: Option[Crypt.Decryptor] = encrypt.map { encRef =>
-        val encOff = facade.getAndFix(encRef, raw)
+        val encOff = facade.getAndFix(encRef._1, encRef._2, raw)
           .getOrElse(Err.fail("Encrypt object not found in xref"))
         val encDict = ObjParser.parseAt(baseCtx, encOff) match {
           case PDict(m) => m
@@ -114,10 +113,9 @@ object Lenient {
         Crypt.standardDecryptor(encDict, docId, password)
       }
       typ2.groupBy(_._2._1).foreach { case (container, members) =>
-        val containerOff = table.get((container, 0)) match {
-          case Some((off, true)) => off
-          case _ => Err.fail(s"object stream $container not found in xref")
-        }
+        val slot = table.find(container, 0)
+        if (slot < 0 || !table.inUse(slot)) Err.fail(s"object stream $container not found in xref")
+        val containerOff = table.offset(slot)
         val slices = objStmSlices(baseCtx, containerOff, container, decryptor)
         members.foreach { case (obj, (_, idx)) =>
           if (idx < 0 || idx >= slices.length)
@@ -130,7 +128,7 @@ object Lenient {
           out.write(s"$obj 0 obj\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
           out.write(body, 0, body.length)
           out.write("\nendobj\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-          table = table.updated((obj, 0), (at, true))
+          table.put(obj, 0, at, inUse = true)
         }
       }
       (out.toByteArray,

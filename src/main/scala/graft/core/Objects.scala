@@ -61,6 +61,25 @@ object Utf8 {
       .onUnmappableCharacter(CodingErrorAction.REPLACE)
     dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString
   }
+
+  /** The UTF-8 bytes of `lossy(bytes)`: `bytes` itself when it is pure
+    * ASCII, which the lossy decode leaves unchanged.
+    */
+  def lossyBytes(bytes: Array[Byte]): Array[Byte] =
+    if (isAscii(bytes)) bytes else lossy(bytes).getBytes(UTF_8)
+
+  /** No byte has its high bit set; eight bytes per step. */
+  def isAscii(bytes: Array[Byte]): Boolean = {
+    val n = bytes.length
+    val longs = java.nio.ByteBuffer.wrap(bytes)
+    var i = 0
+    while (i + 8 <= n) {
+      if ((longs.getLong(i) & 0x8080808080808080L) != 0) return false
+      i += 8
+    }
+    while (i < n) { if (bytes(i) < 0) return false; i += 1 }
+    true
+  }
 }
 
 /** Recursive-descent object parser mirroring object.rs. */
@@ -73,8 +92,18 @@ object ObjParser {
     */
   val MaxNesting = 128
 
-  /** `Object::new(bytes, idx, xref)` — object.rs:158-162. */
-  def parseAt(ctx: Ctx, at: Int): PdfObj = parse(Lemmatizer(ctx.bytes, at, ctx))
+  /** `Object::new(bytes, idx, xref)` — object.rs:158-162, memoised per
+    * context (see `Ctx.parsed`).
+    */
+  def parseAt(ctx: Ctx, at: Int): PdfObj = {
+    val seen = ctx.parsedAt(at)
+    if (seen != null) seen
+    else {
+      val obj = parse(Lemmatizer(ctx.bytes, at, ctx))
+      ctx.remember(at, obj)
+      obj
+    }
+  }
 
   /** `Object::try_from(&mut Lemmatizer)` — object.rs:96-156. */
   def parse(lex: Lemmatizer): PdfObj = {
@@ -90,7 +119,7 @@ object ObjParser {
                 case Some(PNum(NInt(n)))  => n
                 case Some(PNum(NReal(_))) => Err.fail("Real number found in stream length")
                 case Some(PRef(obj, gen, rctx)) =>
-                  rctx.xref.getAndFix((obj, gen), rctx.bytes) match {
+                  rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
                     case Some(address) =>
                       val t = Lemmatizer(rctx.bytes, address, rctx)
                       t.next() // discard (typically the fused ObjBegin)

@@ -46,7 +46,7 @@ final class Pdf(val raw: Array[Byte], lenient: Boolean, lenientText: Boolean,
     if (!lenient) None
     else xref match {
       case t: XrefTable => t.encrypt.map { key =>
-        val off = xref.getAndFix(key, body)
+        val off = xref.getAndFix(key._1, key._2, body)
           .getOrElse(Err.fail("Encrypt object not found in xref"))
         val enc = ObjParser.parseAt(new Ctx(body, xref, lenient), off) match {
           case PDict(m) => m
@@ -82,7 +82,7 @@ final class Pdf(val raw: Array[Byte], lenient: Boolean, lenientText: Boolean,
     }
     val ctx = new Ctx(body, xref, lenient, lenientText,
       if (inObjStm) None else decryptor)
-    xref.getAndFix(key, body).map(off => PdfInfo.parseAt(ctx, off, key._1, key._2))
+    xref.getAndFix(key._1, key._2, body).map(off => PdfInfo.parseAt(ctx, off, key._1, key._2))
   }
 
   /** LENIENT-only: enumerate image XObjects with DCT pixel decode

@@ -1,18 +1,18 @@
 package graft.core
 
-import scala.collection.immutable.HashMap
-
-/** Cross-reference index — xref.rs. */
+/** Cross-reference index — xref.rs. Lookups take the object number and
+  * generation as two Ints.
+  */
 sealed trait XRef {
-  def get(key: (Int, Int)): Option[Int]
-  def getAndFix(key: (Int, Int), bytes: Array[Byte]): Option[Int]
+  def get(num: Int, gen: Int): Option[Int]
+  def getAndFix(num: Int, gen: Int, bytes: Array[Byte]): Option[Int]
   def getCatalogOffset: Option[Int]
   def infoKey: Option[(Int, Int)]
 }
 
 object XRef {
   /** Empty default used where the reference builds `XRefTable::default()`. */
-  val default: XRef = XrefTable(NInt(0), None, None, None, None, HashMap.empty)
+  val default: XRef = XrefTable(NInt(0), None, None, None, None, new XrefIndex)
 
   /** `XRef::new(bytes, offset)` — xref.rs:39-58: peek dispatch between the classic
     * table (leading `xref` bareword) and an xref stream object (leading numeric).
@@ -76,7 +76,7 @@ final case class XrefTable(
     root: Option[(Int, Int)],
     encrypt: Option[(Int, Int)],
     info: Option[(Int, Int)],
-    table: HashMap[(Int, Int), (Int, Boolean)],
+    table: XrefIndex,
     // first trailer /ID element, captured by the LENIENT resolver only (the
     // reference ignores /ID, so the strict parser leaves None — it is needed
     // solely for the lenient decryption key derivation)
@@ -91,11 +91,12 @@ final case class XrefTable(
   def len: Int = table.size
 
   /** xref.rs:228-243 — panic if the entry was freed; fall through the Prev chain. */
-  def get(key: (Int, Int)): Option[Int] = table.get(key) match {
-    case Some((off, inUse)) =>
-      if (inUse) Some(off) else Err.fail("XReftable object was freed")
-    case None => prev match {
-      case Some(p) => p.get(key)
+  def get(num: Int, gen: Int): Option[Int] = {
+    val slot = table.find(num, gen)
+    if (slot >= 0) {
+      if (table.inUse(slot)) Some(table.offset(slot)) else Err.fail("XReftable object was freed")
+    } else prev match {
+      case Some(p) => p.get(num, gen)
       case None    => None
     }
   }
@@ -103,38 +104,28 @@ final case class XrefTable(
   /** Self-healing lookup — xref.rs:245-268: if the bytes at the offset don't start
     * with "N G obj", linear-scan for "\nN G obj" and return match+1.
     */
-  def getAndFix(key: (Int, Int), bytes: Array[Byte]): Option[Int] = get(key).map { offset =>
+  def getAndFix(num: Int, gen: Int, bytes: Array[Byte]): Option[Int] = get(num, gen).map { offset =>
     // the reference slices bytes[offset..] BEFORE probing, so an offset past
     // EOF panics instead of self-healing (Rust slice range panic) — replicate
     // (round-6 stale-xref differential caught the divergence: we healed a
     // delta=+1000000 entry the reference refuses)
     if (offset > bytes.length || offset < 0)
-      Err.fail(s"xref offset $offset out of range for object ${key._1} ${key._2}")
-    val pattern = s"${key._1} ${key._2} obj".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    if (startsWithAt(bytes, offset, pattern)) offset
+      Err.fail(s"xref offset $offset out of range for object $num $gen")
+    if (XrefTable.headerAt(bytes, offset, num, gen)) offset
     else {
-      val nl = new Array[Byte](pattern.length + 1)
-      nl(0) = '\n'
-      System.arraycopy(pattern, 0, nl, 1, pattern.length)
+      val nl = s"\n$num $gen obj".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
       val idx = indexOfSlice(bytes, nl)
-      if (idx < 0) Err.fail(s"object header ${key._1} ${key._2} obj not found in byte stream")
+      if (idx < 0) Err.fail(s"object header $num $gen obj not found in byte stream")
       idx + 1
     }
   }
 
   def getCatalogOffset: Option[Int] = root match {
-    case Some(r) => get(r)
-    case None    => Err.fail("xref table has no Root")
+    case Some((n, g)) => get(n, g)
+    case None         => Err.fail("xref table has no Root")
   }
 
   def infoKey: Option[(Int, Int)] = info
-
-  private def startsWithAt(bytes: Array[Byte], off: Int, pat: Array[Byte]): Boolean = {
-    if (off < 0 || off + pat.length > bytes.length) return false
-    var i = 0
-    while (i < pat.length) { if (bytes(off + i) != pat(i)) return false; i += 1 }
-    true
-  }
 
   private def indexOfSlice(hay: Array[Byte], pat: Array[Byte]): Int = {
     var i = 0
@@ -151,6 +142,34 @@ final case class XrefTable(
 }
 
 object XrefTable {
+  /** True when `bytes` holds "`num` `gen` obj" at `off`, compared in place. */
+  private[core] def headerAt(bytes: Array[Byte], off: Int, num: Int, gen: Int): Boolean = {
+    val afterNum = decimalAt(bytes, off, num)
+    if (afterNum < 0 || afterNum >= bytes.length || bytes(afterNum) != ' ') return false
+    val afterGen = decimalAt(bytes, afterNum + 1, gen)
+    afterGen >= 0 && afterGen + 4 <= bytes.length && bytes(afterGen) == ' ' &&
+      bytes(afterGen + 1) == 'o' && bytes(afterGen + 2) == 'b' && bytes(afterGen + 3) == 'j'
+  }
+
+  /** The index just past `v`'s decimal form when `bytes` holds it at `at`, else -1. */
+  private def decimalAt(bytes: Array[Byte], at: Int, v: Int): Int = {
+    var i = at
+    var mag = v.toLong
+    if (mag < 0) {
+      if (i >= bytes.length || bytes(i) != '-') return -1
+      i += 1
+      mag = -mag
+    }
+    var unit = 1L
+    while (unit * 10 <= mag) unit *= 10
+    while (unit > 0) {
+      if (i >= bytes.length || bytes(i) != '0' + (mag / unit % 10)) return -1
+      i += 1
+      unit /= 10
+    }
+    i
+  }
+
   /** `XRefTable::from(Tokenizer)` — xref.rs:78-152. */
   def parse(bytes: Array[Byte], offset: Int, depth: Int = 0): XrefTable = {
     val tok = new PdfTokenizer(bytes, offset)
@@ -203,8 +222,7 @@ object XrefTable {
   }
 
   /** Single subsection: `start size` then `size` entries — xref.rs:169-222. */
-  private[core] def readTableSubsection(tok: PdfTokenizer): HashMap[(Int, Int), (Int, Boolean)] = {
-    var table = HashMap.empty[(Int, Int), (Int, Boolean)]
+  private[core] def readTableSubsection(tok: PdfTokenizer): XrefIndex = {
     val start = tok.next() match {
       case TNum(NInt(n)) => n
       case t             => Err.fail(s"Table subsection header start should be an integer, found $t")
@@ -213,10 +231,12 @@ object XrefTable {
       case TNum(NInt(n)) => n
       case t             => Err.fail(s"Table subsection header size should be an integer, found $t")
     }
+    val table = new XrefIndex(size)
     var idx = start
     while (idx < start + size) {
-      val (number, generation, inUse) = readSubsectionEntry(tok)
-      table = table.updated((idx, generation), (number, inUse))
+      val number = entryOffset(tok)
+      val generation = entryGen(tok)
+      table.put(idx, generation, number, entryInUse(tok))
       idx += 1
     }
     table
@@ -224,19 +244,24 @@ object XrefTable {
 
   /** One entry `offset gen n|f` — xref.rs:169-194. */
   private[core] def readSubsectionEntry(tok: PdfTokenizer): (Int, Int, Boolean) = {
-    val number = tok.next() match {
-      case TNum(NInt(n)) => n
-      case t             => Err.fail(s"Xref entry offset token should be an integer, found $t")
-    }
-    val generation = tok.next() match {
-      case TNum(NInt(n)) => n
-      case t             => Err.fail(s"Xref entry generation token should be an integer, found $t")
-    }
-    val inUse = tok.next() match {
-      case b: TBare => bstr(b.bytes) == "n"
-      case t        => Err.fail(s"Xref entry in_use token should be a regular string, found $t")
-    }
-    (number, generation, inUse)
+    val number = entryOffset(tok)
+    val generation = entryGen(tok)
+    (number, generation, entryInUse(tok))
+  }
+
+  private def entryOffset(tok: PdfTokenizer): Int = tok.next() match {
+    case TNum(NInt(n)) => n
+    case t             => Err.fail(s"Xref entry offset token should be an integer, found $t")
+  }
+
+  private def entryGen(tok: PdfTokenizer): Int = tok.next() match {
+    case TNum(NInt(n)) => n
+    case t             => Err.fail(s"Xref entry generation token should be an integer, found $t")
+  }
+
+  private def entryInUse(tok: PdfTokenizer): Boolean = tok.next() match {
+    case b: TBare => b.op == Op.n
+    case t        => Err.fail(s"Xref entry in_use token should be a regular string, found $t")
   }
 
   private def bstr(b: Array[Byte]): String =
@@ -257,15 +282,14 @@ final case class XrefStream(
     stream: Array[Byte]
 ) extends XRef {
 
-  def get(key: (Int, Int)): Option[Int] = get(key, 0)
+  def get(num: Int, gen: Int): Option[Int] = entry(num, 0)
 
   /** Depth-guarded: a crafted type-2 entry chain can self-reference — unbounded
     * it is an infinite loop/StackOverflowError (poison-payload hardening).
     */
-  private def get(key: (Int, Int), depth: Int): Option[Int] = {
+  private def entry(objectIdx: Int, depth: Int): Option[Int] = {
     if (depth > 32) Err.fail("xref stream type-2 indirection deeper than 32")
-    val objectIdx = key._1
-    if (objectIdx > index._2) Err.fail(s"Object number ${key._1} is out of index")
+    if (objectIdx > index._2) Err.fail(s"Object number $objectIdx is out of index")
     val entrySize = w._1 + w._2 + w._3
     val base = objectIdx * entrySize
     if (base + entrySize > stream.length) Err.fail("xref stream entry out of bounds")
@@ -274,12 +298,12 @@ final case class XrefStream(
     entryType match {
       case 1 => Some(entryMid)
       case 0 => None
-      case 2 => get((entryMid, 0), depth + 1)
+      case 2 => entry(entryMid, depth + 1)
       case _ => Err.fail("Cross reference stream data type can only be 0, 1 or 2")
     }
   }
 
-  def getAndFix(key: (Int, Int), bytes: Array[Byte]): Option[Int] = get(key)
+  def getAndFix(num: Int, gen: Int, bytes: Array[Byte]): Option[Int] = get(num, gen)
 
   def getCatalogOffset: Option[Int] = Some(0) // stub — xref.rs:331-333
 
@@ -330,5 +354,74 @@ object XrefStream {
   private def asInt(o: PdfObj): Int = o match {
     case PNum(NInt(n)) => n
     case other         => Err.fail(s"expected integer, found $other")
+  }
+}
+
+/** The entries of one xref table keyed by (object, generation) without
+  * boxing: open addressing over the pair packed into a Long. A later `put`
+  * of a key replaces its entry, as `HashMap.updated` did. Filled while the
+  * table is read; only read after that.
+  */
+final class XrefIndex(expected: Int = 8) {
+  // the least power of two that holds the expected entries at half load
+  // (at least 8 and at most 2^15 expected up front)
+  private val initial = {
+    val e = math.max(8, math.min(expected, 1 << 15))
+    Integer.highestOneBit(2 * (e + 1) - 1) * 2
+  }
+  private var keys = new Array[Long](initial)
+  private var offsets = new Array[Int](initial)
+  private var state = new Array[Byte](initial) // 0 empty, 1 free entry, 2 in use
+  private var count = 0
+
+  def size: Int = count
+
+  private def key(num: Int, gen: Int): Long = num.toLong << 32 | (gen & 0xffffffffL)
+
+  private def slotOf(k: Long, ks: Array[Long], st: Array[Byte]): Int = {
+    val mask = ks.length - 1
+    var s = (java.lang.Long.hashCode(k * 0x9e3779b97f4a7c15L) & mask)
+    while (st(s) != 0 && ks(s) != k) s = (s + 1) & mask
+    s
+  }
+
+  def put(num: Int, gen: Int, offset: Int, inUse: Boolean): Unit = {
+    if (2 * (count + 1) > keys.length) grow()
+    val k = key(num, gen)
+    val s = slotOf(k, keys, state)
+    if (state(s) == 0) count += 1
+    keys(s) = k
+    offsets(s) = offset
+    state(s) = if (inUse) 2 else 1
+  }
+
+  /** The slot of (num, gen), or -1 when the table has no such entry. */
+  def find(num: Int, gen: Int): Int = {
+    val s = slotOf(key(num, gen), keys, state)
+    if (state(s) == 0) -1 else s
+  }
+
+  def offset(slot: Int): Int = offsets(slot)
+  def inUse(slot: Int): Boolean = state(slot) == 2
+
+  def copy: XrefIndex = {
+    val c = new XrefIndex
+    c.keys = keys.clone(); c.offsets = offsets.clone(); c.state = state.clone(); c.count = count
+    c
+  }
+
+  private def grow(): Unit = {
+    val (ks, os, st) = (keys, offsets, state)
+    keys = new Array[Long](ks.length * 2)
+    offsets = new Array[Int](ks.length * 2)
+    state = new Array[Byte](ks.length * 2)
+    var i = 0
+    while (i < ks.length) {
+      if (st(i) != 0) {
+        val s = slotOf(ks(i), keys, state)
+        keys(s) = ks(i); offsets(s) = os(i); state(s) = st(i)
+      }
+      i += 1
+    }
   }
 }

@@ -133,6 +133,7 @@ object Compaction {
       .drop("__b")
       .write.mode("overwrite")
       .option("maxRecordsPerFile", rowsPerFile)
+      .option(ParquetTableIO.NoTextDictionary._1, ParquetTableIO.NoTextDictionary._2)
       .partitionBy("shard").parquet(tmpPath.toString)
     // row-parity check from the footers alone: a count reads no column
     val nRows = spark.read.parquet(tmpPath.toString).count()

@@ -20,15 +20,26 @@ object ParquetTableIO {
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
   }
 
+  /** Parquet writer option that turns the dictionary encoding off for the
+    * `extracted_text` column alone. Extracted texts are almost all distinct
+    * (every row of both benchmark corpora is), so parquet-mr falls back to
+    * PLAIN after hashing every value into a dictionary it then drops; the
+    * other columns keep their dictionaries.
+    */
+  val NoTextDictionary: (String, String) = "parquet.enable.dictionary#extracted_text" -> "false"
+
   /** Write extracted rows carrying a `shard` column in ONE pass: hive-style
     * `data/shard=k/` layout via partitionBy + DYNAMIC partition overwrite, so
     * only the shards present in `out` are replaced (a half-written shard from a
     * crashed run is cleanly overwritten on resume; committed shards are never
     * touched). Iceberg backend: `overwritePartitions()` — same contract.
+    * `extracted_text` is written without a dictionary ([[NoTextDictionary]]),
+    * so a corpus of repeated texts gives up dictionary compression of it.
     */
   def writeShards(out: DataFrame, outDir: String): Unit =
     out.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
+      .option(NoTextDictionary._1, NoTextDictionary._2)
       .partitionBy("shard")
       .parquet(s"$outDir/data")
 

@@ -119,9 +119,9 @@ class XrefSpec extends AnyFunSuite {
     XRef.parse(sample, 0) match {
       case t: XrefTable =>
         assert(t.len == 6)
-        assert(t.get((1, 0)) == Some(10))
-        assert(t.get((2, 0)) == Some(79))
-        assert(t.get((5, 0)) == Some(380))
+        assert(t.get(1, 0) == Some(10))
+        assert(t.get(2, 0) == Some(79))
+        assert(t.get(5, 0) == Some(380))
       case _ => fail("expected classic table")
     }
   }

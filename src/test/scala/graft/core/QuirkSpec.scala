@@ -43,13 +43,13 @@ class QuirkSpec extends AnyFunSuite {
     val bytes = (doc + "xref\n0 2\n0000000000 65535 f \n0000000000 00000 n \ntrailer\n<< /Size 2 /Root 1 0 R >>").getBytes
     val table = XRef.parse(bytes, doc.length)
     // offset 0 points at "junk", not "1 0 obj" -> healed to the \n-scan match + 1
-    assert(table.getAndFix((1, 0), bytes) == Some(doc.indexOf("1 0 obj")))
+    assert(table.getAndFix(1, 0, bytes) == Some(doc.indexOf("1 0 obj")))
   }
 
   test("freed xref entry lookup panics (xref.rs:234)") {
     val bytes = "xref\n0 2\n0000000000 65535 f \n0000000099 00000 f \ntrailer\n<< /Size 2 /Root 1 0 R >>".getBytes
     val table = XRef.parse(bytes, 0)
-    intercept[PdfParseException](table.get((1, 0)))
+    intercept[PdfParseException](table.get(1, 0))
   }
 
   test("Prev chain falls through to the previous xref section (xref.rs:123-129, 237-242)") {
@@ -57,9 +57,9 @@ class QuirkSpec extends AnyFunSuite {
     val sec2 = s"xref\n2 1\n0000000020 00000 n \ntrailer\n<< /Size 3 /Root 1 0 R /Prev 0 >>"
     val bytes = (sec1 + sec2).getBytes
     val table = XRef.parse(bytes, sec1.length)
-    assert(table.get((2, 0)) == Some(20)) // own section
-    assert(table.get((1, 0)) == Some(10)) // via Prev chain
-    assert(table.get((9, 0)) == None)
+    assert(table.get(2, 0) == Some(20)) // own section
+    assert(table.get(1, 0) == Some(10)) // via Prev chain
+    assert(table.get(9, 0) == None)
   }
 
   test("FlateDecode output is zero-padded to 10x compressed size, visible in RawContent (filters.rs:4-14)") {

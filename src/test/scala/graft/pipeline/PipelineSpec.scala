@@ -506,6 +506,49 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     gen.unpersist(); turns.unpersist()
   }
 
+  /** (column path, has a dictionary page) of every column chunk the data
+    * files under `dir/data` hold, read from the parquet footers.
+    */
+  private def dictionaryPages(dir: String): Seq[(String, Boolean)] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val data = new org.apache.hadoop.fs.Path(s"$dir/data")
+    val files = data.getFileSystem(conf).listFiles(data, true)
+    val out = Seq.newBuilder[(String, Boolean)]
+    while (files.hasNext) {
+      val f = files.next().getPath
+      if (f.getName.endsWith(".parquet")) {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try reader.getFooter.getBlocks.asScala.foreach(_.getColumns.asScala.foreach { c =>
+          out += c.getPath.toDotString -> c.hasDictionaryPage
+        })
+        finally reader.close()
+      }
+    }
+    out.result()
+  }
+
+  test("writer: extracted_text has no dictionary page, conv_id and spans.op keep theirs, also after compaction") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-dictionary").toString
+    // four texts repeated over 400 rows: parquet-mr would dictionary-encode them
+    val texts = Seq("the same text", "another repeated text", "a third one", "and a fourth")
+    val ts = new java.sql.Timestamp(0)
+    val turns = (0 until 400).map(i => Turn(f"c${i % 10}%02d", i / 10, "user", texts(i % 4), "plain", ts)).toDS()
+    ExtractJob.runWithManifests(spark, turns, dir, shards = 2, partitions = 2)
+    def check(when: String): Unit = {
+      val byColumn = dictionaryPages(dir).groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+      assert(byColumn.get("extracted_text").contains(Set(false)), s"$when: $byColumn")
+      assert(byColumn.get("conv_id").contains(Set(true)), s"$when: $byColumn")
+      val ops = byColumn.keySet.filter(k => k.startsWith("spans.") && k.endsWith(".op"))
+      assert(ops.nonEmpty && ops.forall(k => byColumn(k) == Set(true)), s"$when: $byColumn")
+    }
+    check("written")
+    Compaction.compactOutput(spark, dir, targetBytes = 1024L * 1024 * 1024)
+    check("compacted")
+  }
+
   test("compaction fails fast on non-shard-partitioned or empty data dirs (round 6)") {
     import spark.implicits._
     // a plain parquet dir without shard= partition dirs: refuse BEFORE any

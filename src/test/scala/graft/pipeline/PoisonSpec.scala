@@ -57,7 +57,7 @@ class PoisonSpec extends AnyFunSuite {
     // w=(1,1,0): each entry is [type, mid]; entry 0 is type 2 pointing at object 0
     val xs = XrefStream(size = 1, index = (0, 1), prev = None, w = (1, 1, 0),
       stream = Array[Byte](2, 0))
-    val e = intercept[PdfParseException] { xs.get((0, 0)) }
+    val e = intercept[PdfParseException] { xs.get(0, 0) }
     assert(e.getMessage.contains("type-2"))
   }
 
