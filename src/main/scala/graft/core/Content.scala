@@ -42,165 +42,58 @@ object ExtractResult {
   }
 }
 
-/** TJ array element — content.rs:23-27. */
-sealed trait ArrayVal
-final class AText(val bytes: Array[Byte]) extends ArrayVal {
-  override def equals(o: Any): Boolean = o match {
-    case t: AText => Arrays.equals(bytes, t.bytes)
-    case _        => false
-  }
-  override def hashCode: Int = Arrays.hashCode(bytes)
-  override def toString: String = s"AText(${bytes.mkString(",")})"
-}
-object AText { def apply(b: Array[Byte]) = new AText(b) }
-final case class APos(n: Num) extends ArrayVal
-
-/** The elements of a decoded TJ array held as its operand tokens (literal
-  * and hex strings, numbers) and read as ArrayVals: text assembly walks the
-  * tokens, so a shown array allocates no element.
-  */
-final class TJItems private[core] (private[core] val operands: Array[Tok])
-    extends scala.collection.immutable.AbstractSeq[ArrayVal] with IndexedSeq[ArrayVal] {
-  def length: Int = operands.length
-  def apply(i: Int): ArrayVal = TJItems.element(operands(i))
-}
-
-object TJItems {
-  private def element(t: Tok): ArrayVal = t match {
-    case l: TLit => AText(l.bytes)
-    case h: THex => AText(h.bytes)
-    case TNum(n) => APos(n)
-    case x       => throw new IllegalArgumentException(s"not a TJ element: $x")
-  }
-}
-
-/** Content-stream instructions — content.rs:46-98. */
-sealed trait GInstr
-case object ILowerQ extends GInstr
-case object IUpperQ extends GInstr
-case object IBDC extends GInstr
-case object IBMC extends GInstr
-case object IEMC extends GInstr
-final case class ICm(a: Num, b: Num, c: Num, d: Num, e: Num, f: Num) extends GInstr
-final case class ILowerW(w: Num) extends GInstr
-final case class IUpperJ(j: Num) extends GInstr
-final case class ILowerD(arr: Vector[Num], phase: Num) extends GInstr
-final case class ILowerI(i: Num) extends GInstr
-case object IGs extends GInstr
-final case class ILowerM(x: Num, y: Num) extends GInstr
-final case class ILowerL(x: Num, y: Num) extends GInstr
-final case class ILowerC(x1: Num, y1: Num, x2: Num, y2: Num, x3: Num, y3: Num) extends GInstr
-case object ILowerH extends GInstr
-final case class IRe(x: Num, y: Num, w: Num, h: Num) extends GInstr
-case object IW extends GInstr
-case object IWStar extends GInstr
-case object IS extends GInstr
-case object ILowerF extends GInstr
-case object ILowerFStar extends GInstr
-case object IN extends GInstr
-final case class ICs(name: String) extends GInstr
-final case class ISc(n: Num) extends GInstr
-final case class IUpperG(g: Num) extends GInstr
-final case class ILowerG(g: Num) extends GInstr
-final case class IRGOp(r: Num, g: Num, b: Num) extends GInstr
-final case class IRgOp(r: Num, g: Num, b: Num) extends GInstr
-final case class ITdOp(tx: Num, ty: Num) extends GInstr
-final case class ITDOp(tx: Num, ty: Num) extends GInstr
-final case class ITm(a: Num, b: Num, c: Num, d: Num, e: Num, f: Num) extends GInstr
-case object ITStar extends GInstr
-final case class ITc(n: Num) extends GInstr
-final case class ITf(font: String, size: Num) extends GInstr
-final case class ITr(n: Num) extends GInstr
-final class ITjOp(val bytes: Array[Byte]) extends GInstr {
-  override def equals(o: Any): Boolean = o match {
-    case t: ITjOp => Arrays.equals(bytes, t.bytes)
-    case _      => false
-  }
-  override def hashCode: Int = Arrays.hashCode(bytes)
-  override def toString: String = s"ITjOp(${bytes.mkString(",")})"
-}
-object ITjOp { def apply(b: Array[Byte]) = new ITjOp(b) }
-final case class ITJOp(items: IndexedSeq[ArrayVal]) extends GInstr
-case object IBeginText extends GInstr
-case object IEndText extends GInstr
-final case class IDo(name: String) extends GInstr
-
-// Lenient-TEXT extension instructions (reference unknown-op path,
-// content.rs:624-628; reachable only with the lenientText flag):
-final case class ITw(n: Num) extends GInstr
-final case class ITz(n: Num) extends GInstr
-final case class ITL(n: Num) extends GInstr
-final case class ITs(n: Num) extends GInstr
-/** `'` — move to next line (T* semantics) and show byte-as-char like Tj. */
-final class IQuoteOp(val bytes: Array[Byte]) extends GInstr {
-  override def toString: String = s"IQuoteOp(${bytes.mkString(",")})"
-}
-/** `"` — aw ac string: set word/char spacing, then behave like `'`. */
-final class IDblQuoteOp(val aw: Num, val ac: Num, val bytes: Array[Byte]) extends GInstr {
-  override def toString: String = s"IDblQuoteOp($aw,$ac,${bytes.mkString(",")})"
-}
-
-/** Text state — content.rs:638-665. Tw/Tz/TL/Ts are NOT implemented by the reference
-  * (they hit the unknown-operator path), so in strict mode tw stays 0 forever;
-  * the lenientText decoder extension writes them (trise is its Ts register —
-  * tracked state only, no output effect in text extraction).
+/** Text state — content.rs:638-665, the only graphics state text output
+  * reads, so `q`/`Q` save and restore just this. Tw/Tz/TL/Ts are NOT
+  * implemented by the reference (they hit the unknown-operator path), so in
+  * strict mode tw stays 0 forever; the lenientText decoder extension writes
+  * them.
   */
 final class TextState {
   var tc: Num = NInt(0)
   var tw: Num = NInt(0)
   var th: Num = NReal(1.0f)
   var tl: Num = NInt(0)
-  var trise: Num = NInt(0)
   var tf: Option[String] = None
   var tfs: Option[Num] = None
-  var tmode: Num = NInt(0)
   def copyOf: TextState = {
     val t = new TextState
-    t.tc = tc; t.tw = tw; t.th = th; t.tl = tl; t.trise = trise
-    t.tf = tf; t.tfs = tfs; t.tmode = tmode
+    t.tc = tc; t.tw = tw; t.th = th; t.tl = tl; t.tf = tf; t.tfs = tfs
     t
   }
 }
 
-/** Graphics state — content.rs:667-717. */
-final class GraphicsState {
-  var ctm: Mat = Mat.identity
-  var textState: TextState = new TextState
-  var lineWidth: Num = NReal(1.0f)
-  var lineCap: Num = NInt(0)
-  var flatness: Num = NReal(1.0f)
-  def copyOf: GraphicsState = {
-    val g = new GraphicsState
-    g.ctm = ctm; g.textState = textState.copyOf; g.lineWidth = lineWidth
-    g.lineCap = lineCap; g.flatness = flatness
-    g
-  }
-}
-
-/** Content-stream instruction decoder + state machine — content.rs:100-635.
+/** Content-stream decoder + state machine — content.rs:100-635. Each
+  * [[next]] reads operands up to the next operator the decoder knows, checks
+  * them as the reference's instruction constructor does (same order, same
+  * error text) and applies the operator's effect on the text state and text
+  * matrices, then returns the operator's shared [[TBare]] (null at the end).
+  * Its operands stay readable through [[operandCount]]/[[operand]] until the
+  * next call. Operators that only draw (paths, colours, `cm`, `w`, `d`, …)
+  * are checked and otherwise dropped: no output depends on them.
   *
   * Replicated quirks:
   *  - operand buffer is NOT cleared after an unknown operator (content.rs:624-628
-  *    falls through without returning, retaining `buf`);
-  *  - `Td` with operand count != 2 is skipped entirely (content.rs:507-509);
-  *  - `cm` REPLACES the CTM instead of premultiplying (content.rs:134-136);
+  *    falls through without returning, retaining `buf`), so a later operator
+  *    sees the retained operands first;
+  *  - `Td` with operand count != 2 is skipped entirely, its operands dropped
+  *    (content.rs:507-509);
   *  - inline dictionaries are skipped wholesale (content.rs:234-241);
   *  - comments inside content panic (content.rs:630) — the raw tokenizer (not the
   *    Lemmatizer) feeds this decoder, so Token::Comment reaches the catch-all.
-  *
-  * One operand buffer serves every call (each call starts it empty, as the
-  * reference's per-call `buf` does), and operators dispatch on the
-  * tokenizer's [[Op]] code.
   */
 final class ContentDecoder(bytes: Array[Byte], lenientText: Boolean = false) {
-  val tok = new PdfTokenizer(bytes, 0)
-  var graphicState: GraphicsState = new GraphicsState
-  val stack: ArrayBuffer[GraphicsState] = ArrayBuffer.empty
+  private val tok = new PdfTokenizer(bytes, 0)
+  var textState: TextState = new TextState
+  private val stack: ArrayBuffer[TextState] = ArrayBuffer.empty
   var tm: Mat = Mat.identity
-  var tlm: Mat = Mat.identity
+  private var tlm: Mat = Mat.identity
 
   private var buf = new Array[Tok](16)
   private var size = 0
+
+  /** The operands of the operator [[next]] last returned. */
+  def operandCount: Int = size
+  def operand(i: Int): Tok = buf(i)
 
   private def processTd(tx: Num, ty: Num): Unit = {
     tlm = Mat(1.0f, 0.0f, 0.0f, 1.0f, tx.toF, ty.toF) * tlm
@@ -221,17 +114,23 @@ final class ContentDecoder(bytes: Array[Byte], lenientText: Boolean = false) {
     case t       => Err.fail(s"Operand $t is not allowed with operator $op")
   }
 
+  /** Checks operands `from until to` are numbers, naming `op` in the error. */
+  private def nums(from: Int, to: Int, op: String): Unit = {
+    var i = from
+    while (i < to) { num(i, op); i += 1 }
+  }
+
   private def name(i: Int, op: String): String = tokAt(i, op) match {
     case TName(n) => n
     case t        => Err.fail(s"Operand $t is not allowed with operator $op")
   }
 
-  private def lit(i: Int, op: String): Array[Byte] = tokAt(i, op) match {
-    case l: TLit => l.bytes
+  private def lit(i: Int, op: String): Unit = tokAt(i, op) match {
+    case _: TLit => ()
     case x       => Err.fail(s"Operand $x is not allowed with operator $op")
   }
 
-  def next(): GInstr = {
+  def next(): TBare = {
     size = 0
     var t = tok.next()
     while (t != null) {
@@ -244,8 +143,7 @@ final class ContentDecoder(bytes: Array[Byte], lenientText: Boolean = false) {
           var d = tok.next()
           while (d != null && d != TDictEnd) d = tok.next()
         case bare: TBare =>
-          val instr = operator(bare.op)
-          if (instr != null) return instr
+          if (operator(bare.op)) return bare
         case other =>
           Err.fail(s"Pdf token $other has no mapping implemented to ContentStream")
       }
@@ -254,168 +152,111 @@ final class ContentDecoder(bytes: Array[Byte], lenientText: Boolean = false) {
     null
   }
 
-  /** The instruction of operator `op` over the buffered operands, or null
-    * for an operator the decoder does not know: a diagnostic only in the
-    * reference, which keeps the operands — content.rs:624-628.
+  /** Checks and applies operator `op` over the buffered operands. False for
+    * an operator the decoder does not know, a diagnostic only in the
+    * reference, which keeps the operands (content.rs:624-628), and for a
+    * skipped `Td`, which drops them.
     */
-  private def operator(op: Int): GInstr = (op: @switch) match {
-    case Op.q =>
-      stack += graphicState.copyOf
-      ILowerQ
-    case Op.Q =>
-      if (stack.isEmpty) Err.fail("Unable to restore graphic state from empty stack")
-      graphicState = stack.remove(stack.length - 1)
-      IUpperQ
-    case Op.cm =>
-      val a = num(0, "re"); val b = num(1, "re"); val c = num(2, "re")
-      val d = num(3, "re"); val e = num(4, "re"); val f = num(5, "re")
-      graphicState.ctm = Mat(a.toF, b.toF, c.toF, d.toF, e.toF, f.toF)
-      ICm(a, b, c, d, e, f)
-    case Op.w =>
-      val lw = num(0, "J"); graphicState.lineWidth = lw; ILowerW(lw)
-    case Op.J =>
-      val lc = num(0, "J"); graphicState.lineCap = lc; IUpperJ(lc)
-    case Op.d =>
-      if (size == 0) Err.fail("End of stream too early")
-      buf(0) match {
-        case TArrayBegin => ()
-        case x           => Err.fail(s"First operand $x is not allowed for operator d")
-      }
-      val arr = Vector.newBuilder[Num]
-      var i = 1
-      var inArr = true
-      while (inArr) {
-        if (i >= size) inArr = false
-        else {
-          buf(i) match {
-            case TNum(n)   => arr += n
-            case TArrayEnd => inArr = false
-            case x         => Err.fail(s"Unexpected token $x in dash array")
+  private def operator(op: Int): Boolean = {
+    (op: @switch) match {
+      case Op.q => stack += textState.copyOf
+      case Op.Q =>
+        if (stack.isEmpty) Err.fail("Unable to restore graphic state from empty stack")
+        textState = stack.remove(stack.length - 1)
+      case Op.cm => nums(0, 6, "re")
+      case Op.w | Op.J => num(0, "J")
+      case Op.d =>
+        if (size == 0) Err.fail("End of stream too early")
+        buf(0) match {
+          case TArrayBegin => ()
+          case x           => Err.fail(s"First operand $x is not allowed for operator d")
+        }
+        var i = 1
+        var inArr = true
+        while (inArr) {
+          if (i >= size) inArr = false
+          else {
+            buf(i) match {
+              case TNum(_)   => ()
+              case TArrayEnd => inArr = false
+              case x         => Err.fail(s"Unexpected token $x in dash array")
+            }
+            i += 1
           }
-          i += 1
         }
-      }
-      val phase = if (i < size) buf(i) match {
-        case TNum(n) => n
-        case x       => Err.fail(s"First operand $x is not allowed for operator d")
-      } else Err.fail("End of stream too early")
-      ILowerD(arr.result(), phase)
-    case Op.i =>
-      val fl = num(0, "re"); graphicState.flatness = fl; ILowerI(fl)
-    case Op.gs =>
-      name(0, "gs"); IGs
-    case Op.m => ILowerM(num(0, "re"), num(1, "re"))
-    case Op.l => ILowerL(num(0, "re"), num(1, "re"))
-    case Op.c =>
-      ILowerC(num(0, "Tm"), num(1, "Tm"), num(2, "Tm"), num(3, "Tm"), num(4, "Tm"), num(5, "Tm"))
-    case Op.h     => ILowerH
-    case Op.re    => IRe(num(0, "re"), num(1, "re"), num(2, "re"), num(3, "re"))
-    case Op.W     => IW
-    case Op.WStar => IWStar
-    case Op.S     => IS
-    case Op.f     => ILowerF
-    case Op.fStar => ILowerFStar
-    case Op.n     => IN
-    case Op.cs    => ICs(name(0, "cs"))
-    case Op.sc    => ISc(num(0, "cs"))
-    case Op.G     => IUpperG(num(0, "G"))
-    case Op.g     => ILowerG(num(0, "G"))
-    case Op.RG    => IRGOp(num(0, "rg"), num(1, "rg"), num(2, "rg"))
-    case Op.rg    => IRgOp(num(0, "rg"), num(1, "rg"), num(2, "rg"))
-    case Op.BT =>
-      tm = Mat.identity; tlm = Mat.identity
-      IBeginText
-    case Op.ET => IEndText
-    case Op.TD =>
-      val tx = num(0, "TD"); val ty = num(1, "TD")
-      graphicState.textState.tl = -ty
-      processTd(tx, ty)
-      ITDOp(tx, ty)
-    case Op.Td =>
-      if (size != 2) next() // arity guard — content.rs:507-509
-      else {
+        if (i < size) buf(i) match {
+          case TNum(_) => ()
+          case x       => Err.fail(s"First operand $x is not allowed for operator d")
+        } else Err.fail("End of stream too early")
+      case Op.i => num(0, "re")
+      case Op.gs => name(0, "gs")
+      case Op.m | Op.l => nums(0, 2, "re")
+      case Op.c => nums(0, 6, "Tm")
+      case Op.re => nums(0, 4, "re")
+      case Op.h | Op.W | Op.WStar | Op.S | Op.f | Op.fStar | Op.n | Op.ET | Op.BDC | Op.BMC | Op.EMC => ()
+      case Op.cs => name(0, "cs")
+      case Op.sc => num(0, "cs")
+      case Op.G | Op.g => num(0, "G")
+      case Op.RG | Op.rg => nums(0, 3, "rg")
+      case Op.BT => tm = Mat.identity; tlm = Mat.identity
+      case Op.TD =>
         val tx = num(0, "TD"); val ty = num(1, "TD")
+        textState.tl = -ty
         processTd(tx, ty)
-        ITdOp(tx, ty)
-      }
-    case Op.Tc =>
-      val cs = num(0, "TD"); graphicState.textState.tc = cs; ITc(cs)
-    case Op.Tf =>
-      val font = name(0, "TD")
-      val fontSize = num(1, "TD")
-      graphicState.textState.tf = Some(font)
-      graphicState.textState.tfs = Some(fontSize)
-      ITf(font, fontSize)
-    case Op.Tr =>
-      val r = num(0, "Tr"); graphicState.textState.tmode = r; ITr(r)
-    case Op.Tm =>
-      val a = num(0, "Tm"); val b = num(1, "Tm"); val c = num(2, "Tm")
-      val d = num(3, "Tm"); val e = num(4, "Tm"); val f = num(5, "Tm")
-      tm = Mat(a.toF, b.toF, c.toF, d.toF, e.toF, f.toF)
-      tlm = tm
-      ITm(a, b, c, d, e, f)
-    case Op.TStar =>
-      processTd(NInt(0), graphicState.textState.tl)
-      ITStar
-    case Op.Tj => ITjOp(lit(0, "Tj"))
-    case Op.TJ =>
-      val items = new Array[Tok](size)
-      var n = 0
-      var i = 0
-      while (i < size) {
-        buf(i) match {
-          case t @ (_: TLit | _: THex | _: TNum) => items(n) = t; n += 1
-          case _ => ()
-        }
-        i += 1
-      }
-      ITJOp(new TJItems(if (n == size) items else Arrays.copyOf(items, n)))
-    case Op.Do =>
-      tokAt(0, "Do") match {
-        case TName(n) => IDo(n)
-        case x        => Err.fail(s"Operand $x is not allowed with operator Do")
-      }
-    case Op.BDC => IBDC
-    case Op.BMC => IBMC
-    case Op.EMC => IEMC
-    // ---- lenient-TEXT extension (flag-gated; strict falls through to
-    // the reference's unknown-op path). `'`/`"` reuse the engine's existing
-    // T* convention (processTd(0, tl)) — the ty SIGN follows T*'s
-    // replicated quirk, which is output-identical because newline
-    // inference keys on ty inequality, not direction.
-    case Op.Tw | Op.Tz | Op.TL | Op.Ts | Op.Quote | Op.DblQuote if lenientText => lenientOperator(op)
-    case _ => null
+      case Op.Td =>
+        if (size != 2) { size = 0; return false } // arity guard — content.rs:507-509
+        processTd(num(0, "TD"), num(1, "TD"))
+      case Op.Tc => textState.tc = num(0, "TD")
+      case Op.Tf =>
+        val font = name(0, "TD")
+        val fontSize = num(1, "TD")
+        textState.tf = Some(font)
+        textState.tfs = Some(fontSize)
+      case Op.Tr => num(0, "Tr")
+      case Op.Tm =>
+        val a = num(0, "Tm"); val b = num(1, "Tm"); val c = num(2, "Tm")
+        val d = num(3, "Tm"); val e = num(4, "Tm"); val f = num(5, "Tm")
+        tm = Mat(a.toF, b.toF, c.toF, d.toF, e.toF, f.toF)
+        tlm = tm
+      case Op.TStar => processTd(NInt(0), textState.tl)
+      case Op.Tj => lit(0, "Tj")
+      case Op.TJ => ()
+      case Op.Do => name(0, "Do")
+      // ---- lenient-TEXT extension (flag-gated; strict falls through to
+      // the reference's unknown-op path). `'`/`"` reuse the engine's existing
+      // T* convention (processTd(0, tl)) — the ty SIGN follows T*'s
+      // replicated quirk, which is output-identical because newline
+      // inference keys on ty inequality, not direction.
+      case Op.Tw | Op.Tz | Op.TL | Op.Ts | Op.Quote | Op.DblQuote if lenientText => lenientOperator(op)
+      case _ => return false
+    }
+    true
   }
 
-  private def lenientOperator(op: Int): GInstr = (op: @switch) match {
-    case Op.Tw =>
-      val w = num(0, "Tw"); graphicState.textState.tw = w; ITw(w)
-    case Op.Tz =>
-      val z = num(0, "Tz")
-      graphicState.textState.th = NReal(z.toF / 100.0f)
-      ITz(z)
-    case Op.TL =>
-      val l = num(0, "TL"); graphicState.textState.tl = l; ITL(l)
-    case Op.Ts =>
-      val r = num(0, "Ts"); graphicState.textState.trise = r; ITs(r)
+  private def lenientOperator(op: Int): Unit = (op: @switch) match {
+    case Op.Tw => textState.tw = num(0, "Tw")
+    case Op.Tz => textState.th = NReal(num(0, "Tz").toF / 100.0f)
+    case Op.TL => textState.tl = num(0, "TL")
+    case Op.Ts => num(0, "Ts")
     case Op.Quote =>
-      val b = lit(0, "'")
-      processTd(NInt(0), graphicState.textState.tl)
-      new IQuoteOp(b)
+      lit(0, "'")
+      processTd(NInt(0), textState.tl)
     case Op.DblQuote =>
       val aw = num(0, "\""); val ac = num(1, "\"")
-      val b = lit(2, "\"")
-      graphicState.textState.tw = aw
-      graphicState.textState.tc = ac
-      processTd(NInt(0), graphicState.textState.tl)
-      new IDblQuoteOp(aw, ac, b)
+      lit(2, "\"")
+      textState.tw = aw
+      textState.tc = ac
+      processTd(NInt(0), textState.tl)
   }
 }
 
 /** Text assembly — `TextContent::get_text`, content.rs:719-951. The correctness
   * heart: only Tj/TJ emit output; a newline is inferred when the f32 ty of the text
   * matrix changed since the previous show; Tj ignores the CMap (bytes as chars) while
-  * TJ applies it; leading '\n'/' ' trimmed per page.
+  * TJ applies it; leading '\n'/' ' trimmed per page. It switches on each operator
+  * the [[ContentDecoder]] returns and reads its operands in place: Tj (and the
+  * lenient-text `'`/`"`) shows the literal the decoder just checked, TJ walks the
+  * operand buffer.
   */
 object TextAssembly {
 
@@ -469,6 +310,10 @@ object TextAssembly {
     def substring(from: Int): String = new String(chars, from, len - from)
   }
 
+  /** The bytes of the literal string the decoder checked at operand `i`. */
+  private def literal(content: ContentDecoder, i: Int): Array[Byte] =
+    content.operand(i).asInstanceOf[TLit].bytes
+
   def getText(contentBytes: Array[Byte], resources: PdfResources, displayChar: Boolean,
               lenientText: Boolean = false): ExtractResult = {
     val content = new ContentDecoder(contentBytes, lenientText)
@@ -483,7 +328,7 @@ object TextAssembly {
     }
     var tyPrev = content.tm.ty
 
-    def lookupFont(): PdfFont = content.graphicState.textState.tf match {
+    def lookupFont(): PdfFont = content.textState.tf match {
       case Some(s) => resources.font match {
         case Some(fm) => fm.fonts.getOrElse(s, Err.fail(s"Fontmap does not contain font $s"))
         case None     => Err.fail(s"Fontmap does not contains the font name $s")
@@ -519,15 +364,16 @@ object TextAssembly {
       }
     }
 
-    // TJ show — content.rs:767-930. The font, its CMap and the text state
-    // are fixed for the whole show; the width table and the font size are
-    // read at the first glyph advance, where the reference first needs them
-    // (and fails when they are missing).
-    def showArray(ops: Array[Tok]): Unit = {
+    // TJ show — content.rs:767-930, over the operands the decoder holds:
+    // strings and numbers in order, anything else skipped. The font, its
+    // CMap and the text state are fixed for the whole show; the width table
+    // and the font size are read at the first glyph advance, where the
+    // reference first needs them (and fails when they are missing).
+    def showArray(): Unit = {
       val font = lookupFont()
       val spanStart = startShow()
       val cm = font.toUnicode.orNull
-      val ts = content.graphicState.textState
+      val ts = content.textState
       val tfs = ts.tfs.orNull
       val tfsF = if (tfs == null) 0.0f else tfs.toF
       val tcF = ts.tc.toF
@@ -537,8 +383,10 @@ object TextAssembly {
       var widths: Array[Float] = null
       val m = new TextMatrix(content.tm)
       var k = 0
-      while (k < ops.length) {
-        ops(k) match {
+      while (k < content.operandCount) {
+        val b = content.operand(k) match {
+          case l: TLit => l.bytes
+          case h: THex => h.bytes
           case TNum(tj0) =>
             // kern adjustment — content.rs:916-928; no space inference (commented
             // out in the reference). Negate in the operand's own domain (i32 wrap
@@ -549,45 +397,43 @@ object TextAssembly {
               case NReal(v) => -v
             }
             m.shift(negF / 1000.0f * tfsF * thF)
-          case str =>
-            val b = str match {
-              case l: TLit => l.bytes
-              case h: THex => h.bytes
-              case x       => throw new IllegalArgumentException(s"not a TJ element: $x")
-            }
-            var i = 0
-            while (i < b.length) {
-              val c = b(i) & 0xff
-              val ch =
-                if (cm == null) c.toChar // raw path — content.rs:859-912
-                else { // CMap'd path — content.rs:789-856
-                  val charIdx =
-                    if (cm.isTwoBytes) {
-                      if (i + 1 >= b.length) Err.fail("two-byte cmap index missing second byte")
-                      i += 1
-                      c * 256 + (b(i) & 0xff)
-                    } else c
-                  val v = cm.lookup(charIdx)
-                  if (v < 0) Err.fail(s"CMap does not contain a char with idx $charIdx")
-                  v.toChar
-                }
-              if (displayChar) {
-                out.append(rustCharDebug(ch))
-                if (fontTail == null) fontTail = fontPart(font)
-                out.append(fontTail); out.append(m.mat.display); out.append('\n')
-              } else out.append(ch)
-              // glyph advance — content.rs:836-855 / 874-911, f32 in the
-              // reference's order; the width uses the FIRST byte
-              // (content.rs:818), 0 when the font has none
-              if (widths == null) widths = font.widthTableF
-              if (tfs == null) Err.fail("Font size should be set before painting a glyph")
-              var tx = widths(c) * tfsF
-              tx = tx + tcF
-              if (c == ' '.toInt) tx = tx + twF
-              tx = tx * thF
-              m.shift(tx)
-              i += 1
-            }
+            null
+          case _ => null // the array's brackets and any name: not TJ elements
+        }
+        if (b != null) {
+          var i = 0
+          while (i < b.length) {
+            val c = b(i) & 0xff
+            val ch =
+              if (cm == null) c.toChar // raw path — content.rs:859-912
+              else { // CMap'd path — content.rs:789-856
+                val charIdx =
+                  if (cm.isTwoBytes) {
+                    if (i + 1 >= b.length) Err.fail("two-byte cmap index missing second byte")
+                    i += 1
+                    c * 256 + (b(i) & 0xff)
+                  } else c
+                val v = cm.lookup(charIdx)
+                if (v < 0) Err.fail(s"CMap does not contain a char with idx $charIdx")
+                v.toChar
+              }
+            if (displayChar) {
+              out.append(rustCharDebug(ch))
+              if (fontTail == null) fontTail = fontPart(font)
+              out.append(fontTail); out.append(m.mat.display); out.append('\n')
+            } else out.append(ch)
+            // glyph advance — content.rs:836-855 / 874-911, f32 in the
+            // reference's order; the width uses the FIRST byte
+            // (content.rs:818), 0 when the font has none
+            if (widths == null) widths = font.widthTableF
+            if (tfs == null) Err.fail("Font size should be set before painting a glyph")
+            var tx = widths(c) * tfsF
+            tx = tx + tcF
+            if (c == ' '.toInt) tx = tx + twF
+            tx = tx * thF
+            m.shift(tx)
+            i += 1
+          }
         }
         k += 1
       }
@@ -595,16 +441,16 @@ object TextAssembly {
       if (!displayChar) addSpan("TJ", spanStart)
     }
 
-    var instr = content.next()
-    while (instr != null) {
-      instr match {
-        case tj: ITjOp             => showRaw(tj.bytes, "Tj")
-        case q: IQuoteOp           => showRaw(q.bytes, "'")
-        case dq: IDblQuoteOp       => showRaw(dq.bytes, "\"")
-        case ITJOp(items: TJItems) => showArray(items.operands)
-        case _                     => () // every other instruction emits nothing — content.rs:947
+    var op = content.next()
+    while (op != null) {
+      (op.op: @switch) match {
+        case Op.Tj       => showRaw(literal(content, 0), "Tj")
+        case Op.Quote    => showRaw(literal(content, 0), "'")
+        case Op.DblQuote => showRaw(literal(content, 2), "\"")
+        case Op.TJ       => showArray()
+        case _           => () // every other operator emits nothing — content.rs:947
       }
-      instr = content.next()
+      op = content.next()
     }
 
     // per-page leading '\n'/' ' trim — content.rs:950

@@ -9,13 +9,13 @@ package graft.core
   * derives the file key, VERIFIES the /U (or /O) entry against the supplied
   * password (anything else fails loudly — no silent garbage), and decrypts
   * STREAM bytes with per-object keys — content streams, ToUnicode streams,
-  * and object-stream CONTAINERS (Lenient.prepare builds its own decryptor
-  * before materializing ObjStm members, so the modern encrypted 1.5+ layout
-  * with the catalog inside an object stream opens too). STRING decryption
-  * (round 5) is wired where strings are output-visible — the Info metadata
-  * dictionary (`Decryptor.decryptString`, applied at PdfInfo's resolution
-  * point where object identity IS known); content-stream strings never reach
-  * extracted text undecoded, so no other site needs it.
+  * and object-stream CONTAINERS (Lenient.prepare builds the document's one
+  * decryptor before materializing ObjStm members, so the modern encrypted
+  * 1.5+ layout with the catalog inside an object stream opens too). STRING
+  * decryption (round 5) is wired where strings are output-visible — the Info
+  * metadata dictionary (`Decryptor.decryptString`, applied at PdfInfo's
+  * resolution point where object identity IS known); content-stream strings
+  * never reach extracted text undecoded, so no other site needs it.
   */
 object Crypt {
 

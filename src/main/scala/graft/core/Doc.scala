@@ -147,15 +147,10 @@ object BodyStream {
       case None                    => bytes
     }
 
-  def parseAt(ctx: Ctx, at: Int): BodyStream = ObjParser.parseAt(ctx, at) match {
-    case PStream(header, bytes) => BodyStream(StreamDict.from(header, ctx.lenient), bytes)
-    case _                      => Err.fail("Stream should be a dictionary")
-  }
-
-  /** Variant that knows the stream's OBJECT IDENTITY so lenient decryption can
-    * derive the per-object RC4 key (encryption wraps the stream OUTSIDE its
-    * filters: decrypt first, then inflate/decode). Strict contexts carry no
-    * decryptor, so this is `parseAt` exactly.
+  /** The stream object at `at`, which is object `obj gen`: its identity lets
+    * lenient decryption derive the per-object RC4 key (encryption wraps the
+    * stream OUTSIDE its filters: decrypt first, then inflate/decode). Strict
+    * contexts carry no decryptor.
     */
   def parseAt(ctx: Ctx, at: Int, obj: Int, gen: Int): BodyStream =
     ObjParser.parseAt(ctx, at) match {
@@ -165,10 +160,9 @@ object BodyStream {
       case _ => Err.fail("Stream should be a dictionary")
     }
 
-  def from(s: PStream, lenient: Boolean = false): BodyStream =
-    BodyStream(StreamDict.from(s.header, lenient), s.bytes)
-
-  /** `from` with object identity for lenient decryption (see parseAt above). */
+  /** A parsed stream object, with its identity for lenient decryption (see
+    * parseAt above).
+    */
   def of(s: PStream, ctx: Ctx, obj: Int, gen: Int): BodyStream = {
     val bytes = ctx.decrypt.map(_.decrypt(obj, gen, s.bytes)).getOrElse(s.bytes)
     BodyStream(StreamDict.from(s.header, ctx.lenient), bytes)

@@ -35,10 +35,11 @@ object Lenient {
   val MaxMaterialized = 65536
 
   /** Parse the full xref at `raw`'s startxref and materialize object-stream
-    * members. Returns (augmented bytes, xref facade).
+    * members. Returns (augmented bytes, xref facade, the standard-security
+    * decryptor when the trailer carries /Encrypt).
     */
-  def prepare(raw: Array[Byte],
-              password: Array[Byte] = Array.emptyByteArray): (Array[Byte], XRef) = {
+  def prepare(raw: Array[Byte], password: Array[Byte] = Array.emptyByteArray)
+      : (Array[Byte], XRef, Option[Crypt.Decryptor]) = {
     // entry collection across the Prev chain; NEWEST section wins per object
     val typ1 = mutable.HashMap[(Int, Int), Int]() // (obj, gen) -> file offset
     val typ2 = mutable.HashMap[Int, (Int, Int)]() // obj -> (container, idxInStm)
@@ -85,33 +86,34 @@ object Lenient {
     val table = new XrefIndex
     typ1.foreach { case ((num, gen), off) => table.put(num, gen, off, inUse = true) }
 
+    if (typ2.size > MaxMaterialized) Err.fail(s"more than $MaxMaterialized object-stream members")
+    // the direct objects alone: object-stream containers and /Encrypt
+    // resolve here, before any member is materialized
+    val facade = XrefTable(NInt(size), None, root, None, info, table.copy)
+    val baseCtx = new Ctx(raw, facade, lenient = true)
+    // the one decryptor of the document, built before materialization:
+    // container bytes are ciphertext (encryption wraps OUTSIDE the filters),
+    // and a modern encrypted PDF keeps its catalog and fonts exactly there.
+    // Resolved through getAndFix so a stale /Encrypt offset self-heals like
+    // every other lookup (xref.rs:245-268). The /Encrypt dictionary itself is
+    // always a direct object (never inside an ObjStm — it is needed to decrypt
+    // them) and xref streams are never encrypted, so it is readable here.
+    val decryptor: Option[Crypt.Decryptor] = encrypt.map { encRef =>
+      val encOff = facade.getAndFix(encRef._1, encRef._2, raw)
+        .getOrElse(Err.fail("Encrypt object not found in xref"))
+      val encDict = ObjParser.parseAt(baseCtx, encOff) match {
+        case PDict(m) => m
+        case o        => Err.fail(s"Encrypt should be a dictionary, found $o")
+      }
+      val docId = id0.getOrElse(Err.fail("encrypted document has no /ID in trailer"))
+      Crypt.standardDecryptor(encDict, docId, password)
+    }
+
     // materialize object-stream members, grouped so each container is
     // decompressed and header-parsed exactly once
     if (typ2.nonEmpty) {
-      if (typ2.size > MaxMaterialized) Err.fail(s"more than $MaxMaterialized object-stream members")
       val out = new java.io.ByteArrayOutputStream(raw.length + 1024)
       out.write(raw, 0, raw.length)
-      val facade = XrefTable(NInt(size), None, root, None, info, table.copy)
-      val baseCtx = new Ctx(raw, facade, lenient = true)
-      // encrypted documents: container bytes are ciphertext (encryption wraps
-      // OUTSIDE the filters), and a modern encrypted PDF keeps its catalog
-      // and fonts exactly here — so the decryptor must exist BEFORE
-      // materialization. Built only on this path (stream decryption elsewhere
-      // uses PdfExtract's decryptor), resolved through getAndFix so a stale
-      // /Encrypt offset self-heals like every other lookup (xref.rs:245-268).
-      // The /Encrypt dictionary itself is always a direct object (never
-      // inside an ObjStm — it is needed to decrypt them) and xref streams are
-      // never encrypted, so it is readable at this point.
-      val decryptor: Option[Crypt.Decryptor] = encrypt.map { encRef =>
-        val encOff = facade.getAndFix(encRef._1, encRef._2, raw)
-          .getOrElse(Err.fail("Encrypt object not found in xref"))
-        val encDict = ObjParser.parseAt(baseCtx, encOff) match {
-          case PDict(m) => m
-          case o        => Err.fail(s"Encrypt should be a dictionary, found $o")
-        }
-        val docId = id0.getOrElse(Err.fail("encrypted document has no /ID in trailer"))
-        Crypt.standardDecryptor(encDict, docId, password)
-      }
       typ2.groupBy(_._2._1).foreach { case (container, members) =>
         val slot = table.find(container, 0)
         if (slot < 0 || !table.inUse(slot)) Err.fail(s"object stream $container not found in xref")
@@ -132,9 +134,9 @@ object Lenient {
         }
       }
       (out.toByteArray,
-        XrefTable(NInt(size), None, root, encrypt, info, table, id0, typ2.keySet.toSet))
+        XrefTable(NInt(size), None, root, encrypt, info, table, id0, typ2.keySet.toSet), decryptor)
     } else {
-      (raw, XrefTable(NInt(size), None, root, encrypt, info, table, id0))
+      (raw, XrefTable(NInt(size), None, root, encrypt, info, table, id0), decryptor)
     }
   }
 

@@ -30,33 +30,18 @@ final class Pdf(val raw: Array[Byte], lenient: Boolean, lenientText: Boolean,
   if (trimmed.length < 5 || !Pdf.endsWith(trimmed, "%%EOF"))
     Err.fail("PDF file is corrupted; not consistent trailing charaters")
 
-  private val prepared: (Array[Byte], XRef) =
+  /** The body bytes, the xref and, LENIENT-only, a verified
+    * standard-security-handler decryptor when the trailer carries /Encrypt
+    * (Crypt.scala). Strict mode never looks at /Encrypt, exactly like the
+    * reference (xref.rs:136-146 parses-and-drops the key).
+    */
+  private val prepared: (Array[Byte], XRef, Option[Crypt.Decryptor]) =
     if (lenient) Lenient.prepare(raw, password)
-    else (raw, XRef.parse(trimmed, XRef.startxref(raw)))
+    else (raw, XRef.parse(trimmed, XRef.startxref(raw)), None)
 
   private def body: Array[Byte] = prepared._1
   val xref: XRef = prepared._2
-
-  /** LENIENT-only: a verified standard-security-handler decryptor when the
-    * trailer carries /Encrypt (RC4 R2/R3, empty user password — Crypt.scala).
-    * Strict mode never looks at /Encrypt, exactly like the reference
-    * (xref.rs:136-146 parses-and-drops the key).
-    */
-  private val decryptor: Option[Crypt.Decryptor] =
-    if (!lenient) None
-    else xref match {
-      case t: XrefTable => t.encrypt.map { key =>
-        val off = xref.getAndFix(key._1, key._2, body)
-          .getOrElse(Err.fail("Encrypt object not found in xref"))
-        val enc = ObjParser.parseAt(new Ctx(body, xref, lenient), off) match {
-          case PDict(m) => m
-          case o        => Err.fail(s"Encrypt should be a dictionary, found $o")
-        }
-        val id0 = t.id0.getOrElse(Err.fail("encrypted document has no /ID in trailer"))
-        Crypt.standardDecryptor(enc, id0, password)
-      }
-      case _ => None
-    }
+  private def decryptor: Option[Crypt.Decryptor] = prepared._3
 
   /** `Pdf::extract` — lib.rs:75-80. */
   def extract(mode: ExtractMode): String = extractResult(mode).text

@@ -2,65 +2,81 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Ported from /root/reference/src/content.rs:954-1086 (4 vectors). */
+/** Ported from the reference's content.rs:954-1086 (4 vectors), each
+  * instruction read as the operator the decoder returns and its operands.
+  */
 class ContentSpec extends AnyFunSuite {
-
-  private def dec(s: String) = new ContentDecoder(s.getBytes("ISO-8859-1"))
+  import ContentSpec._
 
   test("instruction stream BT/TD/Tf/Tj/ET (content.rs:961-986)") {
-    val c = dec("BT\n70 50 TD\n/F1 12 Tf\n(Hello, world!) Tj\nET")
-    assert(c.next() == IBeginText)
-    assert(c.next() == ITDOp(NInt(70), NInt(50)))
-    assert(c.next() == ITf("F1", NInt(12)))
-    assert(c.next() == ITjOp("Hello, world!".getBytes))
-    assert(c.next() == IEndText)
-    assert(c.next() == null)
+    assert(operators("BT\n70 50 TD\n/F1 12 Tf\n(Hello, world!) Tj\nET") == Vector(
+      "BT" -> Vector(),
+      "TD" -> Vector(int(70), int(50)),
+      "Tf" -> Vector(TName("F1"), int(12)),
+      "Tj" -> Vector(lit("Hello, world!")),
+      "ET" -> Vector()))
   }
 
   test("hexstring TJ array (content.rs:989-1018)") {
-    val c = dec("[<18>14<0D>2<06>7<14>1<04>-4<03>21<02>1<06>-2<04>-4<02>1<0906>]TJ")
-    assert(c.next() == ITJOp(Vector(
-      AText(Array[Byte](24)), APos(NInt(14)),
-      AText(Array[Byte](13)), APos(NInt(2)),
-      AText(Array[Byte](6)), APos(NInt(7)),
-      AText(Array[Byte](20)), APos(NInt(1)),
-      AText(Array[Byte](4)), APos(NInt(-4)),
-      AText(Array[Byte](3)), APos(NInt(21)),
-      AText(Array[Byte](2)), APos(NInt(1)),
-      AText(Array[Byte](6)), APos(NInt(-2)),
-      AText(Array[Byte](4)), APos(NInt(-4)),
-      AText(Array[Byte](2)), APos(NInt(1)),
-      AText(Array[Byte](9, 6))
-    )))
+    assert(operators("[<18>14<0D>2<06>7<14>1<04>-4<03>21<02>1<06>-2<04>-4<02>1<0906>]TJ") == Vector(
+      "TJ" -> Vector(TArrayBegin,
+        THex(Array[Byte](24)), int(14),
+        THex(Array[Byte](13)), int(2),
+        THex(Array[Byte](6)), int(7),
+        THex(Array[Byte](20)), int(1),
+        THex(Array[Byte](4)), int(-4),
+        THex(Array[Byte](3)), int(21),
+        THex(Array[Byte](2)), int(1),
+        THex(Array[Byte](6)), int(-2),
+        THex(Array[Byte](4)), int(-4),
+        THex(Array[Byte](2)), int(1),
+        THex(Array[Byte](9, 6)),
+        TArrayEnd)))
   }
 
   test("inline dict skipped, BDC/q/re decode (content.rs:1021-1035)") {
-    val c = dec(" /P <</MCID 0>> BDC q\n0.00000887 0 595.25 842 re")
-    assert(c.next() == IBDC)
-    assert(c.next() == ILowerQ)
-    assert(c.next() == IRe(NReal(0.00000887f), NInt(0), NReal(595.25f), NInt(842)))
+    assert(operators(" /P <</MCID 0>> BDC q\n0.00000887 0 595.25 842 re") == Vector(
+      "BDC" -> Vector(TName("P")),
+      "q" -> Vector(),
+      "re" -> Vector(TNum(NReal(0.00000887f)), int(0), TNum(NReal(595.25f)), int(842))))
   }
 
   test("complex TJ with kerning (content.rs:1038-1085)") {
-    val c = dec("BT\n/F33 8.9664 Tf 54 713.7733 Td[(v0)-525(:=)-525(ld)-525(state[748])-2625(//)-525(load)-525(primes)-525(from)-525(the)-525(trace)-525(activation)-525(record)]TJ")
-    assert(c.next() == IBeginText)
-    assert(c.next() == ITf("F33", NReal(8.9664f)))
-    assert(c.next() == ITdOp(NInt(54), NReal(713.7733f)))
-    assert(c.next() == ITJOp(Vector(
-      AText("v0".getBytes), APos(NInt(-525)),
-      AText(":=".getBytes), APos(NInt(-525)),
-      AText("ld".getBytes), APos(NInt(-525)),
-      AText("state[748]".getBytes), APos(NInt(-2625)),
-      AText("//".getBytes), APos(NInt(-525)),
-      AText("load".getBytes), APos(NInt(-525)),
-      AText("primes".getBytes), APos(NInt(-525)),
-      AText("from".getBytes), APos(NInt(-525)),
-      AText("the".getBytes), APos(NInt(-525)),
-      AText("trace".getBytes), APos(NInt(-525)),
-      AText("activation".getBytes), APos(NInt(-525)),
-      AText("record".getBytes)
-    )))
-    assert(c.next() == null)
+    assert(operators("BT\n/F33 8.9664 Tf 54 713.7733 Td[(v0)-525(:=)-525(ld)-525(state[748])-2625(//)-525(load)-525(primes)-525(from)-525(the)-525(trace)-525(activation)-525(record)]TJ") == Vector(
+      "BT" -> Vector(),
+      "Tf" -> Vector(TName("F33"), TNum(NReal(8.9664f))),
+      "Td" -> Vector(int(54), TNum(NReal(713.7733f))),
+      "TJ" -> Vector(TArrayBegin,
+        lit("v0"), int(-525),
+        lit(":="), int(-525),
+        lit("ld"), int(-525),
+        lit("state[748]"), int(-2625),
+        lit("//"), int(-525),
+        lit("load"), int(-525),
+        lit("primes"), int(-525),
+        lit("from"), int(-525),
+        lit("the"), int(-525),
+        lit("trace"), int(-525),
+        lit("activation"), int(-525),
+        lit("record"),
+        TArrayEnd)))
+  }
+}
+
+object ContentSpec {
+  def int(v: Int): Tok = TNum(NInt(v))
+  def lit(s: String): Tok = TLit(s.getBytes("ISO-8859-1"))
+
+  /** Every operator the decoder returns for `content`, with its operands. */
+  def operators(content: String): Vector[(String, Vector[Tok])] = {
+    val c = new ContentDecoder(content.getBytes("ISO-8859-1"))
+    val out = Vector.newBuilder[(String, Vector[Tok])]
+    var op = c.next()
+    while (op != null) {
+      out += new String(op.bytes, "ISO-8859-1") -> Vector.tabulate(c.operandCount)(c.operand)
+      op = c.next()
+    }
+    out.result()
   }
 }
 

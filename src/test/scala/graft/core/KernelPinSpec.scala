@@ -7,15 +7,17 @@ import graft.pipeline.{MiniPdf, SynthGen}
 /** Byte-exact gate of the strict text kernel that needs no reference
   * checkout. Every shape is a seeded MiniPdf document: multi-page, multi-Tj,
   * flate, the one-byte ToUnicode-CMap shape of perfbench, a two-byte CMap
-  * variant (keys above 0xFF, array-form and overlapping ranges, real kerns)
-  * and a content stream that uses every strict operator. Each shape runs
-  * four unmutated documents plus 1,000 seeded single-byte mutations of them
-  * (6,000 mutations over the six shapes) through the Text, Chars, Font and
+  * variant (keys above 0xFF, array-form and overlapping ranges, real kerns),
+  * a content stream that uses every strict operator and one that uses the
+  * text-state and lenient-text operators. Each shape runs four unmutated
+  * documents plus 1,000 seeded single-byte mutations of them (7,000
+  * mutations over the seven shapes) through the Text, Chars, Font and
   * RawContent modes and the lenient-text route, and one SHA-256 per
   * (shape, mode) covers every output, span and error message in order. The
   * literals were computed by the engine before its text kernel was rewritten
-  * for speed, so any change to an output byte or an error's wording fails
-  * here. A missing pin fails and prints the digest it computed.
+  * for speed (the textOps ones before the content decoder dropped its
+  * instruction types), so any change to an output byte or an error's wording
+  * fails here. A missing pin fails and prints the digest it computed.
   */
 class KernelPinSpec extends AnyFunSuite {
 
@@ -74,13 +76,35 @@ class KernelPinSpec extends AnyFunSuite {
     MiniPdf.synthesizeRawContent(content)
   }
 
+  /** The text-state operators under a sheared text matrix (so a glyph
+    * advance moves ty, and Chars mode prints every advance): Tw/Tz/TL/Ts,
+    * `'` and `"`, which strict mode leaves on the operand buffer for the
+    * next TJ to show or kern by; `q … Tf … Tc … Q` nesting; and an unknown
+    * operator whose numbers reach a TJ as kerns.
+    */
+  private def textOpsDoc(text: String): Array[Byte] = {
+    val words = text.split(' ').map(MiniPdf.escapeLiteral)
+    val content = "BT\n/F1 11 Tf\n1 0.05 0 1 40 600 Tm\n14 TL\n0.5 Tw 110 Tz 2 Ts T*\n" +
+      words.zipWithIndex.map { case (w, i) =>
+        i % 5 match {
+          case 0 => s"q /F1 ${9 + i % 4} Tf ${i % 3} Tc q 2.5 Tc [($w) -30 ( )] TJ Q [($w)] TJ Q [( $w)] TJ\n"
+          case 1 => s"${i % 4} Tw ${80 + i % 40} Tz [($w ) $i (x)] TJ\n"
+          case 2 => s"${10 + i % 7} TL ($w) ' [( )] TJ\n"
+          case 3 => s"${i % 3} 0.5 ($w) \" ${i % 9} Ts [($w)] TJ\n"
+          case _ => s"$i -$i unknownop [($w) 12.5 (z)] TJ\n"
+        }
+      }.mkString + "ET\n"
+    MiniPdf.synthesizeRawContent(content)
+  }
+
   private val shapes: Seq[(String, String => Array[Byte])] = Seq(
     "multiPage" -> (t => MiniPdf.synthesizeMultiPage(t, 60)),
     "multiTj" -> (t => MiniPdf.synthesizeMultiTj(t, 16)),
     "flate" -> MiniPdf.synthesizeFlate,
     "cmap" -> cmapDoc,
     "cmap/twoByte" -> cmap2Doc,
-    "ops" -> opsDoc)
+    "ops" -> opsDoc,
+    "textOps" -> textOpsDoc)
 
   private val modes: Seq[(String, Array[Byte] => ExtractResult)] = Seq(
     "Text" -> (b => Pdf(b).extractResult(ExtractText)),
@@ -159,7 +183,12 @@ class KernelPinSpec extends AnyFunSuite {
     "ops@Chars" -> "5f990686048397036f1ca8807a78320933ecf63c05f12c534eb8a8eadc35a8b5",
     "ops@Font" -> "0bdd6e1f6ff2aff8f1064e06697d604825cc93d823d6745c0a0797abd26ecb7f",
     "ops@RawContent" -> "cd6c49d3ff69bdfc028aa2d93d99ceb6348a4361649d404c9a861e7f9d9c1a73",
-    "ops@LenientText" -> "af5aac599376676d18b4610551143f8589da9c097b53b2db5d486ba759a460a4")
+    "ops@LenientText" -> "af5aac599376676d18b4610551143f8589da9c097b53b2db5d486ba759a460a4",
+    "textOps@Text" -> "bc9c92709c91edf782c53915ffbde002ced4fb1281217f2fcf286baa8dc6ec65",
+    "textOps@Chars" -> "4ea47f6eb216849dead718f5871bac9ccdf25153de67d314aeff779e43e6b8b7",
+    "textOps@Font" -> "5f2225f074ee0eeb2d51df4abee913b6ad43f21f7bfefe0bc3294eaa3883347e",
+    "textOps@RawContent" -> "8531633fa045c057ca82e89b21588d083ca17f8cbb94412f5c071f353e8a3d0a",
+    "textOps@LenientText" -> "a4f248ef82a20d37a8b298009dc4d706f62d04209a96c97de9967d7d0e4cf1a8")
 
   for (((name, build), idx) <- shapes.zipWithIndex) test(s"$name: every mode matches its pinned SHA-256") {
     val docs = corpus(idx, build)

@@ -96,9 +96,19 @@ class QuirkSpec extends AnyFunSuite {
   test("unknown content operator keeps the operand buffer (content.rs:624-628)") {
     // "1 2 Tz" is unknown; Td then sees 4 operands and is skipped (arity guard);
     // the following 2-operand Td applies
-    val c = new ContentDecoder("1 2 Tz 3 4 Td 5 6 Td (x) Tj".getBytes)
-    assert(c.next() == ITdOp(NInt(5), NInt(6))) // first Td skipped via arity guard
-    assert(c.next() == ITjOp("x".getBytes))
+    import ContentSpec.{int, lit, operators}
+    assert(operators("1 2 Tz 3 4 Td 5 6 Td (x) Tj") == Vector(
+      "Td" -> Vector(int(5), int(6)), // first Td skipped via arity guard
+      "Tj" -> Vector(lit("x"))))
+  }
+
+  test("a run of skipped Td operators does not grow the stack (content.rs:507-509)") {
+    val pdf = MiniPdf.synthesizeRawContent("BT\n/F1 12 Tf\n" + "1 Td\n" * 10000 + "(x) Tj\nET\n")
+    assert(Pdf(pdf).extract(ExtractText) == "x")
+    val turn = graft.pipeline.ExtractJob.extractTurn(graft.pipeline.Turn("c", 0, "user",
+      java.util.Base64.getEncoder.encodeToString(pdf), "pdf-b64", null))
+    assert(turn.error == null)
+    assert(turn.extracted_text == "x")
   }
 
   test("content comments panic (content.rs:630 catch-all)") {
