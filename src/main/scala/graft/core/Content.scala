@@ -18,10 +18,7 @@ case object ExtractRawContent extends ExtractMode
 final case class Span(op: String, start: Int, end: Int)
 
 /** Extraction result: the reference's output string plus our span sidecar. */
-final case class ExtractResult(text: String, spans: Vector[Span]) {
-  def shift(by: Int): ExtractResult =
-    ExtractResult(text, spans.map(s => Span(s.op, s.start + by, s.end + by)))
-}
+final case class ExtractResult(text: String, spans: Vector[Span])
 
 object ExtractResult {
   def plain(text: String): ExtractResult = ExtractResult(text, Vector.empty)

@@ -38,13 +38,9 @@ object StreamDict {
     length = dict.get("Length") match {
       case Some(PNum(n)) => n
       case Some(PRef(obj, gen, ctx)) =>
-        ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
-          case Some(address) =>
-            ObjParser.parseAt(ctx, address) match {
-              case PNum(n) => n
-              case _       => Err.fail("Length should be a numeric")
-            }
-          case None => Err.fail("Length should be an indirect object")
+        ObjParser.parseAt(ctx, ctx.offsetOf(obj, gen, "Length should be an indirect object")) match {
+          case PNum(n) => n
+          case _       => Err.fail("Length should be a numeric")
         }
       case None => Err.fail("stream dict has no Length")
       case _    => Err.fail("Length should be a numeric")
@@ -62,7 +58,7 @@ object StreamDict {
         parms.flatMap(directEarlyChange).getOrElse(parms match {
           // indirect DecodeParms: resolve through the ref's own context
           case Some(PRef(obj, gen, rctx)) =>
-            rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
+            rctx.offset(obj, gen) match {
               case Some(at) => ObjParser.parseAt(rctx, at) match {
                 case PDict(p) => earlyChangeIn(p)
                 case o if isLzw =>
@@ -297,13 +293,10 @@ object PdfFont {
       },
       widths = dict.get("Widths") match {
         case Some(PRef(obj, gen, ctx)) =>
-          ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
-            case Some(address) =>
-              ObjParser.parseAt(ctx, address) match {
-                case PArr(a) => Some(numsOf(a))
-                case o       => Err.fail(s"ToUnicode should be a stream object, found $o")
-              }
-            case None => Err.fail("ToUnicode stream object not found in xref table")
+          val at = ctx.offsetOf(obj, gen, "ToUnicode stream object not found in xref table")
+          ObjParser.parseAt(ctx, at) match {
+            case PArr(a) => Some(numsOf(a))
+            case o       => Err.fail(s"ToUnicode should be a stream object, found $o")
           }
         case Some(PArr(a)) => Some(numsOf(a))
         case None          => None
@@ -311,14 +304,11 @@ object PdfFont {
       },
       toUnicode = dict.get("ToUnicode") match {
         case Some(PRef(obj, gen, ctx)) =>
-          ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
-            case Some(address) =>
-              ObjParser.parseAt(ctx, address) match {
-                case s: PStream =>
-                  Some(ToUnicodeCMap.parse(Utf8.lossyBytes(BodyStream.of(s, ctx, obj, gen).getDataForLexing)))
-                case o => Err.fail(s"ToUnicode should be a stream object, found $o")
-              }
-            case None => Err.fail("ToUnicode stream object not found in xref table")
+          val at = ctx.offsetOf(obj, gen, "ToUnicode stream object not found in xref table")
+          ObjParser.parseAt(ctx, at) match {
+            case s: PStream =>
+              Some(ToUnicodeCMap.parse(Utf8.lossyBytes(BodyStream.of(s, ctx, obj, gen).getDataForLexing)))
+            case o => Err.fail(s"ToUnicode should be a stream object, found $o")
           }
         case None => None
         case _    => Err.fail("ToUnicode should be an indirect object")
@@ -346,14 +336,10 @@ object FontMap {
   def from(dict: Map[String, PdfObj]): FontMap = FontMap(
     dict.map {
       case (key, PRef(obj, gen, ctx)) =>
-        ctx.xref.getAndFix(obj, gen, ctx.bytes) match {
-          case Some(address) =>
-            ObjParser.parseAt(ctx, address) match {
-              case PDict(d) => key -> PdfFont.from(d)
-              case o        => Err.fail(s"Font object is not a dictionary, found $o")
-            }
-          case None =>
-            Err.fail(s"Font dictionnary object associated to $key was not found in xref table")
+        val at = ctx.offsetOf(obj, gen, s"Font dictionnary object associated to $key was not found in xref table")
+        ObjParser.parseAt(ctx, at) match {
+          case PDict(d) => key -> PdfFont.from(d)
+          case o        => Err.fail(s"Font object is not a dictionary, found $o")
         }
       case _ => Err.fail("Font should be an indirect object")
     }
@@ -372,7 +358,7 @@ object PdfResources {
   def from(dict: Map[String, PdfObj]): PdfResources = PdfResources(
     font = dict.get("Font") match {
       case Some(PRef(obj, gen, ctx)) =>
-        ctx.xref.getAndFix(obj, gen, ctx.bytes).map { address =>
+        ctx.offset(obj, gen).map { address =>
           ObjParser.parseAt(ctx, address) match {
             case PDict(d) => FontMap.from(d)
             case _        => Err.fail("Font should be a dictionary")
@@ -469,6 +455,17 @@ object PageTree {
     */
   val MaxTreeDepth = 64
 
+  /** Max kids one document's page tree builds (the image walk's too). Each
+    * `/Kids` reference is built anew, so nodes that list the next node twice
+    * cost 2^depth: 30 levels (3 KB) would run for hours or out of memory.
+    */
+  val MaxKids = 65536
+
+  private[core] def countKid(ctx: Ctx): Unit = {
+    ctx.pageKids += 1
+    if (ctx.pageKids > MaxKids) Err.fail(s"page tree has more than $MaxKids kids")
+  }
+
   /** `PageTreeKids::new` dispatch on /Type — body.rs:125-140. */
   def kid(ctx: Ctx, at: Int, depth: Int = 0): PageTreeKid = ObjParser.parseAt(ctx, at) match {
     case PDict(dict) =>
@@ -490,10 +487,8 @@ object PageTree {
         case Some(PArr(arr)) =>
           arr.map {
             case PRef(obj, gen, rctx) =>
-              rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
-                case Some(address) => kid(rctx, address, depth + 1)
-                case None          => Err.fail("Kid not found in xref table")
-              }
+              countKid(ctx)
+              kid(rctx, rctx.offsetOf(obj, gen, "Kid not found in xref table"), depth + 1)
             case _ => Err.fail("Kid should be an indirect object")
           }
         case None => Err.fail("Kids missing in page tree node")
@@ -501,10 +496,7 @@ object PageTree {
       }
       val resources = dict.get("Resources") match {
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
-            case Some(address) => Some(PdfResources.parseAt(rctx, address))
-            case None          => Err.fail("Kid not found in xref table")
-          }
+          Some(PdfResources.parseAt(rctx, rctx.offsetOf(obj, gen, "Kid not found in xref table")))
         case None => None
         case _    => Err.fail("Resources should be an indirect object")
       }
@@ -525,19 +517,15 @@ object PageTree {
       val resources = dict.get("Resources") match {
         case Some(PDict(d)) => Some(PdfResources.from(d))
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
-            case Some(address) => Some(PdfResources.parseAt(rctx, address))
-            case None          => Err.fail("Resource dictionnary address not found in xref keys")
-          }
+          val at = rctx.offsetOf(obj, gen, "Resource dictionnary address not found in xref keys")
+          Some(PdfResources.parseAt(rctx, at))
         case Some(t) => Err.fail(s"Resources should be an dictionary object $t")
         case None    => Err.fail("page has no Resources key")
       }
       val contents = dict.get("Contents") match {
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
-            case Some(address) => Some(BodyStream.parseAt(rctx, address, obj, gen))
-            case None          => Err.fail("Resource dictionnary address not found in xref keys")
-          }
+          val at = rctx.offsetOf(obj, gen, "Resource dictionnary address not found in xref keys")
+          Some(BodyStream.parseAt(rctx, at, obj, gen))
         case None => None
         case _    => Err.fail("Contents should be an indirect object")
       }
@@ -559,7 +547,7 @@ object PdfCatalog {
     case PDict(dict) =>
       PdfCatalog(pages = dict.get("Pages") match {
         case Some(PRef(obj, gen, rctx)) =>
-          rctx.xref.getAndFix(obj, gen, rctx.bytes).map(addr => PageTree.node(rctx, addr))
+          rctx.offset(obj, gen).map(addr => PageTree.node(rctx, addr))
         case None => Err.fail("catalog has no Pages key")
         case _    => Err.fail("Pages should be an indirect object")
       })

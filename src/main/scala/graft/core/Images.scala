@@ -35,10 +35,7 @@ object PdfImages {
   def list(ctx: Ctx, catalogOffset: Int): Vector[ImageXObject] = {
     def resolve(o: PdfObj): PdfObj = o match {
       case PRef(obj, gen, rctx) =>
-        rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
-          case Some(at) => ObjParser.parseAt(rctx, at)
-          case None     => Err.fail("image xobject ref not found in xref table")
-        }
+        ObjParser.parseAt(rctx, rctx.offsetOf(obj, gen, "image xobject ref not found in xref table"))
       case other => other
     }
     def dictOf(o: PdfObj, what: String): Map[String, PdfObj] = resolve(o) match {
@@ -53,10 +50,8 @@ object PdfImages {
             case None => Vector.empty
             case Some(xobjs) =>
               xobjs.toVector.sortBy(_._1).flatMap {
-                case (name, PRef(obj, gen, rctx)) =>
-                  val at = rctx.xref.getAndFix(obj, gen, rctx.bytes)
-                    .getOrElse(Err.fail("image xobject ref not found in xref table"))
-                  ObjParser.parseAt(rctx, at) match {
+                case (name, ref @ PRef(obj, gen, rctx)) =>
+                  resolve(ref) match {
                     case ps: PStream => imageOf(name, ps, rctx, obj, gen)
                     case _           => None // non-stream XObject entry: not an image
                   }
@@ -71,7 +66,10 @@ object PdfImages {
         case Some(PName("Pages")) =>
           node.get("Kids") match {
             case Some(PArr(kids)) =>
-              kids.toVector.flatMap(k => walk(dictOf(k, "page tree kid"), depth + 1))
+              kids.toVector.flatMap { k =>
+                PageTree.countKid(ctx)
+                walk(dictOf(k, "page tree kid"), depth + 1)
+              }
             case _ => Err.fail("Kids should be an array")
           }
         case _ => Vector.empty

@@ -21,25 +21,33 @@ import scala.collection.mutable
   *
   * Strategy: resolve the complete xref, then MATERIALIZE every object-stream
   * member as a classic `N 0 obj ... endobj` appended to a copy of the file
-  * bytes, registered at its appended offset in a plain XrefTable facade. From
-  * there the UNCHANGED reference-faithful machinery (object parser, document
-  * tree, fonts, CMaps, content lexer, text assembly — with every replicated
-  * quirk) runs on the augmented buffer, so lenient mode changes WHICH objects
-  * are reachable, never how they are interpreted.
+  * bytes, registered at its appended offset in one XrefTable that merges every
+  * section: a [[Prepared]]. From there the UNCHANGED reference-faithful
+  * machinery (object parser, document tree, fonts, CMaps, content lexer, text
+  * assembly — with every replicated quirk) runs on the augmented buffer, so
+  * lenient mode changes WHICH objects are reachable, never how they are
+  * interpreted.
   */
 object Lenient {
+  import XrefStream.{asInt, field}
 
   /** Max members materialized across all object streams (poison guard: a
     * crafted ObjStm header can claim huge N).
     */
   val MaxMaterialized = 65536
 
-  /** Parse the full xref at `raw`'s startxref and materialize object-stream
-    * members. Returns (augmented bytes, xref facade, the standard-security
-    * decryptor when the trailer carries /Encrypt).
+  /** The bytes objects resolve in, their xref, the decryptor when the trailer
+    * carries /Encrypt, and the objects materialized OUT of object streams,
+    * whose strings are never individually encrypted (PDF 32000-1 §7.5.7).
+    * Strict mode builds one with no decryptor and no members.
     */
-  def prepare(raw: Array[Byte], password: Array[Byte] = Array.emptyByteArray)
-      : (Array[Byte], XRef, Option[Crypt.Decryptor]) = {
+  final case class Prepared(bytes: Array[Byte], xref: XRef, decryptor: Option[Crypt.Decryptor],
+                            objStmMembers: Set[Int])
+
+  /** Parse the full xref at `raw`'s startxref and materialize object-stream
+    * members into a copy of `raw`.
+    */
+  def prepare(raw: Array[Byte], password: Array[Byte] = Array.emptyByteArray): Prepared = {
     // entry collection across the Prev chain; NEWEST section wins per object
     val typ1 = mutable.HashMap[(Int, Int), Int]() // (obj, gen) -> file offset
     val typ2 = mutable.HashMap[Int, (Int, Int)]() // obj -> (container, idxInStm)
@@ -48,7 +56,6 @@ object Lenient {
     var info: Option[(Int, Int)] = None
     var encrypt: Option[(Int, Int)] = None
     var id0: Option[Array[Byte]] = None
-    var size = 0
     var offset = XRef.startxref(raw)
     var depth = 0
     val visited = mutable.HashSet[Int]()
@@ -78,7 +85,6 @@ object Lenient {
       if (info.isEmpty) info = section.info
       if (encrypt.isEmpty) encrypt = section.encrypt
       if (id0.isEmpty) id0 = section.id0
-      if (size == 0) size = section.size
       offset = section.prev.getOrElse(-1)
       depth += 1
     }
@@ -89,18 +95,16 @@ object Lenient {
     if (typ2.size > MaxMaterialized) Err.fail(s"more than $MaxMaterialized object-stream members")
     // the direct objects alone: object-stream containers and /Encrypt
     // resolve here, before any member is materialized
-    val facade = XrefTable(NInt(size), None, root, None, info, table.copy)
-    val baseCtx = new Ctx(raw, facade, lenient = true)
+    val baseCtx = new Ctx(raw, XrefTable(None, root, info, table.copy), lenient = true)
     // the one decryptor of the document, built before materialization:
     // container bytes are ciphertext (encryption wraps OUTSIDE the filters),
     // and a modern encrypted PDF keeps its catalog and fonts exactly there.
-    // Resolved through getAndFix so a stale /Encrypt offset self-heals like
+    // Resolved through Ctx.offsetOf so a stale /Encrypt offset self-heals like
     // every other lookup (xref.rs:245-268). The /Encrypt dictionary itself is
     // always a direct object (never inside an ObjStm — it is needed to decrypt
     // them) and xref streams are never encrypted, so it is readable here.
     val decryptor: Option[Crypt.Decryptor] = encrypt.map { encRef =>
-      val encOff = facade.getAndFix(encRef._1, encRef._2, raw)
-        .getOrElse(Err.fail("Encrypt object not found in xref"))
+      val encOff = baseCtx.offsetOf(encRef._1, encRef._2, "Encrypt object not found in xref")
       val encDict = ObjParser.parseAt(baseCtx, encOff) match {
         case PDict(m) => m
         case o        => Err.fail(s"Encrypt should be a dictionary, found $o")
@@ -133,10 +137,9 @@ object Lenient {
           table.put(obj, 0, at, inUse = true)
         }
       }
-      (out.toByteArray,
-        XrefTable(NInt(size), None, root, encrypt, info, table, id0, typ2.keySet.toSet), decryptor)
+      Prepared(out.toByteArray, XrefTable(None, root, info, table), decryptor, typ2.keySet.toSet)
     } else {
-      (raw, XrefTable(NInt(size), None, root, encrypt, info, table, id0), decryptor)
+      Prepared(raw, XrefTable(None, root, info, table), decryptor, Set.empty)
     }
   }
 
@@ -152,7 +155,6 @@ object Lenient {
       root: Option[(Int, Int)],
       info: Option[(Int, Int)],
       prev: Option[Int],
-      size: Int,
       xrefStm: Option[Int] = None, // hybrid-reference file: /XRefStm in a classic trailer
       encrypt: Option[(Int, Int)] = None,
       id0: Option[Array[Byte]] = None) // first /ID element (decryption key salt)
@@ -197,16 +199,11 @@ object Lenient {
         case t => Err.fail(s"expected subsection header or trailer, found $t")
       }
     }
-    val ctx = new Ctx(raw, XRef.default)
-    val trailer = ObjParser.parse(new Lemmatizer(tok.copyCursor, ctx)) match {
-      case PDict(d) => d
-      case _        => Err.fail("Trailer should be a dictionary")
-    }
+    val trailer = XrefTable.trailerAt(raw, tok)
     Section(entries.result(),
       root = refOf(trailer, "Root"),
       info = refOf(trailer, "Info"),
       prev = intOf(trailer, "Prev"),
-      size = intOf(trailer, "Size").getOrElse(0),
       xrefStm = intOf(trailer, "XRefStm"),
       encrypt = refOf(trailer, "Encrypt"),
       id0 = idOf(trailer))
@@ -259,9 +256,9 @@ object Lenient {
         val base = row * entrySize
         if (base + entrySize > data.length) Err.fail("xref stream data shorter than /Index claims")
         // w1 == 0 means "type defaults to 1" (PDF 32000-1 7.5.8.2)
-        val t = if (w._1 == 0) 1 else be(data, base, w._1)
-        val f2 = be(data, base + w._1, w._2)
-        val f3 = be(data, base + w._1 + w._2, w._3)
+        val t = if (w._1 == 0) 1 else field(data, base, w._1)
+        val f2 = field(data, base + w._1, w._2)
+        val f3 = field(data, base + w._1 + w._2, w._3)
         val obj = start + i
         entries += ((obj, if (t == 1) f3 else 0, t match {
           case 0 => XEntryFree
@@ -277,7 +274,6 @@ object Lenient {
       root = refOf(s.header, "Root"),
       info = refOf(s.header, "Info"),
       prev = intOf(s.header, "Prev"),
-      size = size,
       encrypt = refOf(s.header, "Encrypt"),
       id0 = idOf(s.header))
   }
@@ -451,17 +447,5 @@ object Lenient {
         else s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
     }
     case _ => None
-  }
-
-  private def asInt(o: PdfObj): Int = o match {
-    case PNum(NInt(n)) => n
-    case other         => Err.fail(s"expected integer, found $other")
-  }
-
-  private def be(b: Array[Byte], off: Int, len: Int): Int = {
-    var res = 0
-    var i = 0
-    while (i < len) { res = res * 256 + (b(off + i) & 0xff); i += 1 }
-    res
   }
 }

@@ -579,6 +579,7 @@ final class Lemmatizer(val tok: PdfTokenizer, val ctx: Ctx) {
 
 /** Resolution context: the byte array refs resolve against + the xref index.
   * Mirrors the (bytes, Rc<XRef>) pair the reference stores inside IndirectRef/Object::Ref.
+  * Every indirect object resolves through [[offset]] or [[offsetOf]].
   * `lenient` rides along so stream decoding can admit the lenient-only filters
   * (ASCIIHex/LZW — core/Filters.scala); strict contexts keep the reference's
   * FlateDecode-only panic.
@@ -586,6 +587,18 @@ final class Lemmatizer(val tok: PdfTokenizer, val ctx: Ctx) {
 final class Ctx(val bytes: Array[Byte], val xref: XRef, val lenient: Boolean = false,
                 val lenientText: Boolean = false,
                 val decrypt: Option[Crypt.Decryptor] = None) {
+  /** Object `num gen`'s offset, healed against `bytes` (xref.rs:245-268), if the xref has it. */
+  def offset(num: Int, gen: Int): Option[Int] = xref.getAndFix(num, gen, bytes)
+
+  /** [[offset]], failing with `missing` when the xref has no such object. */
+  def offsetOf(num: Int, gen: Int, missing: => String): Int = offset(num, gen) match {
+    case Some(at) => at
+    case None     => Err.fail(missing)
+  }
+
+  /** Page-tree kids built from this context (PageTree.MaxKids). */
+  private[core] var pageKids = 0
+
   /** The object parsed at each offset of `bytes` (ObjParser.parseAt), so an
     * object read twice, such as the font every page references or a page
     * dictionary read for its /Type and then for its fields, is parsed once

@@ -119,17 +119,14 @@ object ObjParser {
                 case Some(PNum(NInt(n)))  => n
                 case Some(PNum(NReal(_))) => Err.fail("Real number found in stream length")
                 case Some(PRef(obj, gen, rctx)) =>
-                  rctx.xref.getAndFix(obj, gen, rctx.bytes) match {
-                    case Some(address) =>
-                      val t = Lemmatizer(rctx.bytes, address, rctx)
-                      t.next() // discard (typically the fused ObjBegin)
-                      t.next() match {
-                        case TNum(NInt(n)) => n
-                        case other if other != null =>
-                          Err.fail(s"Unexpected token found in object; found $other")
-                        case _ => Err.fail(s"Stream dictionary should have a Length key, $dict")
-                      }
-                    case None => Err.fail(s"Stream dictionary should have a Length key, $dict")
+                  val address = rctx.offsetOf(obj, gen, s"Stream dictionary should have a Length key, $dict")
+                  val t = Lemmatizer(rctx.bytes, address, rctx)
+                  t.next() // discard (typically the fused ObjBegin)
+                  t.next() match {
+                    case TNum(NInt(n)) => n
+                    case other if other != null =>
+                      Err.fail(s"Unexpected token found in object; found $other")
+                    case _ => Err.fail(s"Stream dictionary should have a Length key, $dict")
                   }
                 case _ => Err.fail(s"Stream dictionary should have a Length key, $dict")
               }
@@ -236,9 +233,7 @@ object ObjParser {
     case b: TBare       => PStr(Utf8.strict(b.bytes))(b.bytes)
     case l: TLit        => PStr(Utf8.strict(l.bytes))(l.bytes)
     case h: THex        => PHexStr(h.bytes)
-    case TRef(obj, gen) => TRefObj(obj, gen, ctx)
+    case TRef(obj, gen) => PRef(obj, gen, ctx)
     case other          => Err.fail(s"Unexpected token found in object $other")
   }
-
-  private def TRefObj(obj: Int, gen: Int, ctx: Ctx): PdfObj = PRef(obj, gen, ctx)
 }

@@ -20,28 +20,24 @@ package graft.core
   * extension sits behind a separate flag with its own parity gates.
   */
 final class Pdf(val raw: Array[Byte], lenient: Boolean, lenientText: Boolean,
-                password: Array[Byte]) {
-  def this(raw: Array[Byte]) = this(raw, false, false, Array.emptyByteArray)
-  def this(raw: Array[Byte], lenient: Boolean) = this(raw, lenient, false, Array.emptyByteArray)
-  def this(raw: Array[Byte], lenient: Boolean, lenientText: Boolean) =
-    this(raw, lenient, lenientText, Array.emptyByteArray)
-
+                password: Array[Byte] = Array.emptyByteArray) {
   private val trimmed: Array[Byte] = Pdf.trimAscii(raw)
   if (trimmed.length < 5 || !Pdf.endsWith(trimmed, "%%EOF"))
     Err.fail("PDF file is corrupted; not consistent trailing charaters")
 
   /** The body bytes, the xref and, LENIENT-only, a verified
     * standard-security-handler decryptor when the trailer carries /Encrypt
-    * (Crypt.scala). Strict mode never looks at /Encrypt, exactly like the
-    * reference (xref.rs:136-146 parses-and-drops the key).
+    * (Crypt.scala), and the objects materialized out of object streams.
+    * Strict mode never looks at /Encrypt, exactly like the reference
+    * (xref.rs:136-146 parses-and-drops the key).
     */
-  private val prepared: (Array[Byte], XRef, Option[Crypt.Decryptor]) =
+  private val prepared: Lenient.Prepared =
     if (lenient) Lenient.prepare(raw, password)
-    else (raw, XRef.parse(trimmed, XRef.startxref(raw)), None)
+    else Lenient.Prepared(raw, XRef.parse(trimmed, XRef.startxref(raw)), None, Set.empty)
 
-  private def body: Array[Byte] = prepared._1
-  val xref: XRef = prepared._2
-  private def decryptor: Option[Crypt.Decryptor] = prepared._3
+  private def body: Array[Byte] = prepared.bytes
+  val xref: XRef = prepared.xref
+  private def decryptor: Option[Crypt.Decryptor] = prepared.decryptor
 
   /** `Pdf::extract` — lib.rs:75-80. */
   def extract(mode: ExtractMode): String = extractResult(mode).text
@@ -61,13 +57,9 @@ final class Pdf(val raw: Array[Byte], lenient: Boolean, lenientText: Boolean,
     // strings inside an object stream are never individually encrypted
     // (PDF 32000-1 §7.5.7) — an Info that was materialized out of an ObjStm
     // skips string decryption
-    val inObjStm = xref match {
-      case t: XrefTable => t.objStmMembers.contains(key._1)
-      case _            => false
-    }
     val ctx = new Ctx(body, xref, lenient, lenientText,
-      if (inObjStm) None else decryptor)
-    xref.getAndFix(key._1, key._2, body).map(off => PdfInfo.parseAt(ctx, off, key._1, key._2))
+      if (prepared.objStmMembers.contains(key._1)) None else decryptor)
+    ctx.offset(key._1, key._2).map(off => PdfInfo.parseAt(ctx, off, key._1, key._2))
   }
 
   /** LENIENT-only: enumerate image XObjects with DCT pixel decode
@@ -84,10 +76,10 @@ final class Pdf(val raw: Array[Byte], lenient: Boolean, lenientText: Boolean,
 }
 
 object Pdf {
-  def apply(bytes: Array[Byte]): Pdf = new Pdf(bytes, lenient = false)
+  def apply(bytes: Array[Byte]): Pdf = new Pdf(bytes, lenient = false, lenientText = false)
 
   /** Engine extension: lenient xref resolution (see class scaladoc). */
-  def lenient(bytes: Array[Byte]): Pdf = new Pdf(bytes, lenient = true)
+  def lenient(bytes: Array[Byte]): Pdf = new Pdf(bytes, lenient = true, lenientText = false)
 
   /** Engine extension (round 5): lenient xref resolution with a non-empty
     * user or owner password for encrypted documents — tried as the user

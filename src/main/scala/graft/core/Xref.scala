@@ -12,7 +12,7 @@ sealed trait XRef {
 
 object XRef {
   /** Empty default used where the reference builds `XRefTable::default()`. */
-  val default: XRef = XrefTable(NInt(0), None, None, None, None, new XrefIndex)
+  val default: XRef = XrefTable(None, None, None, new XrefIndex)
 
   /** `XRef::new(bytes, offset)` — xref.rs:39-58: peek dispatch between the classic
     * table (leading `xref` bareword) and an xref stream object (leading numeric).
@@ -68,24 +68,15 @@ object XRef {
 }
 
 /** Classic xref table + trailer — xref.rs:60-277. Single-subsection only (the
-  * reference reads exactly one `start size` header — xref.rs:196-222).
+  * reference reads exactly one `start size` header — xref.rs:196-222). It
+  * keeps what lookups read: the entries, the /Prev table and the /Root and
+  * /Info refs; the trailer's /Size and /Encrypt are checked, then dropped.
   */
 final case class XrefTable(
-    size: Num,
     prev: Option[XRef],
     root: Option[(Int, Int)],
-    encrypt: Option[(Int, Int)],
     info: Option[(Int, Int)],
-    table: XrefIndex,
-    // first trailer /ID element, captured by the LENIENT resolver only (the
-    // reference ignores /ID, so the strict parser leaves None — it is needed
-    // solely for the lenient decryption key derivation)
-    id0: Option[Array[Byte]] = None,
-    // object numbers materialized OUT of object streams by the lenient
-    // resolver: strings inside an ObjStm are NEVER individually encrypted
-    // (PDF 32000-1 §7.5.7 — the container was encrypted once), so string
-    // decryption must skip these objects
-    objStmMembers: Set[Int] = Set.empty
+    table: XrefIndex
 ) extends XRef {
 
   def len: Int = table.size
@@ -186,40 +177,41 @@ object XrefTable {
       case null => Err.fail("End of file")
       case t    => Err.fail(s"Incorrect token found at the beginning of trailer, found $t")
     }
-    // trailer dict parsed over a CLONE of the cursor with a default xref context —
-    // xref.rs:112-115 (Object::from(tokenizer.clone()))
-    val ctx = new Ctx(bytes, XRef.default)
-    val trailer = ObjParser.parse(new Lemmatizer(tok.copyCursor, ctx)) match {
+    val trailer = trailerAt(bytes, tok)
+    trailer.get("Size") match {
+      case Some(PNum(_)) => ()
+      case _             => Err.fail("Size should be a numeric")
+    }
+    val prev = trailer.get("Prev") match {
+      case Some(PNum(NInt(off))) => Some(XRef.parse(bytes, off, depth + 1))
+      case None                  => None
+      case _                     => Err.fail("Prev should be a numeric")
+    }
+    val root = trailer.get("Root") match {
+      case Some(PRef(o, g, _)) => Some((o, g))
+      case _                   => Err.fail("Root should be a Catalog object")
+    }
+    trailer.get("Encrypt") match {
+      case Some(PRef(_, _, _)) | None => ()
+      case _                          => Err.fail("Encrypt should be an indirect object")
+    }
+    val info = trailer.get("Info") match {
+      case Some(PRef(o, g, _)) => Some((o, g))
+      case None                => None
+      case _                   => Err.fail("Info should be an indirect object")
+    }
+    XrefTable(prev, root, info, table)
+  }
+
+  /** The trailer dictionary after `tok`'s cursor, parsed over a CLONE of the
+    * cursor with a default xref context — xref.rs:112-115
+    * (Object::from(tokenizer.clone())).
+    */
+  private[core] def trailerAt(bytes: Array[Byte], tok: PdfTokenizer): Map[String, PdfObj] =
+    ObjParser.parse(new Lemmatizer(tok.copyCursor, new Ctx(bytes, XRef.default))) match {
       case PDict(d) => d
       case _        => Err.fail("Trailer should be a dictionary")
     }
-    XrefTable(
-      size = trailer.get("Size") match {
-        case Some(PNum(n)) => n
-        case _             => Err.fail("Size should be a numeric")
-      },
-      prev = trailer.get("Prev") match {
-        case Some(PNum(NInt(off))) => Some(XRef.parse(bytes, off, depth + 1))
-        case None                  => None
-        case _                     => Err.fail("Prev should be a numeric")
-      },
-      root = trailer.get("Root") match {
-        case Some(PRef(o, g, _)) => Some((o, g))
-        case _                   => Err.fail("Root should be a Catalog object")
-      },
-      encrypt = trailer.get("Encrypt") match {
-        case Some(PRef(o, g, _)) => Some((o, g))
-        case None                => None
-        case _                   => Err.fail("Encrypt should be an indirect object")
-      },
-      info = trailer.get("Info") match {
-        case Some(PRef(o, g, _)) => Some((o, g))
-        case None                => None
-        case _                   => Err.fail("Info should be an indirect object")
-      },
-      table = table
-    )
-  }
 
   /** Single subsection: `start size` then `size` entries — xref.rs:169-222. */
   private[core] def readTableSubsection(tok: PdfTokenizer): XrefIndex = {
@@ -293,8 +285,8 @@ final case class XrefStream(
     val entrySize = w._1 + w._2 + w._3
     val base = objectIdx * entrySize
     if (base + entrySize > stream.length) Err.fail("xref stream entry out of bounds")
-    val entryType = num(stream, base, w._1)
-    val entryMid = num(stream, base + w._1, w._2)
+    val entryType = XrefStream.field(stream, base, w._1)
+    val entryMid = XrefStream.field(stream, base + w._1, w._2)
     entryType match {
       case 1 => Some(entryMid)
       case 0 => None
@@ -308,14 +300,6 @@ final case class XrefStream(
   def getCatalogOffset: Option[Int] = Some(0) // stub — xref.rs:331-333
 
   def infoKey: Option[(Int, Int)] = None
-
-  /** Big-endian field decode — xref.rs:321-329. */
-  private def num(b: Array[Byte], off: Int, len: Int): Int = {
-    var res = 0
-    var i = 0
-    while (i < len) { res = res * 256 + (b(off + i) & 0xff); i += 1 }
-    res
-  }
 }
 
 object XrefStream {
@@ -351,9 +335,17 @@ object XrefStream {
     XrefStream(size, index, prev, w, Flate.flateDecode(s.bytes))
   }
 
-  private def asInt(o: PdfObj): Int = o match {
+  private[core] def asInt(o: PdfObj): Int = o match {
     case PNum(NInt(n)) => n
     case other         => Err.fail(s"expected integer, found $other")
+  }
+
+  /** Big-endian field decode — xref.rs:321-329. */
+  private[core] def field(b: Array[Byte], off: Int, len: Int): Int = {
+    var res = 0
+    var i = 0
+    while (i < len) { res = res * 256 + (b(off + i) & 0xff); i += 1 }
+    res
   }
 }
 

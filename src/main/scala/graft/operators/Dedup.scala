@@ -456,7 +456,7 @@ object Dedup {
   ): DataFrame = {
     require(maxStopFps > 0 && maxStopFps <= 50000000,
       s"maxStopFps=$maxStopFps out of range (1..50000000 — 8 B/fp broadcast)")
-    val newFps = winnowIndex(newDocs, textCol, idCol)
+    val newFps = winnowIndex(newDocs, textCol, idCol, k, w)
       .select(col("id").as("id_new"), col("fp"))
     // guard job: UNOBSERVED twin of the stop aggregation (an Observation must
     // see exactly one action — the main job below keeps it), bounded by the

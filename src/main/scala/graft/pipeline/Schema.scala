@@ -39,7 +39,7 @@ final case class Golden(
     conv_id: String,
     turn_idx: Int,
     expected_text: String,
-    gate: String // "exact" | "smoke"
+    gate: String // "exact" | "snapshot": goldenDiff byte-compares both
 )
 
 /** Per-partition checkpoint manifest (SURVEY §1.2 / P8). `rows` counts the

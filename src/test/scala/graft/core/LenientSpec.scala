@@ -344,6 +344,10 @@ class LenientSpec extends AnyFunSuite {
       "<< /Type /Pages /Kids [2 0 R] /Count 1 >>").map(graft.pipeline.MiniPdf.Obj(_)), "")
     val e = intercept[PdfParseException](Pdf.lenient(pdf).listImages)
     assert(e.getMessage.contains("deeper than"), e.getMessage)
+    // nodes that share kids stay within the depth and meet the kid bound
+    val shared = graft.pipeline.PoisonSpec.sharedKids(17)
+    val e2 = intercept[PdfParseException](Pdf.lenient(shared).listImages)
+    assert(e2.getMessage == "page tree has more than 65536 kids")
   }
 
   test("Flate image XObjects: raw bitmap dims validated by decoded length, exact pixel sum") {

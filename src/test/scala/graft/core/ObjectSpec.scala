@@ -163,4 +163,86 @@ class BodySpec extends AnyFunSuite {
     val cat = PdfCatalog.parseAt(new Ctx(b, XRef.default), 0)
     assert(cat.pages.isEmpty)
   }
+
+  test("a reference to an object the xref lacks: the outcome at every resolution site") {
+    import graft.pipeline.MiniPdf
+    // one page under one node, font 4 and content stream 5; each override
+    // puts `99 0 R` (absent from the xref) at one resolution site
+    val content = "BT /F1 12 Tf (hi) Tj ET".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    def doc(catalog: String = "<< /Type /Catalog /Pages 2 0 R >>",
+            pages: String = "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            resources: String = "<< /Font << /F1 4 0 R >> >>",
+            contents: String = "5 0 R",
+            font: String = "",
+            length: String = content.length.toString,
+            streamExtra: String = "",
+            trailer: String = ""): Array[Byte] =
+      MiniPdf.classic(Seq(
+        MiniPdf.Obj(catalog),
+        MiniPdf.Obj(pages),
+        MiniPdf.Obj(s"<< /Type /Page /Parent 2 0 R /Resources $resources /Contents $contents >>"),
+        MiniPdf.Obj(s"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica$font >>"),
+        MiniPdf.Obj(s"<< /Length $length$streamExtra >>", content)), trailer)
+    // the error text, with identity hash codes masked as KernelPinSpec does
+    // (the object parser's /Length message prints the dictionary and its Ctx)
+    def outcome(run: => Any): String =
+      try run.toString catch {
+        case e: PdfParseException =>
+          "error: " + e.getMessage.replaceAll("""([A-Za-z_$][\w.$]*|\[B)@[0-9a-f]+""", "$1@ID")
+      }
+    val got = Seq(
+      "none missing" -> outcome(Pdf(doc()).extract(ExtractText)),
+      // the object parser resolves /Length before StreamDict reads it
+      "stream /Length" -> outcome(Pdf(doc(length = "99 0 R")).extract(ExtractText)),
+      "font /Widths" -> outcome(Pdf(doc(font = " /FirstChar 32 /LastChar 126 /Widths 99 0 R"))
+        .extract(ExtractText)),
+      "font /ToUnicode" -> outcome(Pdf(doc(font = " /ToUnicode 99 0 R")).extract(ExtractText)),
+      "font-map entry" -> outcome(Pdf(doc(resources = "<< /Font << /F1 99 0 R >> >>")).extract(ExtractText)),
+      "resources /Font, Text" -> outcome(Pdf(doc(resources = "<< /Font 99 0 R >>")).extract(ExtractText)),
+      "resources /Font, Font" -> outcome(Pdf(doc(resources = "<< /Font 99 0 R >>")).extract(ExtractFont)),
+      "/Kids entry" -> outcome(Pdf(doc(pages = "<< /Type /Pages /Kids [99 0 R] /Count 1 >>"))
+        .extract(ExtractText)),
+      "node /Resources" -> outcome(Pdf(doc(pages = "<< /Type /Pages /Kids [3 0 R] /Count 1 /Resources 99 0 R >>"))
+        .extract(ExtractText)),
+      "page /Resources" -> outcome(Pdf(doc(resources = "99 0 R")).extract(ExtractText)),
+      "page /Contents" -> outcome(Pdf(doc(contents = "99 0 R")).extract(ExtractText)),
+      "catalog /Pages" -> outcome(Pdf(doc(catalog = "<< /Type /Catalog /Pages 99 0 R >>")).extract(ExtractText)),
+      "trailer /Info" -> outcome(Pdf(doc(trailer = " /Info 99 0 R")).readInfo),
+      "trailer /Info, lenient" -> outcome(Pdf.lenient(doc(trailer = " /Info 99 0 R")).readInfo),
+      "trailer /Encrypt" -> outcome(Pdf(doc(trailer = " /Encrypt 99 0 R")).extract(ExtractText)),
+      "trailer /Encrypt, lenient" -> outcome(Pdf.lenient(doc(trailer = " /Encrypt 99 0 R")).extract(ExtractText)),
+      "LZW /DecodeParms, lenient" -> outcome(Pdf.lenient(doc(streamExtra = " /Filter /LZWDecode /DecodeParms 99 0 R"))
+        .extract(ExtractText)),
+      "unfiltered /DecodeParms, lenient" -> outcome(Pdf.lenient(doc(streamExtra = " /DecodeParms 99 0 R"))
+        .extract(ExtractText)),
+      "image walk /Pages" -> outcome(Pdf.lenient(doc(catalog = "<< /Type /Catalog /Pages 99 0 R >>")).listImages),
+      "image walk /Resources" -> outcome(Pdf.lenient(doc(resources = "99 0 R")).listImages),
+      "image XObject entry" -> outcome(Pdf.lenient(doc(resources = "<< /XObject << /Im1 99 0 R >> >>")).listImages)
+    )
+    val expected = Seq(
+      "none missing" -> "hi",
+      "stream /Length" ->
+        "error: Stream dictionary should have a Length key, Map(Length -> PRef(99,0,graft.core.Ctx@ID))",
+      "font /Widths" -> "error: ToUnicode stream object not found in xref table",
+      "font /ToUnicode" -> "error: ToUnicode stream object not found in xref table",
+      "font-map entry" -> "error: Font dictionnary object associated to F1 was not found in xref table",
+      "resources /Font, Text" -> "error: Fontmap does not contains the font name F1",
+      "resources /Font, Font" -> "error: Missing font in current page resources",
+      "/Kids entry" -> "error: Kid not found in xref table",
+      "node /Resources" -> "error: Kid not found in xref table",
+      "page /Resources" -> "error: Resource dictionnary address not found in xref keys",
+      "page /Contents" -> "error: Resource dictionnary address not found in xref keys",
+      "catalog /Pages" -> "error: Pages should not be empty",
+      "trailer /Info" -> "None",
+      "trailer /Info, lenient" -> "None",
+      "trailer /Encrypt" -> "hi",
+      "trailer /Encrypt, lenient" -> "error: Encrypt object not found in xref",
+      "LZW /DecodeParms, lenient" -> "error: LZW /DecodeParms ref not found in xref",
+      "unfiltered /DecodeParms, lenient" -> "hi",
+      "image walk /Pages" -> "error: image xobject ref not found in xref table",
+      "image walk /Resources" -> "error: image xobject ref not found in xref table",
+      "image XObject entry" -> "error: image xobject ref not found in xref table")
+    got.zip(expected).foreach { case (g, e) => assert(g == e) }
+    assert(got.length == expected.length)
+  }
 }

@@ -340,30 +340,33 @@ class OperatorsSpec extends AnyFunSuite {
   test("winnowProbe: planted containment found from the index alone; screen is slice-stable") {
     import spark.implicits._
     val df = spark.read.parquet(s"$sfDir/documents.parquet").select($"doc_id", $"text")
-    val index = Dedup.winnowIndex(df, "text", "doc_id")
     def doubled(ids: Long => Boolean) = df.filter(r => ids(r.getLong(0)))
       .select(($"doc_id" + 10000).as("doc_id"),
         org.apache.spark.sql.functions.concat($"text",
           org.apache.spark.sql.functions.lit(" "), $"text").as("text"))
-    val sliceA = doubled(_ < 10)
-    val obs = org.apache.spark.sql.Observation()
-    val outA = Dedup.winnowProbe(sliceA, index, "text", "doc_id", obs = Some(obs))
-      .select("id_new", "id_corpus", "overlap").as[(Long, Long, Double)].collect()
-    val pairsA = outA.map { case (n, c, _) => (n, c) }.toSet
-    (0L until 10L).foreach { id =>
-      assert(pairsA.contains((id + 10000, id)), s"missed planted containment $id")
-    }
-    outA.filter { case (n, c, _) => n == c + 10000 }.foreach { case (n, _, ov) =>
-      assert(ov == 1.0, s"planted pair $n containment $ov != 1.0")
-    }
-    assert(obs.get("stop_fps").asInstanceOf[Long] > 0, "tiny-vocab corpus must have stop fps")
-    // slice stability: the same pair scores identically however big the slice
-    // is (df comes from the CORPUS index only, never the slice)
-    val outAB = Dedup.winnowProbe(doubled(_ < 40), index, "text", "doc_id")
-      .select("id_new", "id_corpus", "overlap").as[(Long, Long, Double)].collect()
-      .map { case (n, c, ov) => ((n, c), ov) }.toMap
-    outA.foreach { case (n, c, ov) =>
-      assert(outAB.get((n, c)).contains(ov), s"pair ($n,$c) score changed with slice size")
+    // at the defaults, and with the index and the probe both at other (k, w)
+    Seq((8, 4), (5, 3)).foreach { case (k, w) =>
+      val index = Dedup.winnowIndex(df, "text", "doc_id", k, w)
+      val sliceA = doubled(_ < 10)
+      val obs = org.apache.spark.sql.Observation()
+      val outA = Dedup.winnowProbe(sliceA, index, "text", "doc_id", k, w, obs = Some(obs))
+        .select("id_new", "id_corpus", "overlap").as[(Long, Long, Double)].collect()
+      val pairsA = outA.map { case (n, c, _) => (n, c) }.toSet
+      (0L until 10L).foreach { id =>
+        assert(pairsA.contains((id + 10000, id)), s"missed planted containment $id at k=$k w=$w")
+      }
+      outA.filter { case (n, c, _) => n == c + 10000 }.foreach { case (n, _, ov) =>
+        assert(ov == 1.0, s"planted pair $n containment $ov != 1.0 at k=$k w=$w")
+      }
+      assert(obs.get("stop_fps").asInstanceOf[Long] > 0, "tiny-vocab corpus must have stop fps")
+      // slice stability: the same pair scores identically however big the slice
+      // is (df comes from the CORPUS index only, never the slice)
+      val outAB = Dedup.winnowProbe(doubled(_ < 40), index, "text", "doc_id", k, w)
+        .select("id_new", "id_corpus", "overlap").as[(Long, Long, Double)].collect()
+        .map { case (n, c, ov) => ((n, c), ov) }.toMap
+      outA.foreach { case (n, c, ov) =>
+        assert(outAB.get((n, c)).contains(ov), s"pair ($n,$c) score changed with slice size")
+      }
     }
   }
 

@@ -2,13 +2,14 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{PdfParseException, XrefStream}
+import graft.core.{ExtractText, Pdf, PdfParseException, XrefStream}
 
 /** Poison-payload hardening: crafted PDFs that would drive unbounded recursion
   * (nested dicts, page-tree cycles, xref /Prev cycles, type-2 self-reference)
-  * must land in the `error` column as PdfParseException via the parser depth
-  * limits — never a StackOverflowError that kills the task (and, after retries,
-  * a 10^12-row job). extractTurn additionally backstops SOE itself.
+  * or exponential work (page-tree nodes that share kids) must land in the
+  * `error` column as PdfParseException via the parser limits — never a
+  * StackOverflowError or OutOfMemoryError that kills the task (and, after
+  * retries, a 10^12-row job). extractTurn additionally backstops SOE itself.
   */
 class PoisonSpec extends AnyFunSuite {
 
@@ -40,6 +41,14 @@ class PoisonSpec extends AnyFunSuite {
       "<< /Type /Pages /Kids [2 0 R] /Count 1 >>"))))
     assert(out.error != null)
     assert(out.error.contains("page tree"), s"got: ${out.error}")
+  }
+
+  test("page tree whose nodes share kids errors via the kid limit") {
+    // 2 KB, 262,142 kids: each node lists the next one twice
+    val doc = PoisonSpec.sharedKids(17)
+    val e = intercept[PdfParseException](Pdf(doc).extract(ExtractText))
+    assert(e.getMessage == "page tree has more than 65536 kids")
+    assert(ExtractJob.extractTurn(turnOf(doc)).error == "page tree has more than 65536 kids")
   }
 
   test("xref /Prev cycle errors via the chain limit") {
@@ -158,5 +167,22 @@ class PoisonSpec extends AnyFunSuite {
     val byId = out.map(e => e.conv_id -> e).toMap
     assert(byId("poison").error != null)
     assert(byId("ok").error == null && byId("ok").extracted_text == "healthy plain text")
+  }
+}
+
+object PoisonSpec {
+  /** A catalog over `levels` Pages nodes, each of which lists the next
+    * node twice (`/Kids [n 0 R n 0 R]`), over one one-character page: the
+    * tree has 2^levels pages and 2^(levels+1) - 2 kids.
+    */
+  def sharedKids(levels: Int): Array[Byte] = {
+    val nodes = (2 to levels + 1).map(i => s"<< /Type /Pages /Kids [${i + 1} 0 R ${i + 1} 0 R] >>")
+    val page = levels + 2
+    val content = "BT /F1 12 Tf (x) Tj ET".getBytes(ISO_8859_1)
+    MiniPdf.classic(
+      (Seq("<< /Type /Catalog /Pages 2 0 R >>") ++ nodes ++ Seq(
+        s"<< /Type /Page /Resources << /Font << /F1 ${page + 1} 0 R >> >> /Contents ${page + 2} 0 R >>",
+        "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")).map(MiniPdf.Obj(_)) :+
+        MiniPdf.stream(content), "")
   }
 }
