@@ -371,23 +371,15 @@ object PdfResources {
   )
 }
 
-/** Page-tree node / page — body.rs:371-579. Parent link enables Resources
-  * inheritance up the tree (the only inherited attribute the reference uses).
+/** Page-tree node / page — body.rs:371-579. A page's /Resources is required
+  * (body.rs:547 unwrap), so the reference's inheritance up the tree
+  * (body.rs:493-504) never runs and pages hold their own resources.
   */
 sealed trait PageTreeKid {
   def extract(mode: ExtractMode): ExtractResult
 }
 
-final class PageTreeNode(
-    val kids: Vector[PageTreeKid],
-    val resources: Option[PdfResources]
-) extends PageTreeKid {
-  var parent: PageTreeNode = null
-
-  def getResources: Option[PdfResources] = resources match {
-    case some @ Some(_) => some
-    case None           => if (parent != null) parent.getResources else None
-  }
+final class PageTreeNode(val kids: Vector[PageTreeKid]) extends PageTreeKid {
 
   /** Kids joined with "\n" at EVERY tree level — body.rs:413-419. */
   def extract(mode: ExtractMode): ExtractResult =
@@ -395,22 +387,10 @@ final class PageTreeNode(
 }
 
 final class PdfPage(
-    val resources: Option[PdfResources],
+    val resources: PdfResources,
     val contents: Option[BodyStream],
     val lenientText: Boolean = false
 ) extends PageTreeKid {
-  var parent: PageTreeNode = null
-
-  /** Own resources else parent chain; panic at page level — body.rs:493-504. */
-  def getResources: PdfResources = resources match {
-    case Some(r) => r
-    case None =>
-      if (parent == null) Err.fail("Unable to retrieve Page Resource, current page with no parent")
-      else parent.getResources match {
-        case Some(r) => r
-        case None    => Err.fail("Resources not found for current Page and in parent tree")
-      }
-  }
 
   def extract(mode: ExtractMode): ExtractResult = mode match {
     case ExtractText       => extractText(displayChar = false)
@@ -419,7 +399,7 @@ final class PdfPage(
     case ExtractFont       => ExtractResult.plain(extractFont)
   }
 
-  private def extractFont: String = getResources.font match {
+  private def extractFont: String = resources.font match {
     case Some(fm) => fm.display
     case None     => Err.fail("Missing font in current page resources")
   }
@@ -436,7 +416,7 @@ final class PdfPage(
       case Some(stream) => Utf8.lossyBytes(stream.getDataForLexing)
       case None         => Err.fail("Contents should not be empty")
     }
-    TextAssembly.getText(contentBytes, getResources, displayChar, lenientText)
+    TextAssembly.getText(contentBytes, resources, displayChar, lenientText)
   }
 
   /** body.rs:529-535. */
@@ -479,7 +459,9 @@ object PageTree {
     case _ => Err.fail("PageTreeKids should be a dictionary")
   }
 
-  /** `PageTreeNode::new` — body.rs:384-401 incl. parent backpatch. */
+  /** `PageTreeNode::new` — body.rs:384-401. The node's /Resources is parsed
+    * for its errors only: no page inherits it.
+    */
   def node(ctx: Ctx, at: Int, depth: Int = 0): PageTreeNode = ObjParser.parseAt(ctx, at) match {
     case PDict(dict) =>
       if (depth > MaxTreeDepth) Err.fail(s"page tree deeper than $MaxTreeDepth")
@@ -494,18 +476,13 @@ object PageTree {
         case None => Err.fail("Kids missing in page tree node")
         case _    => Err.fail("Kids should be an array")
       }
-      val resources = dict.get("Resources") match {
+      dict.get("Resources") match {
         case Some(PRef(obj, gen, rctx)) =>
-          Some(PdfResources.parseAt(rctx, rctx.offsetOf(obj, gen, "Kid not found in xref table")))
-        case None => None
+          PdfResources.parseAt(rctx, rctx.offsetOf(obj, gen, "Kid not found in xref table"))
+        case None => ()
         case _    => Err.fail("Resources should be an indirect object")
       }
-      val n = new PageTreeNode(kids, resources)
-      kids.foreach {
-        case p: PdfPage      => p.parent = n
-        case t: PageTreeNode => t.parent = n
-      }
-      n
+      new PageTreeNode(kids)
     case _ => Err.fail("Trailer should be a dictionary")
   }
 
@@ -515,10 +492,10 @@ object PageTree {
   def page(ctx: Ctx, at: Int): PdfPage = ObjParser.parseAt(ctx, at) match {
     case PDict(dict) =>
       val resources = dict.get("Resources") match {
-        case Some(PDict(d)) => Some(PdfResources.from(d))
+        case Some(PDict(d)) => PdfResources.from(d)
         case Some(PRef(obj, gen, rctx)) =>
           val at = rctx.offsetOf(obj, gen, "Resource dictionnary address not found in xref keys")
-          Some(PdfResources.parseAt(rctx, at))
+          PdfResources.parseAt(rctx, at)
         case Some(t) => Err.fail(s"Resources should be an dictionary object $t")
         case None    => Err.fail("page has no Resources key")
       }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -15,30 +16,81 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** Cap buckets at `maxBucket` elements and generate all within-bucket ordered
-    * pairs. Input: one row per bucket with a sorted `ids` array (longs, or
-    * structs sorted by their first field — the pair columns `a`/`b` keep the
-    * element type so callers can carry extra per-id payload, e.g. simhashes,
-    * through the pair stage without re-joining). Truncation counts ride the
-    * same pass as an observed metric — zero extra jobs, recall loss on
-    * pathological buckets is observable, not silent.
+  /** The bucket stage of every banded near-dup operator: one bucket per
+    * `keys` value holding its rows' `elem`s sorted as `ids` (longs, or
+    * structs sorted by their first field).
     */
-  private[operators] def cappedBucketPairs(
-      bucketIds: DataFrame,
-      maxBucket: Int,
-      obs: Option[Observation],
-      metricName: String
+  private def buckets(rows: DataFrame, keys: Seq[Column], elem: Column): DataFrame =
+    rows.groupBy(keys: _*).agg(sort_array(collect_list(elem)).as("ids"))
+
+  /** Keeps the first `maxBucket` ids of each bucket, a quadratic bound on
+    * pathological buckets (all-identical corpora). The cap is never silent:
+    * `truncated_buckets` and `buckets` ride the same pass as an observed
+    * metric, counted over the buckets this is given.
+    */
+  private def capBuckets(
+      bucketIds: DataFrame, maxBucket: Int, obs: Option[Observation], metricName: String
   ): DataFrame = {
-    val capped0 = bucketIds.where(size(col("ids")) > 1)
+    val capped = bucketIds
       .withColumn("truncated", size(col("ids")) > maxBucket)
       .withColumn("ids", slice(col("ids"), 1, maxBucket))
-    val truncExprs = Seq(
+    observed(capped, obs, metricName, Seq(
       sum(when(col("truncated"), 1L).otherwise(0L)).as("truncated_buckets"),
-      count(lit(1)).as("buckets"))
-    val capped = observed(capped0, obs, metricName, truncExprs)
-    capped.select(explode(pairArray(col("ids"))).as("p"))
+      count(lit(1)).as("buckets")))
+  }
+
+  /** Candidate pairs of the batch near-dup operators: bucket `rows` on
+    * `keys`, cap every bucket that can pair (`buckets` counts only those) and
+    * emit its distinct ordered pairs as `a`/`b`, which keep the element type
+    * so callers can carry per-id payload, e.g. simhashes, through the pair
+    * stage without re-joining.
+    */
+  private[operators] def cappedBucketPairs(
+      rows: DataFrame, keys: Seq[Column], elem: Column,
+      maxBucket: Int, obs: Option[Observation], metricName: String
+  ): DataFrame =
+    capBuckets(buckets(rows, keys, elem).where(size(col("ids")) > 1), maxBucket, obs, metricName)
+      .select(explode(pairArray(col("ids"))).as("p"))
       .select(col("p._1").as("a"), col("p._2").as("b"))
       .distinct()
+
+  /** The verify step of every near-dup operator that scores candidates:
+    * maps `id_<l>`, `id_<r>`, `<payload>_<l>`, `<payload>_<r>` of `joined`
+    * to (`id_<l>`, `id_<r>`, `scoreCol`) and keeps the rows scoring at least
+    * `threshold`. Joins reorder columns, so the select pins their order
+    * before the positional tuple encode.
+    */
+  private[graft] def scorePairs[T: TypeTag](
+      joined: DataFrame, sides: (String, String), payload: String,
+      scoreCol: String, threshold: Double
+  )(score: (T, T) => Double): DataFrame = {
+    val spark = joined.sparkSession
+    import spark.implicits._
+    val (l, r) = sides
+    joined.select(s"id_$l", s"id_$r", s"${payload}_$l", s"${payload}_$r")
+      .as[(Long, Long, T, T)]
+      .map { case (a, b, x, y) => (a, b, score(x, y)) }
+      .toDF(s"id_$l", s"id_$r", scoreCol)
+      .where(col(scoreCol) >= threshold)
+  }
+
+  /** Word-`shingleK` shingle Jaccard of two texts: the score of the MinHash
+    * paths, batch and streaming alike.
+    */
+  private[graft] def shingleJaccard(shingleK: Int): (String, String) => Double =
+    (x, y) => exactJaccard(shingles(x, shingleK), shingles(y, shingleK))
+
+  /** Joins each (id_a, id_b) pair to both texts of `df` and keeps the pairs
+    * whose `jaccard` is at least `threshold`.
+    */
+  private def verifyTexts(
+      pairs: DataFrame, df: DataFrame, textCol: String, idCol: String, threshold: Double
+  )(jaccard: (String, String) => Double): DataFrame = {
+    val texts = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+    val joined = pairs
+      .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("text", "text_a"), "id_a")
+      .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("text", "text_b"), "id_b")
+    scorePairs(joined, ("a", "b"), "text", "jaccard", threshold)(jaccard)
   }
 
   /** Exact dedup: hash-groupBy on the normalized text. Returns one row per
@@ -141,31 +193,12 @@ object Dedup {
       maxBucket: Int = 1000,
       obs: Option[Observation] = None
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val withSig = bandKeys(df, textCol, idCol, shingleK, nPerm, bands)
-
-    val buckets = withSig
+    val sig = bandKeys(df, textCol, idCol, shingleK, nPerm, bands)
       .select(col("id"), posexplode(col("band_keys")).as(Seq("band", "bkey")))
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-
-    // cap pathological buckets (all-identical corpora): quadratic bound, observable
-    val pairs = cappedBucketPairs(buckets, maxBucket, obs, "graft.dedup.minhash")
+    val pairs = cappedBucketPairs(sig, Seq(col("band"), col("bkey")), col("id"),
+      maxBucket, obs, "graft.dedup.minhash")
       .select(col("a").as("id_a"), col("b").as("id_b"))
-
-    val texts = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val verified = pairs
-      .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("text", "text_a"), "id_a")
-      .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("text", "text_b"), "id_b")
-      .select("id_a", "id_b", "text_a", "text_b") // joins reorder columns; pin before positional encode
-      .as[(Long, Long, String, String)]
-      .map { case (a, b, ta, tb) =>
-        (a, b, exactJaccard(shingles(ta, shingleK), shingles(tb, shingleK)))
-      }
-      .toDF("id_a", "id_b", "jaccard")
-      .where(col("jaccard") >= threshold)
-    verified
+    verifyTexts(pairs, df, textCol, idCol, threshold)(shingleJaccard(shingleK))
   }
 
   /** Band keys for ONE text — the shared fingerprint of batch near-dup, the
@@ -213,7 +246,7 @@ object Dedup {
     *
     * `maxBucket` (ADVICE r7): caps each (band, bkey) bucket AT BUILD TIME to
     * the first `maxBucket` ids in sorted order, with truncation observable
-    * (`truncated_buckets`/`buckets`, the batch probe's convention). The
+    * ([[capBuckets]], the cap the batch probe applies). The
     * STREAMING probe ([[graft.streaming.StreamingExtract.probeStream]]) is a
     * stateless stream-static join that cannot re-aggregate the index per
     * micro-batch, so a hot band key would otherwise multiply candidates per
@@ -235,15 +268,9 @@ object Dedup {
       case None => rows
       case Some(m) =>
         require(m > 0, s"maxBucket=$m must be positive")
-        val buckets0 = rows.groupBy(col("band"), col("bkey"))
-          .agg(sort_array(collect_list(col("id"))).as("ids"))
-          .withColumn("truncated", size(col("ids")) > m)
-          .withColumn("ids", slice(col("ids"), 1, m))
-        val truncExprs = Seq(
-          sum(when(col("truncated"), 1L).otherwise(0L)).as("truncated_buckets"),
-          count(lit(1)).as("buckets"))
-        val buckets = observed(buckets0, obs, "graft.dedup.minhash_index", truncExprs)
-        buckets.select(explode(col("ids")).as("id"), col("band"), col("bkey"))
+        capBuckets(buckets(rows, Seq(col("band"), col("bkey")), col("id")), m, obs,
+          "graft.dedup.minhash_index")
+          .select(explode(col("ids")).as("id"), col("band"), col("bkey"))
     }
   }
 
@@ -257,10 +284,10 @@ object Dedup {
     * Scale shape: the new slice is small relative to the store, so its
     * DISTINCT band keys broadcast into a semi join that prunes the index
     * scan before anything shuffles; only surviving index rows aggregate into
-    * candidate buckets, capped at `maxBucket` ids with the truncation count
-    * observable (`truncated_buckets`/`buckets`, same convention as the batch
-    * near-dup paths) — a pathological key degrades recall measurably, never
-    * melts a task. Within-slice duplicates are deliberately out of scope
+    * candidate buckets, capped at `maxBucket` ids by [[capBuckets]] with
+    * the truncation count observable, as on the batch near-dup paths (which
+    * count only the buckets that can pair) — a pathological key degrades
+    * recall measurably, never melts a task. Within-slice duplicates are deliberately out of scope
     * (that is the batch [[minhashNearDups]] job over the slice alone).
     */
   def minhashProbe(
@@ -276,35 +303,19 @@ object Dedup {
       maxBucket: Int = 1000,
       obs: Option[Observation] = None
   ): DataFrame = {
-    val spark = newDocs.sparkSession
-    import spark.implicits._
     val newSig = bandKeys(newDocs, textCol, idCol, shingleK, nPerm, bands)
       .select(col("id").as("id_new"), posexplode(col("band_keys")).as(Seq("band", "bkey")))
     val probeKeys = newSig.select(col("band"), col("bkey")).distinct()
     val hits = corpusIndex.join(broadcast(probeKeys), Seq("band", "bkey"), "left_semi")
-    val buckets0 = hits.groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .withColumn("truncated", size(col("ids")) > maxBucket)
-      .withColumn("ids", slice(col("ids"), 1, maxBucket))
-    val truncExprs = Seq(
-      sum(when(col("truncated"), 1L).otherwise(0L)).as("truncated_buckets"),
-      count(lit(1)).as("buckets"))
-    val buckets = observed(buckets0, obs, "graft.dedup.minhash_probe", truncExprs)
-    val cands = newSig.join(buckets, Seq("band", "bkey"))
+    val capped = capBuckets(buckets(hits, Seq(col("band"), col("bkey")), col("id")), maxBucket,
+      obs, "graft.dedup.minhash_probe")
+    val cands = newSig.join(capped, Seq("band", "bkey"))
       .select(col("id_new"), explode(col("ids")).as("id_corpus"))
       .distinct()
     val newTexts = newDocs.select(col(idCol).cast("long").as("id_new"), col(textCol).as("text_new"))
     val corp = corpusTexts.select(col(idCol).cast("long").as("id_corpus"), col(textCol).as("text_corpus"))
-    cands
-      .join(newTexts, "id_new")
-      .join(corp, "id_corpus")
-      .select("id_new", "id_corpus", "text_new", "text_corpus") // pin before positional encode
-      .as[(Long, Long, String, String)]
-      .map { case (n, c, tn, tc) =>
-        (n, c, exactJaccard(shingles(tn, shingleK), shingles(tc, shingleK)))
-      }
-      .toDF("id_new", "id_corpus", "jaccard")
-      .where(col("jaccard") >= threshold)
+    val joined = cands.join(newTexts, "id_new").join(corp, "id_corpus")
+    scorePairs(joined, ("new", "corpus"), "text", "jaccard", threshold)(shingleJaccard(shingleK))
   }
 
   /** All ordered pairs (a<b) from a sorted id array — pure column expression. */
@@ -350,8 +361,6 @@ object Dedup {
       minOverlap: Double = 0.9,
       obs: Option[Observation] = None
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     // The fingerprint table is consumed by FIVE subtrees below (df count,
     // rare join, per-doc sizes, buckets, shared counts) and column pruning
     // gives each a different projection, so exchange reuse never fires — the
@@ -365,16 +374,8 @@ object Dedup {
     // vs 12 stages/232 tasks/1.87 s clustered (commit 701c968, which also
     // holds the A/B probe's source). A wash on wall clock with more
     // scheduling; the plain checkpoint keeps AQE in charge of the width.
-    val fps = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) => TextFunctions.winnowFingerprints(t, k, w).map((id, _)) }
-      .toDF("id", "fp")
-      .localCheckpoint(eager = false)
-    val dfc0 = fps.groupBy("fp").agg(count(lit(1)).as("dfreq"))
-    val stopExprs = Seq(
-      sum(when(col("dfreq") > maxDf, 1L).otherwise(0L)).as("stop_fps"),
-      count(lit(1)).as("fps"))
-    val dfc = observed(dfc0, obs, "graft.dedup.winnow", stopExprs).where(col("dfreq") <= maxDf)
+    val fps = winnowIndex(df, textCol, idCol, k, w).localCheckpoint(eager = false)
+    val dfc = stopCounted(fps, maxDf, obs, "graft.dedup.winnow").where(col("dfreq") <= maxDf)
     // NOT checkpointed: rare sits DOWNSTREAM of the observed stop-fp
     // aggregation, and a localCheckpoint there hides the CollectMetrics node
     // behind a LogicalRDD — the stop_fps/fps observation silently stops
@@ -416,6 +417,21 @@ object Dedup {
       .flatMap { case (id, t) => TextFunctions.winnowFingerprints(t, k, w).map((id, _)) }
       .toDF("id", "fp")
   }
+
+  /** Document frequency (`dfreq`) of each `fp` of a fingerprint table. */
+  private def docFreq(fps: DataFrame): DataFrame =
+    fps.groupBy("fp").agg(count(lit(1)).as("dfreq"))
+
+  /** [[docFreq]] with the stop-fingerprint drop observed: `stop_fps` (df
+    * above `maxDf`) out of `fps`. Both winnow operators filter this one
+    * aggregate, so the drop they report is counted the same way.
+    */
+  private def stopCounted(
+      fps: DataFrame, maxDf: Int, obs: Option[Observation], metricName: String
+  ): DataFrame =
+    observed(docFreq(fps), obs, metricName, Seq(
+      sum(when(col("dfreq") > maxDf, 1L).otherwise(0L)).as("stop_fps"),
+      count(lit(1)).as("fps")))
 
   /** Screen NEW documents against a stored [[winnowIndex]] — the nightly
     * crawl shape for the winnowing family. Document frequency (and therefore
@@ -461,17 +477,12 @@ object Dedup {
     // guard job: UNOBSERVED twin of the stop aggregation (an Observation must
     // see exactly one action — the main job below keeps it), bounded by the
     // limit however many fps are hot
-    val nStop = corpusIndex.groupBy("fp").agg(count(lit(1)).as("dfreq"))
-      .where(col("dfreq") > maxDf).limit(maxStopFps + 1).count()
+    val nStop = docFreq(corpusIndex).where(col("dfreq") > maxDf).limit(maxStopFps + 1).count()
     require(nStop <= maxStopFps,
       s"winnowProbe stop-fp set exceeds maxStopFps=$maxStopFps (maxDf=$maxDf marks " +
         "that much of the corpus hot — raise maxDf, pre-strip boilerplate, or raise " +
         "maxStopFps explicitly up to 50000000)")
-    val dfc0 = corpusIndex.groupBy("fp").agg(count(lit(1)).as("dfreq"))
-    val stopExprs = Seq(
-      sum(when(col("dfreq") > maxDf, 1L).otherwise(0L)).as("stop_fps"),
-      count(lit(1)).as("fps"))
-    val stop = observed(dfc0, obs, "graft.dedup.winnow_probe", stopExprs)
+    val stop = stopCounted(corpusIndex, maxDf, obs, "graft.dedup.winnow_probe")
       .where(col("dfreq") > maxDf).select("fp")
     // rare on both sides = NOT a corpus stop fp (anti join; unseen fps pass —
     // df 0 is rare by definition). The stop set is bounded by the contract
@@ -692,10 +703,10 @@ object Dedup {
     * (measured 3,828-doc hot buckets on the driver's 37-word-vocabulary corpus
     * -> cap truncation -> recall loss); 3-hash bands still yielded ~1.0M
     * candidate pairs there, 4-hash bands cut that 5.4x (184k) with max bucket
-    * 124. Same shuffle-on-key, capped-bucket, exact-verify plan shape as
-    * minhash; truncation observable.
-    */
-  /** @param sketchEqualityPrefilter drop candidate pairs whose FULL bottom-m
+    * 124. Candidates come from [[cappedBucketPairs]] and are verified by
+    * [[verifyTexts]], as in [[minhashNearDups]]; truncation observable.
+    *
+    * @param sketchEqualityPrefilter drop candidate pairs whose FULL bottom-m
     *   sketches differ before the exact verify. Set equality implies sketch
     *   equality, so this is EXACT (zero recall change) whenever the threshold
     *   can only be met by identical shingle sets — e.g. threshold 0.999 on
@@ -735,25 +746,16 @@ object Dedup {
       .toDF("id", "sketch", "keys")
     // the bottom-m sketch rides inside the bucket elements (struct sorted by
     // id) so the pair stage can prefilter on it without a join back
-    val buckets = keyed
+    val sig = keyed
       .select(col("id"), col("sketch"), posexplode(col("keys")).as(Seq("band", "bkey")))
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(struct(col("id"), col("sketch")))).as("ids"))
-    val pairs0 = cappedBucketPairs(buckets, maxBucket, obs, "graft.dedup.ngram")
+    val pairs0 = cappedBucketPairs(sig, Seq(col("band"), col("bkey")),
+      struct(col("id"), col("sketch")), maxBucket, obs, "graft.dedup.ngram")
     val pairs = (if (sketchEqualityPrefilter) pairs0.where(col("a.sketch") === col("b.sketch"))
                  else pairs0)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val texts = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    pairs
-      .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("text", "text_a"), "id_a")
-      .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("text", "text_b"), "id_b")
-      .select("id_a", "id_b", "text_a", "text_b") // pin order before positional encode
-      .as[(Long, Long, String, String)]
-      .map { case (a, b, ta, tb) =>
-        (a, b, exactJaccard(ngramShingles(ta, k), ngramShingles(tb, k)))
-      }
-      .toDF("id_a", "id_b", "jaccard")
-      .where(col("jaccard") >= threshold)
+    verifyTexts(pairs, df, textCol, idCol, threshold) { (x, y) =>
+      exactJaccard(ngramShingles(x, k), ngramShingles(y, k))
+    }
   }
 
   // --- SimHash ---------------------------------------------------------------
@@ -803,12 +805,11 @@ object Dedup {
     // carry the simhash INSIDE the bucket elements (struct sorted by id): the
     // pair stage then has both hashes — no per-side join back and no second
     // recomputation of the source scan + simhash map
-    val buckets = hashed.select(col("id"), col("simhash"),
+    val chunks = hashed.select(col("id"), col("simhash"),
       explode(array((0 until 4).map(c =>
         struct(lit(c).as("chunk"), shiftright(col("simhash"), c * 16).bitwiseAND(lit(0xffffL)).as("ckey"))): _*)).as("c"))
-      .groupBy(col("c.chunk"), col("c.ckey"))
-      .agg(sort_array(collect_list(struct(col("id"), col("simhash")))).as("ids"))
-    cappedBucketPairs(buckets, maxBucket, obs, "graft.dedup.simhash")
+    cappedBucketPairs(chunks, Seq(col("c.chunk"), col("c.ckey")),
+      struct(col("id"), col("simhash")), maxBucket, obs, "graft.dedup.simhash")
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .where(col("hamming") <= maxHamming)

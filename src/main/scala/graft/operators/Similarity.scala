@@ -238,6 +238,35 @@ object Similarity {
     centroids.map(_.map(_.toFloat))
   }
 
+  /** The centroid of `cs` nearest to `v` by cosine, and that cosine. Strict
+    * `>`, so ties keep the lowest index. [[assignCells]] ranks its top-`spill`
+    * cells by sorting on (-cosine, cell) instead, which orders ±0.0 and NaN
+    * differently, so the two are kept apart.
+    */
+  private def nearestCentroid(cs: Array[Array[Float]], v: Array[Float]): (Int, Double) = {
+    var best = 0
+    var bestSim = Double.NegativeInfinity
+    var c = 0
+    while (c < cs.length) {
+      val s = cosine(cs(c), v)
+      if (s > bestSim) { bestSim = s; best = c }
+      c += 1
+    }
+    (best, bestSim)
+  }
+
+  /** Writes `centroids` to `path` as one parquet file of (`key`, centroid)
+    * rows, the key being the centroid's index.
+    */
+  private def writeCentroids(
+      spark: SparkSession, centroids: Array[Array[Float]], key: String, path: String
+  ): Unit = {
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
+      .toDF(key, "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
   /** K-MEANS TOPIC CLUSTERING as a first-class corpus report: deterministic
     * Lloyd-trained centroids ([[trainCentroids]] — bounded sample, fixed
     * init and iteration count, f64 math) broadcast into one narrow
@@ -262,13 +291,8 @@ object Similarity {
       centroidsOut: Option[String] = None
   ): DataFrame = {
     val spark = embeddings.sparkSession
-    import spark.implicits._
     val centroids = trainCentroids(embeddings, k, idCol = idCol, vecCol = vecCol)
-    centroidsOut.foreach { path =>
-      centroids.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
-        .toDF("cluster", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
+    centroidsOut.foreach(writeCentroids(spark, centroids, "cluster", _))
     kmeansAssignWith(embeddings, centroids, idCol, vecCol)
   }
 
@@ -292,8 +316,8 @@ object Similarity {
     * — the q_vector_ops cross-engine recipe: raw doubles are hash-unstable,
     * quanta pin six digits). Low sim = far from every topic = the corrupt /
     * out-of-distribution embeddings a curation pass drops before indexing.
-    * Same deterministic training + (cosine desc, cluster asc) tie rule as
-    * [[kmeansAssign]]; same shuffle-free broadcast-argmax scale shape.
+    * Same deterministic training as [[kmeansAssign]]; the assignment is
+    * [[nearestCentroid]], the same shuffle-free broadcast-argmax scale shape.
     */
   def kmeansOutliers(
       embeddings: DataFrame,
@@ -305,25 +329,13 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val centroids = trainCentroids(embeddings, k, idCol = idCol, vecCol = vecCol)
-    centroidsOut.foreach { path =>
-      centroids.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
-        .toDF("cluster", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
+    centroidsOut.foreach(writeCentroids(spark, centroids, "cluster", _))
     val bcC = spark.sparkContext.broadcast(centroids)
     embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .as[(Long, Array[Float])]
       .map { case (id, v) =>
-        val cs = bcC.value
-        var best = 0
-        var bestSim = Double.NegativeInfinity
-        var c = 0
-        while (c < cs.length) {
-          val s = cosine(cs(c), v)
-          if (s > bestSim) { bestSim = s; best = c } // strict >: ties keep lowest id
-          c += 1
-        }
-        (id, best, math.floor(bestSim * 1000000.0).toLong)
+        val (best, sim) = nearestCentroid(bcC.value, v)
+        (id, best, math.floor(sim * 1000000.0).toLong)
       }
       .toDF(idCol, "cluster", "sim_micro")
   }
@@ -380,9 +392,7 @@ object Similarity {
     val centroids = trainCentroids(embeddings, nCells, idCol = idCol, vecCol = vecCol)
     assignCells(embeddings, centroids, spill, idCol, vecCol)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/data")
-    centroids.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+    writeCentroids(spark, centroids, "cell", s"$indexDir/centroids")
     // index metadata: probes must size their heaps by the BUILD-time spill, or
     // in-task duplicates could evict true top-k entries
     Seq((nCells, spill)).toDF("n_cells", "spill")
@@ -597,19 +607,14 @@ object Similarity {
         }
       }
     }.toDF("table", "key", "id")
-    val buckets = keyed.groupBy(col("table"), col("key"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-    val pairs = Dedup.cappedBucketPairs(buckets, maxBucket, obs, "graft.similarity.cosine")
+    val pairs = Dedup.cappedBucketPairs(keyed, Seq(col("table"), col("key")), col("id"),
+      maxBucket, obs, "graft.similarity.cosine")
       .select(col("a").as("id_a"), col("b").as("id_b"))
     val vecs = base.toDF("id", "vec")
-    pairs
+    val joined = pairs
       .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b")), "id_b")
-      .select("id_a", "id_b", "vec_a", "vec_b") // joins reorder columns; pin before positional encode
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .map { case (a, b, va, vb) => (a, b, cosine(va, vb)) }
-      .toDF("id_a", "id_b", "cos")
-      .where(col("cos") >= threshold)
+    Dedup.scorePairs(joined, ("a", "b"), "vec", "cos", threshold)(cosine)
   }
 
   /** SEMANTIC DEDUPLICATION (SemDeDup — Abbas et al. 2023, arXiv:2303.09540):
@@ -634,8 +639,8 @@ object Similarity {
     * melt one task with a quadratic blowup). The default cap is paper-scale
     * cells (~10^4 members ≈ 5·10^7 pairs per cell — a bounded task); a 10^6
     * cell would mean ~5·10^11 pairs on one join key, so sizes that large are
-    * an explicit opt-in, never a default. Assignment is the same
-    * broadcast-argmax narrow map as [[kmeansAssign]]; training is
+    * an explicit opt-in, never a default. Assignment is the
+    * broadcast-argmax narrow map of [[nearestCentroid]]; training is
     * [[trainCentroids]]'s deterministic Lloyd.
     */
   def semDedup(
@@ -651,26 +656,11 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val centroids = trainCentroids(embeddings, k, idCol = idCol, vecCol = vecCol)
-    centroidsOut.foreach { path =>
-      centroids.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
-        .toDF("cluster", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
+    centroidsOut.foreach(writeCentroids(spark, centroids, "cluster", _))
     val bcC = spark.sparkContext.broadcast(centroids)
     val assigned = embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        val cs = bcC.value
-        var best = 0
-        var bestSim = Double.NegativeInfinity
-        var c = 0
-        while (c < cs.length) {
-          val s = cosine(cs(c), v)
-          if (s > bestSim) { bestSim = s; best = c } // strict >: ties keep lowest cluster
-          c += 1
-        }
-        (id, best, v)
-      }
+      .map { case (id, v) => (id, nearestCentroid(bcC.value, v)._1, v) }
       .toDF("id", "cluster", "vec")
       // materialize the assignment ONCE (the ivfAppend persist pattern; guide
       // §5 "caching is worth it when a DataFrame is reused"): the O(n·k·d)

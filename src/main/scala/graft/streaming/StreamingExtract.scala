@@ -174,7 +174,8 @@ object StreamingExtract {
     * per-micro-batch shuffle) -> watermark-bounded pair dedup (a pair seen
     * via several bands, or again within the horizon, emits once — state is
     * rate x horizon, never corpus size) -> stream-static id join for the
-    * corpus text -> exact shingle-Jaccard verify. A hot index key multiplies
+    * corpus text -> the exact shingle-Jaccard verify of the batch probe
+    * ([[graft.operators.Dedup.scorePairs]]). A hot index key multiplies
     * candidates per stream row: cap the STORED index's buckets at build time
     * via `minhashIndex(maxBucket = Some(m))` (ADVICE r7 — the cap now EXISTS
     * at build, truncation observable), which also keeps batch and stream
@@ -211,16 +212,10 @@ object StreamingExtract {
     val once = cand
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("id_new", "id_corpus")
-    once
-      .join(corpusTexts.select(col(idCol).cast("long").as("id_corpus"),
-        col(textCol).as("text_corpus")), "id_corpus")
-      .select("id_new", "id_corpus", "text_new", "text_corpus") // pin before positional encode
-      .as[(Long, Long, String, String)]
-      .map { case (n, c, tn, tc) =>
-        (n, c, Dedup.exactJaccard(Dedup.shingles(tn, shingleK), Dedup.shingles(tc, shingleK)))
-      }
-      .toDF("id_new", "id_corpus", "jaccard")
-      .where(col("jaccard") >= threshold)
+    val joined = once.join(corpusTexts.select(col(idCol).cast("long").as("id_corpus"),
+      col(textCol).as("text_corpus")), "id_corpus")
+    Dedup.scorePairs(joined, ("new", "corpus"), "text", "jaccard", threshold)(
+      Dedup.shingleJaccard(shingleK))
   }
 
   /** File-based continuous ingest: watch `inDir` for new transcript parquet,

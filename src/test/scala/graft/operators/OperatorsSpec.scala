@@ -544,6 +544,68 @@ class OperatorsSpec extends AnyFunSuite {
     assert(obsS.get("truncated_buckets").asInstanceOf[Long] > 0)
   }
 
+  test("near-dup observations report exact counts on the degenerate corpus") {
+    import spark.implicits._
+    import org.apache.spark.sql.Observation
+    // the all-identical corpus plus a rare duplicate pair and one unique doc:
+    // the identical docs fill one bucket per band, the pair adds two-id
+    // buckets, the unique doc singletons. The pair paths count only buckets
+    // that can pair; the index and probe caps count singletons too. The rare
+    // pair also keeps every output non-empty, so the metrics are reported.
+    val same = "the same text in every single row"
+    val rare = "very unusual phrasing zyxwv qpjkt marsupial quixotic"
+    val unique = "alpha bravo charlie delta echo foxtrot golf hotel"
+    val deg = ((0 until 200).map(i => (i.toLong, same)) ++
+      Seq((1000L, rare), (1001L, rare), (1002L, unique))).toDF("doc_id", "text")
+    def observe(keys: String*)(run: Option[Observation] => Long): Seq[Long] = {
+      val o = Observation()
+      run(Some(o))
+      val m = o.get
+      keys.map(m(_).asInstanceOf[Long])
+    }
+    val trunc = observe("truncated_buckets", "buckets") _
+    val stop = observe("stop_fps", "fps") _
+    val slice = Seq((9999L, same), (9998L, unique)).toDF("doc_id", "text")
+    val v = Array(0.5f, 0.25f, -0.125f, 1.0f)
+    val vecs = ((0 until 200).map(i => (i.toLong, v)) ++
+      Seq((1000L, Array(-1f, 2f, 0.5f, 0.25f)), (1001L, Array(-1f, 2f, 0.5f, 0.25f)),
+        (1002L, v.map(-_)))).toDF("vec_id", "embedding")
+    val got = Seq(
+      "graft.dedup.minhash" -> trunc(o => Dedup.minhashNearDups(deg, "text", "doc_id",
+        threshold = 0.999, maxBucket = 50, obs = o).count()),
+      "graft.dedup.ngram" -> trunc(o => Dedup.ngramJaccardNearDups(deg, "text", "doc_id",
+        threshold = 0.999, maxBucket = 50, obs = o).count()),
+      "graft.dedup.simhash" -> trunc(o => Dedup.simhashNearDups(deg, "text", "doc_id",
+        maxBucket = 50, obs = o).count()),
+      "graft.dedup.minhash_index" -> trunc(o => Dedup.minhashIndex(deg, "text", "doc_id",
+        maxBucket = Some(25), obs = o).count()),
+      "graft.dedup.minhash_probe" -> trunc(o => Dedup.minhashProbe(slice,
+        Dedup.minhashIndex(deg, "text", "doc_id"), deg, "text", "doc_id",
+        threshold = 0.999, maxBucket = 50, obs = o).count()),
+      "graft.similarity.cosine" -> trunc(o => Similarity.cosineNearDups(vecs,
+        threshold = 0.999, maxBucket = 16, obs = o).count()),
+      "graft.dedup.winnow" -> stop(o => Dedup.winnowNearDups(deg, "text", "doc_id",
+        obs = o).count()),
+      "graft.dedup.winnow_probe" -> stop(o => Dedup.winnowProbe(
+        Seq((9999L, rare)).toDF("doc_id", "text"), Dedup.winnowIndex(deg, "text", "doc_id"),
+        "text", "doc_id", obs = o).count()))
+    // computed by the operators before their bucket and stop-fp stages were
+    // shared. The pair paths: one truncated bucket of identical rows per band
+    // (minhash 16, ngram 3), chunk (simhash 4) or table (cosine 8), and as
+    // many pair buckets. The index (32 bands): identical, pair and unique
+    // buckets; the probe: the identical and the unique doc's buckets.
+    val want = Seq(
+      "graft.dedup.minhash" -> Seq(16L, 32L),
+      "graft.dedup.ngram" -> Seq(3L, 6L),
+      "graft.dedup.simhash" -> Seq(4L, 8L),
+      "graft.dedup.minhash_index" -> Seq(32L, 96L),
+      "graft.dedup.minhash_probe" -> Seq(32L, 64L),
+      "graft.similarity.cosine" -> Seq(8L, 16L),
+      "graft.dedup.winnow" -> Seq(9L, 41L),
+      "graft.dedup.winnow_probe" -> Seq(9L, 41L))
+    assert(got == want)
+  }
+
   test("cosine near-dup LSH finds all exact-duplicate vectors") {
     import spark.implicits._
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
