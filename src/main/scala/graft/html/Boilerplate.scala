@@ -27,11 +27,11 @@ object HtmlBoilerplate {
   private val boilerplateContainers = Set("nav", "header", "footer", "aside")
   private val skipContentTags = Set("script", "style", "template", "noscript")
 
-  final case class Block(text: String, words: Int, linkWords: Int, boiler: Boolean) {
+  private final case class Block(text: String, words: Int, linkWords: Int, boiler: Boolean) {
     def linkDensity: Double = if (words == 0) 0.0 else linkWords.toDouble / words
   }
 
-  def isContent(b: Block): Boolean =
+  private def isContent(b: Block): Boolean =
     !b.boiler && b.words >= 4 && b.linkDensity <= 0.5
 
   def extract(html: String): ExtractResult = {
@@ -48,7 +48,7 @@ object HtmlBoilerplate {
   }
 
   /** Tokenize + segment. Hand-rolled scanner: no external parser dependencies. */
-  def blocks(html: String): Vector[Block] = {
+  private def blocks(html: String): Vector[Block] = {
     val out = Vector.newBuilder[Block]
     val text = new StringBuilder
     var words = 0
@@ -76,7 +76,6 @@ object HtmlBoilerplate {
           else {
             val rawTag = html.substring(i + 1, close)
             val isEnd = rawTag.startsWith("/")
-            val nameEnd0 = rawTag.indexWhere(ch => ch.isWhitespace || ch == '/')
             val body = if (isEnd) rawTag.substring(1) else rawTag
             val nameEnd = body.indexWhere(ch => ch.isWhitespace || ch == '/')
             val name = (if (nameEnd < 0) body else body.substring(0, nameEnd)).toLowerCase
@@ -102,7 +101,6 @@ object HtmlBoilerplate {
             } else if (name == "a") {
               if (isEnd) linkDepth = math.max(0, linkDepth - 1) else linkDepth += 1
             }
-            val _ = nameEnd0
           }
         }
       } else {

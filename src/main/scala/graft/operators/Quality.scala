@@ -3,36 +3,106 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Corpus-statistics quality scoring: unigram SURPRISAL — the
-  * perplexity-style rarity filter (C4/Gopher-family pipelines score documents
-  * against a language model; the unigram model is its scale-correct first
-  * rung, derivable from the corpus itself in one pass).
+/** Corpus-statistics quality and tokenization operators (Gopher/CCNet
+  * family). They share one tokenization rule: lowercased whitespace words,
+  * empty tokens dropped, taken as an array ([[words]]) or as one row per word
+  * ([[wordRows]]). Each shared corpus-statistics step is written once:
+  * [[countWords]], [[topWords]] (the top-V cut by count
+  * desc, word asc — a total order, so reruns and engines agree on the
+  * boundary), [[longScalar]], [[requireBroadcastable]] and [[everyDoc]] (a
+  * doc with no tokens is kept with its defaults: a quality filter must SEE
+  * the empty doc to reject it).
   *
-  * All arithmetic is INTEGER so any engine reproduces it bit-for-bit: a
-  * word's surprisal is the bit-length of the integer ratio N / c(w)
+  * All scores are INTEGER arithmetic so any engine reproduces them
+  * bit-for-bit; e.g. a word's surprisal is the bit-length of N / c(w)
   * (`length(bin(N DIV c))` = floor(log2(N/c)) + 1 — both Spark and DuckDB
-  * ship `bin`), i.e. rarer words contribute more bits; out-of-vocabulary
-  * words cost `length(bin(N)) + 1` bits — one more than the rarest possible
-  * in-vocab word. No floating-point log whose last-ulp could differ between
-  * engines' libm.
-  *
-  * Scale shape: ONE shuffle on word for the vocabulary count (map-side
-  * combined), a 1-row total + driver-bounded top-V `TakeOrderedAndProject`
-  * (V+1 rows by construction — the same bounded-collect contract as IVF
-  * centroids), the corpus side then BROADCAST-joins the tiny vocab (never
-  * shuffles on word again), and the per-doc rollup shuffles on doc_id with
-  * partial aggregation. A 100 TB corpus pays two map-side-combined shuffles
-  * and no global sort.
+  * ship `bin`), never a floating-point log whose last ulp could differ
+  * between engines' libm.
   */
 object Quality {
+
+  /** `text` lowercased and split on whitespace runs. Spark's `trim` strips
+    * spaces only, so a tab-led text splits to a leading empty token, which
+    * every caller drops with [[nonEmpty]].
+    */
+  private def splitWords(text: Column): Column = split(lower(trim(text)), "\\s+")
+
+  private def nonEmpty(word: Column): Column = length(word) > 0
+
+  /** The words of `text` as an array; null for a null text. */
+  private def words(text: Column): Column = filter(splitWords(text), nonEmpty(_))
+
+  /** One row per word of `textCol`, named `word`, after the `keep` columns
+    * (and `pos`, its index in the split, when `positions`). The split is
+    * exploded and the empty tokens filtered from the rows: a Filter on the
+    * exploded rows, not a filtered copy of every document's array.
+    */
+  private def wordRows(df: DataFrame, textCol: String, keep: Seq[Column] = Nil,
+      positions: Boolean = false): DataFrame = {
+    val rows =
+      if (positions) posexplode(splitWords(col(textCol))).as(Seq("pos", "word"))
+      else explode(splitWords(col(textCol))).as("word")
+    df.select(keep :+ rows: _*).where(nonEmpty(col("word")))
+  }
+
+  /** Occurrences of each word of a [[wordRows]] table: (word, c). */
+  private def countWords(rows: DataFrame): DataFrame =
+    rows.groupBy("word").agg(count(lit(1)).as("c"))
+
+  /** The `n` most frequent rows of a [[countWords]] table, ties by word ascending. */
+  private def topWords(counts: DataFrame, n: Int): DataFrame =
+    counts.orderBy(col("c").desc, col("word").asc).limit(n)
+
+  /** The one-row aggregate `agg` over `df`, a null read as 0. Callers inline
+    * it as a literal: attaching a 1-row scalar via crossJoin(broadcast(...))
+    * plans as a BroadcastNestedLoopJoin, which the engine bans outright.
+    */
+  private def longScalar(df: DataFrame, agg: Column): Long = {
+    val r = df.agg(agg).collect()(0)
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  /** Fail unless `table`, keyed by its first column, may be broadcast: an
+    * explicit broadcast hint bypasses Spark's size check, so this checks at
+    * most `maxRows` rows (the caller's bound `param`) and no duplicate key.
+    * Both probes are bounded jobs.
+    */
+  private def requireBroadcastable(
+      table: DataFrame, maxRows: Int, param: String, what: String, key: String): Unit = {
+    require(maxRows > 0 && maxRows < Int.MaxValue, s"$param=$maxRows out of range")
+    val probe = table.limit(maxRows + 1).count()
+    require(probe <= maxRows,
+      s"$what exceeds $param=$maxRows — a table this large belongs in a shuffle join, not a broadcast")
+    val distinctProbe = table.select(col(table.columns(0))).distinct().limit(maxRows + 1).count()
+    require(distinctProbe == probe,
+      s"$what has ${probe - distinctProbe} duplicate $key keys — the join would silently duplicate their hits")
+  }
+
+  /** `perDoc` left-joined onto every row of `ids` on its one column, that
+    * column first, then each (name, value, default) as `coalesce(value, default)`.
+    */
+  private def everyDoc(ids: DataFrame, perDoc: DataFrame)(cols: (String, Column, Any)*): DataFrame = {
+    val id = ids.columns(0)
+    ids.join(perDoc, Seq(id), "left")
+      .select(col(id) +: cols.map { case (name, v, d) => coalesce(v, lit(d)).as(name) }: _*)
+  }
 
   /** Per-document surprisal report: (idCol, n_tokens, n_oov, surprisal_bits).
     *
     * Vocabulary = the top `vocabSize` words of `df` itself by occurrence count
     * (ties broken by word ascending — total order, so reruns and engines agree
     * on the boundary), counted over lowercased whitespace tokens. Documents
-    * with zero tokens report (0, 0, 0) — kept, not dropped (a quality filter
-    * must SEE the empty doc to reject it).
+    * with zero tokens report (0, 0, 0). Out-of-vocabulary words cost
+    * `length(bin(N)) + 1` bits — one more than the rarest possible in-vocab
+    * word.
+    *
+    * Scale shape: ONE shuffle on word for the vocabulary count (map-side
+    * combined), a 1-row total + driver-bounded top-V `TakeOrderedAndProject`
+    * (V+1 rows by construction — the same bounded-collect contract as IVF
+    * centroids), the corpus side then BROADCAST-joins the tiny vocab (never
+    * shuffles on word again), and the per-doc rollup shuffles on doc_id with
+    * partial aggregation. A 100 TB corpus pays two map-side-combined shuffles
+    * and no global sort.
     */
   def unigramSurprisal(
       df: DataFrame,
@@ -41,35 +111,20 @@ object Quality {
       vocabSize: Int
   ): DataFrame = {
     require(vocabSize > 0, s"vocabSize $vocabSize must be positive")
-    val words = df
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
-      .where(length(col("word")) > 0)
     // the word-count table is consumed twice (total + top-V cut) — lazily
     // materialize so the corpus explode+count runs once (r9; it is the
     // Zipf-bounded distinct-word table, the natural working set)
-    val counts = words.groupBy("word").agg(count(lit(1)).as("c"))
+    val counts = countWords(wordRows(df, textCol))
       .localCheckpoint(eager = false)
     // total BEFORE the top-V cut: N is the corpus token count, so OOV cost and
-    // in-vocab bits stay comparable however small vocabSize is. Collected as a
-    // SINGLE row (bounded by construction — the same driver-collect contract
-    // as IVF centroids) and inlined as a literal: attaching a 1-row scalar via
-    // crossJoin(broadcast(...)) plans as a BroadcastNestedLoopJoin, which the
-    // engine bans outright rather than whitelisting benign shapes.
-    val nTotal: Long = {
-      val r = counts.agg(sum(col("c"))).collect()(0)
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
+    // in-vocab bits stay comparable however small vocabSize is
+    val nTotal = longScalar(counts, sum(col("c")))
     val oovBits = java.lang.Long.toBinaryString(nTotal).length.toLong + 1
-    val vocab = counts
-      .orderBy(col("c").desc, col("word").asc)
-      .limit(vocabSize)
+    val vocab = topWords(counts, vocabSize)
       .select(
         col("word"),
         length(bin(expr(s"CAST($nTotal AS BIGINT) DIV c"))).as("bits"))
-    val docTokens = df
-      .select(col(idCol), explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
-      .where(length(col("word")) > 0)
-    val scored = docTokens
+    val scored = wordRows(df, textCol, Seq(col(idCol)))
       .join(broadcast(vocab), Seq("word"), "left")
       .select(
         col(idCol),
@@ -80,13 +135,10 @@ object Quality {
         count(lit(1)).as("n_tokens"),
         sum(col("is_oov")).as("n_oov"),
         sum(col("tok_bits").cast("long")).as("surprisal_bits"))
-    df.select(col(idCol))
-      .join(scored, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_oov"), lit(0L)).as("n_oov"),
-        coalesce(col("surprisal_bits"), lit(0L)).as("surprisal_bits"))
+    everyDoc(df.select(col(idCol)), scored)(
+      ("n_tokens", col("n_tokens"), 0L),
+      ("n_oov", col("n_oov"), 0L),
+      ("surprisal_bits", col("surprisal_bits"), 0L))
   }
 
   /** Gopher-family DUPLICATE-N-GRAM repetition metrics — the canonical
@@ -119,8 +171,7 @@ object Quality {
     */
   def gopherRepetition(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = filter(split(lower(trim(col(textCol))), "\\s+"), w => length(w) > 0)
-    val base = df.select(col(idCol), toks.as("w")).withColumn("m", size(col("w")))
+    val base = df.select(col(idCol), words(col(textCol)).as("w")).withColumn("m", size(col("w")))
     // ONE explode of the corpus (VERDICT r7 #5 — the r7 shape still re-read
     // the token table three more times for nch/gram5/tokLen and ran a
     // 24-exchange plan): every token position carries its token LENGTH and
@@ -161,15 +212,13 @@ object Quality {
         sum(when(col("cov") === 1, col("l")).otherwise(lit(0))).cast("int").as("dup5_chars"),
         top("g2", "c2").as("t2"),
         top("g3", "c3").as("t3"))
-    df.select(col(idCol))
-      .join(perDoc, Seq(idCol), "left") // empty docs explode to no rows
-      .select(col(idCol),
-        coalesce(col("n_chars_tok"), lit(0)).as("n_chars_tok"),
-        coalesce((-col("t2.nc")).cast("int"), lit(0)).as("top2_count"),
-        coalesce((-col("t2.nc") * length(col("t2.g"))).cast("int"), lit(0)).as("top2_chars"),
-        coalesce((-col("t3.nc")).cast("int"), lit(0)).as("top3_count"),
-        coalesce((-col("t3.nc") * length(col("t3.g"))).cast("int"), lit(0)).as("top3_chars"),
-        coalesce(col("dup5_chars"), lit(0)).as("dup5_chars"))
+    everyDoc(df.select(col(idCol)), perDoc)( // empty docs explode to no rows
+      ("n_chars_tok", col("n_chars_tok"), 0),
+      ("top2_count", (-col("t2.nc")).cast("int"), 0),
+      ("top2_chars", (-col("t2.nc") * length(col("t2.g"))).cast("int"), 0),
+      ("top3_count", (-col("t3.nc")).cast("int"), 0),
+      ("top3_chars", (-col("t3.nc") * length(col("t3.g"))).cast("int"), 0),
+      ("dup5_chars", col("dup5_chars"), 0))
   }
 
   /** VOCABULARY TOKENIZATION: map each document's words to integer token ids
@@ -200,17 +249,12 @@ object Quality {
   ): DataFrame = {
     require(vocabSize > 0 && vocabSize <= 65536,
       s"vocabSize $vocabSize out of (0, 65536] — larger vocabs need the broadcast-join variant")
-    val words = df
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
-      .where(length(col("word")) > 0)
-    val vocab: Array[String] = words.groupBy("word").agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("word").asc)
-      .limit(vocabSize)
-      .select(col("word")).collect().map(_.getString(0))
+    val vocab: Array[String] =
+      topWords(countWords(wordRows(df, textCol)), vocabSize)
+        .select(col("word")).collect().map(_.getString(0))
     val oovId = vocab.length // may be < vocabSize on a small corpus
     val idMap = typedLit(vocab.zipWithIndex.toMap)
-    val toks = filter(split(lower(trim(col(textCol))), "\\s+"), w => length(w) > 0)
-    val ids = transform(toks, w => coalesce(element_at(idMap, w), lit(oovId)))
+    val ids = transform(words(col(textCol)), w => coalesce(element_at(idMap, w), lit(oovId)))
     df.select(
       col(idCol),
       ids.as("token_ids"),
@@ -247,20 +291,7 @@ object Quality {
       oovId: Int,
       maxVocabRows: Int = 10000000
   ): DataFrame = {
-    require(maxVocabRows > 0 && maxVocabRows < Int.MaxValue,
-      s"maxVocabRows=$maxVocabRows out of range")
-    val probe = vocab.limit(maxVocabRows + 1).count()
-    require(probe <= maxVocabRows,
-      s"vocab exceeds maxVocabRows=$maxVocabRows — a vocabulary this large belongs " +
-        "in a shuffle join, not a broadcast")
-    // a duplicate word would SILENTLY duplicate every occurrence through the
-    // join (inflating n_tokens and the id arrays) — fail loudly instead;
-    // the check is one more bounded job over the small-by-contract side
-    val distinctProbe = vocab.select(col(vocab.columns(0)))
-      .distinct().limit(maxVocabRows + 1).count()
-    require(distinctProbe == probe,
-      s"vocab has ${probe - distinctProbe} duplicate word keys — id assignment would " +
-        "silently duplicate tokens")
+    requireBroadcastable(vocab, maxVocabRows, "maxVocabRows", "vocab", "word")
     val v = vocab.select(col(vocab.columns(0)).as("_tok"), col(vocab.columns(1)).cast("int").as("_tid"))
     val toks = df.select(col(idCol), posexplode(toksCol).as(Seq("_ord", "_tok")))
     val ids = toks.join(broadcast(v), Seq("_tok"), "left")
@@ -272,11 +303,10 @@ object Quality {
           x => x.getField("_tid")).as("token_ids"),
         count(lit(1)).cast("int").as("n_tokens"),
         sum(when(col("_tid") === oovId, 1).otherwise(0)).cast("int").as("n_oov"))
-    df.select(col(idCol)).join(ids, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("token_ids"), array().cast("array<int>")).as("token_ids"),
-        coalesce(col("n_tokens"), lit(0)).as("n_tokens"),
-        coalesce(col("n_oov"), lit(0)).as("n_oov"))
+    everyDoc(df.select(col(idCol)), ids)(
+      ("token_ids", col("token_ids"), array().cast("array<int>")),
+      ("n_tokens", col("n_tokens"), 0),
+      ("n_oov", col("n_oov"), 0))
   }
 
   /** MODEL-BASED QUALITY FILTERING inference (the fastText-style linear
@@ -310,18 +340,7 @@ object Quality {
   ): DataFrame = {
     require(dim > 0 && (dim & (dim - 1)) == 0,
       s"dim=$dim must be a positive power of two (unsigned/signed residue parity)")
-    require(maxWeightRows > 0, s"maxWeightRows=$maxWeightRows out of range")
-    val probe = weights.limit(maxWeightRows + 1).count()
-    require(probe <= maxWeightRows,
-      s"weights exceed maxWeightRows=$maxWeightRows — a weight table this large " +
-        "belongs in a shuffle join, not a broadcast")
-    // duplicate buckets would silently double-count every feature hit
-    // through the join — same loud-guard discipline as tokenizeWithVocabTable
-    val distinctProbe = weights.select(col(weights.columns(0)))
-      .distinct().limit(maxWeightRows + 1).count()
-    require(distinctProbe == probe,
-      s"weights have ${probe - distinctProbe} duplicate bucket keys — scores would " +
-        "silently double-count features")
+    requireBroadcastable(weights, maxWeightRows, "maxWeightRows", "weight table", "bucket")
     val w = weights.select(col(weights.columns(0)).cast("int").as("_bucket"),
       col(weights.columns(1)).cast("long").as("_w"))
     // feature hashing as PURE column expressions: split/filter/explode plus
@@ -329,19 +348,17 @@ object Quality {
     // stays inside whole-stage codegen (a typed flatMap here would insert a
     // Serialize/DeserializeToObject boundary); pmod = the nonneg residue
     val feats = df
-      .select(col(idCol).cast("long").as("_id"),
-        explode(filter(split(lower(trim(col(textCol))), "\\s+"),
-          t => length(t) > 0)).as("_w0"))
+      .select(col(idCol).cast("long").as("_id"), explode(words(col(textCol))).as("_w0"))
       .select(col("_id"),
         pmod(graft.functions.FnvExpr.fnv1a64(col("_w0")), lit(dim.toLong)).cast("int").as("_bucket"))
     val scored = feats.join(broadcast(w), Seq("_bucket"), "left")
       .groupBy(col("_id"))
       .agg(count(lit(1)).cast("int").as("n_tokens"),
         (sum(coalesce(col("_w"), lit(0L))) + lit(biasMilli)).as("score_milli"))
-    df.select(col(idCol).cast("long").as("_id")).join(scored, Seq("_id"), "left")
-      .select(col("_id").as(idCol),
-        coalesce(col("n_tokens"), lit(0)).as("n_tokens"),
-        coalesce(col("score_milli"), lit(biasMilli)).as("score_milli"))
+    everyDoc(df.select(col(idCol).cast("long").as("_id")), scored)(
+      ("n_tokens", col("n_tokens"), 0),
+      ("score_milli", col("score_milli"), biasMilli))
+      .withColumnRenamed("_id", idCol)
       .withColumn("keep", col("score_milli") >= thresholdMilli)
   }
 
@@ -369,8 +386,8 @@ object Quality {
     val spark = df.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(merges.toArray)
-    df.select(col(idCol).cast("long").as("_id"), lower(trim(col(textCol))).as("_t"))
-      .as[(Long, String)]
+    df.select(col(idCol).cast("long").as("_id"), words(col(textCol)).as("_w"))
+      .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val ms = bc.value
         val cache = new java.util.HashMap[String, Array[String]]()
@@ -388,10 +405,7 @@ object Quality {
             arr
           }
         }
-        it.map { case (id, t) =>
-          val words = t.split("\\s+").filter(_.nonEmpty)
-          (id, words.flatMap(encode).toSeq)
-        }
+        it.map { case (id, ws) => (id, ws.flatMap(encode)) }
       }
       .toDF(idCol, "subwords")
   }
@@ -411,7 +425,7 @@ object Quality {
     * ~1000x the OOV bit cost) whose unpartitioned cumulative window runs over
     * that tiny histogram only — never the corpus; the two tercile scalars are
     * a 1-row bounded driver collect inlined as literals (the BNLJ-free scalar
-    * attach, see [[unigramSurprisal]]'s total). Labeling is then one
+    * attach, [[longScalar]]). Labeling is then one
     * codegen'd CASE in the scan of the scored table.
     */
   def perplexityBuckets(
@@ -424,8 +438,8 @@ object Quality {
       keepTail: Double = 0.1,
       salt: Long = 11L
   ): DataFrame = {
-    for ((n, f) <- Seq("keepHead" -> keepHead, "keepMiddle" -> keepMiddle, "keepTail" -> keepTail))
-      require(f >= 0.0 && f <= 1.0, s"$n $f out of [0,1]")
+    val (tHead, tMiddle, tTail) =
+      (Sampling.threshold(keepHead), Sampling.threshold(keepMiddle), Sampling.threshold(keepTail))
     val scored = unigramSurprisal(df, textCol, idCol, vocabSize)
       .withColumn("bpt_milli",
         when(col("n_tokens") > 0, expr("surprisal_bits * 1000 DIV n_tokens")))
@@ -447,8 +461,6 @@ object Quality {
     val (t33, t66) =
       if (tRow.isNullAt(0)) (0L, 0L) // empty / all-empty corpus: everything non-empty is head
       else (tRow.getLong(0), tRow.getLong(1))
-    val space = 4294967296L
-    def thr(f: Double): Long = math.round(f * space)
     val h = Sampling.saltedHash(col(idCol), salt)
     scored
       .withColumn("bucket",
@@ -458,9 +470,9 @@ object Quality {
           .otherwise(lit("tail")))
       .withColumn("keep",
         when(col("bucket") === "empty", lit(false))
-          .when(col("bucket") === "head", h < thr(keepHead))
-          .when(col("bucket") === "middle", h < thr(keepMiddle))
-          .otherwise(h < thr(keepTail)))
+          .when(col("bucket") === "head", h < tHead)
+          .when(col("bucket") === "middle", h < tMiddle)
+          .otherwise(h < tTail))
       .select(col(idCol), col("n_tokens"), col("bpt_milli"), col("bucket"), col("keep"))
   }
 
@@ -492,27 +504,21 @@ object Quality {
       textCol: String,
       idCol: String
   ): DataFrame = {
-    val toks = df
-      .select(col(idCol), posexplode(split(lower(trim(col(textCol))), "\\s+")).as(Seq("pos", "word")))
-      .where(length(col("word")) > 0)
+    val toks = wordRows(df, textCol, Seq(col(idCol)), positions = true)
     // uni feeds four subtrees (total, the unigram join, the context join)
     // and paired feeds two (bigram counts, the scored spine) — materialize
     // both once so the corpus token explode runs twice (uni + paired) rather
     // than ~5x, and the per-doc lag window sorts once (r9)
-    val uni = toks.groupBy("word").agg(count(lit(1)).as("cu"))
-      .localCheckpoint(eager = false)
-    val nTotal: Long = {
-      val r = uni.agg(sum(col("cu"))).collect()(0) // 1 row by construction
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
+    val uni = countWords(toks).localCheckpoint(eager = false)
+    val nTotal = longScalar(uni, sum(col("c")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("pos"))
     val paired = toks.withColumn("prev", lag(col("word"), 1).over(w))
       .localCheckpoint(eager = false)
     val bi = paired.where(col("prev").isNotNull)
       .groupBy(col("prev"), col("word")).agg(count(lit(1)).as("cb"))
-    val ctx = uni.select(col("word").as("prev"), col("cu").as("cp"))
-    val uniBits = length(bin(expr(s"CAST($nTotal AS BIGINT) DIV cu"))).cast("long")
+    val ctx = uni.select(col("word").as("prev"), col("c").as("cp"))
+    val uniBits = length(bin(expr(s"CAST($nTotal AS BIGINT) DIV c"))).cast("long")
     val scored = paired
       .join(uni, Seq("word"))
       .join(ctx, Seq("prev"), "left")
@@ -530,13 +536,10 @@ object Quality {
         count(lit(1)).as("n_tokens"),
         sum(col("hit")).as("n_bigram_hits"),
         sum(col("tok_bits")).as("surprisal_bits"))
-    df.select(col(idCol))
-      .join(scored, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_bigram_hits"), lit(0L)).as("n_bigram_hits"),
-        coalesce(col("surprisal_bits"), lit(0L)).as("surprisal_bits"))
+    everyDoc(df.select(col(idCol)), scored)(
+      ("n_tokens", col("n_tokens"), 0L),
+      ("n_bigram_hits", col("n_bigram_hits"), 0L),
+      ("surprisal_bits", col("surprisal_bits"), 0L))
   }
 
   // --- Gopher quality-rule battery (Rae et al. 2021, §A1.1) ---------------------
@@ -567,20 +570,20 @@ object Quality {
       minWords: Int = 50,
       maxWords: Int = 100000
   ): DataFrame = {
-    val words = filter(split(lower(trim(col(textCol))), "\\s+"), w => length(w) > 0)
-    val nWords = size(words).cast("long")
-    val nChars = aggregate(transform(words, w => length(w).cast("long")), lit(0L), _ + _)
+    val ws = words(col(textCol))
+    val nWords = size(ws).cast("long")
+    val nChars = aggregate(transform(ws, w => length(w).cast("long")), lit(0L), _ + _)
     // floor(double-div) == integer div for these nonnegative magnitudes
     // (values << 2^53 — exact in double); Spark's `/` on longs is fractional
     val meanLenMilli = when(nWords > 0, floor(nChars * 1000L / nWords)).otherwise(0L)
-    val nAlphaWords = size(filter(words, w => w.rlike("[a-z]"))).cast("long")
+    val nAlphaWords = size(filter(ws, w => w.rlike("[a-z]"))).cast("long")
     // symbols counted CHARACTER-wise across the doc: '#' and the ellipsis
     // (both the U+2026 char and the three-dot spelling)
-    val joined = concat_ws(" ", words)
+    val joined = concat_ws(" ", ws)
     val nSymbols = (length(joined) - length(regexp_replace(joined, "#|…", "")) +
       (length(joined) - length(regexp_replace(joined, "\\.\\.\\.", ""))) / 3).cast("long")
     val stopList = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-    val nStop = size(filter(words, w => w.isInCollection(stopList))).cast("long")
+    val nStop = size(filter(ws, w => w.isInCollection(stopList))).cast("long")
     df.select(
       col(idCol),
       nWords.as("n_words"),
@@ -624,18 +627,13 @@ object Quality {
       topK: Int = 3
   ): DataFrame = {
     require(topK > 0 && topK <= 1000, s"topK $topK out of range")
-    val tokens = df.select(col(idCol).as("id"),
-      explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
-      .where(length(col("word")) > 0)
+    val tokens = wordRows(df, textCol, Seq(col(idCol).as("id")))
     // tf feeds both the document-frequency rollup and the scored join —
     // materialize once (r9)
     val tf = tokens.groupBy("id", "word").agg(count(lit(1)).as("tf"))
       .localCheckpoint(eager = false)
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    val nDocs: Long = {
-      val r = df.select(countDistinct(col(idCol))).collect()(0) // 1 row by construction
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
+    val nDocs = longScalar(df, countDistinct(col(idCol)))
     val idf = dfreq.withColumn("idf_bits",
       length(bin(floor(lit(nDocs).cast("long") / col("df")))).cast("long"))
     val scored = tf.join(idf, "word")
@@ -675,16 +673,14 @@ object Quality {
     */
   def bpePairStats(df: DataFrame, textCol: String, topN: Int): DataFrame = {
     require(topN > 0 && topN <= 1000000, s"topN $topN out of range")
-    val wc = df.select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("f"))
+    val wc = countWords(wordRows(df, textCol))
     val pairs = wc.where(length(col("word")) >= 2)
       .select(explode(transform(sequence(lit(1), length(col("word")) - 1), i =>
         struct(col("word").substr(i, lit(1)).as("lhs"),
-          col("word").substr(i + lit(1), lit(1)).as("rhs")))).as("p"), col("f"))
+          col("word").substr(i + lit(1), lit(1)).as("rhs")))).as("p"), col("c"))
     val counts = pairs
       .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-      .agg(sum(col("f")).as("pair_count"))
+      .agg(sum(col("c")).as("pair_count"))
     counts
       .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
       .limit(topN)
@@ -763,9 +759,7 @@ object Quality {
       s"maxDistinctWords=$maxDistinctWords out of range (0..50000000; 0 forces the distributed loop)")
     val spark = df.sparkSession
     import spark.implicits._
-    val wordCounts = df.select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("f"))
+    val wordCounts = countWords(wordRows(df, textCol))
     // bounded materialization probe: at most max+1 rows reach the driver
     // however large the vocabulary (decontaminate's guard pattern)
     val head = wordCounts.as[(String, Long)].limit(maxDistinctWords + 1).collect()

@@ -56,7 +56,7 @@ object Sampling {
     pmod(pmod(m1, lit(Fold)) * lit(K2), lit(Space))
   }
 
-  private def threshold(fraction: Double): Long = {
+  private[operators] def threshold(fraction: Double): Long = {
     require(fraction >= 0.0 && fraction <= 1.0, s"fraction $fraction out of [0,1]")
     math.round(fraction * Space)
   }

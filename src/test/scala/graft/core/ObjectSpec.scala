@@ -245,4 +245,29 @@ class BodySpec extends AnyFunSuite {
     got.zip(expected).foreach { case (g, e) => assert(g == e) }
     assert(got.length == expected.length)
   }
+
+  test("an indirect /Length whose object header is `6 0 objx`: StreamDict.from's re-resolution fails") {
+    import graft.pipeline.MiniPdf
+    val content = "BT /F1 12 Tf (hi) Tj ET".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    def doc(header: String): Array[Byte] = {
+      val b = MiniPdf.classic(Seq(
+        MiniPdf.Obj("<< /Type /Catalog /Pages 2 0 R >>"),
+        MiniPdf.Obj("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+        MiniPdf.Obj("<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>"),
+        MiniPdf.Obj("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"),
+        MiniPdf.Obj("<< /Length 6 0 R >>", content),
+        MiniPdf.Obj(s" ${content.length}")), "")
+      // same byte length, so the xref offsets still hold
+      val s = new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)
+      s.replace("6 0 obj\n", header).getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    }
+    assert(Pdf(doc("6 0 obj\n")).extract(ExtractText) == "hi")
+    // the xref accepts the header (it checks the "6 0 obj" prefix); the
+    // object parser's look-ahead reads `6 0 R` as 0 and keeps an empty
+    // stream; StreamDict.from then parses object 6 again and fails
+    val e = intercept[PdfParseException](Pdf(doc("6 0 objx")).extract(ExtractText))
+    assert(e.getMessage == "Unexpected end of stream found in object")
+    assert(e.getStackTrace.exists(_.getClassName.startsWith("graft.core.StreamDict")))
+  }
+
 }

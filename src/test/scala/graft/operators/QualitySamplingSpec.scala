@@ -404,6 +404,55 @@ class QualitySamplingSpec extends AnyFunSuite {
       maxDistinctWords = 0).count() == 0)
   }
 
+  test("one tokenizer: every operator sees the same words, whitespace edge cases and null text included") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    // Spark's trim strips spaces only: the tab- and newline-led docs split to
+    // a leading empty token, which every operator must drop
+    val docs = Seq[(Long, String)](
+      (1L, "\tAlpha beta"), (2L, "\nGamma  delta\n"),
+      (3L, "Mixed \t\n WHITE\u000B space\f Runs "), (4L, "UPPER lower MiXeD alpha"),
+      (5L, ""), (6L, " \t\n "), (7L, null))
+    val df = docs.toDF("doc_id", "text")
+    val toks: Map[Long, Seq[String]] = docs.collect { case (id, t) if t != null =>
+      id -> t.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    }.toMap
+    assert(toks(1L) == Seq("alpha", "beta") && toks(3L).length == 4 && toks(6L).isEmpty)
+    def rows(d: DataFrame): Map[Long, Row] = d.collect().map(r => r.getLong(0) -> r).toMap
+    val weights = spark.range(64).select($"id".cast("int").as("bucket"), ($"id" * 3 - 90).as("w_milli"))
+    val uni = rows(Quality.unigramSurprisal(df, "text", "doc_id", 4))
+    val bi = rows(Quality.bigramSurprisal(df, "text", "doc_id"))
+    val tv = rows(Quality.tokenizeWithVocab(df, "text", "doc_id", 4))
+    val cls = rows(Quality.classifierScore(df, "text", "doc_id", weights, 64, biasMilli = 7L))
+    val gq = rows(Quality.gopherQuality(df, "text", "doc_id"))
+    val gr = rows(Quality.gopherRepetition(df, "text", "doc_id"))
+    val bpe = rows(Quality.applyBpe(df.where($"text".isNotNull), "text", "doc_id", Nil))
+    toks.foreach { case (id, ws) =>
+      val n = ws.length
+      assert(uni(id).getLong(1) == n, s"unigramSurprisal doc $id")
+      assert(bi(id).getLong(1) == n, s"bigramSurprisal doc $id")
+      assert(tv(id).getSeq[Int](1).length == n && tv(id).getInt(2) == n, s"tokenizeWithVocab doc $id")
+      assert(cls(id).getInt(1) == n, s"classifierScore doc $id")
+      assert(gq(id).getLong(1) == n, s"gopherQuality doc $id")
+      assert(gr(id).getInt(1) == ws.map(_.length).sum, s"gopherRepetition doc $id")
+      assert(bpe(id).getSeq[String](1) == ws.flatMap(_.map(_.toString)), s"applyBpe doc $id")
+    }
+    val (_, table) = Quality.bpeTrainWithWords(df, "text", nMerges = 0)
+    assert(table.get.toMap ==
+      toks.values.flatten.groupBy(identity).map { case (w, o) => w -> o.size.toLong })
+    // a null text: the operators do not agree on it, so each output is pinned
+    assert(uni(7L) == Row(7L, 0L, 0L, 0L))
+    assert(bi(7L) == Row(7L, 0L, 0L, 0L))
+    assert(tv(7L) == Row(7L, null, null, null))
+    assert(cls(7L) == Row(7L, 0, 7L, true))
+    assert(gq(7L) == Row(7L, null, 0L, null, 0L, null, null, false, null, null, null, false))
+    assert(gr(7L) == Row(7L, 0, 0, 0, 0, 0, 0))
+    val e = intercept[org.apache.spark.SparkException] {
+      Quality.applyBpe(df, "text", "doc_id", Nil).collect()
+    }
+    assert(e.getMessage.contains("NullPointerException"))
+  }
+
   test("applyBpe + tokenizeWithVocabTable: subword ids re-derive; beyond-64k vocab broadcasts") {
     import spark.implicits._
     val texts = Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
