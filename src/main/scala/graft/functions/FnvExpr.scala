@@ -25,17 +25,8 @@ case class Fnv1a64Expr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_fnv1a64"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL)
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    TextFunctions.fnv1a64(input.asInstanceOf[UTF8String].getBytes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {

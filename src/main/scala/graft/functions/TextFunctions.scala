@@ -126,9 +126,13 @@ object TextFunctions {
   // --- document fingerprinting (rolling hash; Scala side) ------------------------
 
   /** FNV-1a 64-bit over the UTF-8 bytes of the normalized text. */
-  def fnv1a64(s: String): Long = {
+  def fnv1a64(s: String): Long = fnv1a64(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** FNV-1a 64-bit over raw bytes — the one byte loop behind [[fnv1a64]]
+    * and the interpreted path of [[Fnv1a64Expr]].
+    */
+  def fnv1a64(bytes: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
-    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     var i = 0
     while (i < bytes.length) {
       h ^= (bytes(i) & 0xffL)
@@ -138,26 +142,40 @@ object TextFunctions {
     h
   }
 
+  /** The mixed polynomial rolling hash of every k-byte window of `b`
+    * (b.length >= k), in window order.
+    */
+  private def windowHashes(b: Array[Byte], k: Int): Array[Long] = {
+    val base = 1000003L
+    var pow = 1L
+    var i = 0
+    while (i < k - 1) { pow *= base; i += 1 }
+    val hs = new Array[Long](b.length - k + 1)
+    var h = 0L
+    i = 0
+    while (i < k) { h = h * base + (b(i) & 0xffL); i += 1 }
+    hs(0) = mix(h)
+    i = k
+    while (i < b.length) {
+      h = (h - (b(i - k) & 0xffL) * pow) * base + (b(i) & 0xffL)
+      hs(i - k + 1) = mix(h)
+      i += 1
+    }
+    hs
+  }
+
   /** Winnowing-style fingerprint: minimum polynomial rolling hash over all k-byte
     * windows (k=8) of the normalized text — robust to local edits; used as a
     * near-dup prefilter key.
     */
   def rollingMinHash(s: String, k: Int = 8): Long = {
     val b = normalize(s).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (b.length < k) return fnv1a64(new String(b, java.nio.charset.StandardCharsets.UTF_8))
-    val base = 1000003L
-    var pow = 1L
-    var i = 0
-    while (i < k - 1) { pow *= base; i += 1 }
-    var h = 0L
-    i = 0
-    while (i < k) { h = h * base + (b(i) & 0xffL); i += 1 }
-    var min = mix(h)
-    i = k
-    while (i < b.length) {
-      h = (h - (b(i - k) & 0xffL) * pow) * base + (b(i) & 0xffL)
-      val m = mix(h)
-      if (java.lang.Long.compareUnsigned(m, min) < 0) min = m
+    if (b.length < k) return fnv1a64(b)
+    val hs = windowHashes(b, k)
+    var min = hs(0)
+    var i = 1
+    while (i < hs.length) {
+      if (java.lang.Long.compareUnsigned(hs(i), min) < 0) min = hs(i)
       i += 1
     }
     min
@@ -178,24 +196,9 @@ object TextFunctions {
     * the tie RULE inside a window is irrelevant (equal minima give equal values).
     */
   def winnowFingerprints(s: String, k: Int = 8, w: Int = 4): Array[Long] = {
-    val nt = normalize(s)
-    val b = nt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (b.length < k + w - 1) return Array(fnv1a64(nt))
-    val base = 1000003L
-    var pow = 1L
-    var i = 0
-    while (i < k - 1) { pow *= base; i += 1 }
-    val hs = new Array[Long](b.length - k + 1)
-    var h = 0L
-    i = 0
-    while (i < k) { h = h * base + (b(i) & 0xffL); i += 1 }
-    hs(0) = mix(h)
-    i = k
-    while (i < b.length) {
-      h = (h - (b(i - k) & 0xffL) * pow) * base + (b(i) & 0xffL)
-      hs(i - k + 1) = mix(h)
-      i += 1
-    }
+    val b = normalize(s).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    if (b.length < k + w - 1) return Array(fnv1a64(b))
+    val hs = windowHashes(b, k)
     // per-window unsigned min; w is small (default 4) so the direct O(n*w)
     // scan beats a deque's branchy bookkeeping
     val out = new Array[Long](hs.length - w + 1)
@@ -210,16 +213,25 @@ object TextFunctions {
       out(p) = m
       p += 1
     }
-    // sort + in-place dedup, primitive ops only (same rationale as
-    // Dedup.sortedDistinct: Array.distinct boxes every Long)
-    java.util.Arrays.sort(out)
-    var wr = 1
-    p = 1
-    while (p < out.length) {
-      if (out(p) != out(wr - 1)) { out(wr) = out(p); wr += 1 }
-      p += 1
+    sortedDistinct(out)
+  }
+
+  /** Sort + in-place dedup — primitive ops only (Array.distinct boxes every
+    * Long through a HashSet; measured as the near-dup verify hot spot). The
+    * result is SORTED, which downstream consumers exploit (bottom-m sketch,
+    * merge-based Jaccard); every use is an order-insensitive set. Sorts `a`
+    * in place.
+    */
+  def sortedDistinct(a: Array[Long]): Array[Long] = {
+    if (a.length <= 1) return a
+    java.util.Arrays.sort(a)
+    var w = 1
+    var i = 1
+    while (i < a.length) {
+      if (a(i) != a(w - 1)) { a(w) = a(i); w += 1 }
+      i += 1
     }
-    if (wr == out.length) out else java.util.Arrays.copyOf(out, wr)
+    if (w == a.length) a else java.util.Arrays.copyOf(a, w)
   }
 
   private val wsRun = java.util.regex.Pattern.compile("\\s+")

@@ -102,23 +102,6 @@ object Dedup {
 
   // --- MinHash + LSH ----------------------------------------------------------
 
-  /** Sort + in-place dedup — primitive ops only (Array.distinct boxes every
-    * Long through a HashSet; measured as the near-dup verify hot spot). The
-    * result is SORTED, which downstream consumers exploit (bottom-m sketch,
-    * merge-based Jaccard); both shingle uses are order-insensitive sets.
-    */
-  private def sortedDistinct(a: Array[Long]): Array[Long] = {
-    if (a.length <= 1) return a
-    java.util.Arrays.sort(a)
-    var w = 1
-    var i = 1
-    while (i < a.length) {
-      if (a(i) != a(w - 1)) { a(w) = a(i); w += 1 }
-      i += 1
-    }
-    if (w == a.length) a else java.util.Arrays.copyOf(a, w)
-  }
-
   /** Word k-shingles hashed to 64-bit; sorted distinct. */
   def shingles(text: String, k: Int): Array[Long] = {
     val words = TextFunctions.normalize(text).split(" ")
@@ -130,7 +113,7 @@ object Dedup {
         out(i) = TextFunctions.fnv1a64(words.slice(i, i + k).mkString(" "))
         i += 1
       }
-      sortedDistinct(out)
+      TextFunctions.sortedDistinct(out)
     }
   }
 
@@ -155,8 +138,8 @@ object Dedup {
     * boxed sets (the old toSet/&/| allocation was 129us per verified pair).
     */
   def exactJaccard(a0: Array[Long], b0: Array[Long]): Double = {
-    val a = if (isSortedDistinct(a0)) a0 else sortedDistinct(a0.clone())
-    val b = if (isSortedDistinct(b0)) b0 else sortedDistinct(b0.clone())
+    val a = if (isSortedDistinct(a0)) a0 else TextFunctions.sortedDistinct(a0.clone())
+    val b = if (isSortedDistinct(b0)) b0 else TextFunctions.sortedDistinct(b0.clone())
     if (a.isEmpty && b.isEmpty) return 1.0
     var i = 0
     var j = 0
@@ -206,18 +189,19 @@ object Dedup {
     * hash through here or index lookups silently miss.
     */
   def bandKeysFor(text: String, shingleK: Int, nPerm: Int, bands: Int): Array[Long] = {
-    val rows = nPerm / bands
     val sig = minhashSignature(shingles(text, shingleK), nPerm)
-    val keys = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = 0xcbf29ce484222325L ^ b
-      var r = 0
-      while (r < rows) { h = TextFunctions.mix(h ^ sig(b * rows + r)); r += 1 }
-      keys(b) = h
-      b += 1
-    }
-    keys
+    Array.tabulate(bands)(bandFold(sig, _, nPerm / bands))
+  }
+
+  /** Band `b`'s key: the FNV offset basis xor `b`, folded through
+    * [[TextFunctions.mix]] with `vals(b * rows until (b + 1) * rows)` — the one
+    * fold behind the minhash band keys and the n-gram sketch band keys.
+    */
+  private def bandFold(vals: Array[Long], b: Int, rows: Int): Long = {
+    var h = 0xcbf29ce484222325L ^ b
+    var r = 0
+    while (r < rows) { h = TextFunctions.mix(h ^ vals(b * rows + r)); r += 1 }
+    h
   }
 
   /** Per-doc banded MinHash signature: (id, band_keys[bands]) via a narrow
@@ -688,7 +672,7 @@ object Dedup {
         out(i) = h
         i += 1
       }
-      sortedDistinct(out)
+      TextFunctions.sortedDistinct(out)
     }
   }
 
@@ -735,12 +719,7 @@ object Dedup {
       .map { case (id, text) =>
         val sh = ngramShingles(text, k) // sorted distinct by construction
         val bottom = Array.tabulate(bandSize * bands)(i => if (i < sh.length) sh(i) else Long.MaxValue)
-        val bandKeys = Array.tabulate(bands) { b =>
-          var h = 0xcbf29ce484222325L ^ b
-          var r = 0
-          while (r < bandSize) { h = TextFunctions.mix(h ^ bottom(bandSize * b + r)); r += 1 }
-          h
-        }
+        val bandKeys = Array.tabulate(bands)(bandFold(bottom, _, bandSize))
         (id, bottom, bandKeys)
       }
       .toDF("id", "sketch", "keys")

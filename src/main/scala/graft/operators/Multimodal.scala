@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.Dataset
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque `binary`
-  * columns plus a typed metadata struct, with decode / feature-extract / resize /
-  * frame-sample stages as typed mapPartitions transforms.
+  * columns plus a typed metadata struct, with decode / feature-extract /
+  * pixel / frame-metadata stages as typed mapPartitions transforms.
   *
   * Header metadata decode is real for PNG/JPEG/WAV/MP4 (pure-JVM byte walks);
   * PIXEL decode is real for every format the JDK's built-in `javax.imageio`
@@ -17,6 +17,11 @@ import org.apache.spark.sql.Dataset
   * codec), standing in as a deterministic fake with the real Spark-side
   * plumbing: binary column schema, batch-shaped partition iteration, feature
   * output shape, partitioning.
+  *
+  * The fixtures the parsers read are written by one byte sink (`Sink`), one
+  * PNG writer (`png`, behind [[pngEnvelope]] and [[pngGray]]) and one MP4
+  * writer (`mp4`, behind [[mp4Envelope]] and [[mp4EnvelopeFrames]]);
+  * [[jpegGray]] and [[bmpGray]] encode through ImageIO.
   */
 object Multimodal {
 
@@ -43,11 +48,11 @@ object Multimodal {
     (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
   private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
 
-  def isPng(b: Array[Byte]): Boolean =
+  private def isPng(b: Array[Byte]): Boolean =
     b.length >= 24 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G' &&
       u8(b, 4) == 0x0d && u8(b, 5) == 0x0a && u8(b, 6) == 0x1a && u8(b, 7) == 0x0a
 
-  def isJpeg(b: Array[Byte]): Boolean =
+  private def isJpeg(b: Array[Byte]): Boolean =
     b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8
 
   /** PNG IHDR dims: the IHDR chunk is REQUIRED to be first (PNG spec 11.2.2),
@@ -95,11 +100,11 @@ object Multimodal {
     u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
   @inline private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
 
-  def isWav(b: Array[Byte]): Boolean =
+  private def isWav(b: Array[Byte]): Boolean =
     b.length >= 44 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
 
-  def isMp4(b: Array[Byte]): Boolean =
+  private def isMp4(b: Array[Byte]): Boolean =
     b.length >= 12 && b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p'
 
   /** Parsed RIFF/WAVE structure — ONE chunk walk shared by the header decode
@@ -116,7 +121,7 @@ object Multimodal {
     while (pos + 8 <= b.length && (rate < 0 || dataOff < 0)) {
       val id = new String(b, pos, 4, java.nio.charset.StandardCharsets.US_ASCII)
       val size = le32(b, pos + 4)
-      if (size < 0 || pos + 8 + size > b.length) return None
+      if (size < 0 || pos + 8L + size > b.length) return None // Long: no wrap near 2^31
       if (id == "fmt " && size >= 16) {
         fmt = le16(b, pos + 8)
         channels = le16(b, pos + 10)
@@ -337,54 +342,60 @@ object Multimodal {
   //     containers around an opaque tail, so the header parsers above have real
   //     bytes to read and any engine can re-derive the dims from the same bytes.
 
+  /** The one byte sink every envelope writer shares: big-endian u32,
+    * little-endian u16/u32, 4-byte ASCII tags and raw bytes.
+    */
+  private final class Sink {
+    private val out = new java.io.ByteArrayOutputStream()
+    def u8(vs: Int*): Sink = { vs.foreach(out.write); this }
+    def be32(v: Int): Sink = u8(v >>> 24, v >>> 16, v >>> 8, v)
+    def le16(v: Int): Sink = u8(v, v >>> 8)
+    def le32(v: Int): Sink = u8(v, v >>> 8, v >>> 16, v >>> 24)
+    def tag(s: String): Sink = bytes(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    def bytes(b: Array[Byte]): Sink = { out.write(b, 0, b.length); this }
+    def result: Array[Byte] = out.toByteArray
+  }
+
+  /** PNG signature, IHDR(w, h, 8-bit, `colorType`), `idat` as the IDAT chunk
+    * and IEND, every chunk with its real CRC — the writer of both PNGs.
+    */
+  private def png(width: Int, height: Int, colorType: Int, idat: Array[Byte]): Array[Byte] = {
+    val out = new Sink().u8(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
+    def chunk(typ: String, data: Array[Byte]): Unit = {
+      val typed = new Sink().tag(typ).bytes(data).result
+      val crc = new java.util.zip.CRC32()
+      crc.update(typed)
+      out.be32(data.length).bytes(typed).be32(crc.getValue.toInt)
+    }
+    chunk("IHDR", new Sink().be32(width).be32(height).u8(8, colorType, 0, 0, 0).result)
+    chunk("IDAT", idat)
+    chunk("IEND", Array.emptyByteArray)
+    out.result
+  }
+
   /** Minimal structurally-valid PNG: signature, IHDR(w, h, 8-bit RGB) with a
     * real CRC, the tail wrapped as an IDAT chunk (not valid zlib — header
     * envelope only), and IEND. Total size 57 + tail.length bytes.
     */
-  def pngEnvelope(width: Int, height: Int, tail: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      def w32(v: Int): Unit =
-        out.write(Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte), 0, 4)
-      w32(data.length)
-      val typed = typ.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ data
-      out.write(typed, 0, typed.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typed)
-      w32(crc.getValue.toInt)
-    }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = (width >>> 24).toByte; ihdr(1) = (width >>> 16).toByte
-    ihdr(2) = (width >>> 8).toByte; ihdr(3) = width.toByte
-    ihdr(4) = (height >>> 24).toByte; ihdr(5) = (height >>> 16).toByte
-    ihdr(6) = (height >>> 8).toByte; ihdr(7) = height.toByte
-    ihdr(8) = 8; ihdr(9) = 2; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
-    chunk("IHDR", ihdr)
-    chunk("IDAT", tail)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
+  def pngEnvelope(width: Int, height: Int, tail: Array[Byte]): Array[Byte] =
+    png(width, height, 2, tail)
 
   /** Minimal structurally-valid JPEG: SOI, a 16-byte JFIF APP0, SOF0 (8-bit,
     * 1 component) at FIXED byte offset 20, the tail as entropy data, EOI.
     * Total size 35 + tail.length bytes; the fixed SOF offset lets a SQL oracle
     * read height/width at hex offsets 51/55 without a marker walk.
     */
-  def jpegEnvelope(width: Int, height: Int, tail: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def wb(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    wb(0xff, 0xd8) // SOI
-    wb(0xff, 0xe0, 0x00, 0x10) // APP0, len 16
-    out.write("JFIF".getBytes(java.nio.charset.StandardCharsets.US_ASCII), 0, 4)
-    wb(0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
-    wb(0xff, 0xc0, 0x00, 0x0b, 0x08) // SOF0, len 11, precision 8
-    wb(height >>> 8, height, width >>> 8, width)
-    wb(0x01, 0x01, 0x11, 0x00) // 1 component: id 1, 1x1 sampling, qtable 0
-    out.write(tail, 0, tail.length)
-    wb(0xff, 0xd9) // EOI
-    out.toByteArray
-  }
+  def jpegEnvelope(width: Int, height: Int, tail: Array[Byte]): Array[Byte] =
+    new Sink()
+      .u8(0xff, 0xd8) // SOI
+      .u8(0xff, 0xe0, 0x00, 0x10).tag("JFIF") // APP0, len 16
+      .u8(0x00, 0x01, 0x01, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00)
+      .u8(0xff, 0xc0, 0x00, 0x0b, 0x08) // SOF0, len 11, precision 8
+      .u8(height >>> 8, height, width >>> 8, width)
+      .u8(0x01, 0x01, 0x11, 0x00) // 1 component: id 1, 1x1 sampling, qtable 0
+      .bytes(tail)
+      .u8(0xff, 0xd9) // EOI
+      .result
 
   /** Minimal structurally-valid WAV: RIFF/WAVE header, a canonical 16-byte PCM
     * fmt chunk at FIXED byte offset 12 (channels LE16 @22, sample rate LE32
@@ -394,110 +405,92 @@ object Multimodal {
     * the real walk. 16-bit PCM: block align = channels*2.
     */
   def wavEnvelope(sampleRate: Int, channels: Int, tail: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def wle32(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff) }
-    def wle16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def tag(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII), 0, 4)
     val blockAlign = channels * 2
-    tag("RIFF"); wle32(36 + tail.length); tag("WAVE")
-    tag("fmt "); wle32(16)
-    wle16(1) // PCM
-    wle16(channels)
-    wle32(sampleRate)
-    wle32(sampleRate * blockAlign) // byte rate
-    wle16(blockAlign)
-    wle16(16) // bits per sample
-    tag("data"); wle32(tail.length)
-    out.write(tail, 0, tail.length)
-    out.toByteArray
+    new Sink()
+      .tag("RIFF").le32(36 + tail.length).tag("WAVE")
+      .tag("fmt ").le32(16)
+      .le16(1) // PCM
+      .le16(channels)
+      .le32(sampleRate)
+      .le32(sampleRate * blockAlign) // byte rate
+      .le16(blockAlign)
+      .le16(16) // bits per sample
+      .tag("data").le32(tail.length)
+      .bytes(tail)
+      .result
   }
 
-  /** Minimal structurally-valid MP4: 16-byte ftyp, then moov > trak > tkhd(v0)
-    * with 16.16 fixed-point dims, then the tail as mdat. Fixed layout: tkhd
-    * payload starts at byte 40, so width/height sit at bytes 116/120 (BE32,
-    * integer part = value >> 16) — SQL-oracle-readable at fixed hex offsets
-    * while the decoder does the real nested box walk.
+  /** The sample tables [[mp4]] writes under `mdia` when given them. */
+  private final case class Mp4Tables(timescale: Int, n1: Int, d1: Int, n2: Int, d2: Int)
+
+  /** The one MP4 writer: 16-byte ftyp, then moov > trak > tkhd(v0) with 16.16
+    * fixed-point dims (tkhd payload at byte 40, so width/height sit at bytes
+    * 116/120), then, given `tables`, `mdia > mdhd + minf > stbl > stts + stsz`,
+    * and the tail as mdat.
     */
-  def mp4Envelope(width: Int, height: Int, tail: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def wbe32(v: Int): Unit = { out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    def tag(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII), 0, 4)
-    wbe32(16); tag("ftyp"); tag("isom"); wbe32(0)
+  private def mp4(width: Int, height: Int, tables: Option[Mp4Tables], tail: Array[Byte]): Array[Byte] = {
     val tkhdSize = 8 + 84 // header + v0 payload (4 flags + 20 + 8 + 8 + 36 matrix + 8 dims)
-    val trakSize = 8 + tkhdSize
-    val moovSize = 8 + trakSize
-    wbe32(moovSize); tag("moov")
-    wbe32(trakSize); tag("trak")
-    wbe32(tkhdSize); tag("tkhd")
-    wbe32(0x00000007) // version 0, flags: enabled|in-movie|in-preview
-    wbe32(0); wbe32(0); wbe32(1); wbe32(0); wbe32(0) // times, track 1, reserved, duration
-    wbe32(0); wbe32(0) // reserved[2]
-    wbe32(0); wbe32(0) // layer/alt-group, volume/reserved
-    // unity matrix (a=c=1.0 in 16.16, w=1.0 in 2.30)
-    wbe32(0x00010000); wbe32(0); wbe32(0)
-    wbe32(0); wbe32(0x00010000); wbe32(0)
-    wbe32(0); wbe32(0); wbe32(0x40000000)
-    wbe32(width << 16); wbe32(height << 16)
-    wbe32(8 + tail.length); tag("mdat")
-    out.write(tail, 0, tail.length)
-    out.toByteArray
-  }
-
-  /** MP4 envelope WITH sample tables, fixed layout (round 6): the tkhd block
-    * of [[mp4Envelope]] (dims at bytes 116/120) followed by
-    * `mdia > mdhd + minf > stbl > stts + stsz`. stts carries TWO entries so
-    * the duration walk really sums `count*delta` pairs; stsz uses a uniform
-    * nonzero sample_size, so no per-sample table follows and every field sits
-    * at a FIXED byte offset a SQL oracle can read: mdhd timescale @152,
-    * stts (n1,d1,n2,d2) @196/200/204/208, stsz sample_count @228 (all BE32);
-    * mdat starts at 232. The decoder still does the real nested box walk.
-    */
-  def mp4EnvelopeFrames(width: Int, height: Int, timescale: Int,
-                        n1: Int, d1: Int, n2: Int, d2: Int,
-                        tail: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def wbe32(v: Int): Unit = { out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff); out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    def tag(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII), 0, 4)
-    wbe32(16); tag("ftyp"); tag("isom"); wbe32(0)
-    val tkhdSize = 8 + 84
     val mdhdSize = 8 + 24
     val sttsSize = 8 + 8 + 16 // version/flags + entry_count + 2 entries
     val stszSize = 8 + 12
     val stblSize = 8 + sttsSize + stszSize
     val minfSize = 8 + stblSize
-    val mdiaSize = 8 + mdhdSize + minfSize
+    val mdiaSize = if (tables.isEmpty) 0 else 8 + mdhdSize + minfSize
     val trakSize = 8 + tkhdSize + mdiaSize
-    val moovSize = 8 + trakSize
-    wbe32(moovSize); tag("moov")
-    wbe32(trakSize); tag("trak")
-    wbe32(tkhdSize); tag("tkhd")
-    wbe32(0x00000007) // version 0, flags: enabled|in-movie|in-preview
-    wbe32(0); wbe32(0); wbe32(1); wbe32(0); wbe32(0) // times, track 1, reserved, duration
-    wbe32(0); wbe32(0) // reserved[2]
-    wbe32(0); wbe32(0) // layer/alt-group, volume/reserved
-    wbe32(0x00010000); wbe32(0); wbe32(0)
-    wbe32(0); wbe32(0x00010000); wbe32(0)
-    wbe32(0); wbe32(0); wbe32(0x40000000)
-    wbe32(width << 16); wbe32(height << 16)
-    wbe32(mdiaSize); tag("mdia")
-    wbe32(mdhdSize); tag("mdhd")
-    wbe32(0) // version 0, flags
-    wbe32(0); wbe32(0) // creation/modification time
-    wbe32(timescale)
-    wbe32(n1 * d1 + n2 * d2) // mdhd duration (consistent with stts)
-    wbe32(0x55c40000) // language 'und', pre_defined
-    wbe32(minfSize); tag("minf")
-    wbe32(stblSize); tag("stbl")
-    wbe32(sttsSize); tag("stts")
-    wbe32(0); wbe32(2) // version/flags, entry_count
-    wbe32(n1); wbe32(d1); wbe32(n2); wbe32(d2)
-    wbe32(stszSize); tag("stsz")
-    wbe32(0); wbe32(777) // version/flags, uniform sample_size (no table)
-    wbe32(n1 + n2) // sample_count = frame count
-    wbe32(8 + tail.length); tag("mdat")
-    out.write(tail, 0, tail.length)
-    out.toByteArray
+    val out = new Sink()
+      .be32(16).tag("ftyp").tag("isom").be32(0)
+      .be32(8 + trakSize).tag("moov")
+      .be32(trakSize).tag("trak")
+      .be32(tkhdSize).tag("tkhd")
+      .be32(0x00000007) // version 0, flags: enabled|in-movie|in-preview
+      .be32(0).be32(0).be32(1).be32(0).be32(0) // times, track 1, reserved, duration
+      .be32(0).be32(0) // reserved[2]
+      .be32(0).be32(0) // layer/alt-group, volume/reserved
+      // unity matrix (a=c=1.0 in 16.16, w=1.0 in 2.30)
+      .be32(0x00010000).be32(0).be32(0)
+      .be32(0).be32(0x00010000).be32(0)
+      .be32(0).be32(0).be32(0x40000000)
+      .be32(width << 16).be32(height << 16)
+    tables.foreach { t =>
+      out.be32(mdiaSize).tag("mdia")
+        .be32(mdhdSize).tag("mdhd")
+        .be32(0) // version 0, flags
+        .be32(0).be32(0) // creation/modification time
+        .be32(t.timescale)
+        .be32(t.n1 * t.d1 + t.n2 * t.d2) // mdhd duration (consistent with stts)
+        .be32(0x55c40000) // language 'und', pre_defined
+        .be32(minfSize).tag("minf")
+        .be32(stblSize).tag("stbl")
+        .be32(sttsSize).tag("stts")
+        .be32(0).be32(2) // version/flags, entry_count
+        .be32(t.n1).be32(t.d1).be32(t.n2).be32(t.d2)
+        .be32(stszSize).tag("stsz")
+        .be32(0).be32(777) // version/flags, uniform sample_size (no table)
+        .be32(t.n1 + t.n2) // sample_count = frame count
+    }
+    out.be32(8 + tail.length).tag("mdat").bytes(tail).result
   }
+
+  /** Minimal structurally-valid MP4 without sample tables: [[mp4]]'s ftyp +
+    * moov > trak > tkhd, then the tail as mdat — dims SQL-oracle-readable at
+    * fixed hex offsets 116/120 (BE32, integer part = value >> 16) while the
+    * decoder does the real nested box walk.
+    */
+  def mp4Envelope(width: Int, height: Int, tail: Array[Byte]): Array[Byte] =
+    mp4(width, height, None, tail)
+
+  /** MP4 envelope WITH sample tables, fixed layout (round 6): stts carries TWO
+    * entries so the duration walk really sums `count*delta` pairs; stsz uses
+    * a uniform nonzero sample_size, so no per-sample table follows and every
+    * field sits at a FIXED byte offset a SQL oracle can read: tkhd dims
+    * @116/120, mdhd timescale @152, stts (n1,d1,n2,d2) @196/200/204/208, stsz
+    * sample_count @228 (all BE32); mdat starts at 232. The decoder still does
+    * the real nested box walk.
+    */
+  def mp4EnvelopeFrames(width: Int, height: Int, timescale: Int,
+                        n1: Int, d1: Int, n2: Int, d2: Int,
+                        tail: Array[Byte]): Array[Byte] =
+    mp4(width, height, Some(Mp4Tables(timescale, n1, d1, n2, d2)), tail)
 
   final case class Mp4FrameRow(doc_id: Long, n_frames: Int, duration_units: Long,
                                timescale: Int)
@@ -539,45 +532,17 @@ object Multimodal {
     }
     // zlib stream from stored blocks: header 0x78 0x01, then per-block
     // BFINAL/BTYPE=00 + LEN + ~LEN (LE16), then Adler-32 of the raw stream
-    val z = new java.io.ByteArrayOutputStream()
-    z.write(0x78); z.write(0x01)
+    val z = new Sink().u8(0x78, 0x01)
     var off = 0
     while (off < raw.length) {
       val len = math.min(65535, raw.length - off)
-      z.write(if (off + len >= raw.length) 1 else 0)
-      z.write(len & 0xff); z.write((len >>> 8) & 0xff)
-      z.write((~len) & 0xff); z.write(((~len) >>> 8) & 0xff)
-      z.write(raw, off, len)
+      z.u8(if (off + len >= raw.length) 1 else 0).le16(len).le16(~len)
+        .bytes(java.util.Arrays.copyOfRange(raw, off, off + len))
       off += len
     }
     val adler = new java.util.zip.Adler32()
     adler.update(raw)
-    val a = adler.getValue.toInt
-    z.write((a >>> 24) & 0xff); z.write((a >>> 16) & 0xff)
-    z.write((a >>> 8) & 0xff); z.write(a & 0xff)
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      def w32(v: Int): Unit =
-        out.write(Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte), 0, 4)
-      w32(data.length)
-      val typed = typ.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ data
-      out.write(typed, 0, typed.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typed)
-      w32(crc.getValue.toInt)
-    }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = (width >>> 24).toByte; ihdr(1) = (width >>> 16).toByte
-    ihdr(2) = (width >>> 8).toByte; ihdr(3) = width.toByte
-    ihdr(4) = (height >>> 24).toByte; ihdr(5) = (height >>> 16).toByte
-    ihdr(6) = (height >>> 8).toByte; ihdr(7) = height.toByte
-    ihdr(8) = 8; ihdr(9) = 0; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0 // 8-bit gray
-    chunk("IHDR", ihdr)
-    chunk("IDAT", z.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
+    png(width, height, 0, z.be32(adler.getValue.toInt).result) // 8-bit gray
   }
 
   /** Real 8-bit grayscale JPEG via the JDK's built-in ImageIO writer —
@@ -683,7 +648,8 @@ object Multimodal {
   /** STUB feature extraction with real output shape: 8 block-mean byte values
     * scaled to [0,1] — the plumbing a real embedding model would use.
     */
-  def featuresStub(payload: Array[Byte], dims: Int = 8): Array[Float] = {
+  def featuresStub(payload: Array[Byte]): Array[Float] = {
+    val dims = 8
     val out = new Array[Float](dims)
     if (payload.isEmpty) return out
     val block = math.max(1, payload.length / dims)
@@ -699,10 +665,6 @@ object Multimodal {
     }
     out
   }
-
-  /** Frame sampling stub: every `stride`-th frame index of the fake container. */
-  def sampleFrames(meta: MediaMeta, stride: Int): Array[Int] =
-    (0 until meta.frames by stride).toArray
 
   /** The decode + featurize pipeline over a binary-payload table: real header
     * parse for PNG/JPEG, deterministic stub for everything else.

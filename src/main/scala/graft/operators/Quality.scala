@@ -405,7 +405,8 @@ object Quality {
             arr
           }
         }
-        it.map { case (id, ws) => (id, ws.flatMap(encode)) }
+        // a null text has no words: 0 subwords, as the surprisal operators count it
+        it.map { case (id, ws) => (id, if (ws == null) Nil else ws.flatMap(encode)) }
       }
       .toDF(idCol, "subwords")
   }

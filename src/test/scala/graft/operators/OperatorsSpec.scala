@@ -1000,6 +1000,13 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Multimodal.decode(cutWav) == Multimodal.decodeStub(cutWav))
     val cutMp4 = Multimodal.mp4Envelope(64, 48, tail).take(40)
     assert(Multimodal.decode(cutMp4) == Multimodal.decodeStub(cutMp4))
+    // a data-chunk size near 2^31 must not wrap the bounds check: both
+    // overrunning sizes fall back to the stub
+    for (size <- Seq(0x7ffffff0, 0x10000000)) {
+      val big = Multimodal.wavEnvelope(8000, 1, new Array[Byte](8))
+      java.nio.ByteBuffer.wrap(big).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(40, size)
+      assert(Multimodal.decode(big) == Multimodal.MediaMeta(53, 16, 1, 52L), f"data size 0x$size%x")
+    }
   }
 
   test("mp4 box-size escapes: largesize mdat before moov; trailing size==0 mdat (ADVICE r6)") {
@@ -1719,7 +1726,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(meta.bytes == payload.length)
     val f = Multimodal.featuresStub(payload)
     assert(f.length == 8 && f.forall(v => v >= 0f && v <= 1f))
-    assert(Multimodal.sampleFrames(meta, 1).length == meta.frames)
   }
 
   /** Independent re-derivation of the C4-style segment-dedup contract. */
